@@ -1,14 +1,15 @@
-"""Arrow (applyInPandas) execution of the roll_* surface — the scale
+"""Arrow (applyInArrow) execution of the roll_* surface — the scale
 path for weighted / exponential-decay inputs, exact quantiles at large
 widths, and k-regressor roll_lm.
 
 Physical shape: one hash exchange on the series key, then a grouped-map
-Pandas UDF per series running the vectorized numpy kernels of
+Arrow UDF per series running the vectorized numpy kernels of
 roll_spark.operators.kernels — exactly the reference's parallelization
 model (one task per independent series, sequential in time;
 src/roll.cpp:384) with Arrow batches instead of RcppParallel threads.
 Per-row Python never happens: each group crosses the JVM<->Python
-boundary once as a columnar batch.
+boundary once as a columnar batch, and only the kernel's input columns
+leave Arrow (as float64 numpy arrays); passthrough columns never do.
 
 Skewed series (one conversation with 10^9 turns) do NOT fit this model;
 they go through roll_spark.operators.chunked which splits a series into
@@ -33,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as TT
+from pyspark.sql.pandas.types import to_arrow_type
 
 from roll_spark.config import RollSpec
 from roll_spark.operators import kernels as K
@@ -41,14 +43,63 @@ from roll_spark.operators.base import Cols, _as_list
 _WIDE_TYPES = (TT.StringType, TT.BinaryType)
 
 
-def _nan_to_none_rows(mat):
-    """(n, k) float matrix -> list of array<double> cells (all-NaN row
-    -> NULL array, NaN element -> NULL element)."""
-    return [
-        None if np.isnan(row).all()
-        else [None if np.isnan(v) else float(v) for v in row]
-        for row in mat
-    ]
+def _kernel_inputs(table, cols: list[str]) -> dict[str, np.ndarray]:
+    """``{column: numpy array}`` of a group's kernel inputs. Numeric
+    columns arrive as float64 with NaN for NULL; other types (the
+    strings roll_entropy factorizes) as object/datetime arrays."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = {}
+    for c in cols:
+        col = table.column(c)
+        t = col.type
+        if pa.types.is_decimal(t):
+            # through text: Arrow's direct decimal cast is not correctly
+            # rounded, float(Decimal) and the string parse are
+            col = pc.cast(pc.cast(col, pa.string()), pa.float64())
+        elif (pa.types.is_integer(t) or pa.types.is_floating(t)
+                or pa.types.is_boolean(t)):
+            col = pc.cast(col, pa.float64(), safe=False)
+        arr = col.to_numpy(zero_copy_only=False)
+        # a zero-copy view is read-only; kernels may write their inputs
+        out[c] = arr if arr.flags.writeable else arr.copy()
+    return out
+
+
+def _list_rows(mat, null_all_nan: bool = False):
+    """(n, k) float matrix -> Arrow ``list<double>`` column (NaN element
+    -> NULL element; with ``null_all_nan`` an all-NaN row -> NULL)."""
+    import pyarrow as pa
+
+    mat = np.asarray(mat, dtype=np.float64)
+    n, k = mat.shape
+    offsets = pa.array(np.arange(0, n * k + 1, k, dtype=np.int32))
+    values = pa.array(mat.ravel(), from_pandas=True)
+    mask = pa.array(np.isnan(mat).all(axis=1)) if null_all_nan else None
+    return pa.ListArray.from_arrays(offsets, values, mask=mask)
+
+
+def _check_keys(table, order_cols: list[str]) -> None:
+    """ROLL_SPARK_DEBUG_KEYS contract check on one series group: no NULL
+    (or NaN) order key, no duplicate (by, order) key."""
+    import pyarrow.compute as pc
+
+    if any(pc.any(pc.is_null(table.column(c), nan_is_null=True)).as_py()
+           for c in order_cols):
+        raise ValueError(
+            "roll_spark data contract violated: NULL order key in "
+            f"series group (order cols {order_cols}); NULL keys "
+            "never match the join-back and would silently NULL "
+            "their kernel outputs"
+        )
+    distinct = table.select(order_cols).group_by(order_cols).aggregate([])
+    if distinct.num_rows < table.num_rows:
+        raise ValueError(
+            "roll_spark data contract violated: duplicate "
+            f"(by, order) key in series group (order cols "
+            f"{order_cols}); duplicates fan out in the join-back"
+        )
 
 
 def _apply_kernel(
@@ -60,7 +111,10 @@ def _apply_kernel(
     kernel,
     spec: RollSpec | None = None,
 ) -> DataFrame:
-    """Run ``kernel(pdf) -> dict[out_col, np.ndarray]`` per series group.
+    """Run ``kernel(inputs) -> dict[out_col, array]`` per series group,
+    where ``inputs`` is ``_kernel_inputs`` of ``in_cols`` in order-key
+    order and each output is a numpy array (NaN -> NULL) or an Arrow
+    array (list columns, via ``_list_rows``).
 
     Skew auto-dispatch: when ``spec.max_group_rows`` is set, EVERY
     series is routed through the overlap-padded chunk layout
@@ -103,67 +157,56 @@ def _apply_kernel(
         for f in df.schema
         if f.name not in key_cols and isinstance(f.dataType, _WIDE_TYPES)
     ]
-    order_cols = list(order_l)
+    out_struct = [
+        TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields
+    ]
+    if wide:
+        field_by_name = {f.name: f for f in df.schema}
+        src = df.select(*by_l, *order_l, *in_cols)
+        keep = by_l + order_l
+        out_schema = TT.StructType([field_by_name[c] for c in keep] + out_struct)
+    else:
+        src, keep = df, df.columns
+        out_schema = TT.StructType(list(df.schema) + out_struct)
+    arrow_types = [to_arrow_type(f.dataType) for f in out_schema]
+    debug_keys = bool(wide) and os.environ.get("ROLL_SPARK_DEBUG_KEYS") == "1"
 
-    if not wide:
-        out_schema = TT.StructType(
-            list(df.schema)
-            + [TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields]
-        )
+    # stable, NULLs last: the sort_values(kind="stable") order
+    sort_keys = [(c, "ascending") for c in order_l]
 
-        def fn_pass(pdf):
-            import pandas as pd
+    def fn(table):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-            pdf = pdf.sort_values(order_cols, kind="stable")
-            res = kernel(pdf)
-            return pdf.assign(**res)
-
-        return df.groupBy(*by_l).applyInPandas(fn_pass, schema=out_schema)
-
-    field_by_name = {f.name: f for f in df.schema}
-    slim = df.select(*by_l, *order_l, *in_cols)
-    out_schema = TT.StructType(
-        [field_by_name[c] for c in by_l + order_l]
-        + [TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields]
-    )
-
-    debug_keys = os.environ.get("ROLL_SPARK_DEBUG_KEYS") == "1"
-
-    def fn(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(order_cols, kind="stable")
+        table = table.take(pc.sort_indices(
+            table, sort_keys=sort_keys, null_placement="at_end"))
         if debug_keys:
-            keys = pdf[order_cols]
-            if keys.isna().any().any():
-                raise ValueError(
-                    "roll_spark data contract violated: NULL order key in "
-                    f"series group (order cols {order_cols}); NULL keys "
-                    "never match the join-back and would silently NULL "
-                    "their kernel outputs"
-                )
-            if keys.duplicated().any():
-                raise ValueError(
-                    "roll_spark data contract violated: duplicate "
-                    f"(by, order) key in series group (order cols "
-                    f"{order_cols}); duplicates fan out in the join-back"
-                )
-        res = kernel(pdf)
-        data = {c: pdf[c].to_numpy() for c in by_l + order_l}
-        data.update(res)
-        return pd.DataFrame(data)
+            _check_keys(table, order_l)
+        res = kernel(_kernel_inputs(table, in_cols))
+        columns = [table.column(c) for c in keep]
+        for (name, _), typ in zip(out_fields, arrow_types[len(keep):]):
+            v = res[name]
+            columns.append(v if isinstance(v, pa.Array)
+                           else pa.array(v, type=typ, from_pandas=True))
+        out = pa.table(columns, names=out_schema.names)
+        # the JVM may send a passthrough type other than the one it
+        # expects back (large_string under useLargeVarTypes)
+        if out.schema.types != arrow_types:
+            out = out.cast(pa.schema(
+                [pa.field(n, t) for n, t in zip(out_schema.names, arrow_types)]
+            ))
+        return out
 
-    res = slim.groupBy(*by_l).applyInPandas(fn, schema=out_schema)
-    return df.join(res, on=by_l + order_l, how="left")
+    res = src.groupBy(*by_l).applyInArrow(fn, schema=out_schema)
+    return df.join(res, on=keep, how="left") if wide else res
 
 
 def _series_kernel_1(value: str, spec: RollSpec, fn, out: str, **kw):
     weights = None if spec.weights is None else np.asarray(spec.weights)
 
-    def kernel(pdf):
-        x = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
         arr = fn(
-            x,
+            cols[value],
             spec.width,
             weights=weights,
             min_obs=spec.effective_min_obs,
@@ -178,11 +221,9 @@ def _series_kernel_1(value: str, spec: RollSpec, fn, out: str, **kw):
 def _series_kernel_2(x_col: str, y_col: str, spec: RollSpec, fn, out: str, **kw):
     weights = None if spec.weights is None else np.asarray(spec.weights)
 
-    def kernel(pdf):
-        x = pdf[x_col].to_numpy(dtype=np.float64, na_value=np.nan)
-        y = pdf[y_col].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
         arr = fn(
-            x, y,
+            cols[x_col], cols[y_col],
             spec.width,
             weights=weights,
             min_obs=spec.effective_min_obs,
@@ -239,10 +280,9 @@ def roll_quantiles(df, value, by, order, spec: RollSpec, ps, outs):
     weights = None if spec.weights is None else np.asarray(spec.weights)
     ps = list(ps)
 
-    def kernel(pdf):
-        x = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
         arr = K.conv_quantiles(
-            x, spec.width, ps, weights=weights,
+            cols[value], spec.width, ps, weights=weights,
             min_obs=spec.effective_min_obs, na_restore=spec.na_restore,
         )
         return {o: arr[:, j] for j, o in enumerate(outs)}
@@ -343,19 +383,16 @@ def roll_lm_k(
     if intercept:
         fields += [(p + "intercept", "double"), (p + "se_intercept", "double")]
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
-        yv = pdf[y].to_numpy(dtype=np.float64, na_value=np.nan)
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
         res = K.conv_lm_k(
-            X, yv, spec.width, weights=weights,
+            X, cols[y], spec.width, weights=weights,
             min_obs=spec.effective_min_obs, intercept=intercept,
         )
         out = {
-            p + "coef": _nan_to_none_rows(res["coef"]),
+            p + "coef": _list_rows(res["coef"], null_all_nan=True),
             p + "r2": res["r2"],
-            p + "se": _nan_to_none_rows(res["se"]),
+            p + "se": _list_rows(res["se"], null_all_nan=True),
         }
         if intercept:
             out[p + "intercept"] = res["intercept"]
@@ -415,20 +452,17 @@ def roll_lm_multi(
                 (f"{p}{yc}_se_intercept", "double"),
             ]
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
         out = {}
         for yc in y_cols:
-            yv = pdf[yc].to_numpy(dtype=np.float64, na_value=np.nan)
             res = K.conv_lm_k(
-                X, yv, spec.width, weights=weights,
+                X, cols[yc], spec.width, weights=weights,
                 min_obs=spec.effective_min_obs, intercept=intercept,
             )
-            out[f"{p}{yc}_coef"] = _nan_to_none_rows(res["coef"])
+            out[f"{p}{yc}_coef"] = _list_rows(res["coef"], null_all_nan=True)
             out[f"{p}{yc}_r2"] = res["r2"]
-            out[f"{p}{yc}_se"] = _nan_to_none_rows(res["se"])
+            out[f"{p}{yc}_se"] = _list_rows(res["se"], null_all_nan=True)
             if intercept:
                 out[f"{p}{yc}_intercept"] = res["intercept"]
                 out[f"{p}{yc}_se_intercept"] = res["se_intercept"]
@@ -458,18 +492,14 @@ def roll_cov_xy_matrix(
     x_cols = list(x_cols)
     y_cols = list(y_cols)
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
-        Y = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in y_cols]
-        )
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
+        Y = np.column_stack([cols[c] for c in y_cols])
         cube = K.conv_cov_xy_matrix(
             X, Y, spec.width, weights=weights, min_obs=spec.effective_min_obs,
             center=spec.center, complete_obs=complete_obs,
         ).reshape(len(X), -1)
-        return {out: [[None if np.isnan(v) else float(v) for v in row] for row in cube]}
+        return {out: _list_rows(cube)}
 
     return _apply_kernel(df, x_cols + y_cols, by, order, [(out, "array<double>")], kernel, spec=spec)
 
@@ -497,15 +527,13 @@ def roll_cov_matrix(
     weights = None if spec.weights is None else np.asarray(spec.weights)
     x_cols = list(x_cols)
 
-    def kernel(pdf):
-        X = np.column_stack(
-            [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in x_cols]
-        )
+    def kernel(cols):
+        X = np.column_stack([cols[c] for c in x_cols])
         cube = K.conv_cov_matrix(
             X, spec.width, weights=weights, min_obs=spec.effective_min_obs,
             center=spec.center, scale=scale, complete_obs=complete_obs,
         ).reshape(len(X), -1)
-        return {out: [[None if np.isnan(v) else float(v) for v in row] for row in cube]}
+        return {out: _list_rows(cube)}
 
     return _apply_kernel(df, x_cols, by, order, [(out, "array<double>")], kernel, spec=spec)
 
@@ -520,9 +548,9 @@ def roll_mad(df, value, by, order, width, *, min_obs=None, na_restore=False,
     spec = RollSpec(width=width, min_obs=min_obs, na_restore=na_restore,
                     max_group_rows=max_group_rows)
 
-    def kernel(pdf):
-        x = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
-        return {out: K.conv_mad(x, width, min_obs=spec.effective_min_obs,
+    def kernel(cols):
+        return {out: K.conv_mad(cols[value], width,
+                                min_obs=spec.effective_min_obs,
                                 na_restore=na_restore)}
 
     return _apply_kernel(df, [value], by, order, [(out, "double")], kernel, spec=spec)

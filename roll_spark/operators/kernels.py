@@ -1,4 +1,4 @@
-"""Vectorized numpy kernels for the Arrow (applyInPandas) path.
+"""Vectorized numpy kernels for the Arrow (applyInArrow) path.
 
 Two algorithm families, mirroring the reference's online/offline split
 (/root/reference/src/roll.cpp:378-394):

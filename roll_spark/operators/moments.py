@@ -530,10 +530,10 @@ def roll_entropy(
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _apply_kernel
 
-        def kernel(pdf):
+        def kernel(cols):
             import pandas as pd
 
-            codes, _ = pd.factorize(pdf[value], use_na_sentinel=True)
+            codes, _ = pd.factorize(cols[value], use_na_sentinel=True)
             x = codes.astype("float64")
             x[codes < 0] = float("nan")
             return {out: K.conv_entropy(x, width,

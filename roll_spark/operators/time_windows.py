@@ -129,12 +129,9 @@ def ewma_time(
     t_us = "__roll_t_us"
     df = df.withColumn(t_us, _epoch_micros(df, order))
 
-    def kernel(pdf):
-        import numpy as np
-
-        x = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
-        t = pdf[t_us].to_numpy(dtype=np.int64)
-        return {out: K.conv_ewma_time(x, t, halflife_s, min_obs=min_obs)}
+    def kernel(cols):
+        return {out: K.conv_ewma_time(cols[value], cols[t_us], halflife_s,
+                                      min_obs=min_obs)}
 
     res = _apply_kernel(df, [value, t_us], [*_as_list(by)], [order, ],
                         [(out, "double")], kernel)
@@ -172,11 +169,9 @@ def decayed_count(
     t_us = "__roll_t_us"
     df = df.withColumn(t_us, _epoch_micros(df, order))
 
-    def kernel(pdf):
-        import numpy as np
-
-        t = pdf[t_us].to_numpy(dtype=np.int64)
-        return {out: K.conv_decayed_count(t, halflife_s, min_obs=min_obs)}
+    def kernel(cols):
+        return {out: K.conv_decayed_count(cols[t_us], halflife_s,
+                                          min_obs=min_obs)}
 
     res = _apply_kernel(df, [t_us], [*_as_list(by)], [order, ],
                         [(out, "double")], kernel)

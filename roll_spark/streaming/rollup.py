@@ -27,7 +27,9 @@ object store the tmp-swap below becomes an Iceberg MERGE INTO keyed on
 
 from __future__ import annotations
 
+import datetime
 import os
+import re
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -327,7 +329,17 @@ class TierStore:
         (atomic; the prefix no longer matches ``_day=*`` so a reader
         never sees a half-deleted partition) and then removed;
         ``_recover`` finishes the removal after a crash. Returns the
-        dropped day names."""
+        dropped day names.
+
+        ``before_day`` must be a real ``YYYY-MM-DD`` date: days compare
+        as strings, so ``'2024-1-5'`` sorts after every day of 2024-01
+        to 2024-09 and would drop them all. A malformed cutoff raises before anything is
+        touched."""
+        if not (isinstance(before_day, str)
+                and re.fullmatch(r"\d{4}-\d{2}-\d{2}", before_day, re.ASCII)):
+            raise ValueError(
+                f"expire({before_day!r}): cutoff must be YYYY-MM-DD")
+        datetime.date.fromisoformat(before_day)  # rejects 2024-02-30
         self._recover()
         days = sorted(d[len("_day="):] for d in self._day_dirs())
         doomed = [d for d in days if d < before_day]

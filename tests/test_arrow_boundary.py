@@ -1,0 +1,212 @@
+"""The Python boundary of the Arrow operators: what crosses it unchanged
+(passthrough columns), how NULL and NaN map across it, the wide-frame
+key-contract checks, the worker daemon, and executor imports from a
+foreign working directory."""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+import subprocess
+import sys
+import textwrap
+import zipimport
+from decimal import Decimal
+from pathlib import Path
+
+import numpy as np
+import pytest
+
+from roll_spark import _daemon
+from roll_spark.operators.arrow_ops import _apply_kernel
+
+REPO = Path(__file__).resolve().parents[1]
+
+_SCHEMA = (
+    "series string, ts timestamp, x double, n int, d decimal(18,6), "
+    "tags array<string>, day date, attrs map<string,int>, "
+    "pt struct<a:long,b:string>"
+)
+
+
+def _narrow(spark):
+    t0 = dt.datetime(2025, 1, 1)
+    rows = []
+    for s, k in (("a", 5), ("b", 3)):
+        for i in range(k):
+            rows.append((
+                s, t0 + dt.timedelta(minutes=7 * i + (1 if s == "b" else 0)),
+                None if i == 1 else float(i), None if i == 2 else i,
+                None if i == 3 else Decimal(f"{i}.125000"),
+                None if i == 0 else [f"t{i}", None],
+                None if i == 4 else dt.date(2025, 1, 1 + i),
+                {"k": i}, (i * 10, None if i == 1 else f"s{i}"),
+            ))
+    return spark.createDataFrame(rows, _SCHEMA)
+
+
+def _copy_x(cols):
+    return {"y": cols["x"].copy()}
+
+
+def test_narrow_passthrough_values_and_types(spark):
+    """Every non-input column of a narrow frame — string key, timestamp,
+    decimal, array, date, map, struct, NULLs included — comes back from
+    the grouped map with identical values and Spark types, and without
+    a join."""
+    df = _narrow(spark)
+    res = _apply_kernel(df, ["x"], "series", "ts", [("y", "double")], _copy_x)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" in plan and "Join" not in plan
+    assert res.schema.fields[:-1] == df.schema.fields
+    key = ["series", "ts"]
+    got = res.orderBy(*key).collect()
+    want = df.orderBy(*key).collect()
+    assert [r[:-1] for r in got] == [tuple(r) for r in want]
+    assert [r.y for r in got] == [r.x for r in want]
+
+
+def test_passthrough_under_large_var_types(spark):
+    """Under useLargeVarTypes the JVM sends strings as large_string but
+    checks the result against string: passthrough columns are cast back."""
+    df = _narrow(spark)
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    spark.conf.set(conf, "true")
+    try:
+        got = _apply_kernel(df, ["x"], "series", "ts", [("y", "double")],
+                            _copy_x).orderBy("series", "ts").collect()
+    finally:
+        spark.conf.unset(conf)
+    assert [r[:-1] for r in got] == \
+        [tuple(r) for r in df.orderBy("series", "ts").collect()]
+
+
+def test_nan_output_is_null_and_null_input_is_nan(spark):
+    """A kernel's NaN output arrives in Spark as NULL; a NULL input (of a
+    double, int or decimal column) reaches the kernel as NaN, a stored
+    NaN stays NaN on the way in, and a decimal arrives as the correctly
+    rounded float64 (float(Decimal), as pandas converted it)."""
+    df = spark.createDataFrame(
+        [("a", 0, 1.0, 1, Decimal("1.001")), ("a", 1, None, None, None),
+         ("a", 2, float("nan"), 3, Decimal("123.457")),
+         ("a", 3, 4.0, 4, Decimal("-0.125"))],
+        "series string, i int, x double, n int, d decimal(10,3)",
+    )
+
+    def kernel(cols):
+        return {
+            "x_nan": np.isnan(cols["x"]).astype(np.float64),
+            "n_nan": np.isnan(cols["n"]).astype(np.float64),
+            "d_in": cols["d"],
+            "f64": np.full(len(cols["x"]), float(all(
+                v.dtype == np.float64 for v in cols.values()))),
+            "all_nan": np.full(len(cols["x"]), np.nan),
+        }
+
+    fields = [(c, "double") for c in ("x_nan", "n_nan", "d_in", "f64", "all_nan")]
+    got = _apply_kernel(df, ["x", "n", "d"], "series", "i", fields, kernel) \
+        .orderBy("i").collect()
+    assert [r.x_nan for r in got] == [0.0, 1.0, 1.0, 0.0]
+    assert [r.n_nan for r in got] == [0.0, 1.0, 0.0, 0.0]
+    assert [r.d_in for r in got] == [1.001, None, 123.457, -0.125]
+    assert all(r.f64 == 1.0 for r in got)
+    assert all(r.all_nan is None for r in got)
+
+
+def _wide(spark, ts_vals):
+    return spark.createDataFrame(
+        [("a", t, float(i), f"text {i}") for i, t in enumerate(ts_vals)],
+        "series string, t int, x double, text string",
+    )
+
+
+@pytest.mark.parametrize("ts_vals, match", [
+    ([0, 1, None, 3], "NULL order key"),
+    ([0, 1, 1, 3], "duplicate"),
+])
+def test_debug_keys_rejects_bad_wide_frame_keys(spark, monkeypatch, ts_vals,
+                                                match):
+    """ROLL_SPARK_DEBUG_KEYS=1 turns the wide-frame join-back's silent
+    NULL outputs / fan-out into an error; without it the op runs."""
+    df = _wide(spark, ts_vals)
+    res = _apply_kernel(df, ["x"], "series", "t", [("y", "double")], _copy_x)
+    assert "Join" in res._jdf.queryExecution().executedPlan().toString()
+    assert res.count() >= len(ts_vals)
+
+    monkeypatch.setenv("ROLL_SPARK_DEBUG_KEYS", "1")
+    checked = _apply_kernel(df, ["x"], "series", "t", [("y", "double")],
+                            _copy_x)
+    with pytest.raises(Exception, match=f"data contract violated: {match}"):
+        checked.collect()
+
+
+def test_debug_keys_passes_clean_wide_frame(spark, monkeypatch):
+    """Unique, non-NULL keys pass the check; outputs join back in order."""
+    monkeypatch.setenv("ROLL_SPARK_DEBUG_KEYS", "1")
+    df = _wide(spark, [3, 0, 2, 1])
+    got = _apply_kernel(df, ["x"], "series", "t", [("y", "double")], _copy_x) \
+        .orderBy("t").collect()
+    assert [(r.t, r.text, r.y) for r in got] == [
+        (t, f"text {i}", float(i)) for i, t in sorted(
+            enumerate([3, 0, 2, 1]), key=lambda p: p[1])
+    ]
+
+
+def test_daemon_version_guard():
+    """CPython 3.12+ already re-reads zip directories lazily: the guard
+    leaves zipimporter alone there."""
+    before = zipimport.zipimporter.invalidate_caches
+    assert _daemon.install((3, 12, 0)) is False
+    assert _daemon.install((3, 13, 1)) is False
+    assert zipimport.zipimporter.invalidate_caches is before
+
+
+def test_worker_runs_daemon_noop(spark):
+    """Python workers run under roll_spark._daemon: on CPython < 3.12 their
+    zipimporter.invalidate_caches is the daemon's no-op."""
+
+    def probe(batches):
+        import zipimport
+
+        import pyarrow as pa
+
+        from roll_spark import _daemon as d
+
+        for _ in batches:
+            yield pa.record_batch({"noop": [
+                zipimport.zipimporter.invalidate_caches is d._keep_zip_directory
+            ]})
+
+    got = spark.range(1).mapInArrow(probe, "noop boolean").collect()
+    assert got[0].noop == (sys.version_info < (3, 12))
+
+
+_FOREIGN_CWD_OP = """
+from roll_spark import roll_mean
+df = spark.createDataFrame(
+    [("a", i, float(i) ** 2) for i in range(6)], "s string, i int, x double")
+rows = roll_mean(df, "x", "s", "i", 2, weights=[1.0, 3.0], min_obs=1,
+                 out="m").orderBy("i").collect()
+result = [r.m for r in rows]
+"""
+
+
+def test_arrow_op_from_foreign_cwd(spark, tmp_path):
+    """A driver started outside the repository (roll_spark found through
+    sys.path only, no PYTHONPATH) runs an Arrow op: get_spark puts the
+    package root on the executors' path."""
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(REPO)!r})
+        from roll_spark.session import get_spark
+        spark = get_spark(cpus=2)
+    """) + _FOREIGN_CWD_OP + 'print("RESULT", result)\nspark.stop()\n'
+    here = {"spark": spark}
+    exec(_FOREIGN_CWD_OP, here)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["ROLL_SPARK_DRIVER_MEM"] = "1g"
+    r = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-4000:]
+    line = [ln for ln in r.stdout.splitlines() if ln.startswith("RESULT")][0]
+    assert line == f"RESULT {here['result']}"

@@ -1,5 +1,5 @@
 """End-to-end Arrow path through the public API: passing non-equal
-weights to any roll_* op must route to the applyInPandas kernels and
+weights to any roll_* op must route to the applyInArrow kernels and
 match the naive oracle — the reference's weighted/exp-decay axis."""
 
 from __future__ import annotations
@@ -87,7 +87,7 @@ def test_weighted_pair_ops_arrow(spark, grid_df, grid_pairs):
 
 
 def test_lm_k2_arrow(spark, grid_df, grid_pairs):
-    """Two-regressor lm through applyInPandas: y ~ x + x^2."""
+    """Two-regressor lm through applyInArrow: y ~ x + x^2."""
     from pyspark.sql import functions as F
 
     df2 = grid_df.withColumn("x2", F.col("x") * F.col("x"))
@@ -204,7 +204,7 @@ def test_cov_matrix_kernel_matches_pairwise_oracle():
 
 
 def test_roll_cov_matrix_spark(spark, grid_df):
-    """End-to-end cube op through applyInPandas: k=2 matrix entries equal
+    """End-to-end cube op through applyInArrow: k=2 matrix entries equal
     the scalar roll_cov/roll_var results under the same masking."""
     from pyspark.sql import functions as F
 
@@ -309,13 +309,13 @@ def test_quantile_width_dispatch(grid_df):
                           QUANTILE_NATIVE_MAX_WIDTH, 0.5, min_obs=1, out="q")
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" in plan_small
-    assert "FlatMapGroupsInPandas" not in plan_small
+    assert "FlatMapGroupsInArrow" not in plan_small
 
     big = roll_quantile(grid_df, "x", "series_id", "i",
                         QUANTILE_NATIVE_MAX_WIDTH + 1, 0.5, min_obs=1, out="q")
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" not in plan_big
-    assert "FlatMapGroupsInPandas" in plan_big
+    assert "FlatMapGroupsInArrow" in plan_big
 
 
 def test_quantile_native_equals_arrow_at_boundary_p(grid_df):

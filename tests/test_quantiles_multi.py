@@ -111,7 +111,7 @@ def test_fused_weighted_endpoints_and_plan(spark):
     res = roll_quantiles(sdf, "v", "k", "o", 5, ps, weights=w, outs=outs)
     assert res.columns[-5:] == outs
     plan = res._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("FlatMapGroupsInArrow") == 1
     got = res.toPandas().sort_values(["k", "o"]).reset_index(drop=True)
     for p, o in zip(ps, outs):
         single = (

@@ -365,3 +365,21 @@ def test_store_expire_retention(spark, raw_dir, tmp_path):
     assert not os.path.exists(ghost)
     # idempotent: nothing older than cutoff remains
     assert store.expire(cutoff, coverage=cov) == []
+
+
+def test_store_expire_rejects_malformed_cutoff(spark, raw_dir, tmp_path):
+    """A cutoff that is not a real YYYY-MM-DD date raises before any day
+    is touched: days compare as strings, so '2025-1-5' would otherwise
+    drop every day of the fixture (2025-01-01 onwards)."""
+    import os
+
+    store_path = str(tmp_path / "tier_bad_cutoff")
+    store = TierStore(spark, store_path, "conv_id", "1m")
+    store.upsert(T.rollup_raw(spark.read.parquet(raw_dir), "text_len", "ts",
+                              "conv_id", "1m"))
+    before = sorted(os.listdir(store_path))
+    for cutoff in ("2024-1-5", "2025-1-5", "2024-02-30", "2024-01-05\n",
+                   "20240105", None):
+        with pytest.raises(ValueError):
+            store.expire(cutoff)
+        assert sorted(os.listdir(store_path)) == before, cutoff

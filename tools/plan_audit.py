@@ -151,7 +151,7 @@ EXPECT = {
     # exact per-bucket median: one hash agg (percentile is declarative)
     "tier_1m_p50": dict(max_exchange=1, max_sort=0, max_window=0),
     # expanding time-decay kernels: one grouped-map pass (the sort is
-    # the applyInPandas in-partition group ordering, not a shuffle)
+    # the applyInArrow in-partition group ordering, not a shuffle)
     "ewma_halflife_7d": dict(max_exchange=1, max_sort=1, max_window=0),
     "decayed_count_1d": dict(max_exchange=1, max_sort=1, max_window=0),
     "dedup_exact": dict(max_exchange=1, max_sort=0, max_window=0),
