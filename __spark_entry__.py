@@ -624,7 +624,8 @@ def q_stream_tier_1h(spark, sf_dir):
 
 def q_stream_roll_mean_w10(spark, sf_dir):
     """STATEFUL STREAMING rolling mean (applyInPandasWithState carrying
-    the online kernel's window state across micro-batches): events are
+    each series' trailing raw window across micro-batches, the batch
+    kernel rerun over [carry | micro-batch]): events are
     re-laid-out as four time-range files (a global time split preserves
     every user's event order across files — the append-only delivery the
     operator's contract needs) and drained as four micro-batches. The
@@ -746,23 +747,24 @@ def q_stream_roll_min_w10(spark, sf_dir):
 
 
 def q_stream_roll_quantile_w10(spark, sf_dir):
-    """STATEFUL STREAMING rolling quantile: the O(log w)/row online
-    dual-multiset kernel's state (both multisets + window history)
-    carried across micro-batches via applyInPandasWithState; the oracle
-    is the batch HF2 SQL — the driver hash proves the streamed order
+    """STATEFUL STREAMING rolling quantile: the trailing raw window
+    carried across micro-batches via applyInPandasWithState, the batch
+    HF2 selection kernel rerun over [carry | micro-batch]; the oracle is
+    the batch HF2 SQL — the hash comparison proves the streamed order
     statistics equal the batch sort-based engine row for row."""
     return _stream_roll_gate(spark, sf_dir, op="quantile", p=0.25, min_obs=1,
                              alias="q25", qname="stream_roll_q_gate")
 
 
 def q_stream_roll_cov_w10(spark, sf_dir):
-    """STATEFUL STREAMING rolling covariance: the bivariate Welford
-    co-moment state (insert/evict) carried across micro-batches; the
-    second series is the deterministic y = value^2/100, so the batch
-    covar_samp SQL is the exact oracle. Rounded at 3 decimals (1e-4
-    nudge): the online insert/evict co-moment vs the oracle's two-pass
-    carries irreducible ~kappa*eps discrepancy (mixed-sign products),
-    which flakes at 6 decimals on values this large."""
+    """STATEFUL STREAMING rolling covariance: the trailing raw (x, y)
+    window carried across micro-batches, the batch two-pass co-moment
+    kernel rerun over [carry | micro-batch]; the second series is the
+    deterministic y = value^2/100, so the batch covar_samp SQL is the
+    exact oracle. Rounded at 3 decimals (1e-4 nudge): the kernel's
+    two-pass co-moment vs DuckDB's covar_samp accumulation carries
+    irreducible ~kappa*eps discrepancy (mixed-sign products), which
+    flakes at 6 decimals on values this large."""
     return _stream_roll_gate(
         spark, sf_dir, op="cov", min_obs=5, alias="cov10",
         qname="stream_roll_cov_gate", y="value * value / 100.0",
@@ -799,7 +801,7 @@ def q_stream_roll_idxmin_w10(spark, sf_dir):
 def q_stream_roll_prod_w4(spark, sf_dir):
     """STATEFUL STREAMING rolling product (width 4 over value/100, the
     same magnitude-tamed series as the batch roll_prod_w4 gate): the
-    online kernel multiplies the carried raw window DIRECTLY — exact
+    window kernel multiplies the carried raw window DIRECTLY — exact
     zeros and signs with no log-sum detour (that formulation exists to
     stay inside a Catalyst Window) and no eviction division (which a
     single zero would corrupt). Oracle = DuckDB's windowed product()."""
@@ -807,17 +809,19 @@ def q_stream_roll_prod_w4(spark, sf_dir):
         spark, sf_dir, op="prod", min_obs=4, alias="sprod4",
         qname="stream_roll_prod_gate", width=4,
         value_sql="value / 100.0",
+        # + 0.0 normalizes IEEE negative zero, matching the oracle
+        rnd=lambda c: _r6(c) + F.lit(0.0),
     )
 
 
 def q_stream_roll_scale_w10(spark, sf_dir):
     """STATEFUL STREAMING rolling z-score (roll_scale's
     center=scale=True form: most-recent-non-NA value standardized by
-    the window's Welford moments, NULL on zero-variance windows): the
-    carry is the var-op Welford state plus the raw window. Rounded at 3
-    decimals (1e-4 nudge) — the online insert/evict moments vs the
-    oracle's exact two-pass carry the same irreducible ~kappa*eps class
-    as stream_roll_var/cov."""
+    the window's two-pass moments, NULL on zero-variance windows): the
+    carry is the trailing raw window, and the Arrow roll_scale kernel
+    (kernels.conv_scale) reruns over [carry | micro-batch]. Rounded at 3
+    decimals (1e-4 nudge) — the kernel vs the oracle's SQL moments carry
+    the same irreducible ~kappa*eps class as stream_roll_var/cov."""
     return _stream_roll_gate(
         spark, sf_dir, op="scale", min_obs=5, alias="sscale10",
         qname="stream_roll_scale_gate",
@@ -830,11 +834,11 @@ def q_stream_roll_scale_w10(spark, sf_dir):
 
 
 def q_stream_roll_var_w10(spark, sf_dir):
-    """STATEFUL STREAMING rolling variance: the univariate Welford
-    insert/evict moment state carried across micro-batches; the oracle
-    is the batch var_samp SQL. Rounded at 3 decimals (1e-4 nudge), the
-    same irreducible online-vs-two-pass ~kappa*eps class as
-    stream_roll_cov_w10."""
+    """STATEFUL STREAMING rolling variance: the trailing raw window
+    carried across micro-batches, the batch two-pass kernel rerun over
+    [carry | micro-batch]; the oracle is the batch var_samp SQL. Rounded
+    at 3 decimals (1e-4 nudge), the same irreducible kernel-vs-SQL
+    ~kappa*eps class as stream_roll_cov_w10."""
     return _stream_roll_gate(
         spark, sf_dir, op="var", min_obs=5, alias="svar10",
         qname="stream_roll_var_gate",
@@ -843,9 +847,9 @@ def q_stream_roll_var_w10(spark, sf_dir):
 
 
 def q_stream_roll_sum_w10(spark, sf_dir):
-    """STATEFUL STREAMING rolling sum: the add-new/evict-old recursion
-    (the reference's online sum, roll_vec.h:383) carried across
-    micro-batches; oracle = the batch windowed sum SQL."""
+    """STATEFUL STREAMING rolling sum: the trailing raw window carried
+    across micro-batches, the batch convolution sum rerun over
+    [carry | micro-batch]; oracle = the batch windowed sum SQL."""
     return _stream_roll_gate(spark, sf_dir, op="sum", min_obs=5,
                              alias="ssum10", qname="stream_roll_sum_gate")
 
@@ -1866,7 +1870,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- implementation touched in round 5 --------------------------
         "roll_trimmean_w10": q_roll_trimmean_w10,
         # stream_roll_mean_w10 (r4-green) yields its slot to the new
-        # ngram_jaccard_frac gate: its online_mean kernel is identically
+        # ngram_jaccard_frac gate: its stream path is identically
         # exercised in-window by the new stream_roll_sum/var gates
         "ngram_jaccard_frac": q_ngram_jaccard_frac,
         "stream_roll_quantile_w10": q_stream_roll_quantile_w10,
@@ -3565,10 +3569,10 @@ def _oracle_sql_dict() -> dict[str, str]:
               ROUND(1e-7 + CASE WHEN count(value) OVER ({_W10}) >= 5
                     THEN avg(value) OVER ({_W10}) END, 6) AS mean10
             FROM events""",
-        # the STREAMED online dual-multiset quantile must equal the
+        # the STREAMED raw-window-carry quantile must equal the
         # batch HF2 sort -> same oracle as roll_quantile_p25_w10
         "stream_roll_quantile_w10": _HF2.format(w=_W10, q=0.75, alias="q25"),
-        # streamed bivariate Welford co-moment == batch covar_samp over
+        # streamed two-pass co-moment == batch covar_samp over
         # (value, value^2/100) windows
         "stream_roll_cov_w10": f"""
             SELECT user_id, ts,
@@ -3594,7 +3598,7 @@ def _oracle_sql_dict() -> dict[str, str]:
               CAST(CASE WHEN rn <= 10 THEN rm ELSE 10 - rn + rm END AS INT)
                 AS sidxmax10
             FROM m""",
-        # streamed online extreme-index (min form) == the batch
+        # streamed extreme-index (min form) == the batch
         # struct-min SQL; -rn negation -> LATEST tied position
         "stream_roll_idxmin_w10": """
             WITH t AS (
@@ -3619,8 +3623,8 @@ def _oracle_sql_dict() -> dict[str, str]:
                     THEN product(value / 100.0) OVER ({_W4}) END, 6) + 0.0
                 AS sprod4
             FROM events""",
-        # streamed online z-score == the batch roll_scale SQL (same
-        # form as roll_scale_w10, coarser rounding for the online class)
+        # streamed z-score == the batch roll_scale SQL (same form as
+        # roll_scale_w10, coarser rounding for the kernel-vs-SQL class)
         "stream_roll_scale_w10": f"""
             SELECT user_id, ts,
               ROUND(1.2345e-4 + CASE WHEN count(value) OVER ({_W10}) >= 5
@@ -3630,7 +3634,7 @@ def _oracle_sql_dict() -> dict[str, str]:
                          / stddev_samp(value) OVER ({_W10}) END, 3) + 0.0
                 AS sscale10
             FROM events""",
-        # streamed univariate Welford moment == batch var_samp
+        # streamed two-pass moment == batch var_samp
         "stream_roll_var_w10": f"""
             SELECT user_id, ts,
               ROUND(1.2345e-4 + CASE WHEN count(value) OVER ({_W10}) >= 5

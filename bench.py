@@ -527,8 +527,9 @@ def write_bench_md(timings, total, scaling, walls=None, codec=None,
             "roll_vec.h:1735-1760 documents its online dual-multiset is",
             "equal-weight only). The engine's equal-weight online",
             "kernel (kernels.online_quantile, O(log w)/row) is",
-            "property-tested bit-identical to the offline kernel and",
-            "carries state across chunk/stream boundaries.",
+            "property-tested bit-identical to the offline kernel; it is",
+            "a reference oracle only — streaming carries the trailing",
+            "raw window and reruns the offline kernel per micro-batch.",
             "",
             "Why N=2: a zero-memory pure-CPU calibration loop (below) shows",
             "this sandbox's 32 vCPUs deliver only ~22 effective cores — ANY",

@@ -20,17 +20,15 @@ Mirrors the reference's argument contract (SURVEY.md §2.1; reference
 - ``na_restore``    if True, the output at a missing input position is
                 NULL regardless of window state (reference passthrough
                 ``roll_vec.h:497-501``).
-- ``online``    algorithm hint. The Spark engine picks the physical
-                strategy itself (Catalyst WindowExec for equal weights,
-                Arrow kernels otherwise); ``online`` is honoured inside
-                the Arrow path the same way the reference honours it:
-                equal/exponential weights -> O(1)-per-row recursion,
-                arbitrary weights -> offline recompute.
+
+The reference's ``online`` algorithm hint has no twin: the engine picks
+the physical strategy itself (Catalyst WindowExec for equal weights,
+vectorized Arrow kernels otherwise).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -71,7 +69,6 @@ class RollSpec:
     min_obs: int | None = None  # None -> width
     complete_obs: bool = False
     na_restore: bool = False
-    online: bool = True
     center: bool = True
     scale: bool = False
     p: float = 0.5  # quantile only
@@ -79,7 +76,6 @@ class RollSpec:
     # into overlap-padded chunks (operators.chunked) so one giant
     # conversation cannot pin a single task; None = one task per series
     max_group_rows: int | None = None
-    extra: dict = field(default_factory=dict, compare=False)
 
     def __post_init__(self) -> None:
         if self.width < 1:
@@ -100,12 +96,6 @@ class RollSpec:
     @property
     def effective_min_obs(self) -> int:
         return self.width if self.min_obs is None else self.min_obs
-
-    def weight_array(self) -> np.ndarray:
-        """The last ``width`` weights, oldest-slot-first (slot width-1 = newest)."""
-        if self.weights is None:
-            return np.ones(self.width, dtype=np.float64)
-        return np.asarray(self.weights, dtype=np.float64)[-self.width :]
 
     @property
     def weight_kind(self) -> str:

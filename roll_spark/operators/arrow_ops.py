@@ -293,45 +293,8 @@ def roll_quantiles(df, value, by, order, spec: RollSpec, ps, outs):
 
 
 def roll_scale(df, value, by, order, spec: RollSpec, *, out="roll_scale"):
-    # scale = (x_last - mean) / sd with the reference gates (most recent
-    # non-NA in the window; roll_vec.h:3132-3143), composed from the
-    # shared WindowSums convolutions
-    def scale_fn(x, width, weights=None, min_obs=None, na_restore=False):
-        x = np.asarray(x, dtype=np.float64)
-        min_obs = width if min_obs is None else min_obs
-        ok = ~np.isnan(x)
-        # most recent non-NA in the trailing window
-        idx = np.arange(len(x))
-        last_idx = np.where(ok, idx, -1)
-        last_idx = np.maximum.accumulate(last_idx)
-        # invalidate when the last non-NA fell out of the window
-        valid_last = last_idx >= idx - width + 1
-        x_last = np.where(valid_last & (last_idx >= 0), x[np.maximum(last_idx, 0)], np.nan)
-        s = K.WindowSums(x, width, weights)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            mean = s.sum_wx / s.sum_w
-            centered = x_last - mean if spec.center else x_last
-            if spec.scale:
-                if spec.center:
-                    # exact two-pass centered sum of squares (no
-                    # cancellation; see kernels._pair_window_moments)
-                    n_obs, sum_w, sumsq_w, ss, _, _, _, _ = K._pair_window_moments(
-                        x, None, width, weights
-                    )
-                else:
-                    n_obs, sum_w, sumsq_w, ss = (
-                        s.n_obs, s.sum_w, s.sumsq_w(), s.sum_wx2()
-                    )
-                v = ss / (sum_w - sumsq_w / sum_w)
-                res = np.where(
-                    (s.n_obs > 1) & (v > K.EPS), centered / np.sqrt(v), np.nan
-                )
-            else:
-                res = centered
-            out_arr = np.where(s.n_obs >= min_obs, res, np.nan)
-        return K._restore(out_arr, x, na_restore)
-
-    return _one(df, value, by, order, spec, scale_fn, out)
+    return _one(df, value, by, order, spec, K.conv_scale, out,
+                center=spec.center, scale=spec.scale)
 
 
 def roll_cov(df, x, by, order, spec: RollSpec, *, y, out="roll_cov"):

@@ -19,9 +19,10 @@ evaluates its own rows EXACTLY as the unchunked series would:
 
 This is stateless (no cross-task state carry), shuffle-parallel on
 (series, chunk_id), and adds width-1 duplicated rows per chunk —
-negligible when chunk_rows >> width. The alternative (sequential state
-carry, kernels.online_* ``state=``) is kept for streaming-style
-resumption; overlap wins at batch scale because chunks run in PARALLEL.
+negligible when chunk_rows >> width. Streaming (streaming/rolling.py)
+applies the same overlap identity sequentially: it carries the trailing
+``width-1`` raw values across micro-batches instead of duplicating rows,
+because micro-batches arrive in order rather than in parallel.
 """
 
 from __future__ import annotations

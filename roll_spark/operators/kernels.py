@@ -9,10 +9,14 @@ Two algorithm families, mirroring the reference's online/offline split
   ``np.convolve(x, reversed(weights))``. Arbitrary weights, C speed,
   O(n*width) — the production path inside Arrow UDFs.
 - ``online_*`` sequential O(1)-per-row recursions (lambda-recursion /
-  West co-moment updates, roll_vec.h:447, :2190, :3677). Used (a) to
-  prove online == offline equivalence the way the reference's own test
-  suite does, and (b) to carry state across chunk boundaries for the
-  skew path.
+  West co-moment updates, roll_vec.h:447, :2190, :3677). Reference
+  oracles only: they prove online == offline equivalence the way the
+  reference's own test suite does. No production path runs them;
+  streaming (streaming/rolling.py) carries the trailing raw window and
+  reruns the batch kernels over ``[carry | micro-batch]``. The one
+  exception is ``online_ewma_time``, which is itself a vectorized scan.
+- ``window_*`` stateless strided-window reduces (min/max, direct
+  product, idxmin/idxmax) used by the streaming path.
 
 All kernels take float64 arrays with NaN as missing and return float64
 with NaN for NULL; gates (min_obs, na_restore, eps clamps) replicate
@@ -20,6 +24,8 @@ the reference emit rules exactly.
 """
 
 from __future__ import annotations
+
+import warnings
 
 import numpy as np
 
@@ -271,6 +277,47 @@ def conv_var(x, width, weights=None, min_obs=None, na_restore=False, center=True
 
 def conv_sd(x, width, weights=None, min_obs=None, na_restore=False, center=True):
     return np.sqrt(conv_var(x, width, weights, min_obs, na_restore, center))
+
+
+def conv_scale(x, width, weights=None, min_obs=None, na_restore=False,
+               center=True, scale=True):
+    """Rolling z-score (x_last - mean) / sd with the reference gates
+    (roll_vec.h:3132-3143): x_last is the most recent non-NA value in
+    the window; a scaled output needs n_obs > 1 and var > eps, with no
+    clamp-to-zero. ``center``/``scale`` select the reference's four
+    forms."""
+    min_obs = width if min_obs is None else min_obs
+    x = np.asarray(x, dtype=np.float64)
+    ok = ~np.isnan(x)
+    # most recent non-NA in the trailing window
+    idx = np.arange(len(x))
+    last_idx = np.maximum.accumulate(np.where(ok, idx, -1))
+    # invalidate when the last non-NA fell out of the window
+    valid_last = last_idx >= idx - width + 1
+    x_last = np.where(valid_last & (last_idx >= 0), x[np.maximum(last_idx, 0)], np.nan)
+    if center and scale:
+        # exact two-pass window moments (no cancellation). Their mean is
+        # window-local, so a stream carrying the trailing window
+        # reproduces every output bit for bit.
+        n_obs, sum_w, sumsq_w, ss, _, _, mean, _ = _pair_window_moments(
+            x, None, width, weights
+        )
+    else:
+        s = WindowSums(x, width, weights)
+        n_obs, sum_w = s.n_obs, s.sum_w
+        with np.errstate(invalid="ignore", divide="ignore"):
+            mean = s.sum_wx / s.sum_w
+        if scale:
+            sumsq_w, ss = s.sumsq_w(), s.sum_wx2()
+    with np.errstate(invalid="ignore", divide="ignore"):
+        centered = x_last - mean if center else x_last
+        if scale:
+            v = ss / (sum_w - sumsq_w / sum_w)
+            res = np.where((n_obs > 1) & (v > EPS), centered / np.sqrt(v), np.nan)
+        else:
+            res = centered
+        out = np.where(n_obs >= min_obs, res, np.nan)
+    return _restore(out, x, na_restore)
 
 
 def conv_cov(x, y, width, weights=None, min_obs=None, na_restore=False, center=True):
@@ -672,7 +719,7 @@ def conv_lm_k(X, y, width, weights=None, min_obs=None, intercept=True):
 
 def _check_carry_width(hist, width, kernel: str) -> None:
     """A restored carry longer than the window means the stream resumed
-    with a SMALLER width than the checkpointed one. Unlike online_minmax
+    with a SMALLER width than the checkpointed one. Unlike stream_roll
     (whose raw-value carry lets it truncate and recover), the running
     sums / multisets these kernels carry are tied to the old width —
     silently continuing would produce wrong values, so fail loudly."""
@@ -975,64 +1022,6 @@ def online_var(x, width, min_obs=None, na_restore=False,
     return out, {"n_obs": n_obs, "mean": mean, "M2": M2, "hist": hist[-width:]}
 
 
-def online_scale(x, width, min_obs=None, na_restore=False,
-                 state: dict | None = None):
-    """Online rolling z-score — the sequential state-carrying twin of
-    window_ops.roll_scale's center=True/scale=True form (reference
-    RollScaleOfflineVec, roll_vec.h:3016-3180): the value scaled is the
-    MOST RECENT NON-NA in the window; NULL unless n_obs > 1 AND
-    var > eps (no clamp-to-zero). Same Welford insert/evict state as
-    online_var plus the raw window for the x_last scan."""
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        n_obs, mean, M2 = 0, 0.0, 0.0
-        hist = []
-    else:
-        n_obs, mean, M2 = state["n_obs"], state["mean"], state["M2"]
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_scale")
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        if not is_na:
-            n_obs += 1
-            d = xi - mean
-            mean += d / n_obs
-            M2 += d * (xi - mean)
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                if n_obs == 1:
-                    n_obs, mean, M2 = 0, 0.0, 0.0
-                else:
-                    d = old - mean
-                    mean = (n_obs * mean - old) / (n_obs - 1)
-                    M2 -= d * (old - mean)
-                    n_obs -= 1
-        if (not na_restore or not is_na) and n_obs >= max(min_obs, 2):
-            # the x_last scan doubles as the exact zero-variance test:
-            # after evictions the carried M2 keeps ~eps*mean^2 residue,
-            # so an all-equal window (true var 0, batch emits NULL via
-            # var > eps) would otherwise emit a garbage z from the
-            # residue — compare window values directly instead.
-            x_last, all_eq = np.nan, True
-            for h in reversed(hist):
-                if not np.isnan(h):
-                    if np.isnan(x_last):
-                        x_last = h
-                    elif h != x_last:
-                        all_eq = False
-                        break
-            v = M2 / (n_obs - 1)
-            if not all_eq and v > EPS:
-                out[i] = (x_last - mean) / np.sqrt(v)
-    return out, {"n_obs": n_obs, "mean": mean, "M2": M2, "hist": hist[-width:]}
-
-
 def online_cov(x, y, width, min_obs=None, na_restore=False,
                state: dict | None = None):
     """Equal-weight online covariance: bivariate Welford co-moment with
@@ -1310,118 +1299,64 @@ def conv_decayed_count(t_us, halflife_s, min_obs=1):
 
 
 
-def online_minmax(x, width, mode="min", min_obs=1, state=None):
-    """State-carrying rolling min/max for streaming: the carry is the
-    trailing width-1 raw values (the same hist the other online kernels
-    keep). Within a call the whole batch is evaluated as one vectorized
-    sliding-window reduce over [hist | batch] — no per-row Python; the
+def _padded_windows(x, width):
+    """Every trailing width-window of ``x`` (NaN-padded head, pads count
+    as unobserved) and its observed count."""
+    xp = np.concatenate([np.full(width - 1, np.nan), np.asarray(x, dtype=np.float64)])
+    wins = np.lib.stride_tricks.sliding_window_view(xp, width)
+    return wins, width - np.isnan(wins).sum(axis=1)
+
+
+def window_minmax(x, width, mode="min", min_obs=1):
+    """Rolling min/max as one strided nan-reduce over the windows — the
     reference's monotonic-deque online min/max (roll_vec.h:1046) is an
-    O(1)/row sequential refinement, but inside an Arrow batch the
-    strided nan-reduce is faster in numpy than a python-level deque.
-
-    Returns ``(out, state)`` with ``state = {"hist": trailing values,
-    "n_obs": observed count in hist}``.
-    """
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    hist = (np.asarray(state["hist"], dtype=np.float64)
-            if state is not None else np.full(width - 1, np.nan))
-    if hist.size != width - 1:  # defensive: normalize a mismatched carry
-        # a LONG carry (stream resumed with a smaller width than the
-        # checkpointed state) keeps its trailing width-1 values; a short
-        # one is NaN-padded on the left. np.full with a negative size
-        # would raise, so truncate before padding.
-        hist = hist[max(0, hist.size - (width - 1)):]
-        pad = np.full(width - 1 - hist.size, np.nan)
-        hist = np.concatenate([pad, hist])
-    xp = np.concatenate([hist, x])
-    out = np.full(n, np.nan)
-    if n:
-        wins = np.lib.stride_tricks.sliding_window_view(xp, width)
-        n_obs = width - np.isnan(wins).sum(axis=1)
+    O(1)/row sequential refinement, but the strided reduce is faster in
+    numpy than a Python-level deque."""
+    out = np.full(len(x), np.nan)
+    if len(x):
+        wins, n_obs = _padded_windows(x, width)
         red = np.nanmin if mode == "min" else np.nanmax
-        with np.errstate(invalid="ignore"):
-            import warnings
-
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore", RuntimeWarning)  # all-NaN
-                res = red(wins, axis=1)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # all-NaN
+            res = red(wins, axis=1)
         out = np.where(n_obs >= max(min_obs, 1), res, np.nan)
-    tail = xp[len(xp) - (width - 1):] if width > 1 else np.empty(0)
-    return out, {"hist": list(tail),
-                 "n_obs": int((~np.isnan(tail)).sum())}
+    return out
 
 
-def online_prod(x, width, min_obs=1, state=None):
-    """State-carrying rolling product for streaming: like
-    online_minmax the carry is the trailing width-1 raw values, and the
-    batch is one vectorized nanprod over strided windows — DIRECT
-    multiplication, so zeros and signs are exact by construction (the
-    batch engine's log-sum + zero/sign tracking exists to stay inside a
-    Catalyst Window; a numpy window reduce doesn't need it, and a
-    running-product-with-eviction-division recursion would corrupt on
-    any zero). Returns ``(out, state)``."""
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    hist = (np.asarray(state["hist"], dtype=np.float64)
-            if state is not None else np.full(width - 1, np.nan))
-    if hist.size != width - 1:  # same normalize as online_minmax
-        hist = hist[max(0, hist.size - (width - 1)):]
-        pad = np.full(width - 1 - hist.size, np.nan)
-        hist = np.concatenate([pad, hist])
-    xp = np.concatenate([hist, x])
-    out = np.full(n, np.nan)
-    if n:
-        wins = np.lib.stride_tricks.sliding_window_view(xp, width)
-        nan_mask = np.isnan(wins)
-        n_obs = width - nan_mask.sum(axis=1)
-        prod = np.where(nan_mask, 1.0, wins).prod(axis=1)
+def window_prod(x, width, min_obs=1):
+    """Rolling product by DIRECT multiplication of each window, so zeros
+    and signs are exact by construction (conv_prod's log-sum + zero/sign
+    tracking mirrors the Catalyst Window form; a running product with
+    eviction division would corrupt on any zero)."""
+    out = np.full(len(x), np.nan)
+    if len(x):
+        wins, n_obs = _padded_windows(x, width)
+        prod = np.where(np.isnan(wins), 1.0, wins).prod(axis=1)
         out = np.where(n_obs >= max(min_obs, 1), prod, np.nan)
-    tail = xp[len(xp) - (width - 1):] if width > 1 else np.empty(0)
-    return out, {"hist": list(tail),
-                 "n_obs": int((~np.isnan(tail)).sum())}
+    return out
 
 
-def online_idxminmax(x, width, mode="min", min_obs=1, state=None):
-    """State-carrying rolling idxmin/idxmax for streaming — the online
-    twin of window_ops._idx_extreme (reference roll_vec.h:1345-1659):
-    while the series is still expanding (global row r <= width,
-    1-based) the result is the 1-based SERIES position of the extreme;
-    once rolling it is the 1-based window slot (1 = oldest, width =
-    newest). Ties break toward the MOST RECENT occurrence (the
-    reference's ``<=`` candidate compare, roll_vec.h:1484).
-
-    The carry is the trailing width-1 raw values (same as
-    online_minmax) plus the global row count ``r`` — the expanding
-    phase needs the series position, which micro-batch locals can't
-    know. Within a call the whole batch is one vectorized argreduce
-    over reversed window slots (argmin/argmax return the FIRST hit, so
-    reversing makes that the most recent)."""
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    hist = (np.asarray(state["hist"], dtype=np.float64)
-            if state is not None else np.full(width - 1, np.nan))
-    r0 = int(state["r"]) if state is not None else 0
-    if hist.size != width - 1:  # same normalize as online_minmax
-        hist = hist[max(0, hist.size - (width - 1)):]
-        pad = np.full(width - 1 - hist.size, np.nan)
-        hist = np.concatenate([pad, hist])
-    xp = np.concatenate([hist, x])
-    out = np.full(n, np.nan)
-    if n:
-        wins = np.lib.stride_tricks.sliding_window_view(xp, width)
-        n_obs = width - np.isnan(wins).sum(axis=1)
-        rev = wins[:, ::-1]
+def window_idxminmax(x, width, mode="min", min_obs=1, r0=0):
+    """Rolling idxmin/idxmax, the contract of window_ops._idx_extreme
+    (reference roll_vec.h:1345-1659): while the series is still
+    expanding (global row r <= width, 1-based) the result is the 1-based
+    SERIES position of the extreme; once rolling it is the 1-based
+    window slot (1 = oldest, width = newest). Ties break toward the MOST
+    RECENT occurrence (the reference's ``<=`` candidate compare,
+    roll_vec.h:1484): argmin/argmax return the FIRST hit, so the
+    reduce runs over reversed window slots. ``r0`` is the number of
+    series rows before ``x[0]``."""
+    out = np.full(len(x), np.nan)
+    if len(x):
+        wins, n_obs = _padded_windows(x, width)
         fill = np.inf if mode == "min" else -np.inf
-        filled = np.where(np.isnan(rev), fill, rev)
+        filled = np.where(np.isnan(wins), fill, wins)[:, ::-1]
         a = filled.argmin(axis=1) if mode == "min" else filled.argmax(axis=1)
         slot = width - 1 - a  # back to original orientation, 0 = oldest
-        r = r0 + 1 + np.arange(n, dtype=np.int64)  # global 1-based rows
+        r = int(r0) + 1 + np.arange(len(x), dtype=np.int64)  # global 1-based rows
         idx = slot + 1 + np.minimum(r - width, 0)
-        out = np.where(n_obs >= max(min_obs, 1), idx.astype(np.float64),
-                       np.nan)
-    tail = xp[len(xp) - (width - 1):] if width > 1 else np.empty(0)
-    return out, {"hist": list(tail), "r": r0 + n}
+        out = np.where(n_obs >= max(min_obs, 1), idx.astype(np.float64), np.nan)
+    return out
 
 
 def conv_percentrank(x, width, weights=None, min_obs=None, na_restore=False):

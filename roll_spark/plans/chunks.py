@@ -41,9 +41,6 @@ def compress_series(
         F.unix_micros(F.col(ts).cast("timestamp")).alias("__rs_us"),
         F.col(value).alias("__rs_v"),
     )
-    schema = (
-        ", ".join(f"{c} string" if t == "string" else f"{c} {t}" for c, t in [])
-    )
     key_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in src.schema if f.name in keys
     )

@@ -1,25 +1,26 @@
 """Stateful streaming rolling statistics — applyInPandasWithState over
-the online kernels.
+the batch kernels.
 
 The batch engine's Arrow path evaluates a whole series per task; a LIVE
 transcript stream instead delivers each conversation's turns
-incrementally across micro-batches. This module keeps the rolling
-computation exactly incremental: per (series) group, the micro-batch's
-rows are folded through the sequential ``online_*`` kernels
-(roll_spark.operators.kernels) and the kernel's carry — trailing window
-values plus the running sums / dual multisets — is persisted in the
-Structured Streaming state store between batches. The reference's own
-"online" algorithms (roll_vec.h:383 sum recursion, :1694 dual-multiset
-quantile) are exactly this shape; here the state store supplies the
-cross-batch memory their single pass assumes.
+incrementally across micro-batches. Every window op's output depends on
+at most the trailing ``width`` rows (the reference's no-memory-of-
+evicted-rows property), so the state store carries, per series, just
+the trailing ``width-1`` raw values plus the row count. Each micro-batch
+runs the SAME vectorized batch kernel the Arrow path uses over
+``[carry | micro-batch]`` and keeps the batch rows' outputs — the
+overlap identity operators/chunked.py uses across chunks, applied
+across micro-batches. One code path serves the 11 window ops, with no
+per-row Python. ``ewma`` is expanding rather than windowed, so it
+carries its own four numbers (kernels.online_ewma_time).
 
 Correctness contract: rows must arrive IN (series, order) ORDER across
 micro-batches (append-only transcript tails — turn k+1 never lands in
 an earlier batch than turn k). Within a micro-batch rows are sorted by
-the order column before folding, so any intra-batch shuffling is fine;
+the order column first, so any intra-batch shuffling is fine;
 cross-batch disorder is the caller's watermarking problem, the same
 contract run_stream_to_tier enforces for tier buckets. The streamed
-output is proven row-identical to the batch operators in
+output is proven row-identical to the batch kernels in
 tests/test_streaming_rolling.py.
 
 Scale shape: state per key is O(width) floats (the trailing window),
@@ -53,19 +54,75 @@ _MAX_PLAUSIBLE_EPOCH_SECONDS = 1e12
 
 
 def _numeric_order_to_us(o: pd.Series) -> np.ndarray:
-    v = o.to_numpy(dtype=np.float64)
-    if v.size and np.nanmax(np.abs(v)) > _MAX_PLAUSIBLE_EPOCH_SECONDS:
+    v = o.to_numpy(dtype=np.float64, na_value=np.nan)
+    if np.isnan(v).any():
+        raise ValueError(
+            "numeric order column contains NULL/NaN values; event times "
+            "must be present for every row"
+        )
+    if v.size and np.abs(v).max() > _MAX_PLAUSIBLE_EPOCH_SECONDS:
         raise ValueError(
             "numeric order column looks like epoch-microseconds (max "
-            f"|value| {np.nanmax(np.abs(v)):.3g} > {_MAX_PLAUSIBLE_EPOCH_SECONDS:g}); "
+            f"|value| {np.abs(v).max():.3g} > {_MAX_PLAUSIBLE_EPOCH_SECONDS:g}); "
             "since 0.4.0 numeric order values are epoch-SECONDS — divide "
             "by 1e6 or pass a timestamp column"
         )
     return np.round(v * 1e6).astype(np.int64)
 
-# op name -> (kernel, state pack/unpack as flat double arrays)
-_OPS = ("mean", "sum", "var", "quantile", "cov", "ewma", "min", "max",
-        "idxmin", "idxmax", "scale", "prod")
+
+# op -> whole-series batch kernel f(v, width, min_obs, p, r0) over the
+# (rows, k) input array v (k = 2 for cov: value, y) whose first row is
+# series row r0 + 1. Only quantile reads p; only idxmin/idxmax read r0.
+_WINDOW = {
+    "mean": lambda v, w, mo, p, r0: K.conv_mean(v[:, 0], w, min_obs=mo),
+    "sum": lambda v, w, mo, p, r0: K.conv_sum(v[:, 0], w, min_obs=mo),
+    "var": lambda v, w, mo, p, r0: K.conv_var(v[:, 0], w, min_obs=mo),
+    "scale": lambda v, w, mo, p, r0: K.conv_scale(v[:, 0], w, min_obs=mo),
+    "quantile": lambda v, w, mo, p, r0: K.conv_quantile(v[:, 0], w, p, min_obs=mo),
+    "cov": lambda v, w, mo, p, r0: K.conv_cov(v[:, 0], v[:, 1], w, min_obs=mo),
+    "min": lambda v, w, mo, p, r0: K.window_minmax(v[:, 0], w, "min", mo),
+    "max": lambda v, w, mo, p, r0: K.window_minmax(v[:, 0], w, "max", mo),
+    "prod": lambda v, w, mo, p, r0: K.window_prod(v[:, 0], w, mo),
+    "idxmin": lambda v, w, mo, p, r0: K.window_idxminmax(v[:, 0], w, "min", mo, r0),
+    "idxmax": lambda v, w, mo, p, r0: K.window_idxminmax(v[:, 0], w, "max", mo, r0),
+}
+_OPS = (*_WINDOW, "ewma")
+
+
+def _window_step(op, width, min_obs, p, state, v):
+    """One series' micro-batch through a window op: ``(state, v) ->
+    (out, state)``, pure. ``state`` is the stored ``(hist, aux, lower,
+    upper)`` tuple or None; ``v`` the batch's (rows, k) inputs in order.
+
+    hist holds the trailing raw values (cov: interleaved (x, y) pairs)
+    and aux[0] the series row count. Every layout stream_roll has ever
+    written keeps the trailing raw values in hist and, for idxmin/
+    idxmax, the row count in aux[0]; the other ops ignore aux. A longer
+    carry (a stream resumed with a smaller width) truncates exactly; a
+    shorter one is NaN-padded on the left, and pads count as unobserved.
+    """
+    keep = width - 1
+    hist = np.asarray(state[0] if state else [], dtype=np.float64)
+    hist = hist.reshape(-1, v.shape[1])
+    hist = hist[max(0, len(hist) - keep):]
+    rows = float(state[1][0]) if state and state[1] else 0.0
+    xp = np.concatenate([np.full((keep - len(hist), v.shape[1]), np.nan), hist, v])
+    out = _WINDOW[op](xp, width, min_obs, p, rows - keep)[keep:]
+    # not xp[-keep:]: at width 1 that is the whole array
+    tail = xp[len(xp) - keep:]
+    # plain python floats only: the state tuple is pickled into the JVM
+    # state store, which rejects numpy scalar types
+    return out, (tail.ravel().tolist(), [rows + len(v)], [], [])
+
+
+def _ewma_step(halflife_s, min_obs, state, x, t_us):
+    """The ewma twin of :func:`_window_step`: aux carries
+    kernels.online_ewma_time's (num, den, t, n_obs)."""
+    carry = None
+    if state:
+        carry = dict(zip(("num", "den", "t", "n_obs"), state[1]))
+    out, s = K.online_ewma_time(x, t_us, halflife_s, min_obs=min_obs, state=carry)
+    return out, ([], [float(s[k]) for k in ("num", "den", "t", "n_obs")], [], [])
 
 
 def stream_roll(
@@ -85,19 +142,16 @@ def stream_roll(
     """Rolling ``op`` over a streaming DataFrame, one output row per
     input row, state carried per series across micro-batches.
 
-    op: 'mean' | 'sum' | 'var' (Welford) | 'min' | 'max' (trailing-
-    window reduce over the carried hist) | 'idxmin' | 'idxmax'
-    (window-relative extreme index, most-recent ties; the carry adds
-    the global row count for the expanding-phase series position) |
-    'scale' (z-score of the most recent non-NA window value, Welford
-    carry shared with 'var') | 'prod' (direct window nanprod over the
-    carried hist — exact zeros/signs; streaming any/all are stream
-    min/max over a derived 0/1 column) | 'quantile' (equal-weight
-    dual multiset, HF2 emission at ``p``) | 'cov' (bivariate Welford
-    co-moment over ``value`` and ``y``, pairwise-complete) | 'ewma'
-    (time-decay EWMA over the ORDER column's event time at
-    ``halflife_s`` — expanding, so ``width`` is ignored; the carry is
-    three numbers, the cheapest state in the family).
+    op: 'mean' | 'sum' | 'var' | 'min' | 'max' | 'prod' (direct window
+    product — exact zeros/signs; streaming any/all are stream min/max
+    over a derived 0/1 column) | 'idxmin' | 'idxmax' (window-relative
+    extreme index, most-recent ties, series position while expanding) |
+    'scale' (z-score of the most recent non-NA window value) |
+    'quantile' (equal-weight HF2 at ``p``) | 'cov' (pairwise-complete,
+    over ``value`` and ``y``) — each the batch kernel over the carried
+    trailing window plus the micro-batch — | 'ewma' (time-decay EWMA
+    over the ORDER column's event time at ``halflife_s`` — expanding,
+    so ``width`` is ignored; the carry is four numbers).
     """
     if op not in _OPS:
         raise ValueError(f"op must be one of {_OPS}")
@@ -110,14 +164,16 @@ def stream_roll(
     if len(order_l) != 1:
         raise ValueError("stream_roll needs exactly one order column")
     ocol = order_l[0]
+    inputs = [value, y] if op == "cov" else [value]
 
     by_fields = [f for f in sdf.schema if f.name in by_l]
     order_field = [f for f in sdf.schema if f.name == ocol][0]
     out_schema = TT.StructType(
         by_fields + [order_field, TT.StructField(out, TT.DoubleType())]
     )
-    # state: the kernel carry flattened to double arrays (hist may hold
-    # NaNs for missing turns; lower/upper are the quantile multisets)
+    # state: the carry flattened to double arrays (hist may hold NaNs for
+    # missing turns). lower/upper are always empty; the schema keeps
+    # them because Spark refuses a checkpoint whose state schema changed.
     state_schema = TT.StructType([
         TT.StructField("hist", TT.ArrayType(TT.DoubleType())),
         TT.StructField("aux", TT.ArrayType(TT.DoubleType())),
@@ -126,11 +182,6 @@ def stream_roll(
     ])
 
     def fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            hist, aux, lower, upper = state.get
-            kstate = _unpack(op, list(hist), list(aux), list(lower), list(upper))
-        else:
-            kstate = None
         frames = [pdf for pdf in pdfs if len(pdf)]
         if not frames:
             # same guard as streaming/sessions.py: an empty group batch
@@ -139,30 +190,9 @@ def stream_roll(
             return
         batch = pd.concat(frames, ignore_index=True)
         batch = batch.sort_values(ocol, kind="stable")
-        x = batch[value].to_numpy(dtype=np.float64, na_value=np.nan)
-        if op == "mean":
-            res, kstate = K.online_mean(x, width, min_obs=min_obs, state=kstate)
-        elif op == "sum":
-            res, kstate = K.online_sum(x, width, min_obs=min_obs, state=kstate)
-        elif op == "var":
-            res, kstate = K.online_var(x, width, min_obs=min_obs, state=kstate)
-        elif op == "scale":
-            res, kstate = K.online_scale(x, width, min_obs=min_obs,
-                                         state=kstate)
-        elif op == "cov":
-            yv = batch[y].to_numpy(dtype=np.float64, na_value=np.nan)
-            res, kstate = K.online_cov(x, yv, width, min_obs=min_obs,
-                                       state=kstate)
-        elif op in ("min", "max"):
-            res, kstate = K.online_minmax(x, width, mode=op,
-                                          min_obs=min_obs, state=kstate)
-        elif op == "prod":
-            res, kstate = K.online_prod(x, width, min_obs=min_obs,
-                                        state=kstate)
-        elif op in ("idxmin", "idxmax"):
-            res, kstate = K.online_idxminmax(x, width, mode=op[3:],
-                                             min_obs=min_obs, state=kstate)
-        elif op == "ewma":
+        v = batch[inputs].to_numpy(dtype=np.float64, na_value=np.nan)
+        prev = state.get if state.exists else None
+        if op == "ewma":
             o = batch[ocol]
             if str(o.dtype).startswith("datetime64"):
                 t_us = o.astype("int64").to_numpy() // 1000  # ns -> us
@@ -173,12 +203,10 @@ def stream_roll(
                 # its decay rate unchanged. Guarded against epoch-µs
                 # callers (int64 overflow) — see _numeric_order_to_us.
                 t_us = _numeric_order_to_us(o)
-            res, kstate = K.online_ewma_time(x, t_us, halflife_s,
-                                             min_obs=min_obs, state=kstate)
+            res, new = _ewma_step(halflife_s, min_obs, prev, v[:, 0], t_us)
         else:
-            res, kstate = K.online_quantile(x, width, p, min_obs=min_obs,
-                                            state=kstate)
-        state.update(_pack(op, kstate))
+            res, new = _window_step(op, width, min_obs, p, prev, v)
+        state.update(new)
         data = {c: batch[c].to_numpy() for c in by_l + [ocol]}
         data[out] = res
         yield pd.DataFrame(data)
@@ -186,55 +214,3 @@ def stream_roll(
     return sdf.groupBy(*by_l).applyInPandasWithState(
         fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-
-
-def _pack(op: str, s: dict) -> tuple:
-    # plain python floats only: the state tuple is pickled into the JVM
-    # state store, which rejects numpy scalar types
-    if op == "cov":
-        # hist holds (x, y) pairs: interleave into the flat array
-        hist = [float(v) for xy in s["hist"] for v in xy]
-        return (hist, [float(s["n_obs"]), float(s["mx"]), float(s["my"]),
-                       float(s["C"])], [], [])
-    if op == "ewma":
-        # no trailing window — three carry numbers + the observed count
-        return ([], [float(s["num"]), float(s["den"]), float(s["t"]),
-                     float(s["n_obs"])], [], [])
-    hist = [float(v) for v in s["hist"]]
-    if op in ("min", "max", "prod"):
-        return (hist, [float(s["n_obs"])], [], [])
-    if op in ("idxmin", "idxmax"):
-        return (hist, [float(s["r"])], [], [])
-    if op == "mean":
-        aux = [float(s["sum_w"]), float(s["sum_x"]), float(s["n_obs"])]
-        return (hist, aux, [], [])
-    if op == "sum":
-        return (hist, [float(s["sum_x"]), float(s["n_obs"])], [], [])
-    if op in ("var", "scale"):
-        return (hist, [float(s["n_obs"]), float(s["mean"]), float(s["M2"])],
-                [], [])
-    return (hist, [], [float(v) for v in s["lower"]],
-            [float(v) for v in s["upper"]])
-
-
-def _unpack(op: str, hist, aux, lower, upper) -> dict:
-    if op == "cov":
-        pairs = [(hist[i], hist[i + 1]) for i in range(0, len(hist), 2)]
-        return {"n_obs": int(aux[0]), "mx": aux[1], "my": aux[2],
-                "C": aux[3], "hist": pairs}
-    if op in ("min", "max", "prod"):
-        return {"hist": hist, "n_obs": int(aux[0])}
-    if op in ("idxmin", "idxmax"):
-        return {"hist": hist, "r": int(aux[0])}
-    if op == "mean":
-        return {"sum_w": aux[0], "sum_x": aux[1], "n_obs": int(aux[2]),
-                "hist": hist}
-    if op == "sum":
-        return {"sum_x": aux[0], "n_obs": int(aux[1]), "hist": hist}
-    if op in ("var", "scale"):
-        return {"n_obs": int(aux[0]), "mean": aux[1], "M2": aux[2],
-                "hist": hist}
-    if op == "ewma":
-        return {"num": aux[0], "den": aux[1], "t": aux[2],
-                "n_obs": int(aux[3])}
-    return {"lower": lower, "upper": upper, "hist": hist}

@@ -1,6 +1,7 @@
 """Online == offline dual-path equivalence — the reference's own test
 strategy (tests/testthat/test-roll.R checks every op both ways), plus
-the chunk-boundary state-carry contract the streaming/skew paths use.
+the recursions' chunk-boundary state-carry contract, and the stateless
+window kernels stream_roll runs against naive per-window replays.
 
 Offline = the vectorized conv_* kernels (production Arrow path);
 online = the sequential O(1)-or-O(log w)-per-row recursions mirroring
@@ -106,32 +107,11 @@ def test_state_carry_across_chunks(splits):
         assert _same(whole, np.concatenate(parts), atol=1e-9), width
 
 
-def test_online_minmax_mismatched_carry_recovers():
-    """A restored state hist that is LONGER than width-1 (stream resumed
-    with a smaller width than the checkpointed one) must truncate to the
-    trailing values, not raise from a negative-size np.full; a SHORT
-    carry still left-pads with NaN (round-4 ADVICE item)."""
-    x = np.array([5.0, 1.0, 9.0])
-    # long carry: width=3 needs hist size 2, give it 5 trailing values
-    long_state = {"hist": [100.0, -7.0, 2.0, 8.0, 4.0], "n_obs": 5}
-    out, st = K.online_minmax(x, 3, mode="min", min_obs=1, state=long_state)
-    # trailing width-1 = [8.0, 4.0] is the effective carry
-    assert out.tolist() == [4.0, 1.0, 1.0]
-    assert st["hist"] == [1.0, 9.0]
-    out_max, _ = K.online_minmax(x, 3, mode="max", min_obs=1,
-                                 state={"hist": [8.0, 4.0, 2.0], "n_obs": 3})
-    assert out_max.tolist() == [5.0, 5.0, 9.0]
-    # short carry unchanged: NaN-padded on the left
-    out_s, _ = K.online_minmax(x, 4, mode="min", min_obs=1,
-                               state={"hist": [2.0], "n_obs": 1})
-    assert out_s.tolist() == [2.0, 1.0, 1.0]
-
-
 def test_online_width_shrink_raises():
     """Resuming a sum/moment/multiset kernel with a SMALLER width than
     its checkpointed state must raise loudly — the carried running sums
     are tied to the old width, so silent continuation would be wrong
-    (online_minmax alone can truncate-and-recover: raw-value carry)."""
+    (stream_roll's raw-value carry truncates and recovers instead)."""
     x = np.arange(20.0)
     for fn, args in ((K.online_mean, ()), (K.online_sum, ()),
                      (K.online_var, ()), (K.online_quantile, (0.5,))):
@@ -144,11 +124,11 @@ def test_online_width_shrink_raises():
 
 
 def test_online_idxminmax_matches_batch_contract():
-    """online_idxminmax == an independent naive replay of the batch
-    contract (window_ops._idx_extreme / roll_vec.h:1345-1659): series
-    position while expanding, window slot once rolling, most-recent
-    ties, NaN exclusion, min_obs gating — plus chunked state carry
-    (hist + global row count) equals the single pass."""
+    """window_idxminmax (the stateless kernel stream_roll runs) == an
+    independent naive replay of the batch contract (window_ops.
+    _idx_extreme / roll_vec.h:1345-1659): series position while
+    expanding, window slot once rolling, most-recent ties, NaN
+    exclusion, min_obs gating; ``r0`` shifts the series position."""
     rng = np.random.default_rng(7)
     x = np.round(rng.normal(50, 20, 200), 2)
     x[rng.random(200) < 0.15] = np.nan
@@ -174,22 +154,19 @@ def test_online_idxminmax_matches_batch_contract():
         for width in (1, 3, 10):
             for mo in (1, 3):
                 want = naive(x, width, mode, mo)
-                got, _ = K.online_idxminmax(x, width, mode=mode, min_obs=mo)
+                got = K.window_idxminmax(x, width, mode=mode, min_obs=mo)
                 assert _same(got, want), (mode, width, mo)
-                st, parts = None, []
-                for lo, hi in ((0, 13), (13, 14), (14, 90), (90, 200)):
-                    seg, st = K.online_idxminmax(
-                        x[lo:hi], width, mode=mode, min_obs=mo, state=st)
-                    parts.append(seg)
-                assert _same(np.concatenate(parts), want), (mode, width, mo)
+                # a series tail from row lo on, told how many rows came before
+                lo = 13 - (width - 1)
+                tail = K.window_idxminmax(x[lo:], width, mode=mode, min_obs=mo, r0=lo)
+                assert _same(tail[width - 1:], want[13:]), (mode, width, mo)
 
 
 def test_online_scale_matches_naive():
-    """online_scale == a naive two-pass z-score replay of the batch
-    roll_scale contract (most-recent-non-NA value, n_obs>1 + var>eps
-    emission, min_obs gate), within the online-vs-two-pass ~kappa*eps
-    class the var/cov twins document (5e-8 band); chunked state carry
-    equals the single pass exactly."""
+    """conv_scale (the kernel stream_roll and the Arrow roll_scale share)
+    == a naive two-pass z-score replay of the batch roll_scale contract
+    (most-recent-non-NA value, n_obs>1 + var>eps emission, min_obs
+    gate), to float reassociation."""
     rng = np.random.default_rng(3)
     x = np.round(rng.normal(50, 20, 300), 2)
     x[rng.random(300) < 0.2] = np.nan
@@ -210,21 +187,15 @@ def test_online_scale_matches_naive():
     for width in (2, 5, 10, 30):
         for mo in (1, 5):
             want = naive(x, width, mo)
-            got, _ = K.online_scale(x, width, min_obs=mo)
+            got = K.conv_scale(x, width, min_obs=mo)
             assert np.array_equal(np.isnan(got), np.isnan(want)), (width, mo)
             m = ~np.isnan(got)
-            assert np.allclose(got[m], want[m], rtol=0, atol=5e-8), (width, mo)
-            st, parts = None, []
-            for lo, hi in ((0, 17), (17, 18), (18, 150), (150, 300)):
-                seg, st = K.online_scale(x[lo:hi], width, min_obs=mo, state=st)
-                parts.append(seg)
-            g2 = np.concatenate(parts)
-            assert np.array_equal(g2, got, equal_nan=True), (width, mo)
+            assert np.allclose(got[m], want[m], rtol=0, atol=1e-9), (width, mo)
 
 
 def test_online_prod_matches_naive():
-    """online_prod == the naive per-window product (exact zeros/signs,
-    NaN exclusion, min_obs gate); chunked carry == single pass."""
+    """window_prod (the kernel stream_roll runs) == the naive per-window
+    product (exact zeros/signs, NaN exclusion, min_obs gate)."""
     rng = np.random.default_rng(11)
     x = np.round(rng.normal(0.0, 1.5, 250), 2)  # mixed signs
     x[rng.random(250) < 0.2] = np.nan
@@ -242,11 +213,5 @@ def test_online_prod_matches_naive():
     for width in (1, 4, 10):
         for mo in (1, 4):
             want = naive(x, width, mo)
-            got, _ = K.online_prod(x, width, min_obs=mo)
+            got = K.window_prod(x, width, min_obs=mo)
             assert _same(got, want), (width, mo)
-            st, parts = None, []
-            for lo, hi in ((0, 41), (41, 42), (42, 130), (130, 250)):
-                seg, st = K.online_prod(x[lo:hi], width, min_obs=mo, state=st)
-                parts.append(seg)
-            assert np.array_equal(np.concatenate(parts), got,
-                                  equal_nan=True), (width, mo)
