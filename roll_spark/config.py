@@ -14,9 +14,11 @@ Mirrors the reference's argument contract (SURVEY.md §2.1; reference
 - ``min_obs``   minimum non-missing observations in the window, else
                 the output is NULL. Defaults to ``width`` (complete
                 windows); ``min_obs=1`` gives partial/expanding output.
-- ``complete_obs``  for multi-column ops: exclude a row from EVERY
-                column's window when ANY input column is missing
-                (reference ``src/roll.cpp:103-125``).
+- ``complete_obs``  the reference's matrix row mask (exclude a row from
+                EVERY column's window when ANY input column is missing,
+                ``src/roll.cpp:103-125``) is not a spec field: single-series
+                ops take ``mask_cols=`` (``operators.base``), the matrix
+                cov ops their own ``complete_obs=`` keyword.
 - ``na_restore``    if True, the output at a missing input position is
                 NULL regardless of window state (reference passthrough
                 ``roll_vec.h:497-501``).
@@ -36,30 +38,6 @@ EPS = float(np.finfo(np.float64).eps)  # arma::datum::eps
 SQRT_EPS = float(np.sqrt(np.finfo(np.float64).eps))
 
 
-def classify_weights(weights: np.ndarray | None) -> str:
-    """Classify a weights vector: 'equal' | 'exponential' | 'arbitrary'.
-
-    Port of the reference's lambda detection (``roll_check.h:50-94``):
-    equal weights or a constant successive ratio admit the O(1)
-    online recursion; anything else falls back to offline recompute.
-    """
-    if weights is None:
-        return "equal"
-    w = np.asarray(weights, dtype=np.float64)
-    if w.size == 0:
-        return "equal"
-    if np.any(w <= 0):
-        return "arbitrary"
-    if np.allclose(w, w[-1]):
-        return "equal" if np.isclose(w[-1], 1.0) else "exponential"
-    if w.size == 1:
-        return "exponential"
-    ratios = w[:-1] / w[1:]
-    if np.allclose(ratios, ratios[0]):
-        return "exponential"
-    return "arbitrary"
-
-
 @dataclass(frozen=True)
 class RollSpec:
     """One operator invocation's shared parameters."""
@@ -67,21 +45,14 @@ class RollSpec:
     width: int
     weights: tuple[float, ...] | None = None
     min_obs: int | None = None  # None -> width
-    complete_obs: bool = False
     na_restore: bool = False
     center: bool = True
     scale: bool = False
     p: float = 0.5  # quantile only
-    # skew guard for the Arrow path: series longer than this are split
-    # into overlap-padded chunks (operators.chunked) so one giant
-    # conversation cannot pin a single task; None = one task per series
-    max_group_rows: int | None = None
 
     def __post_init__(self) -> None:
         if self.width < 1:
             raise ValueError("width must be a positive integer")
-        if self.max_group_rows is not None and self.max_group_rows <= self.width:
-            raise ValueError("max_group_rows must exceed width")
         if self.min_obs is not None and self.min_obs < 1:
             raise ValueError("min_obs must be a positive integer")
         if not (0.0 <= self.p <= 1.0):
@@ -98,11 +69,10 @@ class RollSpec:
         return self.width if self.min_obs is None else self.min_obs
 
     @property
-    def weight_kind(self) -> str:
-        return classify_weights(
-            None if self.weights is None else np.asarray(self.weights)
-        )
-
-    @property
     def is_equal_weight(self) -> bool:
-        return self.weight_kind == "equal"
+        """No weights, or every weight ~1: the native Catalyst path
+        applies; anything else dispatches to the Arrow kernels."""
+        if self.weights is None or len(self.weights) == 0:
+            return True
+        w = np.asarray(self.weights, dtype=np.float64)
+        return bool(np.allclose(w, w[-1]) and np.isclose(w[-1], 1.0))

@@ -156,12 +156,13 @@ def _register_fp_cache(new_df) -> None:
     # issuing the next winnow call on a DIFFERENT corpus, or the eager
     # eviction here forces the first corpus's 3-consumer fingerprint
     # subtree to recompute (perf only, never correctness). unpersist() on
-    # a handle from a stopped SparkSession throws — swallow it, the cache
-    # died with the session anyway.
+    # a handle from a stopped SparkSession throws — swallow only that, the
+    # cache died with the session anyway; a sameSemantics failure raises.
     for old in _live_fp_cache:
+        if old.sameSemantics(new_df):
+            continue
         try:
-            if not old.sameSemantics(new_df):
-                old.unpersist()
+            old.unpersist()
         except Exception:
             pass
     _live_fp_cache[:] = [new_df]

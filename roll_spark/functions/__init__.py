@@ -7,7 +7,6 @@ be longer than ``width`` (only the last ``width`` entries apply).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -35,15 +34,6 @@ def linear_weights(width: int) -> tuple[float, ...]:
     return tuple(float(k) for k in range(1, width + 1))
 
 
-def classify(weights) -> str:
-    """'equal' | 'exponential' | 'arbitrary' — the reference's lambda
-    detection (roll_check.h:50-94), re-exported for callers choosing
-    an execution path explicitly."""
-    from roll_spark.config import classify_weights
-
-    return classify_weights(None if weights is None else np.asarray(weights))
-
-
 # -- derived numeric series over the transcripts schema ----------------------
 
 
@@ -65,7 +55,6 @@ __all__ = [
     "equal_weights",
     "exp_weights",
     "linear_weights",
-    "classify",
     "text_len",
     "latency_s",
 ]

@@ -109,22 +109,11 @@ def _apply_kernel(
     order: Cols,
     out_fields: list[tuple[str, str]],
     kernel,
-    spec: RollSpec | None = None,
 ) -> DataFrame:
     """Run ``kernel(inputs) -> dict[out_col, array]`` per series group,
     where ``inputs`` is ``_kernel_inputs`` of ``in_cols`` in order-key
     order and each output is a numpy array (NaN -> NULL) or an Arrow
     array (list columns, via ``_list_rows``).
-
-    Skew auto-dispatch: when ``spec.max_group_rows`` is set, EVERY
-    series is routed through the overlap-padded chunk layout
-    (operators.chunked) with that bound as the chunk size — a series
-    at or under the bound lands entirely in chunk 0 with zero pad rows
-    (only its grouping key widens), while a 10^9-turn conversation
-    becomes ceil(n / bound) independent tasks whose padded windows
-    reproduce the unchunked outputs exactly. The cost of the guard is
-    one extra row_number window pass + grouping on (series, chunk)
-    instead of (series).
 
     Two physical strategies:
 
@@ -143,13 +132,6 @@ def _apply_kernel(
       self-join may recompute the upstream plan with different physical
       layouts and disagree on every id).
     """
-    if spec is not None and spec.max_group_rows is not None:
-        from roll_spark.operators.chunked import chunk_pad, drop_pads
-
-        padded, keys = chunk_pad(df, by, order, spec.width, spec.max_group_rows)
-        return drop_pads(
-            _apply_kernel(padded, in_cols, keys, order, out_fields, kernel)
-        )
     by_l, order_l = _as_list(by), _as_list(order)
     key_cols = set(by_l) | set(order_l) | set(in_cols)
     wide = [
@@ -238,14 +220,14 @@ def _series_kernel_2(x_col: str, y_col: str, spec: RollSpec, fn, out: str, **kw)
 def _one(df, value, by, order, spec, fn, out, **kw):
     return _apply_kernel(
         df, [value], by, order, [(out, "double")],
-        _series_kernel_1(value, spec, fn, out, **kw), spec=spec,
+        _series_kernel_1(value, spec, fn, out, **kw),
     )
 
 
 def _two(df, x, y, by, order, spec, fn, out, **kw):
     return _apply_kernel(
         df, [x, y], by, order, [(out, "double")],
-        _series_kernel_2(x, y, spec, fn, out, **kw), spec=spec,
+        _series_kernel_2(x, y, spec, fn, out, **kw),
     )
 
 
@@ -288,7 +270,7 @@ def roll_quantiles(df, value, by, order, spec: RollSpec, ps, outs):
         return {o: arr[:, j] for j, o in enumerate(outs)}
 
     return _apply_kernel(
-        df, [value], by, order, [(o, "double") for o in outs], kernel, spec=spec
+        df, [value], by, order, [(o, "double") for o in outs], kernel
     )
 
 
@@ -362,7 +344,7 @@ def roll_lm_k(
             out[p + "se_intercept"] = res["se_intercept"]
         return out
 
-    res = _apply_kernel(df, x_cols + [y], by, order, fields, kernel, spec=spec)
+    res = _apply_kernel(df, x_cols + [y], by, order, fields, kernel)
     if flat:
         if len(x_cols) != 1:
             raise ValueError("flat=True requires exactly one regressor")
@@ -431,7 +413,7 @@ def roll_lm_multi(
                 out[f"{p}{yc}_se_intercept"] = res["se_intercept"]
         return out
 
-    return _apply_kernel(df, x_cols + y_cols, by, order, fields, kernel, spec=spec)
+    return _apply_kernel(df, x_cols + y_cols, by, order, fields, kernel)
 
 
 def roll_cov_xy_matrix(
@@ -464,7 +446,7 @@ def roll_cov_xy_matrix(
         ).reshape(len(X), -1)
         return {out: _list_rows(cube)}
 
-    return _apply_kernel(df, x_cols + y_cols, by, order, [(out, "array<double>")], kernel, spec=spec)
+    return _apply_kernel(df, x_cols + y_cols, by, order, [(out, "array<double>")], kernel)
 
 
 def roll_cov_matrix(
@@ -498,22 +480,21 @@ def roll_cov_matrix(
         ).reshape(len(X), -1)
         return {out: _list_rows(cube)}
 
-    return _apply_kernel(df, x_cols, by, order, [(out, "array<double>")], kernel, spec=spec)
+    return _apply_kernel(df, x_cols, by, order, [(out, "array<double>")], kernel)
 
 
 def roll_mad(df, value, by, order, width, *, min_obs=None, na_restore=False,
-             max_group_rows=None, out="roll_mad"):
+             out="roll_mad"):
     """Rolling median absolute deviation (robust dispersion for
     heavy-tailed transcript series — latency spikes, token bursts).
     Arrow-only: the inner median-of-deviations re-centers per window, so
     there is no single-Window Catalyst form; the kernel is the same
     strided-block shape as conv_quantile (kernels.conv_mad)."""
-    spec = RollSpec(width=width, min_obs=min_obs, na_restore=na_restore,
-                    max_group_rows=max_group_rows)
+    spec = RollSpec(width=width, min_obs=min_obs)  # validates width/min_obs
 
     def kernel(cols):
         return {out: K.conv_mad(cols[value], width,
                                 min_obs=spec.effective_min_obs,
                                 na_restore=na_restore)}
 
-    return _apply_kernel(df, [value], by, order, [(out, "double")], kernel, spec=spec)
+    return _apply_kernel(df, [value], by, order, [(out, "double")], kernel)

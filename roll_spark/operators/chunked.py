@@ -47,7 +47,11 @@ def chunk_pad(
 
     The padded frame carries ``__rs_chunk`` (chunk id) and ``__rs_pad``
     (True for duplicated overlap rows). Group by ``by + [__rs_chunk]``
-    and drop ``__rs_pad`` rows after evaluation.
+    and drop ``__rs_pad`` rows after evaluation. For the ops that take
+    a ``RollSpec`` (``arrow_ops.roll_lm_k``, ``roll_cov_matrix``, …)::
+
+        padded, keys = chunk_pad(df, "conv_id", "turn_idx", spec.width, 100_000)
+        out = drop_pads(roll_lm_k(padded, ["x"], "y", keys, "turn_idx", spec))
     """
     if chunk_rows <= width:
         raise ValueError("chunk_rows must exceed width")

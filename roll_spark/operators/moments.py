@@ -94,21 +94,15 @@ def roll_skew(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     out: str = "roll_skew",
 ) -> DataFrame:
-    """Bias-corrected rolling sample skewness (G1)."""
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
-    df = _central_moments(df, value, by, order, width)
-    n, m2, m3 = F.col("__n"), F.col("__m2"), F.col("__m3")
-    g1 = m3 * F.sqrt(n) / F.pow(m2, F.lit(1.5))
-    stat = F.when(
-        (n >= 3) & (m2 > F.lit(EPS)),
-        g1 * F.sqrt(n * (n - 1)) / (n - 2),
-    )
-    n_obs = F.col("__nobs")
-    return df.withColumn(out, gate(spec, F.col(value), stat, n_obs)).drop(*_MOM_TMP)
+    """Bias-corrected rolling sample skewness (G1): roll_skew_kurt with
+    the kurtosis output dropped."""
+    tmp = f"__kurt_{out}"
+    return roll_skew_kurt(df, value, by, order, width, min_obs=min_obs,
+                          na_restore=na_restore, out_skew=out,
+                          out_kurt=tmp).drop(tmp)
 
 
 @complete_obs_maskable
@@ -120,21 +114,15 @@ def roll_kurt(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     out: str = "roll_kurt",
 ) -> DataFrame:
-    """Bias-corrected rolling excess kurtosis (G2)."""
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
-    df = _central_moments(df, value, by, order, width)
-    n, m2, m4 = F.col("__n"), F.col("__m2"), F.col("__m4")
-    g2 = n * m4 / (m2 * m2) - 3
-    stat = F.when(
-        (n >= 4) & (m2 > F.lit(EPS)),
-        ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3)),
-    )
-    n_obs = F.col("__nobs")
-    return df.withColumn(out, gate(spec, F.col(value), stat, n_obs)).drop(*_MOM_TMP)
+    """Bias-corrected rolling excess kurtosis (G2): roll_skew_kurt with
+    the skewness output dropped."""
+    tmp = f"__skew_{out}"
+    return roll_skew_kurt(df, value, by, order, width, min_obs=min_obs,
+                          na_restore=na_restore, out_skew=tmp,
+                          out_kurt=out).drop(tmp)
 
 
 @complete_obs_maskable
@@ -146,7 +134,6 @@ def roll_skew_kurt(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     out_skew: str = "roll_skew",
     out_kurt: str = "roll_kurt",
@@ -161,7 +148,7 @@ def roll_skew_kurt(
     sample moments, the standard JB definition) — a free projection
     over the same central-moment columns; NULL under the kurtosis
     gates (n < 4 or zero variance)."""
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     df = _central_moments(df, value, by, order, width)
     n, m2, m3, m4 = (F.col(c) for c in ("__n", "__m2", "__m3", "__m4"))
     g1 = m3 * F.sqrt(n) / F.pow(m2, F.lit(1.5))
@@ -192,7 +179,6 @@ def roll_nunique(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     out: str = "roll_nunique",
 ) -> DataFrame:
@@ -205,7 +191,7 @@ def roll_nunique(
     widths above QUANTILE_NATIVE_MAX_WIDTH route to the blocked Arrow
     kernel (kernels.conv_nunique), same dispatch rule as roll_quantile.
     """
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     if width > QUANTILE_NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _one
@@ -262,7 +248,7 @@ def roll_acf(
     from roll_spark.operators.base import ordered_window
     from roll_spark.operators.window_ops import QUANTILE_NATIVE_MAX_WIDTH, _spec
 
-    spec = _spec(width, min_obs, True, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     lags = list(lags)
     ow = ordered_window(by, order)
     w = rolling_window(by, order, width)
@@ -320,7 +306,6 @@ def roll_percentrank(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     out: str = "roll_percentrank",
 ) -> DataFrame:
@@ -337,7 +322,7 @@ def roll_percentrank(
     QUANTILE_NATIVE_MAX_WIDTH route to the blocked Arrow kernel
     (kernels.conv_percentrank) — fixed memory budget at any width.
     """
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     if width > QUANTILE_NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _one
@@ -365,7 +350,6 @@ def roll_trimmed_mean(
     alpha: float = 0.2,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     out: str = "roll_trimmed_mean",
 ) -> DataFrame:
@@ -386,7 +370,7 @@ def roll_trimmed_mean(
     """
     if not 0.0 <= alpha < 0.5:
         raise ValueError(f"alpha must be in [0, 0.5), got {alpha}")
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     if width > QUANTILE_NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _one
@@ -441,7 +425,7 @@ def roll_spearman(
     expression per element (O(w^3)/row; CollapseProject only spares
     multi-referenced aliases it deems non-cheap).
     """
-    spec = _spec(width, min_obs, True, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     if width > SPEARMAN_NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _two
@@ -525,7 +509,7 @@ def roll_entropy(
     ENTROPY_NATIVE_MAX_WIDTH dispatch to the Arrow kernel
     (kernels.conv_entropy) with a pandas factorize per batch.
     """
-    spec = _spec(width, min_obs, False, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     if width > ENTROPY_NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _apply_kernel
@@ -541,7 +525,7 @@ def roll_entropy(
                                         na_restore=na_restore)}
 
         return _apply_kernel(df, [value], by, order, [(out, "double")],
-                             kernel, spec=spec)
+                             kernel)
     w = rolling_window(by, order, width)
     v = F.col(value)
     df = df.withColumn("__ent_l", F.collect_list(v).over(w))

@@ -99,7 +99,6 @@ def ewma_time(
     halflife_s: float,
     *,
     min_obs: int = 1,
-    max_group_rows: int | None = None,
     out: str = "ewma",
 ) -> DataFrame:
     """Time-decay EWMA over irregular event times (adjusted form):
@@ -111,18 +110,11 @@ def ewma_time(
 
     Arrow path (kernels.conv_ewma_time): sequential in time per series
     but fully vectorized (blocked rebased cumsums, no per-row Python),
-    one grouped-map pass per series; skewed series route through the
-    chunked layout via ``max_group_rows``... except this op is
-    EXPANDING, so chunk overlap would be the whole prefix — instead the
-    kernel itself is O(n) with O(1) state and a 10^9-turn conversation
-    costs one linear pass. ``max_group_rows`` is therefore rejected to
-    keep the contract honest.
+    one grouped-map pass per series. The op is EXPANDING, so the
+    overlap-padded chunking of operators.chunked does not apply (the
+    overlap would be the whole prefix); instead the kernel is O(n) with
+    O(1) state and a 10^9-turn conversation costs one linear pass.
     """
-    if max_group_rows is not None:
-        raise ValueError(
-            "ewma_time is expanding: overlap-padded chunking cannot bound "
-            "its prefix dependence; run the series whole (O(n) kernel)"
-        )
     from roll_spark.operators.arrow_ops import _apply_kernel
     from roll_spark.operators import kernels as K
 
@@ -145,7 +137,6 @@ def decayed_count(
     halflife_s: float,
     *,
     min_obs: int = 1,
-    max_group_rows: int | None = None,
     out: str = "decayed_n",
 ) -> DataFrame:
     """Time-decayed event count per series: each row's statistic is
@@ -156,13 +147,8 @@ def decayed_count(
     instantaneous events/sec.
 
     Expanding like ewma_time (same O(n)/O(1)-state blocked kernel =
-    its denominator), so ``max_group_rows`` chunking is rejected for
-    the same reason."""
-    if max_group_rows is not None:
-        raise ValueError(
-            "decayed_count is expanding: overlap-padded chunking cannot "
-            "bound its prefix dependence; run the series whole (O(n) kernel)"
-        )
+    its denominator), so it runs each series whole for the same
+    reason."""
     from roll_spark.operators.arrow_ops import _apply_kernel
     from roll_spark.operators import kernels as K
 

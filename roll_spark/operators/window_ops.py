@@ -46,12 +46,11 @@ from roll_spark.operators.base import (
 )
 
 
-def _spec(width, min_obs, complete_obs, na_restore, weights, **kw) -> RollSpec:
+def _spec(width, min_obs, na_restore, weights, **kw) -> RollSpec:
     return RollSpec(
         width=width,
         weights=None if weights is None else tuple(weights),
         min_obs=min_obs,
-        complete_obs=complete_obs,
         na_restore=na_restore,
         **kw,
     )
@@ -92,13 +91,12 @@ def roll_sum(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     out: str = "roll_sum",
 ) -> DataFrame:
     """Rolling/expanding sum (reference roll_sum, roll_vec.h:383-511)."""
-    spec = _spec(width, min_obs, complete_obs, na_restore, weights)
+    spec = _spec(width, min_obs, na_restore, weights)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_sum")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
@@ -115,13 +113,12 @@ def roll_mean(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     out: str = "roll_mean",
 ) -> DataFrame:
     """Rolling/expanding mean (reference roll_mean, roll_vec.h:814-1011)."""
-    spec = _spec(width, min_obs, complete_obs, na_restore, weights)
+    spec = _spec(width, min_obs, na_restore, weights)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_mean")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
@@ -138,7 +135,6 @@ def roll_prod(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     out: str = "roll_prod",
@@ -152,7 +148,7 @@ def roll_prod(
     tests bound. Weighted product is ``prod(w_k * x_k)`` (prod_w *
     prod_x, roll_vec.h:720-723).
     """
-    spec = _spec(width, min_obs, complete_obs, na_restore, weights)
+    spec = _spec(width, min_obs, na_restore, weights)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_prod")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
@@ -175,7 +171,6 @@ def roll_min(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     out: str = "roll_min",
@@ -188,7 +183,7 @@ def roll_min(
     non-positive weights (which WOULD change mass-based selection) are
     rejected, mirroring the reference's weight check."""
     _check_positive_weights(weights, "roll_min")
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     w = rolling_window(by, order, width)
     v = F.col(value)
     return df.withColumn(out, gate(spec, v, F.min(v).over(w), F.count(v).over(w)))
@@ -203,14 +198,13 @@ def roll_max(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     out: str = "roll_max",
 ) -> DataFrame:
     """Rolling max (roll_vec.h:1181-1270). Weights as in roll_min."""
     _check_positive_weights(weights, "roll_max")
-    spec = _spec(width, min_obs, complete_obs, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     w = rolling_window(by, order, width)
     v = F.col(value)
     return df.withColumn(out, gate(spec, v, F.max(v).over(w), F.count(v).over(w)))
@@ -235,7 +229,7 @@ def _idx_extreme(
     Ties break toward the MOST RECENT occurrence (offline kernel uses
     ``<=`` on candidate compare, roll_vec.h:1484).
     """
-    spec = _spec(width, min_obs, False, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     w = rolling_window(by, order, width)
     ow = ordered_window(by, order)
     v = F.col(value)
@@ -286,7 +280,6 @@ def roll_quantile(
     p: float,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     out: str = "roll_quantile",
@@ -320,7 +313,7 @@ def roll_quantile(
     if p == 1.0:
         return roll_max(df, value, by, order, width, min_obs=min_obs,
                         na_restore=na_restore, weights=weights, out=out)
-    spec = _spec(width, min_obs, complete_obs, na_restore, weights, p=p)
+    spec = _spec(width, min_obs, na_restore, weights, p=p)
     if not spec.is_equal_weight or width > QUANTILE_NATIVE_MAX_WIDTH:
         return _dispatch_weighted("roll_quantile")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
@@ -378,7 +371,6 @@ def roll_quantiles(
     ps: Sequence[float],
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     outs: Sequence[str] | None = None,
@@ -405,7 +397,7 @@ def roll_quantiles(
     ]
     if len(outs) != len(ps):
         raise ValueError("outs must match ps in length")
-    spec = _spec(width, min_obs, complete_obs, na_restore, weights)
+    spec = _spec(width, min_obs, na_restore, weights)
     if not spec.is_equal_weight or width > QUANTILE_NATIVE_MAX_WIDTH:
         interior = [(p_, o_) for p_, o_ in zip(ps, outs) if 0.0 < p_ < 1.0]
         out_df = df
@@ -444,13 +436,13 @@ def roll_quantiles(
 
 @complete_obs_maskable
 def roll_median(
-    df, value, by, order, width, *, min_obs=None, complete_obs=False,
+    df, value, by, order, width, *, min_obs=None,
     na_restore=False, weights=None, out="roll_median"
 ) -> DataFrame:
     """roll_median = roll_quantile(p=0.5) (reference R/roll.R:441-448)."""
     return roll_quantile(
         df, value, by, order, width, 0.5, min_obs=min_obs,
-        complete_obs=complete_obs, na_restore=na_restore, weights=weights, out=out
+        na_restore=na_restore, weights=weights, out=out
     )
 
 
@@ -463,7 +455,6 @@ def roll_var(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     center: bool = True,
@@ -476,7 +467,7 @@ def roll_var(
     clamp: var<=eps -> 0, var<-eps -> NULL. Requires n_obs > 1.
     ``center=False`` uses the raw second moment about zero.
     """
-    spec = _spec(width, min_obs, complete_obs, na_restore, weights, center=center)
+    spec = _spec(width, min_obs, na_restore, weights, center=center)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_var")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
@@ -491,13 +482,13 @@ def roll_var(
 
 @complete_obs_maskable
 def roll_sd(
-    df, value, by, order, width, *, min_obs=None, complete_obs=False,
+    df, value, by, order, width, *, min_obs=None,
     na_restore=False, weights=None, center=True, out="roll_sd"
 ) -> DataFrame:
     """sqrt of roll_var with identical gates (roll_vec.h:2430-2744)."""
     tmp = f"__var_{out}"
     res = roll_var(
-        df, value, by, order, width, min_obs=min_obs, complete_obs=complete_obs,
+        df, value, by, order, width, min_obs=min_obs,
         na_restore=na_restore, weights=weights, center=center, out=tmp
     )
     return res.withColumn(out, F.sqrt(F.col(tmp))).drop(tmp)
@@ -512,7 +503,6 @@ def roll_scale(
     width: int,
     *,
     min_obs: int | None = None,
-    complete_obs: bool = False,
     na_restore: bool = False,
     weights: Sequence[float] | None = None,
     center: bool = True,
@@ -527,7 +517,7 @@ def roll_scale(
     when center=False). When scaling: NULL unless n_obs > 1 AND
     var > eps (no clamp-to-zero here).
     """
-    spec = _spec(width, min_obs, complete_obs, na_restore, weights,
+    spec = _spec(width, min_obs, na_restore, weights,
                  center=center, scale=scale)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_scale")(df, value, by, order, spec, out=out)
@@ -581,7 +571,7 @@ def roll_cov(
 
     Denominator sum_w - sumsq_w/sum_w; requires n_obs > 1.
     """
-    spec = _spec(width, min_obs, True, na_restore, weights, center=center)
+    spec = _spec(width, min_obs, na_restore, weights, center=center)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_cov")(df, x, by, order, spec, y=y, out=out)
     w = rolling_window(by, order, width)
@@ -611,7 +601,7 @@ def roll_cor(
     """Rolling correlation = scaled covariance (roll_vec.h:4112-4125):
     sumsq_xy / (sqrt(sumsq_x) sqrt(sumsq_y)); NULL when either centered
     sum of squares <= eps; requires n_obs > 1."""
-    spec = _spec(width, min_obs, True, na_restore, weights)
+    spec = _spec(width, min_obs, na_restore, weights)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_cor")(df, x, by, order, spec, y=y, out=out)
     w = rolling_window(by, order, width)
@@ -654,7 +644,7 @@ def roll_crossprod(
     Uncentered, unscaled, NOT divided by the unbiased denominator;
     gates on min_obs only (roll_vec.h:5081).
     """
-    spec = _spec(width, min_obs, True, na_restore, weights)
+    spec = _spec(width, min_obs, na_restore, weights)
     if not spec.is_equal_weight:
         return _dispatch_weighted("roll_crossprod")(df, x, by, order, spec, y=y, out=out)
     w = rolling_window(by, order, width)
@@ -686,7 +676,7 @@ def roll_any(
     observed TRUE in the window; FALSE only when the window is FULLY
     observed (n_obs == min(width, row)); else NULL. min_obs defaults to
     1 in the reference wrapper (R/roll.R:28)."""
-    spec = _spec(width, min_obs, False, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     w = rolling_window(by, order, width)
     ow = ordered_window(by, order)
     v = F.col(value).cast("boolean")
@@ -716,7 +706,7 @@ def roll_all(
 ) -> DataFrame:
     """Rolling Kleene AND (emit roll_vec.h:277-289): FALSE if any observed
     FALSE; TRUE only when the window is fully observed; else NULL."""
-    spec = _spec(width, min_obs, False, na_restore, None)
+    spec = _spec(width, min_obs, na_restore, None)
     w = rolling_window(by, order, width)
     ow = ordered_window(by, order)
     v = F.col(value).cast("boolean")

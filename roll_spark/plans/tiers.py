@@ -38,6 +38,9 @@ TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
 # which tier feeds which in the cascade
 CASCADE = [("raw", "1m"), ("1m", "1h"), ("1h", "1d")]
 
+# every tier frame's bucket-start column (TierStore keys on it too)
+BUCKET = "bucket_ts"
+
 STAT_COLS = [
     "n", "sum_w", "sum_x", "m2", "min_x", "max_x",
     "first_ts", "first_x", "last_ts", "last_x",
@@ -54,8 +57,6 @@ def rollup_raw(
     ts: str,
     by: Cols,
     tier: str,
-    *,
-    bucket_out: str = "bucket_ts",
 ) -> DataFrame:
     """Tier-0 aggregation: raw rows -> per-(series, bucket) sufficient stats.
 
@@ -64,7 +65,7 @@ def rollup_raw(
     m2 = var_samp * (n-1), with the n==1 -> 0 edge handled explicitly.
     """
     v = F.col(value)
-    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     n = F.count(v)
     first_struct = F.min(F.when(v.isNotNull(), F.struct(F.col(ts).alias("t"), v.alias("v"))))
     last_struct = F.max(F.when(v.isNotNull(), F.struct(F.col(ts).alias("t"), v.alias("v"))))
@@ -86,16 +87,13 @@ def merge_tier(
     stats: DataFrame,
     by: Cols,
     tier: str,
-    *,
-    bucket_in: str = "bucket_ts",
-    bucket_out: str = "bucket_ts",
 ) -> DataFrame:
     """Chan-merge finer-tier sufficient stats into a coarser tier.
 
     Exact moment combination across g sub-buckets:
     M2 = sum m2_i + sum(sum_x_i^2/n_i) - (sum sum_x_i)^2 / N.
     """
-    keys = [*_as_list(by), bucket_col(F.col(bucket_in), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(BUCKET), tier).alias(BUCKET)]
     n = F.sum("n")
     sum_x = F.sum("sum_x")
     # sum n_i mu_i^2 = sum sum_x_i^2 / n_i
@@ -160,7 +158,6 @@ def gapfill(
     by: Cols,
     tier: str,
     *,
-    bucket: str = "bucket_ts",
     value: str = "mean_x",
     method: str = "locf",
 ) -> DataFrame:
@@ -175,20 +172,20 @@ def gapfill(
     - ``linear`` linear interpolation between the bracketing observed
                  points: prev + (next-prev) * (t-t_prev)/(t_next-t_prev).
 
-    Output: (by, bucket, value, <value>_filled, is_gap).
+    Output: (by, bucket_ts, value, <value>_filled, is_gap).
     """
     keys = _as_list(by)
     step = F.expr(f"INTERVAL {TIER_SECONDS[tier]} SECONDS")
     grid = (
         stats.groupBy(*keys)
-        .agg(F.min(bucket).alias("_lo"), F.max(bucket).alias("_hi"))
-        .select(*keys, F.explode(F.sequence("_lo", "_hi", step)).alias(bucket))
+        .agg(F.min(BUCKET).alias("_lo"), F.max(BUCKET).alias("_hi"))
+        .select(*keys, F.explode(F.sequence("_lo", "_hi", step)).alias(BUCKET))
     )
-    joined = grid.join(stats.select(*keys, bucket, value), [*keys, bucket], "left")
+    joined = grid.join(stats.select(*keys, BUCKET, value), [*keys, BUCKET], "left")
 
     from pyspark.sql import Window
 
-    ow = Window.partitionBy(*keys).orderBy(bucket)
+    ow = Window.partitionBy(*keys).orderBy(BUCKET)
     prev_v = F.last(value, ignorenulls=True).over(
         ow.rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -197,7 +194,7 @@ def gapfill(
     elif method == "linear":
         fw = ow.rowsBetween(0, Window.unboundedFollowing)
         next_v = F.first(value, ignorenulls=True).over(fw)
-        t = F.unix_timestamp(bucket).cast("double")
+        t = F.unix_timestamp(BUCKET).cast("double")
         prev_t = F.last(
             F.when(F.col(value).isNotNull(), t), ignorenulls=True
         ).over(ow.rowsBetween(Window.unboundedPreceding, 0))
@@ -225,8 +222,6 @@ def ohlc_bars(
     ts: str,
     by: Cols,
     tier: str,
-    *,
-    bucket_out: str = "bucket_ts",
 ) -> DataFrame:
     """OHLC downsample bars per (series, tier bucket): open/high/low/
     close + count + mean — ONE groupBy with map-side partial
@@ -242,7 +237,7 @@ def ohlc_bars(
     """
     v = F.col(value)
     t_obs = F.when(v.isNotNull(), F.col(ts))
-    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     n = F.count(v)
     return df.groupBy(*keys).agg(
         F.min_by(v, t_obs).alias("open"),
@@ -262,7 +257,6 @@ def tier_top_values(
     tier: str,
     *,
     k: int = 1,
-    bucket_out: str = "bucket_ts",
     out_count: str = "n_events",
     out_rank: str = "rank",
 ) -> DataFrame:
@@ -280,9 +274,9 @@ def tier_top_values(
     """
     from pyspark.sql import Window
 
-    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     counts = df.groupBy(*keys, F.col(cat)).agg(F.count("*").alias(out_count))
-    w = Window.partitionBy(*_as_list(by), bucket_out).orderBy(
+    w = Window.partitionBy(*_as_list(by), BUCKET).orderBy(
         F.col(out_count).desc(), F.col(cat).asc()
     )
     return (
@@ -300,7 +294,6 @@ def realtime_view(
     tier: str,
     *,
     cutoff: str,
-    bucket_out: str = "bucket_ts",
 ) -> DataFrame:
     """Real-time continuous aggregate (the TimescaleDB pattern): buckets
     strictly BEFORE the materialization watermark ``cutoff`` are served
@@ -318,11 +311,8 @@ def realtime_view(
     read mostly-materialized data yet always see the live edge.
     """
     cut = F.date_trunc(TIERS[tier], F.lit(cutoff).cast("timestamp"))
-    old = materialized.filter(F.col(bucket_out) < cut)
-    fresh = rollup_raw(
-        raw.filter(F.col(ts) >= cut), value, ts, by, tier,
-        bucket_out=bucket_out,
-    )
+    old = materialized.filter(F.col(BUCKET) < cut)
+    fresh = rollup_raw(raw.filter(F.col(ts) >= cut), value, ts, by, tier)
     return old.select(fresh.columns).unionByName(fresh)
 
 
@@ -336,7 +326,6 @@ def tier_histogram(
     lo: float,
     hi: float,
     n_bins: int,
-    bucket_out: str = "bucket_ts",
 ) -> DataFrame:
     """Per-(series, bucket) equi-width value histogram: bin index =
     floor((v - lo) / step) clamped to [0, n_bins-1] (out-of-range
@@ -359,7 +348,7 @@ def tier_histogram(
     step = (float(hi) - float(lo)) / int(n_bins)
     raw_bin = F.floor((v - F.lit(float(lo))) / F.lit(step))
     bin_ = F.least(F.greatest(raw_bin, F.lit(0)), F.lit(int(n_bins) - 1))
-    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     return (
         df.filter(v.isNotNull())
         .groupBy(*keys, bin_.cast("int").alias("bin"))
@@ -378,8 +367,6 @@ def tier_quantile_from_histogram(
     lo: float,
     hi: float,
     n_bins: int,
-    bucket_in: str = "bucket_ts",
-    bucket_out: str = "bucket_ts",
     out: str = "q",
 ) -> DataFrame:
     """Approximate p-quantile per (series, coarse bucket) extracted from
@@ -412,13 +399,13 @@ def tier_quantile_from_histogram(
         raise ValueError("need 0 < p < 1")
     step = (float(hi) - float(lo)) / int(n_bins)
     keys = [*_as_list(by),
-            bucket_col(F.col(bucket_in), tier).alias(bucket_out)]
+            bucket_col(F.col(BUCKET), tier).alias(BUCKET)]
     merged = (
         hist.groupBy(*keys, "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
     packed = (
-        merged.groupBy(*_as_list(by), bucket_out)
+        merged.groupBy(*_as_list(by), BUCKET)
         .agg(
             F.sort_array(F.collect_list(F.struct("bin", "cnt"))).alias("_bins"),
             F.sum("cnt").alias("_n"),
@@ -442,7 +429,7 @@ def tier_quantile_from_histogram(
         )
 
     return packed.select(
-        *_as_list(by), bucket_out,
+        *_as_list(by), BUCKET,
         F.aggregate("_bins", init, _merge, lambda a: a["res"]).alias(out),
     )
 
@@ -454,7 +441,6 @@ def tier_nunique(
     by: Cols,
     tier: str,
     *,
-    bucket_out: str = "bucket_ts",
     out: str = "n_unique",
 ) -> DataFrame:
     """EXACT distinct-value count per (series, bucket) — cardinality
@@ -466,7 +452,7 @@ def tier_nunique(
     distinct value per partition, never the raw stream. For the
     mergeable-across-tiers version use tier_hll_sketch.
     """
-    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     return df.groupBy(*keys).agg(F.count_distinct(F.col(col)).alias(out))
 
 
@@ -478,7 +464,6 @@ def tier_hll_sketch(
     tier: str,
     *,
     lg_k: int = 12,
-    bucket_out: str = "bucket_ts",
     out: str = "hll",
 ) -> DataFrame:
     """MERGEABLE cardinality per (series, bucket): Apache DataSketches
@@ -493,7 +478,7 @@ def tier_hll_sketch(
     Type contract (Spark's hll_sketch_agg): ``col`` must be
     int/bigint/string/binary — cast integral-valued doubles to bigint,
     format true reals to strings, at the call site."""
-    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     return df.groupBy(*keys).agg(
         F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias(out)
     )
@@ -504,13 +489,11 @@ def merge_hll_tier(
     by: Cols,
     tier: str,
     *,
-    bucket_in: str = "bucket_ts",
-    bucket_out: str = "bucket_ts",
     col: str = "hll",
 ) -> DataFrame:
     """Chan-merge twin for HLL sketches: union finer-tier sketches into
     the coarser bucket (one partial-agg groupBy, raw never re-read)."""
-    keys = [*_as_list(by), bucket_col(F.col(bucket_in), tier).alias(bucket_out)]
+    keys = [*_as_list(by), bucket_col(F.col(BUCKET), tier).alias(BUCKET)]
     return sketches.groupBy(*keys).agg(F.hll_union_agg(F.col(col)).alias(col))
 
 

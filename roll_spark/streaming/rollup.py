@@ -77,7 +77,6 @@ def stream_rollup_raw(
     tier: str,
     *,
     watermark: str | None = None,
-    bucket_out: str = "bucket_ts",
 ) -> DataFrame:
     """Streaming raw -> tier sufficient stats (same columns as
     ``tiers.rollup_raw``).
@@ -123,7 +122,7 @@ def stream_rollup_raw(
             last_struct.getField("t").alias("last_ts"),
             last_struct.getField("v").alias("last_x"),
         )
-        .withColumn(bucket_out, F.col("_w.start"))
+        .withColumn(T.BUCKET, F.col("_w.start"))
         .drop("_w")
     )
 
@@ -142,7 +141,6 @@ def stream_histogram_raw(
     hi: float,
     n_bins: int,
     watermark: str | None = None,
-    bucket_out: str = "bucket_ts",
 ) -> DataFrame:
     """Streaming raw -> per-(series, bucket, bin) equi-width histogram
     counts — the distribution tier's streaming twin (same bin algebra
@@ -175,7 +173,7 @@ def stream_histogram_raw(
             F.min(ts).alias("first_ts"),
             F.max(ts).alias("last_ts"),
         )
-        .withColumn(bucket_out, F.col("_w.start"))
+        .withColumn(T.BUCKET, F.col("_w.start"))
         .drop("_w")
     )
 
@@ -272,18 +270,18 @@ class TierStore:
         replaying a micro-batch is a no-op (idempotent recovery). Only
         the day partitions present in the batch are read, rewritten and
         swapped; every other day's files are untouched."""
-        cols = [*self.by, "bucket_ts", *self.extra_keys, *self.stat_cols]
+        cols = [*self.by, T.BUCKET, *self.extra_keys, *self.stat_cols]
         new = updated.select(*cols).withColumn(
-            "_day", F.date_format("bucket_ts", "yyyy-MM-dd")
+            "_day", F.date_format(T.BUCKET, "yyyy-MM-dd")
         )
         days = sorted(r[0] for r in new.select("_day").distinct().collect())
         if not days:
             return
         cur = self._read_days(days)
         if cur is not None:
-            keys = [*self.by, "bucket_ts", *self.extra_keys]
+            keys = [*self.by, T.BUCKET, *self.extra_keys]
             kept = cur.join(new.select(*keys), on=keys, how="left_anti").withColumn(
-                "_day", F.date_format("bucket_ts", "yyyy-MM-dd")
+                "_day", F.date_format(T.BUCKET, "yyyy-MM-dd")
             )
             new = kept.select(new.columns).unionByName(new)
         tmp = self.path + "__tmp"
@@ -319,11 +317,17 @@ class TierStore:
         store when expiring raw/1m days), a day is only dropped when the
         coverage store has that day partition too — the "continuous
         aggregate must cover the chunk before the chunk may drop" safety
-        TimescaleDB retention policies pair with caggs. The check is a
-        directory listing on both sides (metadata-only). Days present
-        here but absent from coverage are kept and reported by raising
-        ValueError, so a mis-ordered pipeline (expire before rollup)
+        TimescaleDB retention policies pair with caggs. If any doomed day
+        has no coverage partition, ValueError is raised before anything
+        is dropped, so a mis-ordered pipeline (expire before rollup)
         fails loudly instead of silently losing data.
+
+        The guard is a directory listing on both sides (metadata-only):
+        it checks that each day is PRESENT in the coverage store, not
+        that it is COMPLETE. A coverage day written from a partial
+        rollup (say, an upsert of only the day's first batch) passes,
+        and the rows it lacks are lost with the expired day. Upsert
+        every batch of a day into the coverage store before expiring it.
 
         Crash-safe: each dropped day is renamed to ``expired__day=D``
         (atomic; the prefix no longer matches ``_day=*`` so a reader

@@ -61,15 +61,13 @@ def test_chunked_row_count_preserved(spark, tdf):
     assert {(r[0], r[1]): r[2] for r in orig} == {(r[0], r[1]): r[2] for r in after}
 
 
-def test_max_group_rows_auto_dispatch(spark):
-    """RollSpec(max_group_rows=...) on the Arrow dispatch: one long
-    series + many short ones — identical results to the unchunked pass,
-    with the long series actually split into multiple independent
+def test_chunked_arrow_dispatch(spark):
+    """roll_chunked over a weighted roll_mean (the Arrow dispatch): one
+    long series + many short ones — identical results to the unchunked
+    pass, with the long series actually split into multiple independent
     groups (>1 task) while short series stay whole (zero pad rows)."""
     from pyspark.sql import functions as F
 
-    from roll_spark.config import RollSpec
-    from roll_spark.operators import arrow_ops
     from roll_spark.operators.chunked import chunk_pad
 
     big_n, small_n, width, bound = 100_000, 40, 10, 16_384
@@ -84,19 +82,12 @@ def test_max_group_rows_auto_dispatch(spark):
     )
     df = big.unionByName(small)
     wts = [float(0.97 ** k) for k in range(width, 0, -1)]
-    plain = arrow_ops.roll_mean(
-        df, "v", "g", "i", RollSpec(width=width, weights=tuple(wts), min_obs=3),
-        out="m",
-    )
-    auto = arrow_ops.roll_mean(
-        df, "v", "g", "i",
-        RollSpec(width=width, weights=tuple(wts), min_obs=3,
-                 max_group_rows=bound),
-        out="m",
-    )
+    plain = roll_mean(df, "v", "g", "i", width, weights=wts, min_obs=3, out="m")
+    chunked = roll_chunked(df, roll_mean, "v", "g", "i", width,
+                           chunk_rows=bound, out="m", weights=wts, min_obs=3)
     rnd = lambda x: None if x is None else round(x, 9)
     a = {(r["g"], r["i"]): rnd(r["m"]) for r in plain.collect()}
-    b = {(r["g"], r["i"]): rnd(r["m"]) for r in auto.collect()}
+    b = {(r["g"], r["i"]): rnd(r["m"]) for r in chunked.collect()}
     assert a == b
     # the long series fans out into ceil(big_n / bound) groups; short
     # series stay in chunk 0 with no duplicated pad rows
@@ -112,8 +103,9 @@ def test_max_group_rows_auto_dispatch(spark):
     assert all(v == (1, 0) for g, v in info.items() if g != "big")
 
 
-def test_max_group_rows_validation():
-    from roll_spark.config import RollSpec
+def test_chunk_pad_validation(spark):
+    from roll_spark.operators.chunked import chunk_pad
 
+    df = spark.range(20).selectExpr("'a' AS g", "id AS i", "id * 1.0 AS v")
     with pytest.raises(ValueError):
-        RollSpec(width=10, max_group_rows=10)
+        chunk_pad(df, "g", "i", 10, 10)

@@ -164,13 +164,6 @@ def test_ewma_time_spark(spark):
         assert np.allclose(sub, want, equal_nan=True, rtol=1e-12)
 
 
-def test_ewma_rejects_chunking(spark):
-    pdf = _fixture()
-    sdf = spark.createDataFrame(pdf)
-    with pytest.raises(ValueError, match="expanding"):
-        ewma_time(sdf, "v", "k", "ts", 3600.0, max_group_rows=100)
-
-
 def test_ohlc_bars(spark):
     from roll_spark.plans.tiers import ohlc_bars
 
@@ -636,7 +629,3 @@ def test_decayed_count_spark(spark):
         t_us = np.round(np.array([p[0] for p in pairs]) * 1e6).astype(np.int64)
         want = K.conv_decayed_count(t_us, 86400.0)
         assert np.allclose([p[1] for p in pairs], want, rtol=1e-12)
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        decayed_count(df, "cid", "t_s", 86400.0, max_group_rows=100)

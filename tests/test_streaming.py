@@ -383,3 +383,62 @@ def test_store_expire_rejects_malformed_cutoff(spark, raw_dir, tmp_path):
         with pytest.raises(ValueError):
             store.expire(cutoff)
         assert sorted(os.listdir(store_path)) == before, cutoff
+
+
+def test_retention_lifecycle_equals_cold_batch(spark, raw_dir, tmp_path):
+    """compress_policy -> 1m/1h cascade upserted into TierStores ->
+    expire(cutoff, coverage=1h) -> tiered_read, chained on one set of
+    stores. The seam under test: the expired 1m days' raw rows are
+    already compressed, so the cascade reads them back through the chunk
+    decode, and after the expiry every survivor still equals the cold
+    batch pipeline over the original raw rows."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from roll_spark.plans.chunks import compress_policy, tiered_read
+
+    raw = spark.read.parquet(raw_dir)
+    days = sorted(r[0] for r in raw.select(
+        F.date_format("ts", "yyyy-MM-dd")).distinct().collect())
+    assert len(days) >= 3, "fixture must span 3+ days"
+    cutoff = days[-1]
+
+    chunks, hot = compress_policy(raw, "text_len", "ts", "conv_id", before=cutoff)
+    chunks.write.parquet(str(tmp_path / "chunks"))
+    hot.write.parquet(str(tmp_path / "hot"))
+
+    def tiered():
+        return tiered_read(spark.read.parquet(str(tmp_path / "chunks")),
+                           spark.read.parquet(str(tmp_path / "hot")),
+                           "text_len", "ts", "conv_id")
+
+    store_1m = TierStore(spark, str(tmp_path / "1m"), "conv_id", "1m")
+    store_1h = TierStore(spark, str(tmp_path / "1h"), "conv_id", "1h")
+    stats_1m = T.rollup_raw(tiered(), "value", "ts", "conv_id", "1m")
+    store_1m.upsert(stats_1m)
+    store_1h.upsert(T.merge_tier(store_1m.read(), "conv_id", "1h"))
+
+    assert store_1m.expire(cutoff, coverage=store_1h) == days[:-1]
+    left = sorted(d[len("_day="):] for d in os.listdir(str(tmp_path / "1m"))
+                  if d.startswith("_day="))
+    assert left == [cutoff]
+
+    cold = T.cascade(raw, "text_len", "ts", "conv_id", ("1m", "1h"))
+    _assert_tier_equal(
+        _stats_pdf(store_1m.read()),
+        _stats_pdf(cold["1m"].filter(
+            F.date_format("bucket_ts", "yyyy-MM-dd") >= cutoff)))
+    _assert_tier_equal(_stats_pdf(store_1h.read()), _stats_pdf(cold["1h"]))
+
+    # the compressed days still serve raw reads and their 1h rollup
+    got = tiered().toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True)
+    want = (raw.select("conv_id", "ts", F.col("text_len").alias("value"))
+            .toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True))
+    assert got["conv_id"].tolist() == want["conv_id"].tolist()
+    assert got["ts"].tolist() == want["ts"].tolist()
+    assert np.array_equal(got["value"].to_numpy(), want["value"].to_numpy(),
+                          equal_nan=True)
+    _assert_tier_equal(
+        _stats_pdf(T.rollup_raw(tiered(), "value", "ts", "conv_id", "1h")),
+        _stats_pdf(cold["1h"]))

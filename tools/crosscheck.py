@@ -9,6 +9,7 @@ Usage: python tools/crosscheck.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -46,7 +47,9 @@ def main() -> int:
     import __spark_entry__ as entry
     from roll_spark.session import get_spark
 
-    spark = get_spark(cpus=8, app_name="crosscheck")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    print(f"cpus={cpus}", flush=True)
+    spark = get_spark(cpus=cpus, app_name="crosscheck")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -11,6 +11,7 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from pathlib import Path
@@ -211,7 +212,9 @@ def main() -> int:
     import __spark_entry__ as entry
     from roll_spark.session import get_spark
 
-    spark = get_spark(cpus=8, app_name="plan_audit")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    print(f"cpus={cpus}", flush=True)
+    spark = get_spark(cpus=cpus, app_name="plan_audit")
     qs = entry.queries()
     failures = 0
     for name, rules in EXPECT.items():
