@@ -636,22 +636,43 @@ def q_stream_roll_mean_w10(spark, sf_dir):
                              alias="mean10", qname="stream_roll_gate")
 
 
+def _microbatch_source(spark, ev, base):
+    """Re-lay ``ev`` as four time-range parquet files under
+    ``{base}/src`` (a global ntile(4) split on ts keeps each user's
+    event order across files — the append-only delivery the streaming
+    operators need) and return a stream reading them as four
+    micro-batches, oldest file first."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    from pyspark.sql import Window
+
+    parts = ev.withColumn("part", F.ntile(4).over(Window.orderBy("ts")))
+    src = f"{base}/src"
+    os.makedirs(src, exist_ok=True)
+    now = time.time()
+    for i in range(1, 5):
+        d = f"{base}/w{i}"
+        parts.filter(F.col("part") == i).drop("part").coalesce(1) \
+            .write.mode("overwrite").parquet(d)
+        dst = f"{src}/t{i}.parquet"
+        shutil.copy(glob.glob(f"{d}/part-*.parquet")[0], dst)
+        os.utime(dst, (now - 60 + i, now - 60 + i))
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in ev.schema)
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+
 def _stream_roll_gate(spark, sf_dir, *, op, min_obs, alias, qname, p=0.5,
                       y=None, rnd=None, halflife_s=None, width=10,
                       value_sql=None):
-    """Shared harness for the stateful-streaming gates: re-lay events as
-    four time-range files (global time split preserves each user's order
-    across files — the append-only delivery the operator needs), drain
-    as four micro-batches, return the streamed per-row stat. ``y``
+    """Shared harness for the stateful-streaming gates: drain events
+    through _microbatch_source's four micro-batches, return the
+    streamed per-row stat. ``y``
     optionally derives a second series column (SQL expression over
     value) for the bivariate ops."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
     import tempfile
-    import time as _time
-
-    from pyspark.sql import Window as W_
 
     from roll_spark.streaming.rolling import stream_roll
 
@@ -661,19 +682,7 @@ def _stream_roll_gate(spark, sf_dir, *, op, min_obs, alias, qname, p=0.5,
         ev = ev.withColumn("value", F.expr(value_sql))
     if y is not None:
         ev = ev.withColumn("y", F.expr(y))
-    parts = ev.withColumn("part", F.ntile(4).over(W_.orderBy("ts")))
-    src = f"{base}/src"
-    os.makedirs(src, exist_ok=True)
-    now = _time.time()
-    for i in range(1, 5):
-        d = f"{base}/w{i}"
-        parts.filter(F.col("part") == i).drop("part").coalesce(1) \
-            .write.mode("overwrite").parquet(d)
-        dst = f"{src}/t{i}.parquet"
-        _shutil.copy(_glob.glob(f"{d}/part-*.parquet")[0], dst)
-        os.utime(dst, (now - 60 + i, now - 60 + i))
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in ev.schema)
-    sdf = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    sdf = _microbatch_source(spark, ev, base)
     out = stream_roll(sdf, "value", "user_id", "ts", width, op=op, p=p,
                       y=None if y is None else "y", min_obs=min_obs,
                       halflife_s=halflife_s, out="m")
@@ -695,31 +704,13 @@ def q_stream_sessionize_1h(spark, sf_dir):
     as the stream_roll gates; the oracle is the batch lag + prefix-sum
     SQL — the driver hash proves streamed ids equal batch sessionize
     row for row."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
     import tempfile
-    import time as _time
-
-    from pyspark.sql import Window as W_
 
     from roll_spark.streaming.sessions import stream_sessionize
 
     base = tempfile.mkdtemp(prefix="roll_stream_sess_")
     ev = _events(spark, sf_dir).select("user_id", "ts")
-    parts = ev.withColumn("part", F.ntile(4).over(W_.orderBy("ts")))
-    src = f"{base}/src"
-    os.makedirs(src, exist_ok=True)
-    now = _time.time()
-    for i in range(1, 5):
-        d = f"{base}/w{i}"
-        parts.filter(F.col("part") == i).drop("part").coalesce(1) \
-            .write.mode("overwrite").parquet(d)
-        dst = f"{src}/t{i}.parquet"
-        _shutil.copy(_glob.glob(f"{d}/part-*.parquet")[0], dst)
-        os.utime(dst, (now - 60 + i, now - 60 + i))
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in ev.schema)
-    sdf = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    sdf = _microbatch_source(spark, ev, base)
     out = stream_sessionize(sdf, "user_id", "ts", 3600.0)
     q = (out.writeStream.format("memory").queryName("stream_sess_gate")
          .outputMode("append")
@@ -1796,9 +1787,9 @@ def q_roll_trimmean_w10(spark, sf_dir):
 def q_roll_spearman_w10(spark, sf_dir):
     """Rolling Spearman rank correlation of value vs its lag-1 (the
     robust twin of roll_cor_w10): exact mid-rank ties, pairwise-
-    complete, centered two-pass over the rank arrays. Native JVM-HOF
-    path at w=10; the oracle replays the identical mid-rank formula
-    with DuckDB list lambdas."""
+    complete, centered two-pass over the rank arrays. Runs the Arrow
+    kernel (conv_spearman); the oracle replays the identical mid-rank
+    formula with DuckDB list lambdas."""
     from roll_spark.operators.moments import roll_spearman
 
     df = _with_lag(spark, sf_dir)
@@ -1811,8 +1802,9 @@ def q_roll_entropy_w20(spark, sf_dir):
     """Behavioral diversity: rolling empirical Shannon entropy of the
     event_type stream per user — an agent re-issuing the same call in a
     loop drives this to 0, varied behavior approaches ln(#types).
-    Native JVM-HOF equality counts at w=20; the oracle replays the
-    identical per-element ln(count/n) form with DuckDB list lambdas."""
+    Runs the factorize + Arrow kernel (conv_entropy); the oracle
+    replays the identical per-element ln(count/n) form with DuckDB list
+    lambdas."""
     from roll_spark.operators.moments import roll_entropy
 
     ev = _events(spark, sf_dir)

@@ -63,8 +63,8 @@ HEADLINE = [
     "roll_acf_w20",         # fused multi-lag autocorrelation (2-WindowExec)
     "roll_mad_w10",         # robust dispersion (Arrow blocked strided sorts)
     "roll_trimmean_w10",    # robust location (JVM HOF slice+aggregate)
-    "roll_spearman_w10",    # robust correlation (JVM HOF mid-ranks)
-    "roll_entropy_w20",     # behavioral diversity / loop detection (HOF counts)
+    "roll_spearman_w10",    # robust correlation (Arrow mid-rank kernel)
+    "roll_entropy_w20",     # behavioral diversity / loop detection (Arrow counts)
     "ewma_halflife_7d",     # time-decay EWMA (blocked rebased-cumsum scan)
     "tier_1h_ohlc",         # OHLC downsample bars (hash-agg, sort-free)
     "tier_1h_top_event",    # heavy hitters (partial WindowGroupLimit pushdown)

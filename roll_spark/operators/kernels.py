@@ -403,9 +403,15 @@ def conv_prod(x, width, weights=None, min_obs=None, na_restore=False):
     return _restore(out, x, na_restore)
 
 
-def _quantile_block(xp, b0, b1, width, pp, wts_full, min_obs):
-    """HF2 scan for output rows [b0, b1): sort each width-window, walk the
-    sorted slot weights from the top until mass >= 1-p (roll_vec.h:1994-2091).
+def _quantile_block_multi(xp, b0, b1, width, pps, wts_full, min_obs):
+    """HF2 scan for output rows [b0, b1) at every upper mass pp in
+    ``pps``: sort each width-window, walk the sorted slot weights from
+    the top until mass >= 1-p (roll_vec.h:1994-2091). The shared state
+    — sliding windows, argsort, sorted values/weights, cumulative mass
+    — is computed ONCE; each pp costs only the comparison + selection
+    sweeps (O(m·w) cheap vector ops vs the O(m·w log w) sort), so
+    column j of the (m, len(pps)) result does not depend on the other
+    probabilities.
 
     Pass-minimized: NaNs sort last under numpy's float ordering (no
     masking pre-pass); slot weights come from one table gather through
@@ -418,16 +424,6 @@ def _quantile_block(xp, b0, b1, width, pp, wts_full, min_obs):
     quotient rounding flips the selected order statistic whenever
     fl(pp*total) straddles an attainable mass — dozens of (p, n) combos
     under equal weights alone)."""
-    return _quantile_block_multi(xp, b0, b1, width, [pp], wts_full, min_obs)[:, 0]
-
-
-def _quantile_block_multi(xp, b0, b1, width, pps, wts_full, min_obs):
-    """Multi-p twin of :func:`_quantile_block`: the expensive shared
-    state — sliding windows, argsort, sorted values/weights, cumulative
-    mass — is computed ONCE; each pp costs only the comparison +
-    selection sweeps (O(m·w) cheap vector ops vs the O(m·w log w) sort).
-    Column j of the (m, len(pps)) result is bit-identical to the
-    single-p scan at pps[j]."""
     m = b1 - b0
     wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
     # unstable introsort matches the reference's std::sort (stl_sort_index
@@ -482,7 +478,7 @@ def _equal_weight_c(pos, pp):
     return np.minimum(c, pos)
 
 
-def _quantile_block_equal(xp, b0, b1, width, pp, min_obs):
+def _quantile_block_equal_multi(xp, b0, b1, width, pps, min_obs):
     """Equal-weight HF2 selection via np.partition — O(w) per row, no
     sort. Under equal weights the top-down mass scan reduces to the
     order statistic at k = n_obs - c with c from _equal_weight_c (the
@@ -490,21 +486,13 @@ def _quantile_block_equal(xp, b0, b1, width, pp, min_obs):
     paths are bit-identical, boundary (p, n) combos included). NaNs
     order AFTER every number under numpy's partition, so the k-th
     smallest observed value is the k-th overall. Rows in the block can
-    have different n_obs (different k): one partition call with the
-    block's distinct {k-1, k} set handles all of them; pathological
-    blocks (more distinct NaN counts than log2(width) -> partition set
-    approaching a full sort) fall back to the weighted scan."""
-    res = _quantile_block_equal_multi(xp, b0, b1, width, [pp], min_obs)
-    return None if res is None else res[:, 0]
-
-
-def _quantile_block_equal_multi(xp, b0, b1, width, pps, min_obs):
-    """Multi-p twin of :func:`_quantile_block_equal`: ONE np.partition
-    call whose kth set is the union over all probabilities — the
-    selection per pp is then O(m) gathers. The degenerate-mix bound
-    scales with len(pps) so the single-p fallback decision is
-    unchanged; columns are bit-identical to per-p calls (the fallback
-    only switches algorithm, both paths emit identical values)."""
+    have different n_obs (different k): ONE partition call whose kth
+    set is the block's distinct {k-1, k} over all probabilities handles
+    all of them, and each pp's selection is then O(m) gathers.
+    Pathological blocks (more distinct kth than log2(width) per
+    probability -> partition approaching a full sort) return None and
+    the caller falls back to the weighted scan, which emits identical
+    values."""
     m = b1 - b0
     wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
     n_obs = width - np.isnan(wins).sum(axis=1)
@@ -536,53 +524,30 @@ def _quantile_block_equal_multi(xp, b0, b1, width, pps, min_obs):
 
 
 def conv_quantile(x, width, p, weights=None, min_obs=None, na_restore=False):
-    """Exact weighted HF2-style quantile (roll_vec.h:1956-2095), vectorized
-    with a strided sliding window + per-row top-down weight scan; equal
-    weights short-circuit to an np.partition selection (O(w) per row,
-    no sort — see _quantile_block_equal).
-
-    Memory-bounded: the scan materializes several (rows x width) float64
-    intermediates, so rows are processed in blocks sized to keep peak
-    memory ~O(256MB) regardless of series length x width — a skewed
-    10^6-row conversation at width 10^3 would otherwise allocate ~50 GB
-    in one shot. Per-row outputs are independent, so blocking is exact.
-    """
-    min_obs = width if min_obs is None else min_obs
-    x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    pp = 1.0 - p
-    equal = weights is None
-    wts_full = _kernel(weights, width)[::-1]  # oldest-first slot weights
-    # pad front so every row has a width-window; pads are NaN (excluded)
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, x])
-    # block x width x 8B ~ 1MB per intermediate: keeps the ~6 working
-    # arrays inside L2/L3 so concurrent workers don't fight for DRAM
-    # bandwidth — measured ~45% faster per group than series-sized
-    # blocks AND it is what lets 8 parallel workers scale linearly
-    block = min(max((131072 // max(width, 1)), 128), 8192)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        res = None
-        if equal:
-            res = _quantile_block_equal(xp, b0, b1, width, pp, min_obs)
-        if res is None:
-            res = _quantile_block(xp, b0, b1, width, pp, wts_full, min_obs)
-        out[b0:b1] = res
-    return _restore(out, x, na_restore)
+    """Exact weighted HF2-style quantile (roll_vec.h:1956-2095):
+    :func:`conv_quantiles` at the single probability ``p``."""
+    return conv_quantiles(x, width, [p], weights=weights, min_obs=min_obs,
+                          na_restore=na_restore)[:, 0]
 
 
 def conv_quantiles(x, width, ps, weights=None, min_obs=None, na_restore=False):
-    """Fused multi-probability :func:`conv_quantile`: one (n, len(ps))
-    array whose column j is bit-identical to ``conv_quantile(x, width,
-    ps[j], ...)``.  The per-block shared state (sliding windows + the
-    argsort under weights, or the single union-kth np.partition under
-    equal weights) is paid ONCE; each extra probability costs only its
-    selection sweep — O(w log w + k·w) per row instead of
-    O(k·w log w)."""
+    """Exact weighted HF2-style quantiles at every probability in ``ps``
+    as one (n, len(ps)) array, vectorized with a strided sliding window
+    + per-row top-down weight scan; equal weights short-circuit to an
+    np.partition selection (O(w) per row, no sort — see
+    _quantile_block_equal_multi). The per-block shared state (sliding
+    windows + the argsort under weights, or the single union-kth
+    np.partition under equal weights) is paid ONCE; each extra
+    probability costs only its selection sweep — O(w log w + k·w) per
+    row instead of O(k·w log w) — and column j is bit-identical to
+    ``conv_quantile(x, width, ps[j], ...)``.
+
+    Memory-bounded: the scan materializes several (rows x width) float64
+    intermediates, so rows are processed in _win_block(width) blocks —
+    a skewed 10^6-row conversation at width 10^3 would otherwise
+    allocate ~50 GB in one shot. Per-row outputs are independent, so
+    blocking is exact.
+    """
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
     n = len(x)
@@ -591,10 +556,11 @@ def conv_quantiles(x, width, ps, weights=None, min_obs=None, na_restore=False):
         return _restore_cols(out, x, na_restore)
     pps = [1.0 - p for p in ps]
     equal = weights is None
-    wts_full = _kernel(weights, width)[::-1]
+    wts_full = _kernel(weights, width)[::-1]  # oldest-first slot weights
+    # pad front so every row has a width-window; pads are NaN (excluded)
     pad = np.full(width - 1, np.nan)
     xp = np.concatenate([pad, x])
-    block = min(max((131072 // max(width, 1)), 128), 8192)
+    block = _win_block(width)
     for b0 in range(0, n, block):
         b1 = min(n, b0 + block)
         res = None
@@ -1503,9 +1469,10 @@ def conv_spearman(x, y, width, weights=None, min_obs=None, na_restore=False):
     two-pass so a tie-degenerate window (zero rank variance) yields an
     EXACT zero sum of squares — mid-ranks are half-integers, their sums
     are exact in float64, and IEEE division returns the representable
-    mean exactly, so the ssx > 0 gate branches identically on the
-    kernel, native-HOF, and DuckDB-oracle paths. Weighted rank
-    correlation has no agreed definition; weights are rejected."""
+    mean exactly, so the ssx > 0 gate branches identically in the
+    kernel and the DuckDB oracle. NaN counts as missing, like NULL.
+    Weighted rank correlation has no agreed definition; weights are
+    rejected."""
     if weights is not None:
         raise ValueError("conv_spearman: weighted rank correlation undefined")
     min_obs = width if min_obs is None else min_obs
@@ -1552,7 +1519,7 @@ def conv_entropy(codes, width, weights=None, min_obs=None, na_restore=False):
     values in each trailing window: H = -sum_v (c_v/n) ln(c_v/n).
 
     Takes integer category codes as float64 (NaN = missing) — the
-    Spark wrapper factorizes strings batch-side. Identity used for
+    Spark wrapper factorizes the values batch-side. Identity used for
     vectorization: summing ln(c(e)/n) once PER ELEMENT e equals
     summing c_v ln(c_v/n) per distinct value, so per-slot counts from
     the midrank-style sorted-run machinery (one argsort + one global
@@ -1587,6 +1554,7 @@ def conv_entropy(codes, width, weights=None, min_obs=None, na_restore=False):
         pos = np.maximum(n_obs, 1).astype(np.float64)
         with np.errstate(invalid="ignore", divide="ignore"):
             terms = np.where(nan_mask, 0.0, np.log(c_slot / pos[:, None]))
-            h = -terms.sum(axis=1) / pos
+            # 0.0 - s, not -s: one distinct value gives +0.0, not -0.0
+            h = 0.0 - terms.sum(axis=1) / pos
         out[b0:b1] = np.where(n_obs >= max(min_obs, 1), h, np.nan)
-    return out
+    return _restore(out, x, na_restore)

@@ -1,9 +1,15 @@
-"""Higher-moment and cardinality rolling ops on the native Catalyst path.
+"""Higher-moment, cardinality and rank rolling ops.
 
 These extend the reference surface (jasonjfoster/roll has mean/var/sd as
 its highest moments — roll_vec.h:2114) with the third/fourth standardized
 moments and rolling distinct counts that a transcript-analytics tier
 needs (burstiness / heavy-tail detection on latency + value series).
+
+Execution: skew/kurt/acf run on the native Catalyst path; nunique,
+percentrank and trimmed mean run native up to QUANTILE_NATIVE_MAX_WIDTH
+and on their Arrow kernels above it; spearman and entropy run only their
+Arrow kernels (O(w log w) per row — their O(w^2) JVM higher-order-function
+forms were slower at every width measured).
 
 Numerical strategy for skew/kurt: power sums of the RAW values lose
 ~(mean/sd)^k digits to cancellation, so both stats are computed from
@@ -28,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as TT
 
 from roll_spark.config import EPS
 from roll_spark.operators.base import (
@@ -390,9 +397,6 @@ def roll_trimmed_mean(
     return df.withColumn(out, gate(spec, v, stat, n))
 
 
-SPEARMAN_NATIVE_MAX_WIDTH = 64  # O(w^2) HOF rank counts per row
-
-
 def roll_spearman(
     df: DataFrame,
     x: str,
@@ -413,76 +417,19 @@ def roll_spearman(
     Mid-rank of e among window values v: (#{v<e} + #{v<=e} + 1)/2, then
     Pearson over the ranks with centered two-pass sums — mid-ranks are
     half-integers so their sums are EXACT in float64 and a
-    tie-degenerate window hits the ssx > 0 gate identically on every
-    path (native HOF, Arrow kernel, DuckDB oracle).
+    tie-degenerate window hits the ssx > 0 gate identically in the
+    kernel and the DuckDB oracle.
 
-    Native path builds paired rank arrays with JVM higher-order
-    functions: O(w^2) comparisons per row, so widths above
-    SPEARMAN_NATIVE_MAX_WIDTH dispatch to the Arrow kernel
-    (kernels.conv_spearman: one argsort + one global reduceat per
-    block, O(w log w) per row). Each array stage is materialized as its
-    own projected column — inlining them re-evaluates the producing
-    expression per element (O(w^3)/row; CollapseProject only spares
-    multi-referenced aliases it deems non-cheap).
+    Runs the Arrow kernel (kernels.conv_spearman: one argsort + one
+    global reduceat per block, O(w log w) per row) at every width. A
+    NaN in either input is missing, like NULL, so its pair leaves the
+    window.
     """
+    from roll_spark.operators import kernels as K
+    from roll_spark.operators.arrow_ops import _two
+
     spec = _spec(width, min_obs, na_restore, None)
-    if width > SPEARMAN_NATIVE_MAX_WIDTH:
-        from roll_spark.operators import kernels as K
-        from roll_spark.operators.arrow_ops import _two
-
-        return _two(df, x, y, by, order, spec, K.conv_spearman, out)
-    w = rolling_window(by, order, width)
-    xv, yv = F.col(x), F.col(y)
-    both = xv.isNotNull() & yv.isNotNull()
-    df = df.withColumn(
-        "__sp_pairs",
-        F.collect_list(F.when(both, F.struct(xv.alias("a"), yv.alias("b")))).over(w),
-    )
-    pairs = F.col("__sp_pairs")
-    n = F.size(pairs)
-
-    def _ranks(field):
-        return F.transform(
-            pairs,
-            lambda p: (
-                F.size(F.filter(pairs, lambda q: q[field] < p[field]))
-                + F.size(F.filter(pairs, lambda q: q[field] <= p[field]))
-                + F.lit(1)
-            ).cast("double")
-            / F.lit(2.0),
-        )
-
-    df = df.withColumn("__sp_rx", _ranks("a")).withColumn("__sp_ry", _ranks("b"))
-    rx, ry = F.col("__sp_rx"), F.col("__sp_ry")
-    zero = F.lit(0.0)
-    # n can be 0 (no complete pair in the window): guard the division —
-    # ANSI mode makes x/0 a runtime error, and these are unconditional
-    # projections (the CASE gate only protects the final stat)
-    df = df.withColumn(
-        "__sp_mrx", F.when(n > 0, F.aggregate(rx, zero, lambda acc, e: acc + e) / n)
-    ).withColumn(
-        "__sp_mry", F.when(n > 0, F.aggregate(ry, zero, lambda acc, e: acc + e) / n)
-    )
-    mrx, mry = F.col("__sp_mrx"), F.col("__sp_mry")
-    ssx = F.aggregate(rx, zero, lambda acc, e: acc + (e - mrx) * (e - mrx))
-    ssy = F.aggregate(ry, zero, lambda acc, e: acc + (e - mry) * (e - mry))
-    sxy = F.aggregate(
-        F.zip_with(rx, ry, lambda a, b: (a - mrx) * (b - mry)),
-        zero,
-        lambda acc, e: acc + e,
-    )
-    df = df.withColumns({"__sp_ssx": ssx, "__sp_ssy": ssy, "__sp_sxy": sxy})
-    stat = F.when(
-        (F.col("__sp_ssx") > 0) & (F.col("__sp_ssy") > 0),
-        F.col("__sp_sxy") / F.sqrt(F.col("__sp_ssx") * F.col("__sp_ssy")),
-    )
-    restore_ref = F.when(xv.isNull() | yv.isNull(), F.lit(None)).otherwise(F.lit(1.0))
-    res = df.withColumn(out, gate(spec, restore_ref, stat, n, need_two=True))
-    return res.drop("__sp_pairs", "__sp_rx", "__sp_ry", "__sp_mrx", "__sp_mry",
-                    "__sp_ssx", "__sp_ssy", "__sp_sxy")
-
-
-ENTROPY_NATIVE_MAX_WIDTH = 64  # O(w^2) HOF equality counts per row
+    return _two(df, x, y, by, order, spec, K.conv_spearman, out)
 
 
 def roll_entropy(
@@ -499,50 +446,36 @@ def roll_entropy(
     """Rolling empirical Shannon entropy (natural log) of the exact
     values in the trailing window — the behavioral-diversity signal for
     transcript streams: an agent stuck re-issuing the same tool call
-    drives the entropy of its event/tool types toward 0, while varied
-    behavior approaches ln(#distinct).
+    drives the entropy of its event/tool types toward 0 (+0.0), while
+    varied behavior approaches ln(#distinct).
 
-    Works on ANY orderable column type (strings included): the native
-    path counts equal values with JVM higher-order functions,
-    H = -(1/n) * sum_e ln(#{v == e} / n) (summing per ELEMENT equals
-    the per-distinct-value form). Widths above
-    ENTROPY_NATIVE_MAX_WIDTH dispatch to the Arrow kernel
-    (kernels.conv_entropy) with a pandas factorize per batch.
+    Works on any scalar column type (strings, integers, booleans,
+    dates, timestamps, decimals, doubles): each series batch is
+    factorized to integer codes that run the Arrow kernel
+    (kernels.conv_entropy, O(w log w) per row) at every width. Bigint
+    and decimal values cross as strings, so distinct values never merge
+    in a float64 cast. A double NaN is missing, like NULL.
     """
+    from roll_spark.operators import kernels as K
+    from roll_spark.operators.arrow_ops import _apply_kernel
+
     spec = _spec(width, min_obs, na_restore, None)
-    if width > ENTROPY_NATIVE_MAX_WIDTH:
-        from roll_spark.operators import kernels as K
-        from roll_spark.operators.arrow_ops import _apply_kernel
+    src = value
+    if isinstance(df.schema[value].dataType, (TT.LongType, TT.DecimalType)):
+        src = f"__ent_{out}"
+        df = df.withColumn(src, F.col(value).cast("string"))
 
-        def kernel(cols):
-            import pandas as pd
+    def kernel(cols):
+        import pandas as pd
 
-            codes, _ = pd.factorize(cols[value], use_na_sentinel=True)
-            x = codes.astype("float64")
-            x[codes < 0] = float("nan")
-            return {out: K.conv_entropy(x, width,
-                                        min_obs=spec.effective_min_obs,
-                                        na_restore=na_restore)}
+        codes, _ = pd.factorize(cols[src], use_na_sentinel=True)
+        x = codes.astype("float64")
+        x[codes < 0] = float("nan")
+        return {out: K.conv_entropy(x, width, min_obs=spec.effective_min_obs,
+                                    na_restore=na_restore)}
 
-        return _apply_kernel(df, [value], by, order, [(out, "double")],
-                             kernel)
-    w = rolling_window(by, order, width)
-    v = F.col(value)
-    df = df.withColumn("__ent_l", F.collect_list(v).over(w))
-    l = F.col("__ent_l")
-    n = F.size(l)
-    terms = F.transform(
-        l,
-        lambda e: F.log(
-            F.size(F.filter(l, lambda q: q == e)).cast("double") / n
-        ),
-    )
-    h = F.when(
-        n > 0,
-        -F.aggregate(terms, F.lit(0.0), lambda acc, e: acc + e) / n,
-    )
-    n_obs = F.count(v).over(w)
-    return df.withColumn(out, gate(spec, v, h, n_obs)).drop("__ent_l")
+    res = _apply_kernel(df, [src], by, order, [(out, "double")], kernel)
+    return res.drop(src) if src != value else res
 
 
 def roll_iqr(

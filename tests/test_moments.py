@@ -419,8 +419,11 @@ def test_trimmed_mean_rejects_bad_alpha(spark):
         conv_trimmed_mean(np.arange(5.0), 3, alpha=-0.1)
 
 
-@pytest.mark.parametrize("width", [9, 120])  # native HOF path / Arrow kernel
+@pytest.mark.parametrize("width", [9, 120])  # narrow and wide windows
 def test_spearman_both_paths(spark, width):
+    """NULL and NaN inputs (in either series) both drop the pair."""
+    from pyspark.sql import functions as SF
+
     from roll_spark.operators.kernels import conv_spearman
     from roll_spark.operators.moments import roll_spearman
 
@@ -429,7 +432,17 @@ def test_spearman_both_paths(spark, width):
     rng = np.random.default_rng(SEED + 9)
     pdf["u"] = np.floor(rng.uniform(0, 20, len(pdf)))
     pdf.loc[rng.random(len(pdf)) < 0.1, "u"] = np.nan
+    # NaN, not NULL: set Spark-side (pandas NaN arrives as NULL)
+    nan_v = rng.random(len(pdf)) < 0.05
+    nan_u = rng.random(len(pdf)) < 0.05
+    pdf["nan_v"], pdf["nan_u"] = nan_v, nan_u
     sdf = spark.createDataFrame(pdf)
+    sdf = sdf.withColumns({
+        c: SF.when(SF.col(f"nan_{c}"), SF.lit(float("nan"))).otherwise(SF.col(c))
+        for c in ("v", "u")
+    })
+    pdf.loc[nan_v, "v"] = np.nan
+    pdf.loc[nan_u, "u"] = np.nan
     got = roll_spearman(sdf, "v", "u", "k", "ts", width, min_obs=3, out="s") \
         .select("k", "ts", "s").toPandas().sort_values(["k", "ts"])
     base = pdf.sort_values(["k", "ts"])
@@ -506,7 +519,7 @@ def test_jarque_bera_composition(spark):
     assert np.allclose(got, want, equal_nan=True, atol=1e-7)
 
 
-@pytest.mark.parametrize("width", [12, 120])  # native HOF / Arrow factorize
+@pytest.mark.parametrize("width", [12, 120])  # narrow and wide windows
 def test_entropy_both_paths(spark, width):
     from roll_spark.operators.kernels import conv_entropy
     from roll_spark.operators.moments import roll_entropy
@@ -541,17 +554,91 @@ def test_entropy_both_paths(spark, width):
 
 def test_entropy_loop_detection(spark):
     """The motivating semantic: a stuck-loop suffix (same value repeated)
-    must drive windowed entropy to exactly 0."""
+    must drive windowed entropy to exactly +0.0 (never -0.0)."""
     from roll_spark.operators.moments import roll_entropy
 
-    rows = [("c", i, ["a", "b", "c", "d"][i % 4]) for i in range(20)]
-    rows += [("c", 20 + i, "retry") for i in range(10)]
+    rows = [("c", i, ["a", "b", "c", "d"][i % 4]) for i in range(100)]
+    rows += [("c", 100 + i, "retry") for i in range(100)]
     pdf = pd.DataFrame(rows, columns=["k", "t", "cat"])
     sdf = spark.createDataFrame(pdf)
-    got = roll_entropy(sdf, "cat", "k", "t", 8, min_obs=8, out="h") \
-        .toPandas().sort_values("t")["h"].to_numpy(dtype=np.float64)
-    assert got[19] > 1.3  # varied phase: near ln(4)
-    assert got[-1] == 0.0  # loop phase: pure repetition
+    for width in (8, 80):
+        got = roll_entropy(sdf, "cat", "k", "t", width, min_obs=width,
+                           out="h") \
+            .toPandas().sort_values("t")["h"].to_numpy(dtype=np.float64)
+        assert got[99] > 1.3, width  # varied phase: near ln(4)
+        loop = got[100 + width - 1:]  # windows holding only "retry"
+        assert (loop == 0.0).all(), width
+        assert not np.signbit(loop).any(), width
+
+
+def _entropy_ref(vals, width, min_obs, na_restore):
+    """Brute windowed Shannon entropy; None and float NaN are missing."""
+    miss = np.array([v is None or (isinstance(v, float) and np.isnan(v))
+                     for v in vals])
+    out = np.full(len(vals), np.nan)
+    for i in range(len(vals)):
+        lo = max(0, i - width + 1)
+        obs = [v for v, m in zip(vals[lo:i + 1], miss[lo:i + 1]) if not m]
+        if len(obs) >= max(min_obs, 1):
+            _, c = np.unique(np.array(obs, dtype=object), return_counts=True)
+            p = c / len(obs)
+            out[i] = -(p * np.log(p)).sum()
+    if na_restore:
+        out[miss] = np.nan
+    return out
+
+
+@pytest.mark.parametrize("width,na_restore", [(12, True), (80, False)])
+def test_entropy_column_types(spark, width, na_restore):
+    """roll_entropy over every column type it takes, with NULLs: counts
+    exact values (bigints past 2**53 and 18-digit decimals that one
+    float64 cannot tell apart stay distinct); in a double column NaN and
+    NULL are both missing."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import functions as SF
+
+    from roll_spark.operators.moments import roll_entropy
+
+    rng = np.random.default_rng(SEED + 12)
+    n, cats = 300, 4
+    pick = rng.integers(0, cats, (n, 8))
+    null = rng.random((n, 8)) < 0.1
+
+    def col(j, make):
+        return [None if null[i, j] else make(int(pick[i, j])) for i in range(n)]
+
+    data = {
+        "s": col(0, lambda c: "abcd"[c]),
+        "i32": col(1, lambda c: c - 2),
+        "i64": col(2, lambda c: 2**60 + c),
+        "b": col(3, lambda c: c % 2 == 0),
+        "d": col(4, lambda c: dt.date(2024, 1, 1) + dt.timedelta(days=c)),
+        "t": col(5, lambda c: dt.datetime(2024, 1, 1, 12) + dt.timedelta(seconds=c)),
+        "dec": col(6, lambda c: Decimal(f"1.00000000000000000{c + 1}")),
+        "x": col(7, lambda c: [0.5, 1.5, float("nan"), 2.5][c]),
+    }
+    keys = rng.integers(0, 3, n)
+    rows = [(int(keys[i]), i, *(data[c][i] for c in data)) for i in range(n)]
+    schema = ("k int, ts int, s string, i32 int, i64 bigint, b boolean, "
+              "d date, t timestamp, dec decimal(38,18), x double")
+    sdf = spark.createDataFrame(rows, schema)
+    assert sdf.filter(SF.isnan("x")).count() > 0  # real NaNs, not NULLs
+    for c in data:
+        sdf = roll_entropy(sdf, c, "k", "ts", width, min_obs=2,
+                           na_restore=na_restore, out=f"h_{c}")
+    got = sdf.toPandas().sort_values(["k", "ts"])
+    for c in data:
+        h = got[f"h_{c}"].to_numpy(dtype=np.float64)
+        want = np.concatenate([
+            _entropy_ref([data[c][i] for i in np.flatnonzero(keys == key)],
+                         width, 2, na_restore)
+            for key in sorted(set(keys))
+        ])
+        assert np.array_equal(np.isnan(h), np.isnan(want)), c
+        assert np.allclose(h, want, equal_nan=True, rtol=1e-12, atol=0), c
+        assert not np.signbit(h[~np.isnan(h)]).any(), c
 
 
 def test_roll_iqr_equals_separate_quantiles(spark):

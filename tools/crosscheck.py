@@ -2,13 +2,16 @@
 
 Runs every __spark_entry__.queries() entry on Spark and its
 oracle_sql() twin on DuckDB over the same parquet tables, then compares
-row count, column names, and an order-insensitive value digest.
+row count, column names, and an order-insensitive value digest. Every
+result line carries a short hash of the Spark-side normalized rows, so
+``diff`` of two runs' outputs lists the queries whose results changed.
 
 Usage: python tools/crosscheck.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 from pathlib import Path
@@ -40,6 +43,11 @@ def normalize(df):
     return out
 
 
+def digest(rows) -> str:
+    """Short hash of normalized rows."""
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:12]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -67,35 +75,36 @@ def main() -> int:
             spdf = sdf.toPandas()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
+            print(f"FAIL  {name} [{'-' * 12}]: spark error {type(e).__name__}: {e}")
             continue
+        a = normalize(spdf)
+        tag = f"{name} [{digest(a)}]"
         if name not in oracles:
-            print(f"weak  {name}: rows={len(spdf)} (no oracle, rows-only check)")
+            print(f"weak  {tag}: rows={len(spdf)} (no oracle, rows-only check)")
             continue
         try:
             opdf = con.sql(oracles[name]).df()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL  {name}: duckdb error {e}")
+            print(f"FAIL  {tag}: duckdb error {e}")
             continue
         if sorted(spdf.columns) != sorted(opdf.columns):
             failures.append(name)
-            print(f"FAIL  {name}: schema {sorted(spdf.columns)} vs {sorted(opdf.columns)}")
+            print(f"FAIL  {tag}: schema {sorted(spdf.columns)} vs {sorted(opdf.columns)}")
             continue
         if len(spdf) != len(opdf):
             failures.append(name)
-            print(f"FAIL  {name}: rowcount {len(spdf)} vs {len(opdf)}")
+            print(f"FAIL  {tag}: rowcount {len(spdf)} vs {len(opdf)}")
             continue
-        a = normalize(spdf)
         b = normalize(opdf)
         if a != b:
             failures.append(name)
             bad = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            print(f"FAIL  {name}: value mismatch ({sum(1 for x, y in zip(a, b) if x != y)} rows), e.g.")
+            print(f"FAIL  {tag}: value mismatch ({sum(1 for x, y in zip(a, b) if x != y)} rows), e.g.")
             for x, y in bad:
                 print(f"      spark : {x}\n      oracle: {y}")
         else:
-            print(f"OK    {name}: rows={len(spdf)}")
+            print(f"OK    {tag}: rows={len(spdf)}")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 

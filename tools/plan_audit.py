@@ -99,11 +99,11 @@ EXPECT = {
     "roll_acf_w20": dict(max_exchange=1, max_sort=1, max_window=2),
     "roll_percentrank_w20": dict(max_exchange=1, max_sort=1, max_window=1),
     "roll_trimmean_w10": dict(max_exchange=1, max_sort=1, max_window=1),
-    # entropy: collect_list + HOF equality counts, one frame WindowExec;
+    # entropy: factorize + Arrow kernel behind one groupBy exchange;
     # the events scan legitimately reads event_type here
     "roll_entropy_w20": dict(max_exchange=1, max_sort=1, max_window=1),
-    # Spearman: lag (offset WindowExec) + paired collect_list (frame
-    # WindowExec) share one exchange/sort; rank math is projections
+    # Spearman: the lag's offset WindowExec and the Arrow kernel's
+    # groupBy share one exchange/sort; the ranks run in the kernel
     "roll_spearman_w10": dict(max_exchange=1, max_sort=1, max_window=2),
     # CC fixpoint: iterative star contraction — per-round groupBys;
     # lineage is truncated by localCheckpoint so the audited plan has no
