@@ -969,7 +969,7 @@ def q_roll_quantile_exp_w10(spark, sf_dir):
 
 def q_roll_median_w400(spark, sf_dir):
     """Large-width equal-weight median: width 400 exceeds
-    QUANTILE_NATIVE_MAX_WIDTH, so this routes to the Arrow blocked-sort
+    NATIVE_MAX_WIDTH, so this routes to the Arrow wavelet-matrix
     kernel (never the per-row collect_list/array_sort WindowExec, which
     is O(w) JVM heap per row — an OOM at tick-scale widths)."""
     df = roll_median(_events(spark, sf_dir), "value", "user_id", "ts", 400,
@@ -1638,9 +1638,9 @@ def q_ivf_ann_top5(spark, sf_dir):
 def q_roll_skew_kurt_w20(spark, sf_dir):
     """Fused rolling skewness + excess kurtosis (bias-corrected G1/G2,
     the DuckDB/pandas/Excel forms) — heavy-tail / burstiness detection
-    on transcript value series. One Exchange + one Sort + two
-    WindowExecs (per-series centering avg shares the sliding window's
-    sort); both stats read the same central-moment columns."""
+    on transcript value series. One grouped-map Arrow pass
+    (kernels.conv_skew_kurt); all three stats read the same two-pass
+    per-window central moments."""
     from roll_spark.operators.moments import roll_skew_kurt
 
     df = roll_skew_kurt(_events(spark, sf_dir), "value", "user_id", "ts", 20,

@@ -525,11 +525,12 @@ def write_bench_md(timings, total, scaling, walls=None, codec=None,
             "design — the reference itself reverts exponential-weight",
             "quantiles to offline (the commented-out block at",
             "roll_vec.h:1735-1760 documents its online dual-multiset is",
-            "equal-weight only). The engine's equal-weight online",
-            "kernel (kernels.online_quantile, O(log w)/row) is",
-            "property-tested bit-identical to the offline kernel; it is",
-            "a reference oracle only — streaming carries the trailing",
-            "raw window and reruns the offline kernel per micro-batch.",
+            "equal-weight only). The engine's equal-weight quantiles",
+            "select from one wavelet matrix per series",
+            "(kernels.conv_quantiles, O(log n)/row at any width), and",
+            "stream_roll carries the trailing raw window and reruns that",
+            "batch kernel per micro-batch; kernels.online_quantile is a",
+            "test oracle only.",
             "",
             "Why N=2: a zero-memory pure-CPU calibration loop (below) shows",
             "this sandbox's 32 vCPUs deliver only ~22 effective cores — ANY",

@@ -1,6 +1,6 @@
 """Arrow (applyInArrow) execution of the roll_* surface — the scale
-path for weighted / exponential-decay inputs, exact quantiles at large
-widths, and k-regressor roll_lm.
+path for weighted / exponential-decay inputs, sums, means and exact
+quantiles at large widths, and k-regressor roll_lm.
 
 Physical shape: one hash exchange on the series key, then a grouped-map
 Arrow UDF per series running the vectorized numpy kernels of
@@ -257,8 +257,8 @@ def roll_quantile(df, value, by, order, spec: RollSpec, *, out="roll_quantile"):
 
 def roll_quantiles(df, value, by, order, spec: RollSpec, ps, outs):
     """Fused multi-p quantile: ONE grouped-map pass, one shared
-    sort/partition per window block (K.conv_quantiles), one output
-    column per probability."""
+    wavelet matrix per series or sort per weighted window block
+    (K.conv_quantiles), one output column per probability."""
     weights = None if spec.weights is None else np.asarray(spec.weights)
     ps = list(ps)
 

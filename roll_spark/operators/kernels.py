@@ -7,7 +7,9 @@ Two algorithm families, mirroring the reference's online/offline split
   rolling weighted sum with newest-last weight alignment
   (roll_vec.h:556 reads arma_weights[n-count-1]) is exactly
   ``np.convolve(x, reversed(weights))``. Arbitrary weights, C speed,
-  O(n*width) — the production path inside Arrow UDFs.
+  O(n*width); equal-weight sums are O(n) at any width, and equal-weight
+  quantiles select from a wavelet matrix in O(n log n) — the production
+  path inside Arrow UDFs.
 - ``online_*`` sequential O(1)-per-row recursions (lambda-recursion /
   West co-moment updates, roll_vec.h:447, :2190, :3677). Reference
   oracles only: they prove online == offline equivalence the way the
@@ -48,10 +50,19 @@ def _kernel(weights: np.ndarray | None, width: int) -> np.ndarray:
 
 
 def _rollconv(v: np.ndarray, h: np.ndarray) -> np.ndarray:
-    """out[i] = sum_k h[k] * v[i-k] — trailing weighted window sum."""
+    """out[i] = sum_k h[k] * v[i-k] — trailing weighted window sum.
+
+    Lags >= n never reach a row, so ``h`` is cut to n taps. Under equal
+    weights the w-1 not-yet-full rows are a sequential running sum (as
+    in Spark's running frame) and the full rows one "valid"
+    convolution, so an expanding window costs O(n) instead of O(n·w)."""
     n = len(v)
-    if len(h) == 1:
-        return v * h[0]
+    h = h[:n]
+    w = len(h)
+    if w <= 1:  # one tap, or an empty series
+        return v * h.sum()
+    if (h == 1.0).all():
+        return np.concatenate([np.cumsum(v[: w - 1]), np.convolve(v, h, "valid")])
     return np.convolve(v, h)[:n]
 
 
@@ -478,47 +489,71 @@ def _equal_weight_c(pos, pp):
     return np.minimum(c, pos)
 
 
-def _quantile_block_equal_multi(xp, b0, b1, width, pps, min_obs):
-    """Equal-weight HF2 selection via np.partition — O(w) per row, no
-    sort. Under equal weights the top-down mass scan reduces to the
-    order statistic at k = n_obs - c with c from _equal_weight_c (the
-    same float64 division predicate as the weighted scan, so the two
-    paths are bit-identical, boundary (p, n) combos included). NaNs
-    order AFTER every number under numpy's partition, so the k-th
-    smallest observed value is the k-th overall. Rows in the block can
-    have different n_obs (different k): ONE partition call whose kth
-    set is the block's distinct {k-1, k} over all probabilities handles
-    all of them, and each pp's selection is then O(m) gathers.
-    Pathological blocks (more distinct kth than log2(width) per
-    probability -> partition approaching a full sort) return None and
-    the caller falls back to the weighted scan, which emits identical
-    values."""
-    m = b1 - b0
-    wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
-    n_obs = width - np.isnan(wins).sum(axis=1)
+def _wavelet_matrix(x):
+    """Wavelet matrix over the value ranks of ``x`` ("The wavelet
+    matrix", Information Systems 47, 2015): a stable argsort gives
+    every row a unique rank (NaN last, so a window's observed values
+    hold its lowest ranks); level l stores the prefix
+    count of zero bits in the current rank order, then stably moves
+    the zeros to the front. Returns ``(sorted values, zeros)``, where
+    ``zeros[l, i]`` counts the zero bits at level l in the first i
+    positions. O(n log n) time and int32 memory, built once per series."""
+    n = len(x)
+    order = np.argsort(x, kind="stable")
+    nbits = max(1, (n - 1).bit_length())
+    itype = np.int32 if n < 2**31 else np.int64
+    rank = np.empty(n, itype)
+    rank[order] = np.arange(n, dtype=itype)
+    zeros = np.zeros((nbits, n + 1), itype)
+    for lvl in range(nbits):
+        one = ((rank >> (nbits - 1 - lvl)) & 1).astype(bool)
+        np.cumsum(~one, out=zeros[lvl, 1:])
+        rank = np.concatenate([rank[~one], rank[one]])
+    return x[order], zeros
+
+
+def _wm_select(zeros, s, e, k):
+    """Rank of the k-th smallest (0-based) value at positions [s, e),
+    vectorized over rows: one top-down descent of the wavelet matrix,
+    two prefix-count gathers per level."""
+    r = np.zeros(len(k), np.int64)
+    for z in zeros:
+        zs, ze = z[s], z[e]
+        cnt = ze - zs
+        one = k >= cnt
+        k = np.where(one, k - cnt, k)
+        s = np.where(one, z[-1] + s - zs, zs)
+        e = np.where(one, z[-1] + e - ze, ze)
+        r = (r << 1) | one
+    return r
+
+
+def _quantiles_equal(x, width, pps, min_obs):
+    """Equal-weight HF2 selection at every upper mass in ``pps``. The
+    top-down mass scan reduces to the order statistic k = n_obs - c,
+    with c from _equal_weight_c (the weighted scan's own float64
+    division predicate, so both paths agree bit for bit at boundary
+    (p, n) combos). The k-th and (k-1)-th smallest of each window
+    ``[max(0, i-w+1), i+1)`` come from one wavelet-matrix descent, so
+    the cost is O(n log n) per series at any width."""
+    n = len(x)
+    sv, zeros = _wavelet_matrix(x)
+    e = np.arange(1, n + 1)
+    s = np.maximum(e - width, 0)
+    seen = np.concatenate([[0], np.cumsum(~np.isnan(x))])
+    n_obs = seen[e] - seen[s]
     pos = np.maximum(n_obs, 1)
-    cs, ks, kth_parts = [], [], []
-    for pp in pps:
-        c = _equal_weight_c(pos, pp)
-        k = np.maximum(pos - c, 0)
-        cs.append(c)
-        ks.append(k)
-        kth_parts.extend([k, np.maximum(k - 1, 0)])
-    kth = np.unique(np.concatenate(kth_parts))
-    if len(kth) > max(4, int(np.log2(width)) + 1) * len(pps):
-        return None  # degenerate NaN mix: weighted scan handles it
-    part = np.partition(wins, kth, axis=1)
-    rows = np.arange(m)
     gate_ok = n_obs >= max(min_obs, 1)
-    out = np.empty((m, len(pps)))
-    for j, (pp, c, k) in enumerate(zip(pps, cs, ks)):
-        val_hi = part[rows, k]
+    out = np.empty((n, len(pps)))
+    for j, pp in enumerate(pps):
+        c = _equal_weight_c(pos, pp)
+        k = pos - c
+        val_hi = sv[_wm_select(zeros, s, e, k)]
+        val_lo = sv[_wm_select(zeros, s, e, np.maximum(k - 1, 0))]
         with np.errstate(invalid="ignore", divide="ignore"):
             exact = np.abs(c / pos - pp) <= SQRT_EPS
-        k_lo = np.maximum(k - 1, 0)
-        val_lo = part[rows, k_lo]
-        lo_valid = (k - 1 >= 0) & ~np.isnan(val_lo)
-        q = np.where(exact & lo_valid, (val_hi + val_lo) / 2.0, val_hi)
+        # k <= n_obs - 1, so the (k-1)-th smallest is always observed
+        q = np.where(exact & (k >= 1), (val_hi + val_lo) / 2.0, val_hi)
         out[:, j] = np.where(gate_ok, q, np.nan)
     return out
 
@@ -532,21 +567,20 @@ def conv_quantile(x, width, p, weights=None, min_obs=None, na_restore=False):
 
 def conv_quantiles(x, width, ps, weights=None, min_obs=None, na_restore=False):
     """Exact weighted HF2-style quantiles at every probability in ``ps``
-    as one (n, len(ps)) array, vectorized with a strided sliding window
-    + per-row top-down weight scan; equal weights short-circuit to an
-    np.partition selection (O(w) per row, no sort — see
-    _quantile_block_equal_multi). The per-block shared state (sliding
-    windows + the argsort under weights, or the single union-kth
-    np.partition under equal weights) is paid ONCE; each extra
-    probability costs only its selection sweep — O(w log w + k·w) per
-    row instead of O(k·w log w) — and column j is bit-identical to
+    as one (n, len(ps)) array; column j is bit-identical to
     ``conv_quantile(x, width, ps[j], ...)``.
 
-    Memory-bounded: the scan materializes several (rows x width) float64
-    intermediates, so rows are processed in _win_block(width) blocks —
-    a skewed 10^6-row conversation at width 10^3 would otherwise
-    allocate ~50 GB in one shot. Per-row outputs are independent, so
-    blocking is exact.
+    Equal weights select order statistics from one wavelet matrix per
+    series (_quantiles_equal): O(n log n) per series and per
+    probability, independent of the width. Weights depend on each
+    slot's lag, so they cannot live in a static structure: the weighted
+    path sorts every strided width-window and scans the slot weights
+    from the top (_quantile_block_multi). Its sort is shared across
+    probabilities (O(w log w + k·w) per row for k probabilities), and
+    rows run in _win_block(width) blocks because the scan materializes
+    several (rows x width) float64 intermediates — a 10^6-row series at
+    width 10^3 would otherwise allocate ~50 GB in one shot. Per-row
+    outputs are independent, so blocking is exact.
     """
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
@@ -555,7 +589,8 @@ def conv_quantiles(x, width, ps, weights=None, min_obs=None, na_restore=False):
     if n == 0 or not ps:
         return _restore_cols(out, x, na_restore)
     pps = [1.0 - p for p in ps]
-    equal = weights is None
+    if weights is None:
+        return _restore_cols(_quantiles_equal(x, width, pps, min_obs), x, na_restore)
     wts_full = _kernel(weights, width)[::-1]  # oldest-first slot weights
     # pad front so every row has a width-window; pads are NaN (excluded)
     pad = np.full(width - 1, np.nan)
@@ -563,12 +598,7 @@ def conv_quantiles(x, width, ps, weights=None, min_obs=None, na_restore=False):
     block = _win_block(width)
     for b0 in range(0, n, block):
         b1 = min(n, b0 + block)
-        res = None
-        if equal:
-            res = _quantile_block_equal_multi(xp, b0, b1, width, pps, min_obs)
-        if res is None:
-            res = _quantile_block_multi(xp, b0, b1, width, pps, wts_full, min_obs)
-        out[b0:b1] = res
+        out[b0:b1] = _quantile_block_multi(xp, b0, b1, width, pps, wts_full, min_obs)
     return _restore_cols(out, x, na_restore)
 
 
@@ -1161,6 +1191,52 @@ def conv_mad(x, width, weights=None, min_obs=None, na_restore=False):
         mad = _med_rows(np.sort(dev, axis=1), n_obs, rows)
         out[b0:b1] = np.where(n_obs >= max(min_obs, 1), mad, np.nan)
     return _restore(out, x, na_restore)
+
+
+# ---------------------------------------------------------------------------
+# third and fourth standardized moments: rolling skewness / kurtosis
+# ---------------------------------------------------------------------------
+
+
+def conv_skew_kurt(x, width, min_obs=None, na_restore=False):
+    """Bias-corrected rolling skewness G1, excess kurtosis G2 and the
+    Jarque-Bera statistic JB = n/6 (g1^2 + g2^2/4) as an (n, 3) array.
+
+    Central moments M_k = sum (x - mean)^k are two-pass over each
+    window about the window's own mean, so they carry no power-sum
+    cancellation (a drifting series puts the window mean far from any
+    fixed centre, where raw power sums lose ~(offset/sd)^k digits).
+    NaN (NULL) when n_obs < 3 (G1) / < 4 (G2, JB), when M2 <= eps
+    (constant window), or under the min_obs gate. Rows run in
+    _win_block blocks of strided windows, never wider than the series.
+    """
+    min_obs = width if min_obs is None else min_obs
+    x = np.asarray(x, dtype=np.float64)
+    n = len(x)
+    out = np.full((n, 3), np.nan)
+    w = max(1, min(width, n))  # windows past the series start are NaN pads
+    xp = np.concatenate([np.full(w - 1, np.nan), x])
+    block = _win_block(w)
+    for b0 in range(0, n, block):
+        b1 = min(n, b0 + block)
+        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + w - 1], w)
+        ok = ~np.isnan(wins)
+        k = ok.sum(axis=1)
+        nf = k.astype(np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            mu = np.where(ok, wins, 0.0).sum(axis=1) / nf
+            d = np.where(ok, wins - mu[:, None], 0.0)
+            d2 = d * d
+            m2, m3, m4 = d2.sum(axis=1), (d2 * d).sum(axis=1), (d2 * d2).sum(axis=1)
+            g1 = m3 * np.sqrt(nf) / m2**1.5
+            g2 = nf * m4 / (m2 * m2) - 3.0
+            ok3 = (k >= max(min_obs, 3)) & (m2 > EPS)
+            ok4 = ok3 & (k >= 4)
+            out[b0:b1, 0] = np.where(ok3, g1 * np.sqrt(nf * (nf - 1)) / (nf - 2), np.nan)
+            out[b0:b1, 1] = np.where(
+                ok4, ((nf + 1) * g2 + 6) * (nf - 1) / ((nf - 2) * (nf - 3)), np.nan)
+            out[b0:b1, 2] = np.where(ok4, nf / 6 * (g1 * g1 + g2 * g2 / 4), np.nan)
+    return _restore_cols(out, x, na_restore)
 
 
 # ---------------------------------------------------------------------------

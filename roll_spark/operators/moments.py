@@ -5,20 +5,21 @@ its highest moments — roll_vec.h:2114) with the third/fourth standardized
 moments and rolling distinct counts that a transcript-analytics tier
 needs (burstiness / heavy-tail detection on latency + value series).
 
-Execution: skew/kurt/acf run on the native Catalyst path; nunique,
-percentrank and trimmed mean run native up to QUANTILE_NATIVE_MAX_WIDTH
-and on their Arrow kernels above it; spearman and entropy run only their
-Arrow kernels (O(w log w) per row — their O(w^2) JVM higher-order-function
-forms were slower at every width measured).
+Execution: acf runs on the native Catalyst path; nunique, percentrank
+and trimmed mean run native up to NATIVE_MAX_WIDTH and on their Arrow
+kernels above it; skew/kurt, spearman and entropy run only their Arrow
+kernels (spearman's and entropy's O(w^2) JVM higher-order-function forms
+were slower at every width measured).
 
-Numerical strategy for skew/kurt: power sums of the RAW values lose
-~(mean/sd)^k digits to cancellation, so both stats are computed from
-power sums of per-series CENTERED values d = x - avg(x over series).
-Central moments are mathematically shift-invariant, so the series mean
-does not need to be exact — it only needs to sit near the data to kill
-the cancellation — and the whole thing stays a single Exchange + Sort
-with two WindowExec nodes (one unbounded per-series avg, one sliding
-frame of four power sums that Catalyst collapses into a single node).
+Numerical strategy for skew/kurt: power sums about a fixed centre lose
+~(|window mean - centre| / sd)^k digits to cancellation, and in a
+drifting series the window mean sits far from every fixed centre.
+kernels.conv_skew_kurt takes two passes over each window instead:
+the window's own mean, then its central moments M2..M4. On the native
+path neither power sums nor Spark's own ``skewness``/``kurtosis``
+aggregates pay off: the former cancel, and the latter, re-aggregated
+for every row of a sliding frame, cost more per call than one Arrow
+pass.
 
 Definitions (bias-corrected sample forms, identical to DuckDB / pandas
 / Excel SKEW + KURT):
@@ -32,64 +33,18 @@ window), plus the engine-wide min_obs / na_restore gates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as TT
 
 from roll_spark.config import EPS
 from roll_spark.operators.base import (
     Cols,
-    _as_list,
     complete_obs_maskable,
     gate,
     rolling_window,
 )
-from roll_spark.operators.window_ops import QUANTILE_NATIVE_MAX_WIDTH, _spec
-
-
-def _central_moments(df, value, by, order, width):
-    """Append __n/__m2/__m3/__m4 columns (sliding central moments).
-
-    One withColumns call so the four power sums + count share a single
-    WindowExec; the per-series centering avg is a second WindowExec on
-    the same partitioning (no extra exchange or sort).
-    """
-    # unbounded frame but SAME (partition, order) as the sliding window,
-    # so Catalyst reuses one Exchange + one Sort for both WindowExecs
-    w_part = (
-        Window.partitionBy(*_as_list(by))
-        .orderBy(*_as_list(order))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    w = rolling_window(by, order, width)
-    df = df.withColumn("__c", F.avg(F.col(value)).over(w_part))
-    d = F.col(value) - F.col("__c")
-    df = df.withColumns(
-        {
-            "__n": F.count(d).over(w).cast("double"),
-            # the min_obs gate's count rides the SAME WindowExec — a
-            # later F.count(value).over(w) would sit behind the moment
-            # Project and CollapseWindow could no longer merge it
-            "__nobs": F.count(F.col(value)).over(w),
-            "__s1": F.sum(d).over(w),
-            "__s2": F.sum(d * d).over(w),
-            "__s3": F.sum(d * d * d).over(w),
-            "__s4": F.sum(d * d * d * d).over(w),
-        }
-    )
-    n, s1, s2, s3, s4 = (F.col(c) for c in ("__n", "__s1", "__s2", "__s3", "__s4"))
-    m = s1 / n
-    df = df.withColumns(
-        {
-            "__m2": s2 - s1 * s1 / n,
-            "__m3": s3 - 3 * m * s2 + 2 * n * m * m * m,
-            "__m4": s4 - 4 * m * s3 + 6 * m * m * s2 - 3 * n * m * m * m * m,
-        }
-    )
-    return df
-
-
-_MOM_TMP = ["__c", "__n", "__nobs", "__s1", "__s2", "__s3", "__s4", "__m2", "__m3", "__m4"]
+from roll_spark.operators.window_ops import NATIVE_MAX_WIDTH, _spec
 
 
 @complete_obs_maskable
@@ -146,35 +101,27 @@ def roll_skew_kurt(
     out_kurt: str = "roll_kurt",
     out_jb: str | None = None,
 ) -> DataFrame:
-    """Fused skew + kurt: the central-moment sweep runs once and both
-    stats read from the same __m2/__m3/__m4 columns — still one
-    Exchange + Sort + 2 WindowExec, vs 2x everything for two calls.
+    """Fused skew + kurt: one grouped-map Arrow pass computes both
+    stats from the same per-window central moments
+    (kernels.conv_skew_kurt), vs 2x everything for two calls. A double
+    NaN counts as missing, like NULL.
 
     ``out_jb`` additionally emits the Jarque-Bera normality statistic
     JB = n/6 * (g1^2 + g2^2/4) over the window (g1/g2 the UNcorrected
-    sample moments, the standard JB definition) — a free projection
-    over the same central-moment columns; NULL under the kurtosis
-    gates (n < 4 or zero variance)."""
+    sample moments, the standard JB definition) from the same moments;
+    NULL under the kurtosis gates (n < 4 or zero variance)."""
+    from roll_spark.operators import kernels as K
+    from roll_spark.operators.arrow_ops import _apply_kernel
+
     spec = _spec(width, min_obs, na_restore, None)
-    df = _central_moments(df, value, by, order, width)
-    n, m2, m3, m4 = (F.col(c) for c in ("__n", "__m2", "__m3", "__m4"))
-    g1 = m3 * F.sqrt(n) / F.pow(m2, F.lit(1.5))
-    g2 = n * m4 / (m2 * m2) - 3
-    n_obs = F.col("__nobs")
-    v = F.col(value)
-    skew = F.when((n >= 3) & (m2 > F.lit(EPS)), g1 * F.sqrt(n * (n - 1)) / (n - 2))
-    kurt = F.when(
-        (n >= 4) & (m2 > F.lit(EPS)),
-        ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3)),
-    )
-    outs = {out_skew: gate(spec, v, skew, n_obs), out_kurt: gate(spec, v, kurt, n_obs)}
-    if out_jb is not None:
-        jb = F.when(
-            (n >= 4) & (m2 > F.lit(EPS)),
-            n / 6 * (g1 * g1 + g2 * g2 / 4),
-        )
-        outs[out_jb] = gate(spec, v, jb, n_obs)
-    return df.withColumns(outs).drop(*_MOM_TMP)
+    outs = [out_skew, out_kurt] + ([out_jb] if out_jb is not None else [])
+
+    def kernel(cols):
+        res = K.conv_skew_kurt(cols[value], width, min_obs=spec.effective_min_obs,
+                               na_restore=na_restore)
+        return {o: res[:, j] for j, o in enumerate(outs)}
+
+    return _apply_kernel(df, [value], by, order, [(o, "double") for o in outs], kernel)
 
 
 @complete_obs_maskable
@@ -195,11 +142,11 @@ def roll_nunique(
     convention), array_distinct dedups JVM-side — no Python, no extra
     shuffle beyond the one hash exchange every window op pays.  The
     collect_list form holds a width-long array per row in JVM heap, so
-    widths above QUANTILE_NATIVE_MAX_WIDTH route to the blocked Arrow
+    widths above NATIVE_MAX_WIDTH route to the blocked Arrow
     kernel (kernels.conv_nunique), same dispatch rule as roll_quantile.
     """
     spec = _spec(width, min_obs, na_restore, None)
-    if width > QUANTILE_NATIVE_MAX_WIDTH:
+    if width > NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _one
 
@@ -253,7 +200,6 @@ def roll_acf(
     n <= max(lags).
     """
     from roll_spark.operators.base import ordered_window
-    from roll_spark.operators.window_ops import QUANTILE_NATIVE_MAX_WIDTH, _spec
 
     spec = _spec(width, min_obs, na_restore, None)
     lags = list(lags)
@@ -326,11 +272,11 @@ def roll_percentrank(
 
     collect_list + a JVM higher-order filter; NULL when the current
     value is missing or n_obs < max(min_obs, 2). Widths above
-    QUANTILE_NATIVE_MAX_WIDTH route to the blocked Arrow kernel
+    NATIVE_MAX_WIDTH route to the blocked Arrow kernel
     (kernels.conv_percentrank) — fixed memory budget at any width.
     """
     spec = _spec(width, min_obs, na_restore, None)
-    if width > QUANTILE_NATIVE_MAX_WIDTH:
+    if width > NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _one
 
@@ -372,13 +318,13 @@ def roll_trimmed_mean(
 
     Native path (collect_list + array_sort + slice + aggregate, all JVM
     higher-order functions) holds a width-long array per row, so widths
-    above QUANTILE_NATIVE_MAX_WIDTH dispatch to the blocked Arrow
+    above NATIVE_MAX_WIDTH dispatch to the blocked Arrow
     kernel (kernels.conv_trimmed_mean) — the roll_quantile rule.
     """
     if not 0.0 <= alpha < 0.5:
         raise ValueError(f"alpha must be in [0, 0.5), got {alpha}")
     spec = _spec(width, min_obs, na_restore, None)
-    if width > QUANTILE_NATIVE_MAX_WIDTH:
+    if width > NATIVE_MAX_WIDTH:
         from roll_spark.operators import kernels as K
         from roll_spark.operators.arrow_ops import _one
 

@@ -10,7 +10,12 @@ Semantics match the reference kernels (file:line cites inline per op;
 all into /root/reference). Weighted / exponential-decay inputs are
 dispatched to the Arrow kernel path (roll_spark.operators.arrow_ops),
 mirroring the reference's own online/offline algorithm dispatch
-(``src/roll.cpp:378-394``).
+(``src/roll.cpp:378-394``). So are equal-weight sum, mean and the
+sorted-window ops (quantile(s), nunique, percentrank, trimmed mean)
+wider than NATIVE_MAX_WIDTH: their native cost grows with the width
+(Spark's sliding frame re-aggregates its buffer for every row), the
+Arrow kernels' does not. On the Arrow path a double NaN counts as
+missing, like NULL.
 
 Scale notes (100 TB): the only shuffle is hashpartitioning(series key);
 all ops below reuse the same (partition, sort) so Catalyst collapses
@@ -57,7 +62,8 @@ def _spec(width, min_obs, na_restore, weights, **kw) -> RollSpec:
 
 
 def _dispatch_weighted(op: str):
-    """Non-equal weights -> Arrow kernel path (reference src/roll.cpp:378)."""
+    """Arrow kernel path for non-equal weights and wide windows
+    (reference src/roll.cpp:378)."""
     from roll_spark.operators import arrow_ops
 
     return getattr(arrow_ops, op)
@@ -71,10 +77,13 @@ def _check_positive_weights(weights, op: str) -> None:
         )
 
 
-# Widest window the native collect_list/array_sort quantile may take:
-# beyond this the per-row sorted array's JVM heap + CPU cost loses to the
-# Arrow kernel's blocked sort, and at 10^4+ it is an OOM risk outright.
-QUANTILE_NATIVE_MAX_WIDTH = 256
+# The one native/Arrow crossover for every width dispatch. Above it the
+# per-row sorted arrays of the collect_list ops (quantile, nunique,
+# percentrank, trimmed mean) cost JVM heap and CPU that lose to the
+# Arrow kernels (an OOM risk outright at 10^4+), and Spark's sliding
+# ROWS frame, which re-aggregates its whole buffer for every row, makes
+# a native sum/mean O(n·w) where the Arrow kernel is O(n).
+NATIVE_MAX_WIDTH = 256
 
 
 # ---------------------------------------------------------------------------
@@ -95,9 +104,15 @@ def roll_sum(
     weights: Sequence[float] | None = None,
     out: str = "roll_sum",
 ) -> DataFrame:
-    """Rolling/expanding sum (reference roll_sum, roll_vec.h:383-511)."""
+    """Rolling/expanding sum (reference roll_sum, roll_vec.h:383-511).
+
+    Weighted input, and equal weights wider than NATIVE_MAX_WIDTH, take
+    the Arrow kernel (kernels.conv_sum), which is O(n) per series at any
+    width: Spark's sliding frame re-aggregates its whole buffer for each
+    row, O(n·w). On that path a double NaN counts as missing, like NULL,
+    and the output is double for every input type."""
     spec = _spec(width, min_obs, na_restore, weights)
-    if not spec.is_equal_weight:
+    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
         return _dispatch_weighted("roll_sum")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
     v = F.col(value)
@@ -117,9 +132,13 @@ def roll_mean(
     weights: Sequence[float] | None = None,
     out: str = "roll_mean",
 ) -> DataFrame:
-    """Rolling/expanding mean (reference roll_mean, roll_vec.h:814-1011)."""
+    """Rolling/expanding mean (reference roll_mean, roll_vec.h:814-1011).
+
+    Paths as in :func:`roll_sum`: above NATIVE_MAX_WIDTH (an expanding
+    mean included) the O(n) Arrow kernel conv_mean runs, where a double
+    NaN counts as missing."""
     spec = _spec(width, min_obs, na_restore, weights)
-    if not spec.is_equal_weight:
+    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
         return _dispatch_weighted("roll_mean")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
     v = F.col(value)
@@ -301,11 +320,12 @@ def roll_quantile(
     (``F.array_sort(F.collect_list(...))`` inside WindowExec): O(w log w)
     CPU and O(w) JVM heap PER OUTPUT ROW — fine for moderate widths,
     an executor OOM at width 10^4-10^5 (an hour of ticks) regardless of
-    weights. Widths above ``QUANTILE_NATIVE_MAX_WIDTH`` therefore route
+    weights. Widths above ``NATIVE_MAX_WIDTH`` therefore route
     to the Arrow kernel path even under equal weights, mirroring the
-    reference's own algorithm dispatch (src/roll.cpp:864-894): the
-    numpy kernel is row-blocked with a fixed memory budget, so width
-    only scales compute, never peak memory.
+    reference's own algorithm dispatch (src/roll.cpp:864-894). There
+    equal weights select from one wavelet matrix per series, O(n log n)
+    at any width; weighted windows are sorted in row blocks with a
+    fixed memory budget. A double NaN counts as missing on that path.
     """
     if p == 0.0:
         return roll_min(df, value, by, order, width, min_obs=min_obs,
@@ -314,7 +334,7 @@ def roll_quantile(
         return roll_max(df, value, by, order, width, min_obs=min_obs,
                         na_restore=na_restore, weights=weights, out=out)
     spec = _spec(width, min_obs, na_restore, weights, p=p)
-    if not spec.is_equal_weight or width > QUANTILE_NATIVE_MAX_WIDTH:
+    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
         return _dispatch_weighted("roll_quantile")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
     v = F.col(value)
@@ -385,11 +405,12 @@ def roll_quantiles(
     column-for-column identical to the one-p operator
     (tests/test_quantiles_multi.py asserts it).
 
-    Non-equal weights or width > QUANTILE_NATIVE_MAX_WIDTH route to the
+    Non-equal weights or width > NATIVE_MAX_WIDTH route to the
     fused Arrow kernel (kernels.conv_quantiles): ONE grouped-map pass
-    sharing the per-block argsort / union-kth partition across every
-    interior p (~2.3x over per-p calls at 5 ps), with p=0 / p=1 going
-    through roll_min / roll_max exactly like single-p roll_quantile.
+    sharing the per-series wavelet matrix (equal weights) or the
+    per-block argsort (weighted) across every interior p, with p=0 /
+    p=1 going through roll_min / roll_max exactly like single-p
+    roll_quantile.
     """
     ps = list(ps)
     outs = list(outs) if outs is not None else [
@@ -398,7 +419,7 @@ def roll_quantiles(
     if len(outs) != len(ps):
         raise ValueError("outs must match ps in length")
     spec = _spec(width, min_obs, na_restore, weights)
-    if not spec.is_equal_weight or width > QUANTILE_NATIVE_MAX_WIDTH:
+    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
         interior = [(p_, o_) for p_, o_ in zip(ps, outs) if 0.0 < p_ < 1.0]
         out_df = df
         if interior:

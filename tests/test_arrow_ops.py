@@ -297,25 +297,66 @@ def test_roll_lm_multi_equals_per_y_fits(grid_df):
 
 
 def test_quantile_width_dispatch(grid_df):
-    """Equal weights + width above QUANTILE_NATIVE_MAX_WIDTH must route
+    """Equal weights + width above NATIVE_MAX_WIDTH must route
     to the Arrow kernel (no per-row collect_list/array_sort in the
     plan); at-or-below stays on the native WindowExec path."""
     from roll_spark.operators.window_ops import (
-        QUANTILE_NATIVE_MAX_WIDTH,
+        NATIVE_MAX_WIDTH,
         roll_quantile,
     )
 
     small = roll_quantile(grid_df, "x", "series_id", "i",
-                          QUANTILE_NATIVE_MAX_WIDTH, 0.5, min_obs=1, out="q")
+                          NATIVE_MAX_WIDTH, 0.5, min_obs=1, out="q")
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" in plan_small
     assert "FlatMapGroupsInArrow" not in plan_small
 
     big = roll_quantile(grid_df, "x", "series_id", "i",
-                        QUANTILE_NATIVE_MAX_WIDTH + 1, 0.5, min_obs=1, out="q")
+                        NATIVE_MAX_WIDTH + 1, 0.5, min_obs=1, out="q")
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" not in plan_big
     assert "FlatMapGroupsInArrow" in plan_big
+
+
+@pytest.mark.parametrize("op", [roll_mean, roll_sum])
+def test_sum_mean_width_dispatch(grid_df, op):
+    """Equal-weight sum/mean stay on the native Window node up to
+    NATIVE_MAX_WIDTH and take the Arrow kernel one past it."""
+    from roll_spark.operators.window_ops import NATIVE_MAX_WIDTH
+
+    def plan(width):
+        out = op(grid_df, "x", "series_id", "i", width, min_obs=1, out="m")
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    at, past = plan(NATIVE_MAX_WIDTH), plan(NATIVE_MAX_WIDTH + 1)
+    assert "Window [" in at and "FlatMapGroupsInArrow" not in at
+    assert "FlatMapGroupsInArrow" in past and "Window [" not in past
+
+
+@pytest.mark.parametrize("op,agg", [(roll_mean, "avg"), (roll_sum, "sum")])
+def test_expanding_equals_running_frame(spark, op, agg):
+    """An expanding sum/mean on the Arrow path equals Spark's own
+    running-frame aggregate, NULLs included, within 1e-12."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(3)
+    lens = [1, 7, 300, 1200]
+    x = rng.normal(50.0, 10.0, sum(lens))
+    x[rng.random(len(x)) < 0.05] = np.nan
+    pdf = pd.DataFrame({"g": np.repeat(np.arange(len(lens)), lens),
+                        "i": np.concatenate([np.arange(n) for n in lens]),
+                        "x": x})
+    df = spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None),
+                               "g long, i long, x double")
+    run = Window.partitionBy("g").orderBy("i").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    got = (op(df, "x", "g", "i", 10**4, min_obs=1, out="m")
+           .withColumn("ref", getattr(F, agg)("x").over(run))
+           .select("m", "ref").toPandas().astype(float))
+    assert np.array_equal(np.isnan(got["m"]), np.isnan(got["ref"]))
+    np.testing.assert_allclose(got["m"], got["ref"], rtol=1e-12, atol=1e-12)
 
 
 def test_quantile_native_equals_arrow_at_boundary_p(grid_df):

@@ -292,9 +292,9 @@ def test_quantile_selection_boundary_combos():
     (sum_upper/sum_w >= p, roll_vec.h:2048). At (p, n) combos where the
     PRODUCT n*(1-p) rounds to the other side of an attainable mass —
     e.g. p=0.41/n=100, p=0.18/n=50 — a ceil-of-product shortcut selects
-    a different order statistic. The equal-weight partition fast path,
-    the weighted scan, and the online dual multiset must all agree on
-    exactly these combos."""
+    a different order statistic. The equal-weight wavelet-matrix
+    selection, the weighted scan, and the online dual multiset must all
+    agree on exactly these combos."""
     rng = np.random.default_rng(5)
     for p, w in ((0.41, 100), (0.18, 50), (0.18, 150), (0.408, 125),
                  (0.999, 37), (0.82, 50)):
@@ -324,8 +324,8 @@ def test_equal_weight_c_is_smallest_division_satisfier():
 
 def test_conv_quantiles_fused_equals_per_p():
     """conv_quantiles column j must be BIT-identical to conv_quantile at
-    ps[j] on both the equal-weight partition path and the weighted scan
-    path, across NaN mixes, min_obs, and na_restore."""
+    ps[j] on both the equal-weight wavelet-matrix path and the weighted
+    scan path, across NaN mixes, min_obs, and na_restore."""
     rng = np.random.default_rng(1234)
     ps = [0.01, 0.25, 0.5, 0.75, 0.99, 1 / 3]
     for trial in range(4):
@@ -351,3 +351,65 @@ def test_conv_quantiles_empty_and_degenerate():
     x = np.full(20, np.nan)
     out = K.conv_quantiles(x, 4, [0.25, 0.75], min_obs=1)
     assert np.isnan(out).all()
+
+
+QUANTILE_PS = [0.0, 1 / 3, 0.5, 1.0, 0.1, 0.18, 0.41, 0.75, 0.999]
+
+
+def _quantile_input(rng, n):
+    """Ties (one decimal over a narrow range), a leading NaN run, NaN
+    bursts and scattered NaNs; -0.0 normalised to +0.0, the one tie
+    whose two members differ in their bits."""
+    x = np.round(rng.normal(0.0, 2.0, n), 1)
+    x[: int(rng.integers(0, n // 4 + 1))] = np.nan
+    for _ in range(3):
+        a = int(rng.integers(0, n))
+        x[a : a + int(rng.integers(1, 40))] = np.nan
+    x[rng.random(n) < 0.05] = np.nan
+    return x + 0.0
+
+
+@pytest.mark.parametrize("width", [1, 2, 3, 5, 63, 64, 65, 256, 400, 1000])
+def test_equal_weight_quantiles_match_sorted_window(width):
+    """Equal-weight conv_quantiles (wavelet-matrix selection) against
+    the brute-force sorted-window HF2 scan, row by row: the same bits
+    and the same NaN positions, including widths longer than the
+    series."""
+    rng = np.random.default_rng(width)
+    for n in (min(2 * width + 40, 700), max(width // 2, 3)):
+        x = _quantile_input(rng, n)
+        for min_obs in sorted({1, max(1, width // 2), width}):
+            got = K.conv_quantiles(x, width, QUANTILE_PS, min_obs=min_obs)
+            for j, p in enumerate(QUANTILE_PS):
+                want = oracle.roll_quantile(x, width, p, min_obs=min_obs)
+                assert np.array_equal(np.isnan(got[:, j]), np.isnan(want)), (n, min_obs, p)
+                assert np.array_equal(got[:, j].view(np.int64), want.view(np.int64)), (
+                    n, min_obs, p)
+
+
+@pytest.mark.parametrize("fn,ref", [(K.conv_sum, oracle.roll_sum),
+                                    (K.conv_mean, oracle.roll_mean)])
+def test_conv_sum_mean_width_beyond_series(fn, ref):
+    """A width far past the series length (the expanding case) reads
+    only the series' own lags: the result equals the brute-force
+    window sums, at O(n) cost."""
+    rng = np.random.default_rng(11)
+    x = rng.normal(5.0, 3.0, 1000)
+    x[rng.random(1000) < 0.1] = np.nan
+    got = fn(x, 10**7, min_obs=1)
+    want = ref(x, 10**7, min_obs=1)
+    assert np.array_equal(np.isnan(got), np.isnan(want))
+    np.testing.assert_allclose(got, want, rtol=1e-12)
+
+
+def test_skew_kurt_width_beyond_series():
+    """conv_skew_kurt never builds windows wider than the series: a
+    width of 10^7 over 1,000 rows gives the expanding result, bit for
+    bit, without allocating block x width windows."""
+    rng = np.random.default_rng(12)
+    x = rng.normal(5.0, 3.0, 1000)
+    x[rng.random(1000) < 0.1] = np.nan
+    got = K.conv_skew_kurt(x, 10**7, min_obs=4)
+    want = K.conv_skew_kurt(x, 1000, min_obs=4)
+    assert np.array_equal(got, want, equal_nan=True)
+    assert np.isnan(got[:3]).all() and np.isfinite(got[-1]).all()

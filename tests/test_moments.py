@@ -103,6 +103,7 @@ def test_skew_plan_one_exchange(spark):
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 1
     assert plan.count("Sort") <= 1
+    assert "FlatMapGroupsInArrow" in plan
 
 
 def test_mad_arrow(spark):
@@ -489,6 +490,48 @@ def test_skew_kurt_match_pandas(spark):
                        equal_nan=True, atol=1e-8)
     assert np.allclose(got["ku"].to_numpy(dtype=float), want_ku,
                        equal_nan=True, atol=1e-8)
+
+
+def _longdouble_skew_kurt(vals, width, min_obs):
+    """Two-pass G1/G2 per trailing window in extended precision."""
+    sk = np.full(len(vals), np.nan)
+    ku = np.full(len(vals), np.nan)
+    for i in range(len(vals)):
+        win = vals[max(0, i - width + 1): i + 1]
+        obs = win[~np.isnan(win)].astype(np.longdouble)
+        n = len(obs)
+        if n < max(min_obs, 3):
+            continue
+        d = obs - obs.sum() / n
+        M2, M3, M4 = (d ** 2).sum(), (d ** 3).sum(), (d ** 4).sum()
+        g1 = M3 * np.sqrt(np.longdouble(n)) / M2 ** np.longdouble(1.5)
+        sk[i] = g1 * np.sqrt(np.longdouble(n * (n - 1))) / (n - 2)
+        if n >= 4:
+            g2 = n * M4 / (M2 * M2) - 3
+            ku[i] = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
+    return sk, ku
+
+
+def test_skew_kurt_drifting_series(spark):
+    """A series whose level drifts far from its own mean while each
+    window stays narrow: raw power sums about any fixed centre cancel
+    catastrophically there (~(offset/sd)^4 * eps relative error), the
+    per-window central moments do not."""
+    rng = np.random.default_rng(23)
+    n = 240
+    level = np.repeat([0.0, -400.0, -1100.0, -2000.0], n // 4)
+    v = level + rng.normal(0.0, 0.7, n)
+    v[rng.random(n) < 0.05] = np.nan
+    ts = pd.Timestamp("2024-05-01") + pd.to_timedelta(np.arange(n), unit="s")
+    pdf = pd.DataFrame({"k": 0, "ts": ts, "v": v})
+    got = roll_skew_kurt(spark.createDataFrame(pdf), "v", "k", "ts", 20,
+                         min_obs=4, out_skew="sk", out_kurt="ku") \
+        .select("ts", "sk", "ku").toPandas().sort_values("ts")
+    want_sk, want_ku = _longdouble_skew_kurt(v, 20, 4)
+    np.testing.assert_allclose(got["sk"].to_numpy(dtype=float), want_sk,
+                               rtol=1e-9, atol=1e-12)
+    np.testing.assert_allclose(got["ku"].to_numpy(dtype=float), want_ku,
+                               rtol=1e-9, atol=1e-12)
 
 
 def test_jarque_bera_composition(spark):

@@ -81,7 +81,7 @@ def test_outs_length_mismatch(spark):
 
 
 def test_fused_arrow_large_width_equals_per_p(spark):
-    """width > QUANTILE_NATIVE_MAX_WIDTH routes the fused op to the
+    """width > NATIVE_MAX_WIDTH routes the fused op to the
     Arrow conv_quantiles kernel — parity with per-p roll_quantile."""
     pdf = _fixture(600, n_keys=2)
     sdf = spark.createDataFrame(pdf)

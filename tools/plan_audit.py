@@ -31,6 +31,7 @@ EXPECT = {
     "roll_idxmax_w10": dict(max_exchange=1, max_sort=1),
     "roll_cov_w10": dict(max_exchange=1, max_sort=1),
     "roll_lm_w20": dict(max_exchange=1, max_sort=1, max_window=2),
+    # width > NATIVE_MAX_WIDTH -> Arrow path (O(n) conv_mean): one groupBy
     "expanding_mean": dict(max_exchange=1, max_sort=1),
     "roll_mean_exp_w10": dict(max_exchange=1),       # Arrow path: one groupBy
     "roll_median_w400": dict(max_exchange=1),        # large width -> Arrow path
@@ -81,8 +82,7 @@ EXPECT = {
     "sessionize_1h": dict(max_exchange=1, max_sort=1, max_window=2),
     # + one partial-agg exchange for the per-session groupBy
     "session_stats_1h": dict(max_exchange=2, max_sort=1, max_window=2),
-    # fused skew/kurt: per-series centering avg + sliding power sums
-    # share ONE exchange + ONE sort (two WindowExec nodes)
+    # fused skew/kurt: Arrow path (two-pass conv_skew_kurt), one groupBy
     "roll_skew_kurt_w20": dict(max_exchange=1, max_sort=1, max_window=2),
     "roll_mad_w10": dict(max_exchange=1),            # Arrow path: one groupBy
     "roll_nunique_w10": dict(max_exchange=1, max_sort=1, max_window=1),
