@@ -7,9 +7,10 @@ Two algorithm families, mirroring the reference's online/offline split
   rolling weighted sum with newest-last weight alignment
   (roll_vec.h:556 reads arma_weights[n-count-1]) is exactly
   ``np.convolve(x, reversed(weights))``. Arbitrary weights, C speed,
-  O(n*width); equal-weight sums are O(n) at any width, and equal-weight
-  quantiles select from a wavelet matrix in O(n log n) — the production
-  path inside Arrow UDFs.
+  O(n*width), with every kernel cut to n taps (lags >= n never reach
+  a row), so an expanding equal-weight sum is O(n); equal-weight
+  quantiles select from a wavelet matrix in O(n log n) at any width —
+  the production path inside Arrow UDFs.
 - ``online_*`` sequential O(1)-per-row recursions (lambda-recursion /
   West co-moment updates, roll_vec.h:447, :2190, :3677). Reference
   oracles only: they prove online == offline equivalence the way the
@@ -54,8 +55,9 @@ def _rollconv(v: np.ndarray, h: np.ndarray) -> np.ndarray:
 
     Lags >= n never reach a row, so ``h`` is cut to n taps. Under equal
     weights the w-1 not-yet-full rows are a sequential running sum (as
-    in Spark's running frame) and the full rows one "valid"
-    convolution, so an expanding window costs O(n) instead of O(n·w)."""
+    in Spark's running frame) and the full rows one "valid" direct
+    convolution: O(n) for an expanding window (w >= n), O(n·w) in C
+    otherwise."""
     n = len(v)
     h = h[:n]
     w = len(h)
@@ -80,8 +82,11 @@ class WindowSums:
         self.x = np.asarray(x, dtype=np.float64)
         self.width = width
         xv, ok = _prep(self.x)
-        h = _kernel(weights, width)
-        self.n_obs = np.rint(_rollconv(ok, np.ones(width))).astype(np.int64)
+        # the taps are built at most n long: an expanding window may be
+        # written as any width >= n, and must not allocate that width
+        taps = min(width, len(self.x))
+        h = _kernel(weights, taps)
+        self.n_obs = np.rint(_rollconv(ok, np.ones(taps))).astype(np.int64)
         self.sum_w = _rollconv(ok, h)
         self.sum_wx = _rollconv(xv, h)
         self._h = h
@@ -118,6 +123,17 @@ def _win_block(width: int) -> int:
     workers don't contend for DRAM bandwidth (measured: series-sized
     blocks were ~45% slower per group and capped multi-core scaling)."""
     return min(max(131072 // max(width, 1), 128), 8192)
+
+
+def _pin_constant(mu, wins, ok):
+    """Each window's mean, set to the window's value where all its
+    observed values are equal (min == max): the mean of identical
+    non-dyadic values is not exact in float64, and only the exact value
+    gives exactly-zero deviations (rank-deficiency and zero-variance
+    decisions hang on them)."""
+    lo = np.where(ok, wins, np.inf).min(axis=1)
+    hi = np.where(ok, wins, -np.inf).max(axis=1)
+    return np.where(lo == hi, lo, mu)
 
 
 def _pair_window_moments(x, y, width, weights):
@@ -165,14 +181,7 @@ def _pair_window_moments(x, y, width, weights):
         xv = np.where(okm, wx, 0.0)
         with np.errstate(invalid="ignore", divide="ignore"):
             mux = (sw * xv).sum(axis=1) / swsum
-        # an exactly-constant window must yield EXACTLY zero centered
-        # sums (rank-deficiency / zero-variance decisions hang on it),
-        # but the weighted mean of identical values is not exact in
-        # float64 for non-dyadic weights — pin the mean to the constant
-        # (detected exactly via window min == max) so dx is exactly 0
-        lo = np.where(okm, wx, np.inf).min(axis=1)
-        hi = np.where(okm, wx, -np.inf).max(axis=1)
-        mux = np.where(lo == hi, lo, mux)
+        mux = _pin_constant(mux, wx, okm)
         mux_a[b0:b1] = mux
         dx = np.where(okm, wx - mux[:, None], 0.0)
         ssx[b0:b1] = (sw * dx * dx).sum(axis=1)
@@ -183,9 +192,7 @@ def _pair_window_moments(x, y, width, weights):
             yv = np.where(okm, wy, 0.0)
             with np.errstate(invalid="ignore", divide="ignore"):
                 muy = (sw * yv).sum(axis=1) / swsum
-            lo = np.where(okm, wy, np.inf).min(axis=1)
-            hi = np.where(okm, wy, -np.inf).max(axis=1)
-            muy = np.where(lo == hi, lo, muy)
+            muy = _pin_constant(muy, wy, okm)
             muy_a[b0:b1] = muy
             dy = np.where(okm, wy - muy[:, None], 0.0)
             ssy[b0:b1] = (sw * dy * dy).sum(axis=1)
@@ -206,7 +213,7 @@ def _matrix_window_moments(M, width, weights):
     columns share one observation mask (the reference's any_na row mask,
     src/roll.cpp:125-155). Returns (n_obs, sum_w, sumsq_w, mu, SS) with
     mu (n, k) per-window weighted means (constant-window pinned, see
-    _pair_window_moments) and SS (n, k, k) centered co-moment sums
+    _pin_constant) and SS (n, k, k) centered co-moment sums
     sum(w (a - mu_a)(b - mu_b)).
 
     This replaces k(k+1)/2 + k independent _pair_window_moments passes
@@ -248,9 +255,7 @@ def _matrix_window_moments(M, width, weights):
             xv = np.where(okm, wx, 0.0)
             with np.errstate(invalid="ignore", divide="ignore"):
                 muj = (sw * xv).sum(axis=1) / swsum
-            lo = np.where(okm, wx, np.inf).min(axis=1)
-            hi = np.where(okm, wx, -np.inf).max(axis=1)
-            muj = np.where(lo == hi, lo, muj)
+            muj = _pin_constant(muj, wx, okm)
             mu[b0:b1, j] = muj
             dx[j] = np.where(okm, wx - muj[:, None], 0.0)
         wdx = dx * sw[None]
@@ -1166,6 +1171,7 @@ def conv_mad(x, width, weights=None, min_obs=None, na_restore=False):
     out = np.full(n, np.nan)
     if n == 0:
         return out
+    width = min(width, n)  # windows past the series start are NaN pads
     pad = np.full(width - 1, np.nan)
     xp = np.concatenate([pad, x])
     block = _win_block(width)
@@ -1225,6 +1231,8 @@ def conv_skew_kurt(x, width, min_obs=None, na_restore=False):
         nf = k.astype(np.float64)
         with np.errstate(invalid="ignore", divide="ignore"):
             mu = np.where(ok, wins, 0.0).sum(axis=1) / nf
+            # else a constant window at large |x| can leave M2 = n·d² > eps
+            mu = _pin_constant(mu, wins, ok)
             d = np.where(ok, wins - mu[:, None], 0.0)
             d2 = d * d
             m2, m3, m4 = d2.sum(axis=1), (d2 * d).sum(axis=1), (d2 * d2).sum(axis=1)
@@ -1412,6 +1420,7 @@ def conv_percentrank(x, width, weights=None, min_obs=None, na_restore=False):
     out = np.full(n, np.nan)
     if n == 0:
         return out
+    width = min(width, n)  # windows past the series start are NaN pads
     pad = np.full(width - 1, np.nan)
     xp = np.concatenate([pad, x])
     block = _win_block(width)
@@ -1441,6 +1450,7 @@ def conv_nunique(x, width, weights=None, min_obs=None, na_restore=False):
     out = np.full(n, np.nan)
     if n == 0:
         return out
+    width = min(width, n)  # windows past the series start are NaN pads
     pad = np.full(width - 1, np.nan)
     xp = np.concatenate([pad, x])
     block = _win_block(width)
@@ -1475,6 +1485,7 @@ def conv_trimmed_mean(x, width, alpha=0.2, weights=None, min_obs=None,
     out = np.full(n, np.nan)
     if n == 0:
         return out
+    width = min(width, n)  # windows past the series start are NaN pads
     pad = np.full(width - 1, np.nan)
     xp = np.concatenate([pad, x])
     block = _win_block(width)
@@ -1609,6 +1620,7 @@ def conv_entropy(codes, width, weights=None, min_obs=None, na_restore=False):
     out = np.full(n, np.nan)
     if n == 0:
         return out
+    width = min(width, n)  # windows past the series start are NaN pads
     pad = np.full(width - 1, np.nan)
     xp = np.concatenate([pad, x])
     block = _win_block(width)

@@ -10,12 +10,13 @@ Semantics match the reference kernels (file:line cites inline per op;
 all into /root/reference). Weighted / exponential-decay inputs are
 dispatched to the Arrow kernel path (roll_spark.operators.arrow_ops),
 mirroring the reference's own online/offline algorithm dispatch
-(``src/roll.cpp:378-394``). So are equal-weight sum, mean and the
-sorted-window ops (quantile(s), nunique, percentrank, trimmed mean)
-wider than NATIVE_MAX_WIDTH: their native cost grows with the width
-(Spark's sliding frame re-aggregates its buffer for every row), the
-Arrow kernels' does not. On the Arrow path a double NaN counts as
-missing, like NULL.
+(``src/roll.cpp:378-394``). So are the sorted-window ops (quantile(s),
+nunique, percentrank, trimmed mean), and equal-weight sum and mean of
+a float/double column, wider than NATIVE_MAX_WIDTH: their native cost
+grows with the width (Spark's sliding frame re-aggregates its buffer
+for every row), and the Arrow kernels cut an expanding window to the
+series length. On the Arrow path a double NaN counts as missing, like
+NULL.
 
 Scale notes (100 TB): the only shuffle is hashpartitioning(series key);
 all ops below reuse the same (partition, sort) so Catalyst collapses
@@ -37,6 +38,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from roll_spark.config import EPS, SQRT_EPS, RollSpec
 from roll_spark.operators.base import (
@@ -80,10 +82,24 @@ def _check_positive_weights(weights, op: str) -> None:
 # The one native/Arrow crossover for every width dispatch. Above it the
 # per-row sorted arrays of the collect_list ops (quantile, nunique,
 # percentrank, trimmed mean) cost JVM heap and CPU that lose to the
-# Arrow kernels (an OOM risk outright at 10^4+), and Spark's sliding
-# ROWS frame, which re-aggregates its whole buffer for every row, makes
-# a native sum/mean O(n·w) where the Arrow kernel is O(n).
+# Arrow kernels (an OOM risk outright at 10^4+). Sum and mean share the
+# value, tuned on the quantile ops: Spark's sliding ROWS frame
+# re-aggregates its whole buffer for every row, so a native sum/mean
+# grows with the width (O(n^2) expanding), the Arrow kernel's only with
+# n·min(w, n) in C. On the rolling_batch input (4 cores, median of 7)
+# native/Arrow mean walls were 0.26/0.23 s at w128, 0.24/0.21 at w256,
+# 0.29/0.21 at w400 and 0.46/0.20 at w1000: a tie up to ~256.
 NATIVE_MAX_WIDTH = 256
+
+
+def _wide_sum_to_arrow(df: DataFrame, value: str, spec: RollSpec) -> bool:
+    """An equal-weight sum/mean leaves the native path above
+    NATIVE_MAX_WIDTH only for a float/double column. Spark sums an
+    integer column exactly to bigint and a decimal one to decimal; the
+    float64 kernel would turn both into a double."""
+    return spec.width > NATIVE_MAX_WIDTH and isinstance(
+        df.schema[value].dataType, (DoubleType, FloatType)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -106,13 +122,15 @@ def roll_sum(
 ) -> DataFrame:
     """Rolling/expanding sum (reference roll_sum, roll_vec.h:383-511).
 
-    Weighted input, and equal weights wider than NATIVE_MAX_WIDTH, take
-    the Arrow kernel (kernels.conv_sum), which is O(n) per series at any
-    width: Spark's sliding frame re-aggregates its whole buffer for each
-    row, O(n·w). On that path a double NaN counts as missing, like NULL,
-    and the output is double for every input type."""
+    Weighted input, and a float/double column under equal weights wider
+    than NATIVE_MAX_WIDTH, take the Arrow kernel (kernels.conv_sum): it
+    is O(n) per series for an expanding window, where Spark's sliding
+    frame re-aggregates its whole buffer for each row. On that path a
+    double NaN counts as missing, like NULL, and the output is double
+    for every input type; integer and decimal columns under equal
+    weights stay native at any width and keep their exact sum type."""
     spec = _spec(width, min_obs, na_restore, weights)
-    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
+    if not spec.is_equal_weight or _wide_sum_to_arrow(df, value, spec):
         return _dispatch_weighted("roll_sum")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
     v = F.col(value)
@@ -134,11 +152,11 @@ def roll_mean(
 ) -> DataFrame:
     """Rolling/expanding mean (reference roll_mean, roll_vec.h:814-1011).
 
-    Paths as in :func:`roll_sum`: above NATIVE_MAX_WIDTH (an expanding
-    mean included) the O(n) Arrow kernel conv_mean runs, where a double
-    NaN counts as missing."""
+    Paths as in :func:`roll_sum`: a float/double column wider than
+    NATIVE_MAX_WIDTH (an expanding mean included) runs the Arrow kernel
+    conv_mean, where a double NaN counts as missing."""
     spec = _spec(width, min_obs, na_restore, weights)
-    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
+    if not spec.is_equal_weight or _wide_sum_to_arrow(df, value, spec):
         return _dispatch_weighted("roll_mean")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
     v = F.col(value)

@@ -334,6 +334,34 @@ def test_sum_mean_width_dispatch(grid_df, op):
 
 
 @pytest.mark.parametrize("op,agg", [(roll_mean, "avg"), (roll_sum, "sum")])
+def test_wide_sum_mean_keep_exact_types_native(spark, op, agg):
+    """Past NATIVE_MAX_WIDTH only float/double columns take the Arrow
+    kernel: a bigint or decimal column stays on the Window node with
+    Spark's own result type, and a bigint sum stays exact above 2**53."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from roll_spark.operators.window_ops import NATIVE_MAX_WIDTH
+
+    width = NATIVE_MAX_WIDTH + 1
+    vals = [2**53 + 1 if i % 3 else i for i in range(400)]
+    df = spark.createDataFrame(
+        [(0, i, v, Decimal(v) / 1000) for i, v in enumerate(vals)],
+        "g long, i long, v bigint, d decimal(20,3)")
+    for col in ("v", "d"):
+        res = op(df, col, "g", "i", width, min_obs=1, out="m")
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "Window [" in plan and "FlatMapGroupsInArrow" not in plan, col
+        want_type = df.select(getattr(F, agg)(col)).schema[0].dataType
+        assert res.schema["m"].dataType == want_type, col
+    if op is roll_sum:
+        got = [r["m"] for r in roll_sum(df, "v", "g", "i", width, min_obs=1, out="m")
+               .orderBy("i").collect()]
+        assert got == [sum(vals[max(0, i - width + 1): i + 1]) for i in range(400)]
+
+
+@pytest.mark.parametrize("op,agg", [(roll_mean, "avg"), (roll_sum, "sum")])
 def test_expanding_equals_running_frame(spark, op, agg):
     """An expanding sum/mean on the Arrow path equals Spark's own
     running-frame aggregate, NULLs included, within 1e-12."""

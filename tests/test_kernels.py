@@ -4,6 +4,8 @@ weights 0.9^(2w:1) of length 2*width, the reference's own weighted grid
 
 from __future__ import annotations
 
+import tracemalloc
+
 import numpy as np
 import pytest
 
@@ -392,14 +394,39 @@ def test_equal_weight_quantiles_match_sorted_window(width):
 def test_conv_sum_mean_width_beyond_series(fn, ref):
     """A width far past the series length (the expanding case) reads
     only the series' own lags: the result equals the brute-force
-    window sums, at O(n) cost."""
+    window sums, and no array wider than the series is allocated."""
     rng = np.random.default_rng(11)
     x = rng.normal(5.0, 3.0, 1000)
     x[rng.random(1000) < 0.1] = np.nan
-    got = fn(x, 10**7, min_obs=1)
-    want = ref(x, 10**7, min_obs=1)
+    tracemalloc.start()
+    try:
+        got = fn(x, 10**9, min_obs=1)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak  # a few 1,000-long float64 arrays
+    want = ref(x, 10**9, min_obs=1)
     assert np.array_equal(np.isnan(got), np.isnan(want))
     np.testing.assert_allclose(got, want, rtol=1e-12)
+
+
+@pytest.mark.parametrize("fn", [K.conv_percentrank, K.conv_nunique, K.conv_mad,
+                                K.conv_trimmed_mean, K.conv_entropy])
+def test_sorted_window_kernels_width_beyond_series(fn):
+    """The strided-window kernels build windows at most the series
+    long: a width of 10^9 over 1,000 rows gives the width-n result bit
+    for bit inside a block-sized memory budget."""
+    rng = np.random.default_rng(13)
+    x = rng.integers(0, 40, 1000).astype(np.float64)
+    x[rng.random(1000) < 0.1] = np.nan
+    tracemalloc.start()
+    try:
+        got = fn(x, 10**9, min_obs=1)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 << 20, peak  # peaks at 0.3-8.5 MB
+    assert np.array_equal(got, fn(x, 1000, min_obs=1), equal_nan=True)
 
 
 def test_skew_kurt_width_beyond_series():
@@ -413,3 +440,20 @@ def test_skew_kurt_width_beyond_series():
     want = K.conv_skew_kurt(x, 1000, min_obs=4)
     assert np.array_equal(got, want, equal_nan=True)
     assert np.isnan(got[:3]).all() and np.isfinite(got[-1]).all()
+
+
+def test_skew_kurt_constant_window_is_null():
+    """A constant window has no shape: skew, kurtosis and JB are NULL
+    even where sum/n misses the repeated non-dyadic value by an ulp
+    (123456789.123 at n = 3, 6, 7, 9..15), which would leave M2 = n·d²
+    above eps and a spurious +-sqrt(n(n-1))/(n-2) skew."""
+    x = np.full(40, 123456789.123)
+    x[[5, 17]] = np.nan
+    got = K.conv_skew_kurt(x, 12, min_obs=3)
+    assert np.isnan(got).all()
+    # the constant tail after a varying head: every all-constant window
+    # is NULL, every window holding the head is finite
+    y = np.concatenate([np.arange(6.0), np.full(30, 123456789.123)])
+    got = K.conv_skew_kurt(y, 12, min_obs=4)
+    assert np.isfinite(got[5:17]).all()
+    assert np.isnan(got[17:]).all()
