@@ -529,8 +529,8 @@ def write_bench_md(timings, total, scaling, walls=None, codec=None,
             "select from one wavelet matrix per series",
             "(kernels.conv_quantiles, O(log n)/row at any width), and",
             "stream_roll carries the trailing raw window and reruns that",
-            "batch kernel per micro-batch; kernels.online_quantile is a",
-            "test oracle only.",
+            "batch kernel per micro-batch, so the engine has no online",
+            "quantile.",
             "",
             "Why N=2: a zero-memory pure-CPU calibration loop (below) shows",
             "this sandbox's 32 vCPUs deliver only ~22 effective cores — ANY",

@@ -1,23 +1,29 @@
 """Vectorized numpy kernels for the Arrow (applyInArrow) path.
 
-Two algorithm families, mirroring the reference's online/offline split
-(/root/reference/src/roll.cpp:378-394):
+The reference computes each statistic with an online and an offline
+kernel (src/roll.cpp:378-394). Streaming here (streaming/rolling.py)
+carries the trailing raw window and reruns the batch kernels over
+``[carry | micro-batch]``, so the engine runs only the offline family:
 
-- ``conv_*``  offline kernels vectorized as 1-D convolutions: the
-  rolling weighted sum with newest-last weight alignment
-  (roll_vec.h:556 reads arma_weights[n-count-1]) is exactly
-  ``np.convolve(x, reversed(weights))``. Arbitrary weights, C speed,
-  O(n*width), with every kernel cut to n taps (lags >= n never reach
-  a row), so an expanding equal-weight sum is O(n); equal-weight
-  quantiles select from a wavelet matrix in O(n log n) at any width —
-  the production path inside Arrow UDFs.
-- ``online_*`` sequential O(1)-per-row recursions (lambda-recursion /
-  West co-moment updates, roll_vec.h:447, :2190, :3677). Reference
-  oracles only: they prove online == offline equivalence the way the
-  reference's own test suite does. No production path runs them;
-  streaming (streaming/rolling.py) carries the trailing raw window and
-  reruns the batch kernels over ``[carry | micro-batch]``. The one
-  exception is ``online_ewma_time``, which is itself a vectorized scan.
+- ``conv_*``  offline kernels. Each window quantity is computed one
+  way, by one of three shared engines, none of which allocates past
+  the series length (lags >= n never reach a row, so an expanding
+  window may be written as any width >= n):
+  ``WindowSums``, the masked weighted window sums as 1-D convolutions
+  (the rolling weighted sum with newest-last weight alignment,
+  roll_vec.h:556, is exactly ``np.convolve(x, reversed(weights))``;
+  an expanding equal-weight sum is O(n)); ``_matrix_window_moments``,
+  the exact two-pass centred (co)moments of every column pair under
+  one joint mask; and ``_windows``, the blocked trailing windows every
+  strided kernel (weighted quantiles, MAD, ranks, skew/kurt, ...)
+  reduces. Equal-weight quantiles select from a wavelet matrix in
+  O(n log n) at any width.
+- ``online_mean`` and ``online_ewma_time``, the two sequential carries
+  left. ``online_ewma_time`` is ewma's stream carry (itself a
+  vectorized scan). ``online_mean``, the reference's lambda recursion
+  (roll_vec.h:814), runs in no engine path; it stays as the kernel the
+  stream-ingest benchmark times and as the tests' online == offline
+  check.
 - ``window_*`` stateless strided-window reduces (min/max, direct
   product, idxmin/idxmax) used by the streaming path.
 
@@ -28,18 +34,13 @@ the reference emit rules exactly.
 
 from __future__ import annotations
 
+import math
 import warnings
 
 import numpy as np
 
 EPS = float(np.finfo(np.float64).eps)
 SQRT_EPS = float(np.sqrt(EPS))
-
-
-def _prep(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    x = np.asarray(x, dtype=np.float64)
-    ok = ~np.isnan(x)
-    return np.where(ok, x, 0.0), ok.astype(np.float64)
 
 
 def _kernel(weights: np.ndarray | None, width: int) -> np.ndarray:
@@ -75,35 +76,55 @@ def _restore(out: np.ndarray, x: np.ndarray, na_restore: bool) -> np.ndarray:
 
 
 class WindowSums:
-    """All weighted rolling sums an operator needs, in one pass of
-    convolutions over (value, mask) — shared by every conv kernel."""
+    """Masked weighted trailing-window sums as convolutions — the one
+    masked-sum engine of every conv kernel. ``x`` is a series, or an
+    (n, k) matrix whose rows count only where every column is observed
+    (a column-stacked pair gets its joint mask). The taps are built at
+    most n long: an expanding window may be written as any width >= n,
+    and must not allocate that width. Each sum is convolved on call."""
 
     def __init__(self, x, width, weights=None):
         self.x = np.asarray(x, dtype=np.float64)
-        self.width = width
-        xv, ok = _prep(self.x)
-        # the taps are built at most n long: an expanding window may be
-        # written as any width >= n, and must not allocate that width
+        ok = ~np.isnan(self.x)
+        self.ok = ok if ok.ndim == 1 else ok.all(axis=1)
+        self.okf = self.ok.astype(np.float64)
         taps = min(width, len(self.x))
-        h = _kernel(weights, taps)
-        self.n_obs = np.rint(_rollconv(ok, np.ones(taps))).astype(np.int64)
-        self.sum_w = _rollconv(ok, h)
-        self.sum_wx = _rollconv(xv, h)
-        self._h = h
-        self._xv = xv
-        self._ok = ok
+        self.h = _kernel(weights, taps)
+        self.ones = np.ones(taps)
+        cols = self.x[:, None] if self.x.ndim == 1 else self.x
+        # masked columns, each contiguous for np.convolve
+        self._cols = np.ascontiguousarray(np.where(self.ok[:, None], cols, 0.0).T)
+
+    def conv(self, v, h=None):
+        """Window sum of ``v`` under the weights, or the taps ``h``."""
+        return _rollconv(v, self.h if h is None else h)
+
+    def count(self, mask):
+        """How many slots of each window ``mask`` holds."""
+        mask = mask.astype(np.float64, copy=False)
+        return np.rint(self.conv(mask, self.ones)).astype(np.int64)
+
+    def n_obs(self):
+        return self.count(self.okf)
+
+    def sum_w(self):
+        return self.conv(self.okf)
 
     def sumsq_w(self):
-        return _rollconv(self._ok, self._h * self._h)
+        return self.conv(self.okf, self.h * self.h)
 
-    def sum_wx2(self):
-        return _rollconv(self._xv * self._xv, self._h)
+    def sum_wx(self):
+        return self.conv(self._cols[0])
+
+    def cross(self, j=0, l=0):
+        """Weighted window sum of column j times column l."""
+        return self.conv(self._cols[j] * self._cols[l])
 
 
 def conv_sum(x, width, weights=None, min_obs=None, na_restore=False):
     min_obs = width if min_obs is None else min_obs
     s = WindowSums(x, width, weights)
-    out = np.where(s.n_obs >= min_obs, s.sum_wx, np.nan)
+    out = np.where(s.n_obs() >= min_obs, s.sum_wx(), np.nan)
     return _restore(out, s.x, na_restore)
 
 
@@ -111,10 +132,8 @@ def conv_mean(x, width, weights=None, min_obs=None, na_restore=False):
     min_obs = width if min_obs is None else min_obs
     s = WindowSums(x, width, weights)
     with np.errstate(invalid="ignore", divide="ignore"):
-        out = np.where(s.n_obs >= min_obs, s.sum_wx / s.sum_w, np.nan)
+        out = np.where(s.n_obs() >= min_obs, s.sum_wx() / s.sum_w(), np.nan)
     return _restore(out, s.x, na_restore)
-
-
 
 
 def _win_block(width: int) -> int:
@@ -123,6 +142,28 @@ def _win_block(width: int) -> int:
     workers don't contend for DRAM bandwidth (measured: series-sized
     blocks were ~45% slower per group and capped multi-core scaling)."""
     return min(max(131072 // max(width, 1), 128), 8192)
+
+
+def _windows(x, width):
+    """Every trailing window of ``x`` (n values, or n rows of k), in row
+    blocks: yields ``(b0, b1, wins)`` with ``wins[i]`` the window ending
+    at row ``b0 + i``, oldest slot first along its last axis, so
+    ``wins`` is (m, w) or (m, k, w). A window holds ``w = min(width, n)``
+    slots — lags >= n never reach a row — and the head is NaN-padded
+    (pads count as unobserved). Rows run in _win_block(w) blocks shared
+    by the k columns; each column's slots are contiguous. Per-row
+    outputs are independent, so blocking is exact."""
+    x = np.asarray(x, dtype=np.float64)
+    n = len(x)
+    w = max(1, min(width, n))
+    xp = np.full((n + w - 1, *x.shape[1:]), np.nan, order="F")
+    xp[w - 1 :] = x
+    block = max(_win_block(w) // math.prod(x.shape[1:]), 64)
+    for b0 in range(0, n, block):
+        b1 = min(n, b0 + block)
+        yield b0, b1, np.lib.stride_tricks.sliding_window_view(
+            xp[b0 : b1 + w - 1], w, axis=0
+        )
 
 
 def _pin_constant(mu, wins, ok):
@@ -136,136 +177,70 @@ def _pin_constant(mu, wins, ok):
     return np.where(lo == hi, lo, mu)
 
 
-def _pair_window_moments(x, y, width, weights):
-    """Exact two-pass weighted (co)moments over every trailing window.
-
-    Yields per row: n_obs, sum_w, sumsq_w, ssx, ssy, ssxy, mux, muy where
-    ss* = sum(w (a - mu_a)(b - mu_b)) with mu the window's own weighted
-    mean — computed directly per window (strided view, row-blocked), so
-    there is NO uncentered-moment cancellation: constant windows give
-    exactly 0, any data scale gives ~eps relative error. This is the
-    float64 equivalent of the reference's long-double accumulators
-    (roll_vec.h:410-415); the one-pass recursions remain in online_*.
-    Pass y=None for single-series moments (ssy/ssxy/muy then alias x's).
-    """
-    x = np.asarray(x, dtype=np.float64)
-    two = y is not None
-    if two:
-        y = np.asarray(y, dtype=np.float64)
-        ok = ~np.isnan(x) & ~np.isnan(y)
-    else:
-        ok = ~np.isnan(x)
-    n = len(x)
-    wts = _kernel(weights, width)[::-1]  # oldest-first slot weights
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, np.where(ok, x, np.nan)])
-    yp = np.concatenate([pad, np.where(ok, y, np.nan)]) if two else None
-    n_obs = np.empty(n, dtype=np.int64)
-    sum_w = np.empty(n)
-    sumsq_w = np.empty(n)
-    ssx = np.empty(n)
-    ssy = np.empty(n)
-    ssxy = np.empty(n)
-    mux_a = np.empty(n)
-    muy_a = np.empty(n)
-    block = _win_block(width)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wx = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
-        okm = ~np.isnan(wx)
-        sw = np.where(okm, wts, 0.0)
-        swsum = sw.sum(axis=1)
-        n_obs[b0:b1] = okm.sum(axis=1)
-        sum_w[b0:b1] = swsum
-        sumsq_w[b0:b1] = (sw * sw).sum(axis=1)
-        xv = np.where(okm, wx, 0.0)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            mux = (sw * xv).sum(axis=1) / swsum
-        mux = _pin_constant(mux, wx, okm)
-        mux_a[b0:b1] = mux
-        dx = np.where(okm, wx - mux[:, None], 0.0)
-        ssx[b0:b1] = (sw * dx * dx).sum(axis=1)
-        if two:
-            wy = np.lib.stride_tricks.sliding_window_view(
-                yp[b0 : b1 + width - 1], width
-            )
-            yv = np.where(okm, wy, 0.0)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                muy = (sw * yv).sum(axis=1) / swsum
-            muy = _pin_constant(muy, wy, okm)
-            muy_a[b0:b1] = muy
-            dy = np.where(okm, wy - muy[:, None], 0.0)
-            ssy[b0:b1] = (sw * dy * dy).sum(axis=1)
-            ssxy[b0:b1] = (sw * dx * dy).sum(axis=1)
-    if not two:
-        ssy = ssx
-        ssxy = ssx
-        muy_a = mux_a
-    return n_obs, sum_w, sumsq_w, ssx, ssy, ssxy, mux_a, muy_a
-
-
 def _matrix_window_moments(M, width, weights):
-    """Exact two-pass weighted co-moments for ALL column pairs of a
-    masked matrix in ONE blocked sweep.
+    """Exact two-pass weighted co-moments of ALL column pairs of ``M``
+    (n, k) over every trailing window — the one centred co-moment
+    engine (a series is k = 1, a pair k = 2).
 
-    ``M`` is (n, k) float64 with complete-obs masking already applied:
-    a row excluded from the windows is NaN in EVERY column, so all
-    columns share one observation mask (the reference's any_na row mask,
-    src/roll.cpp:125-155). Returns (n_obs, sum_w, sumsq_w, mu, SS) with
+    A row with ANY missing column is excluded from every window (the
+    reference's any_na row mask, src/roll.cpp:125-155), so all columns
+    share one observation mask; a column-stacked pair gets its
+    pairwise-complete mask. Returns (n_obs, sum_w, sumsq_w, mu, SS) with
     mu (n, k) per-window weighted means (constant-window pinned, see
-    _pin_constant) and SS (n, k, k) centered co-moment sums
+    _pin_constant) and SS (n, k, k) centred co-moment sums
     sum(w (a - mu_a)(b - mu_b)).
 
-    This replaces k(k+1)/2 + k independent _pair_window_moments passes
-    (each rebuilding the strided windows + mask from scratch) with one
-    mask/weight materialization per block and a single einsum for the
-    k x k co-moment block — the O(k^2) redundancy the round-1 plan audit
-    flagged in conv_lm_k / conv_cov_matrix.
+    The deviations are taken from each window's own mean, so there is
+    NO uncentred-moment cancellation: constant windows give exactly 0,
+    any data scale ~eps relative error — the float64 equivalent of the
+    reference's long-double accumulators (roll_vec.h:410-415). The mask
+    and weights are built once per block; each pair l <= j is one
+    reduction of weight x deviation x deviation, mirrored to (l, j) —
+    the reference's own work-halving (roll_mat.h:4745).
     """
     M = np.asarray(M, dtype=np.float64)
     n, k = M.shape
-    ok_rows = ~np.isnan(M).any(axis=1)
-    pad = np.full(width - 1, np.nan)
-    Mp = np.concatenate([np.tile(pad[:, None], (1, k)),
-                         np.where(ok_rows[:, None], M, np.nan)], axis=0)
+    M = np.where(np.isnan(M).any(axis=1)[:, None], np.nan, M)
+    wts = _kernel(weights, min(width, n))[::-1]  # oldest-first slot weights
     n_obs = np.empty(n, dtype=np.int64)
     sum_w = np.empty(n)
     sumsq_w = np.empty(n)
     mu = np.empty((n, k))
     SS = np.empty((n, k, k))
-    wts = _kernel(weights, width)[::-1]  # oldest-first slot weights
-    block = max(_win_block(width) // max(k, 1), 64)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        m = b1 - b0
-        w0 = np.lib.stride_tricks.sliding_window_view(
-            Mp[b0 : b1 + width - 1, 0], width
-        )
-        okm = ~np.isnan(w0)
+    for b0, b1, wins in _windows(M, width):
+        okm = ~np.isnan(wins[:, 0])
         sw = np.where(okm, wts, 0.0)
         swsum = sw.sum(axis=1)
         n_obs[b0:b1] = okm.sum(axis=1)
         sum_w[b0:b1] = swsum
         sumsq_w[b0:b1] = (sw * sw).sum(axis=1)
-        dx = np.empty((k, m, width))
+        dx = []
         for j in range(k):
-            wx = w0 if j == 0 else np.lib.stride_tricks.sliding_window_view(
-                Mp[b0 : b1 + width - 1, j], width
-            )
-            xv = np.where(okm, wx, 0.0)
+            wx = wins[:, j]
             with np.errstate(invalid="ignore", divide="ignore"):
-                muj = (sw * xv).sum(axis=1) / swsum
+                muj = (sw * np.where(okm, wx, 0.0)).sum(axis=1) / swsum
             muj = _pin_constant(muj, wx, okm)
             mu[b0:b1, j] = muj
-            dx[j] = np.where(okm, wx - muj[:, None], 0.0)
-        wdx = dx * sw[None]
-        SS[b0:b1] = np.einsum("jbw,lbw->bjl", wdx, dx)
-    # exact symmetry (einsum computes both triangles; FP order can differ
-    # at ~eps between (j,l) and (l,j) — mirror the lower triangle, the
-    # reference's own work-halving convention, roll_mat.h:4745)
-    il, jl = np.tril_indices(k)
-    SS[:, jl, il] = SS[:, il, jl]
+            dx.append(np.where(okm, wx - muj[:, None], 0.0))
+            for l in range(j + 1):
+                SS[b0:b1, j, l] = SS[b0:b1, l, j] = (sw * dx[l] * dx[j]).sum(axis=1)
     return n_obs, sum_w, sumsq_w, mu, SS
+
+
+def _comoments(M, width, weights, center):
+    """(n_obs, sum_w, sumsq_w, mu, SS) of the columns of ``M`` under
+    their joint mask: SS[:, j, l] is the exact centred co-moment sum
+    (center=True, _matrix_window_moments) or the raw weighted cross sum
+    sum(w a b) (center=False, WindowSums; mu is then None)."""
+    if center:
+        return _matrix_window_moments(M, width, weights)
+    s = WindowSums(M, width, weights)
+    k = M.shape[1]
+    SS = np.empty((len(M), k, k))
+    for j in range(k):
+        for l in range(j + 1):
+            SS[:, j, l] = SS[:, l, j] = s.cross(j, l)
+    return s.n_obs(), s.sum_w(), s.sumsq_w(), None, SS
 
 
 def conv_var(x, width, weights=None, min_obs=None, na_restore=False, center=True):
@@ -276,18 +251,11 @@ def conv_var(x, width, weights=None, min_obs=None, na_restore=False, center=True
     the reference is unreachable here by construction."""
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    if center:
-        n_obs, sum_w, sumsq_w, ss, _, _, _, _ = _pair_window_moments(x, None, width, weights)
-    else:
-        s = WindowSums(x, width, weights)
-        n_obs, sum_w, sumsq_w, ss = s.n_obs, s.sum_w, s.sumsq_w(), s.sum_wx2()
-    with np.errstate(invalid="ignore", divide="ignore"):
-        v = ss / (sum_w - sumsq_w / sum_w)
-        out = np.where((n_obs > 1) & (n_obs >= min_obs), v, np.nan)
-        out = np.where(
-            out > EPS, out,
-            np.where(out > -EPS, np.where(np.isnan(out), np.nan, 0.0), np.nan),
-        )
+    out = _pairwise_cell(x, None, width, weights, min_obs, center, False)
+    out = np.where(
+        out > EPS, out,
+        np.where(out > -EPS, np.where(np.isnan(out), np.nan, 0.0), np.nan),
+    )
     return _restore(out, x, na_restore)
 
 
@@ -314,17 +282,17 @@ def conv_scale(x, width, weights=None, min_obs=None, na_restore=False,
     if center and scale:
         # exact two-pass window moments (no cancellation). Their mean is
         # window-local, so a stream carrying the trailing window
-        # reproduces every output bit for bit.
-        n_obs, sum_w, sumsq_w, ss, _, _, mean, _ = _pair_window_moments(
-            x, None, width, weights
-        )
+        # reproduces every output bit for bit (once the series is at
+        # least the width long, so batch windows are width long too).
+        n_obs, sum_w, sumsq_w, mu, SS = _matrix_window_moments(x[:, None], width, weights)
+        mean, ss = mu[:, 0], SS[:, 0, 0]
     else:
         s = WindowSums(x, width, weights)
-        n_obs, sum_w = s.n_obs, s.sum_w
+        n_obs, sum_w = s.n_obs(), s.sum_w()
         with np.errstate(invalid="ignore", divide="ignore"):
-            mean = s.sum_wx / s.sum_w
+            mean = s.sum_wx() / sum_w
         if scale:
-            sumsq_w, ss = s.sumsq_w(), s.sum_wx2()
+            sumsq_w, ss = s.sumsq_w(), s.cross()
     with np.errstate(invalid="ignore", divide="ignore"):
         centered = x_last - mean if center else x_last
         if scale:
@@ -342,20 +310,7 @@ def conv_cov(x, y, width, weights=None, min_obs=None, na_restore=False, center=T
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    if center:
-        n_obs, sum_w, sumsq_w, _, _, ss, _, _ = _pair_window_moments(x, y, width, weights)
-    else:
-        both = ~np.isnan(x) & ~np.isnan(y)
-        okf = both.astype(np.float64)
-        h = _kernel(weights, width)
-        n_obs = np.rint(_rollconv(okf, np.ones(width))).astype(np.int64)
-        sum_w = _rollconv(okf, h)
-        sumsq_w = _rollconv(okf, h * h)
-        ss = _rollconv(np.where(both, x * y, 0.0), h)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        out = np.where(
-            (n_obs > 1) & (n_obs >= min_obs), ss / (sum_w - sumsq_w / sum_w), np.nan
-        )
+    out = _pairwise_cell(x, y, width, weights, min_obs, center, False)
     if na_restore:
         out = np.where(np.isnan(x) | np.isnan(y), np.nan, out)
     return out
@@ -369,7 +324,8 @@ def conv_cor(x, y, width, weights=None, min_obs=None, na_restore=False):
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    n_obs, sum_w, _, ssx, ssy, ssxy, _, _ = _pair_window_moments(x, y, width, weights)
+    n_obs, _, _, _, SS = _matrix_window_moments(np.column_stack([x, y]), width, weights)
+    ssx, ssy, ssxy = SS[:, 0, 0], SS[:, 1, 1], SS[:, 0, 1]
     with np.errstate(invalid="ignore", divide="ignore"):
         out = np.where(
             (n_obs > 1) & (n_obs >= min_obs) & (ssx > EPS) & (ssy > EPS),
@@ -385,12 +341,8 @@ def conv_crossprod(x, y, width, weights=None, min_obs=None, na_restore=False):
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    both = ~np.isnan(x) & ~np.isnan(y)
-    okf = both.astype(np.float64)
-    h = _kernel(weights, width)
-    n_obs = np.rint(_rollconv(okf, np.ones(width))).astype(np.int64)
-    sxy = _rollconv(np.where(both, x * y, 0.0), h)
-    out = np.where(n_obs >= min_obs, sxy, np.nan)
+    s = WindowSums(np.column_stack([x, y]), width, weights)
+    out = np.where(s.n_obs() >= min_obs, s.cross(0, 1), np.nan)
     if na_restore:
         out = np.where(np.isnan(x) | np.isnan(y), np.nan, out)
     return out
@@ -399,29 +351,27 @@ def conv_crossprod(x, y, width, weights=None, min_obs=None, na_restore=False):
 def conv_prod(x, width, weights=None, min_obs=None, na_restore=False):
     """prod(w)*prod(x) with zero tracking, via log-space convolution."""
     min_obs = width if min_obs is None else min_obs
-    x = np.asarray(x, dtype=np.float64)
-    ok = ~np.isnan(x)
-    okf = ok.astype(np.float64)
-    h = _kernel(weights, width)
-    n_obs = np.rint(_rollconv(okf, np.ones(width))).astype(np.int64)
-    nz = np.rint(_rollconv((ok & (x == 0)).astype(np.float64), np.ones(width))).astype(np.int64)
-    nneg = np.rint(_rollconv((ok & (x < 0)).astype(np.float64), np.ones(width))).astype(np.int64)
+    s = WindowSums(x, width, weights)
+    x, ok = s.x, s.ok
+    nz = s.count(ok & (x == 0))
+    nneg = s.count(ok & (x < 0))
     with np.errstate(divide="ignore", invalid="ignore"):
         logs = np.where(ok & (x != 0), np.log(np.abs(np.where(ok & (x != 0), x, 1.0))), 0.0)
     # log of weights contributes per observed slot: convolve mask with log(h)
     with np.errstate(divide="ignore"):
-        log_h = np.log(h)
-    sum_logx = _rollconv(logs, np.ones(width))
-    sum_logw = _rollconv(okf, log_h)
+        log_h = np.log(s.h)
+    sum_logx = s.conv(logs, s.ones)
+    sum_logw = s.conv(s.okf, log_h)
     sign = np.where(nneg % 2 == 1, -1.0, 1.0)
     prod = np.where(nz > 0, 0.0, sign * np.exp(sum_logx + sum_logw))
-    out = np.where(n_obs >= min_obs, prod, np.nan)
+    out = np.where(s.n_obs() >= min_obs, prod, np.nan)
     return _restore(out, x, na_restore)
 
 
-def _quantile_block_multi(xp, b0, b1, width, pps, wts_full, min_obs):
-    """HF2 scan for output rows [b0, b1) at every upper mass pp in
-    ``pps``: sort each width-window, walk the sorted slot weights from
+def _quantile_block_multi(wins, pps, wts, min_obs):
+    """HF2 scan for a block of windows ``wins`` (m, w) with oldest-first
+    slot weights ``wts``, at every upper mass pp in ``pps``: sort each
+    window, walk the sorted slot weights from
     the top until mass >= 1-p (roll_vec.h:1994-2091). The shared state
     — sliding windows, argsort, sorted values/weights, cumulative mass
     — is computed ONCE; each pp costs only the comparison + selection
@@ -440,15 +390,14 @@ def _quantile_block_multi(xp, b0, b1, width, pps, wts_full, min_obs):
     quotient rounding flips the selected order statistic whenever
     fl(pp*total) straddles an attainable mass — dozens of (p, n) combos
     under equal weights alone)."""
-    m = b1 - b0
-    wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
+    m, width = wins.shape
     # unstable introsort matches the reference's std::sort (stl_sort_index
     # is introsort); ties carry equal values so selection is unaffected
     order = np.argsort(wins, axis=1)
     sv = np.take_along_axis(wins, order, axis=1)
     nan_mask = np.isnan(sv)
     n_obs = width - nan_mask.sum(axis=1)
-    sw = np.where(nan_mask, 0.0, wts_full[order])
+    sw = np.where(nan_mask, 0.0, wts[order])
     csl = np.cumsum(sw, axis=1)
     total = csl[:, -1]
     cum_top = (total[:, None] - csl) + sw
@@ -582,7 +531,7 @@ def conv_quantiles(x, width, ps, weights=None, min_obs=None, na_restore=False):
     path sorts every strided width-window and scans the slot weights
     from the top (_quantile_block_multi). Its sort is shared across
     probabilities (O(w log w + k·w) per row for k probabilities), and
-    rows run in _win_block(width) blocks because the scan materializes
+    rows run in _windows blocks because the scan materializes
     several (rows x width) float64 intermediates — a 10^6-row series at
     width 10^3 would otherwise allocate ~50 GB in one shot. Per-row
     outputs are independent, so blocking is exact.
@@ -596,14 +545,9 @@ def conv_quantiles(x, width, ps, weights=None, min_obs=None, na_restore=False):
     pps = [1.0 - p for p in ps]
     if weights is None:
         return _restore_cols(_quantiles_equal(x, width, pps, min_obs), x, na_restore)
-    wts_full = _kernel(weights, width)[::-1]  # oldest-first slot weights
-    # pad front so every row has a width-window; pads are NaN (excluded)
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, x])
-    block = _win_block(width)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        out[b0:b1] = _quantile_block_multi(xp, b0, b1, width, pps, wts_full, min_obs)
+    wts = _kernel(weights, min(width, n))[::-1]  # oldest-first slot weights
+    for b0, b1, wins in _windows(x, width):
+        out[b0:b1] = _quantile_block_multi(wins, pps, wts, min_obs)
     return _restore_cols(out, x, na_restore)
 
 
@@ -630,39 +574,17 @@ def conv_lm_k(X, y, width, weights=None, min_obs=None, intercept=True):
     n, k = X.shape
     min_obs = width if min_obs is None else min_obs
     df_fit = k + 1 if intercept else k
-    ok = ~np.isnan(X).any(axis=1) & ~np.isnan(y)
-    okf = ok.astype(np.float64)
     # RAW centered crossprod moments (src/roll.cpp:2069-2087): the lm
     # normal equations use sum(w (x-mx)(x-mx)) undivided — that's what
-    # makes se equal stats::lm's. Centered moments come from the exact
-    # per-window two-pass (_pair_window_moments) under the complete_obs
+    # makes se equal stats::lm's. With an intercept they are the exact
+    # per-window two-pass co-moments of (X | y) under the complete_obs
     # row mask, so a constant regressor gives A_jj EXACTLY 0 and hits the
-    # singular-system NA path just like arma::solve(no_approx).
-    if intercept:
-        # one fused blocked sweep over the (X | y) matrix replaces the
-        # k(k+1)/2 + k + 1 independent pair passes (mask + strided views
-        # rebuilt once per block, not once per pair)
-        M = np.where(ok[:, None], np.column_stack([X, y]), np.nan)
-        n_obs, sum_w, _, mu, SS = _matrix_window_moments(M, width, weights)
-        A = SS[:, :k, :k]
-        b = SS[:, :k, k]
-        var_y = SS[:, k, k]
-        mx = mu[:, :k]
-        my = mu[:, k]
-    else:
-        Xv = np.where(ok[:, None], X, 0.0)
-        yv = np.where(ok, y, 0.0)
-        h = _kernel(weights, width)
-        n_obs = np.rint(_rollconv(okf, np.ones(width))).astype(np.int64)
-        sum_w = _rollconv(okf, h)
-        A = np.zeros((n, k, k))
-        for j in range(k):
-            for l in range(j, k):
-                c = _rollconv(Xv[:, j] * Xv[:, l], h)
-                A[:, j, l] = c
-                A[:, l, j] = c
-        b = np.stack([_rollconv(Xv[:, j] * yv, h) for j in range(k)], axis=1)
-        var_y = _rollconv(yv * yv, h)
+    # singular-system NA path just like arma::solve(no_approx); without
+    # one, the uncentred cross sums.
+    n_obs, sum_w, _, mu, SS = _comoments(np.column_stack([X, y]), width, weights, intercept)
+    A = SS[:, :k, :k]
+    b = SS[:, :k, k]
+    var_y = SS[:, k, k]
 
     res = {
         "coef": np.full((n, k), np.nan),
@@ -698,31 +620,141 @@ def conv_lm_k(X, y, width, weights=None, min_obs=None, intercept=True):
         diagAinv = np.einsum("ijj->ij", Ainv)
         res["se"][idx] = np.sqrt(var_resid[:, None] * diagAinv)
         if intercept:
-            mxv = mx[idx]
-            res["intercept"][idx] = my[idx] - np.einsum("ij,ij->i", mxv, coef)
+            mxv = mu[idx, :k]
+            res["intercept"][idx] = mu[idx, k] - np.einsum("ij,ij->i", mxv, coef)
             quad = np.einsum("ij,ijk,ik->i", mxv, Ainv, mxv)
             res["se_intercept"][idx] = np.sqrt(var_resid * (1 / sum_w[idx] + quad))
     # rows that were valid but singular keep NaN coef; blank their r2 too
     bad = idx[~solvable]
     for key in res:
-        if res[key].ndim == 1:
-            res[key][bad] = np.nan
-        else:
-            res[key][bad] = np.nan
+        res[key][bad] = np.nan
     return res
 
 
-# ---------------------------------------------------------------------------
-# online recursions (sequential, O(1)/row) — the reference's online family
-# ---------------------------------------------------------------------------
+def conv_cov_matrix(
+    X, width, weights=None, min_obs=None, center=True, scale=False,
+    complete_obs=True,
+):
+    """Rolling k x k covariance (or correlation) matrix per row — the
+    reference's cube output for matrix input (cube allocation
+    src/roll.cpp:1366; symmetric kernels roll_mat.h:3314-3659).
 
+    complete_obs=TRUE semantics (the reference default for cov/cor,
+    R/roll.R:712): a row with ANY missing column is excluded from every
+    pair's window. Computes the lower triangle only and mirrors — the
+    reference's own work-halving (src/roll.cpp:1425, roll_mat.h:4745).
+
+    complete_obs=FALSE (same R toggle; per-pair masks built at
+    src/roll.cpp:103-155): each (j, l) pair is computed over its OWN
+    pairwise-complete windows — a row missing column m still counts for
+    every pair not involving m, so n_obs, the weight sums, and the
+    means all differ per pair.
+
+    Returns (n, k, k) float64 with NaN where gated; scale=True emits the
+    correlation matrix with the reference's raw-sumsq eps gates and
+    as-computed diagonal (roll_vec.h:3762-3773).
+    """
+    X = np.asarray(X, dtype=np.float64)
+    min_obs = width if min_obs is None else min_obs
+    if not complete_obs:
+        return _conv_cov_matrix_pairwise(X, width, weights, min_obs, center, scale)
+    # all pairs in one sweep under the complete_obs row mask; centred
+    # sums are exact two-pass, so constant columns give exactly 0 on the
+    # diagonal and the scale=True eps gate is the reference's plain
+    # absolute eps
+    n_obs, sum_w, sumsq_w, _, ss = _comoments(X, width, weights, center)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        denom = (sum_w - sumsq_w / sum_w)[:, None, None]
+        gate = (n_obs > 1) & (n_obs >= min_obs)
+        if scale:  # correlation matrix
+            d = np.sqrt(np.einsum("ijj->ij", ss))
+            out = ss / (d[:, :, None] * d[:, None, :])
+            # eps gate on the raw centered sums of squares (roll_vec.h:4112)
+            bad = np.einsum("ijj->ij", ss) <= EPS
+            out[bad[:, :, None] | bad[:, None, :]] = np.nan
+        else:
+            out = ss / denom
+    out[~gate] = np.nan
+    return out
+
+
+def _conv_cov_matrix_pairwise(X, width, weights, min_obs, center, scale):
+    """complete_obs=FALSE cube: per-pair pairwise-complete windows.
+
+    Runs the pair kernel (_pairwise_cell) once per lower-triangle pair — the same per-pair masking the reference builds
+    at src/roll.cpp:103-155. Each call is fully vectorized over rows,
+    so cost is k(k+1)/2 blocked sweeps (the price of per-pair masks;
+    the fused single sweep only exists because complete_obs=TRUE lets
+    every pair share one observation mask).
+    """
+    n, k = X.shape
+    out = np.empty((n, k, k))
+    for j in range(k):
+        for l in range(j, k):
+            c = _pairwise_cell(
+                X[:, j], X[:, l] if l != j else None, width, weights,
+                min_obs, center, scale,
+            )
+            out[:, j, l] = c
+            out[:, l, j] = c
+    return out
+
+
+def _pairwise_cell(xj, xl, width, weights, min_obs, center, scale):
+    """One pairwise-complete (co)variance series; xl=None -> variance."""
+    M = xj[:, None] if xl is None else np.column_stack([xj, xl])
+    n_o, s_w, sq_w, _, SS = _comoments(M, width, weights, center)
+    ssx, ssy, ssxy = SS[:, 0, 0], SS[:, -1, -1], SS[:, -1, 0]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        if scale:
+            c = ssxy / np.sqrt(ssx * ssy)
+            c = np.where((ssx <= EPS) | (ssy <= EPS), np.nan, c)
+        else:
+            c = ssxy / (s_w - sq_w / s_w)
+    return np.where((n_o > 1) & (n_o >= min_obs), c, np.nan)
+
+
+def conv_cov_xy_matrix(
+    X, Y, width, weights=None, min_obs=None, center=True, complete_obs=True
+):
+    """Rolling k_x x k_y CROSS-covariance cube for an (x, y) matrix pair —
+    the reference's non-symmetric cube when roll_cov is called with both
+    x and y matrices (allocation src/roll.cpp:1661-1679, kernel
+    roll_mat.h:3659).
+
+    complete_obs=TRUE semantics across BOTH matrices: a row with any
+    missing column in X or Y is excluded from every pair's window
+    (reference any_na over the joined matrix, src/roll.cpp:1625-1659).
+    complete_obs=FALSE: each (j, l) cross pair over its own
+    pairwise-complete windows (per-pair masks, src/roll.cpp:103-155).
+    Returns (n, k_x, k_y) float64 with NaN where gated.
+    """
+    X = np.asarray(X, dtype=np.float64)
+    Y = np.asarray(Y, dtype=np.float64)
+    n, kx = X.shape
+    if complete_obs:  # the (X, Y) block of the symmetric cube over [X | Y]
+        return conv_cov_matrix(np.column_stack([X, Y]), width, weights,
+                               min_obs, center)[:, :kx, kx:]
+    min_obs = width if min_obs is None else min_obs
+    out = np.empty((n, kx, Y.shape[1]))
+    for j in range(kx):
+        for l in range(Y.shape[1]):
+            out[:, j, l] = _pairwise_cell(
+                X[:, j], Y[:, l], width, weights, min_obs, center, False
+            )
+    return out
+
+
+# ---------------------------------------------------------------------------
+# online recursion (sequential, O(1)/row) — the reference's online mean
+# ---------------------------------------------------------------------------
 
 
 def _check_carry_width(hist, width, kernel: str) -> None:
     """A restored carry longer than the window means the stream resumed
     with a SMALLER width than the checkpointed one. Unlike stream_roll
     (whose raw-value carry lets it truncate and recover), the running
-    sums / multisets these kernels carry are tied to the old width —
+    sums online_mean carries are tied to the old width —
     silently continuing would produce wrong values, so fail loudly."""
     if len(hist) > width:
         raise ValueError(
@@ -743,7 +775,7 @@ def online_mean(x, width, weights=None, min_obs=None, na_restore=False,
     """
     x = np.asarray(x, dtype=np.float64)
     min_obs = width if min_obs is None else min_obs
-    w = np.ones(width) if weights is None else np.asarray(weights, dtype=np.float64)[-width:]
+    w = _kernel(weights, width)[::-1]  # oldest-first slot weights
     lam = 1.0 if width == 1 or len(w) < 2 else w[-2] / w[-1]
     n = len(x)
     out = np.full(n, np.nan)
@@ -779,372 +811,6 @@ def online_mean(x, width, weights=None, min_obs=None, na_restore=False,
     return out, final_state
 
 
-def conv_cov_matrix(
-    X, width, weights=None, min_obs=None, center=True, scale=False,
-    complete_obs=True,
-):
-    """Rolling k x k covariance (or correlation) matrix per row — the
-    reference's cube output for matrix input (cube allocation
-    src/roll.cpp:1366; symmetric kernels roll_mat.h:3314-3659).
-
-    complete_obs=TRUE semantics (the reference default for cov/cor,
-    R/roll.R:712): a row with ANY missing column is excluded from every
-    pair's window. Computes the lower triangle only and mirrors — the
-    reference's own work-halving (src/roll.cpp:1425, roll_mat.h:4745).
-
-    complete_obs=FALSE (same R toggle; per-pair masks built at
-    src/roll.cpp:103-155): each (j, l) pair is computed over its OWN
-    pairwise-complete windows — a row missing column m still counts for
-    every pair not involving m, so n_obs, the weight sums, and the
-    means all differ per pair.
-
-    Returns (n, k, k) float64 with NaN where gated; scale=True emits the
-    correlation matrix with the reference's raw-sumsq eps gates and
-    as-computed diagonal (roll_vec.h:3762-3773).
-    """
-    X = np.asarray(X, dtype=np.float64)
-    n, k = X.shape
-    min_obs = width if min_obs is None else min_obs
-    if not complete_obs:
-        return _conv_cov_matrix_pairwise(X, width, weights, min_obs, center, scale)
-    ok = ~np.isnan(X).any(axis=1)
-    okf = ok.astype(np.float64)
-    if center:
-        # exact per-window two-pass centered (co)moments under the
-        # complete_obs row mask, all pairs in one fused blocked sweep
-        # (see _matrix_window_moments): constant columns give exactly 0
-        # on the diagonal, so the scale=True eps gate is the reference's
-        # plain absolute eps
-        Xm = np.where(ok[:, None], X, np.nan)
-        n_obs, sum_w, sumsq_w, _, ss = _matrix_window_moments(Xm, width, weights)
-    else:
-        Xv = np.where(ok[:, None], X, 0.0)
-        h = _kernel(weights, width)
-        n_obs = np.rint(_rollconv(okf, np.ones(width))).astype(np.int64)
-        sum_w = _rollconv(okf, h)
-        sumsq_w = _rollconv(okf, h * h)
-        ss = np.empty((n, k, k))
-        for j in range(k):
-            for l in range(j, k):
-                c = _rollconv(Xv[:, j] * Xv[:, l], h)
-                ss[:, j, l] = c
-                ss[:, l, j] = c
-    with np.errstate(invalid="ignore", divide="ignore"):
-        denom = (sum_w - sumsq_w / sum_w)[:, None, None]
-        gate = (n_obs > 1) & (n_obs >= min_obs)
-        if scale:  # correlation matrix
-            d = np.sqrt(np.einsum("ijj->ij", ss))
-            out = ss / (d[:, :, None] * d[:, None, :])
-            # eps gate on the raw centered sums of squares (roll_vec.h:4112)
-            bad = np.einsum("ijj->ij", ss) <= EPS
-            out[bad[:, :, None] | bad[:, None, :]] = np.nan
-        else:
-            out = ss / denom
-    out[~gate] = np.nan
-    return out
-
-
-def _conv_cov_matrix_pairwise(X, width, weights, min_obs, center, scale):
-    """complete_obs=FALSE cube: per-pair pairwise-complete windows.
-
-    Runs the exact two-pass pair kernel (_pair_window_moments) once per
-    lower-triangle pair — the same per-pair masking the reference builds
-    at src/roll.cpp:103-155. Each call is fully vectorized over rows,
-    so cost is k(k+1)/2 blocked sweeps (the price of per-pair masks;
-    the fused single sweep only exists because complete_obs=TRUE lets
-    every pair share one observation mask).
-    """
-    n, k = X.shape
-    out = np.empty((n, k, k))
-    for j in range(k):
-        for l in range(j, k):
-            c = _pairwise_cell(
-                X[:, j], X[:, l] if l != j else None, width, weights,
-                min_obs, center, scale,
-            )
-            out[:, j, l] = c
-            out[:, l, j] = c
-    return out
-
-
-def _pairwise_cell(xj, xl, width, weights, min_obs, center, scale):
-    """One pairwise-complete (co)variance series; xl=None -> variance."""
-    if center:
-        n_o, s_w, sq_w, ssx, ssy, ssxy, _, _ = _pair_window_moments(
-            xj, xl, width, weights
-        )
-    else:
-        h = _kernel(weights, width)
-        ok = ~np.isnan(xj) if xl is None else (~np.isnan(xj) & ~np.isnan(xl))
-        okf = ok.astype(np.float64)
-        xv = np.where(ok, xj, 0.0)
-        yv = xv if xl is None else np.where(ok, xl, 0.0)
-        n_o = np.rint(_rollconv(okf, np.ones(width))).astype(np.int64)
-        s_w = _rollconv(okf, h)
-        sq_w = _rollconv(okf, h * h)
-        ssx = _rollconv(xv * xv, h)
-        ssy = ssx if xl is None else _rollconv(yv * yv, h)
-        ssxy = ssx if xl is None else _rollconv(xv * yv, h)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        if scale:
-            c = ssxy / np.sqrt(ssx * ssy)
-            c = np.where((ssx <= EPS) | (ssy <= EPS), np.nan, c)
-        else:
-            c = ssxy / (s_w - sq_w / s_w)
-    return np.where((n_o > 1) & (n_o >= min_obs), c, np.nan)
-
-
-def conv_cov_xy_matrix(
-    X, Y, width, weights=None, min_obs=None, center=True, complete_obs=True
-):
-    """Rolling k_x x k_y CROSS-covariance cube for an (x, y) matrix pair —
-    the reference's non-symmetric cube when roll_cov is called with both
-    x and y matrices (allocation src/roll.cpp:1661-1679, kernel
-    roll_mat.h:3659).
-
-    complete_obs=TRUE semantics across BOTH matrices: a row with any
-    missing column in X or Y is excluded from every pair's window
-    (reference any_na over the joined matrix, src/roll.cpp:1625-1659).
-    complete_obs=FALSE: each (j, l) cross pair over its own
-    pairwise-complete windows (per-pair masks, src/roll.cpp:103-155).
-    Returns (n, k_x, k_y) float64 with NaN where gated.
-    """
-    X = np.asarray(X, dtype=np.float64)
-    Y = np.asarray(Y, dtype=np.float64)
-    n, kx = X.shape
-    ky = Y.shape[1]
-    min_obs = width if min_obs is None else min_obs
-    if not complete_obs:
-        out = np.empty((n, kx, ky))
-        for j in range(kx):
-            for l in range(ky):
-                out[:, j, l] = _pairwise_cell(
-                    X[:, j], Y[:, l], width, weights, min_obs, center, False
-                )
-        return out
-    ok = ~np.isnan(X).any(axis=1) & ~np.isnan(Y).any(axis=1)
-    M = np.where(ok[:, None], np.column_stack([X, Y]), np.nan)
-    if center:
-        n_obs, sum_w, sumsq_w, _, SS = _matrix_window_moments(M, width, weights)
-        ss = SS[:, :kx, kx:]
-    else:
-        Mv = np.where(ok[:, None], np.column_stack([X, Y]), 0.0)
-        h = _kernel(weights, width)
-        okf = ok.astype(np.float64)
-        n_obs = np.rint(_rollconv(okf, np.ones(width))).astype(np.int64)
-        sum_w = _rollconv(okf, h)
-        sumsq_w = _rollconv(okf, h * h)
-        ss = np.empty((n, kx, ky))
-        for j in range(kx):
-            for l in range(ky):
-                ss[:, j, l] = _rollconv(Mv[:, j] * Mv[:, kx + l], h)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        out = ss / (sum_w - sumsq_w / sum_w)[:, None, None]
-    out[~((n_obs > 1) & (n_obs >= min_obs))] = np.nan
-    return out
-
-
-def online_sum(x, width, weights=None, min_obs=None, na_restore=False,
-               state: dict | None = None):
-    """Lambda-recursion weighted sum (reference RollSumOnlineVec,
-    roll_vec.h:383-511), with chunk-boundary ``state`` like online_mean."""
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    w = np.ones(width) if weights is None else np.asarray(weights, dtype=np.float64)[-width:]
-    lam = 1.0 if width == 1 or len(w) < 2 else w[-2] / w[-1]
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        sum_x = 0.0
-        n_obs = 0
-        hist = []
-    else:
-        sum_x, n_obs, hist = state["sum_x"], state["n_obs"], list(state["hist"])
-        _check_carry_width(hist, width, "online_sum")
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        sum_x = lam * sum_x
-        if not is_na:
-            n_obs += 1
-            sum_x += w[-1] * xi
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                n_obs -= 1
-                sum_x -= lam * w[0] * old
-        if (not na_restore or not is_na) and n_obs >= min_obs:
-            out[i] = sum_x
-    return out, {"sum_x": sum_x, "n_obs": n_obs, "hist": hist[-width:]}
-
-
-def online_var(x, width, min_obs=None, na_restore=False,
-               state: dict | None = None):
-    """Equal-weight online variance: Welford insert + reverse-Welford
-    eviction (the reference's online kernel keeps the same running
-    (mean, M2) pair in long doubles, roll_vec.h:2114-2425). The engine's
-    production path is the exact two-pass conv_var; this sequential twin
-    exists to (a) prove online == offline the way the reference's test
-    suite does and (b) carry state across chunk/stream boundaries."""
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        n_obs, mean, M2 = 0, 0.0, 0.0
-        hist = []
-    else:
-        n_obs, mean, M2 = state["n_obs"], state["mean"], state["M2"]
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_var")
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        if not is_na:
-            n_obs += 1
-            d = xi - mean
-            mean += d / n_obs
-            M2 += d * (xi - mean)
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                if n_obs == 1:
-                    n_obs, mean, M2 = 0, 0.0, 0.0
-                else:
-                    d = old - mean
-                    mean = (n_obs * mean - old) / (n_obs - 1)
-                    M2 -= d * (old - mean)
-                    n_obs -= 1
-        if (not na_restore or not is_na) and n_obs >= max(min_obs, 2):
-            v = M2 / (n_obs - 1)
-            out[i] = v if v > EPS else (0.0 if v > -EPS else np.nan)
-    return out, {"n_obs": n_obs, "mean": mean, "M2": M2, "hist": hist[-width:]}
-
-
-def online_cov(x, y, width, min_obs=None, na_restore=False,
-               state: dict | None = None):
-    """Equal-weight online covariance: bivariate Welford co-moment with
-    eviction (reference RollCovOnlineVecXY, roll_vec.h:3801-4152;
-    pairwise-complete rows only)."""
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        n_obs, mx, my, C = 0, 0.0, 0.0, 0.0
-        hist = []
-    else:
-        n_obs, mx, my, C = state["n_obs"], state["mx"], state["my"], state["C"]
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_cov")
-    for i in range(n):
-        xi, yi = x[i], y[i]
-        ok = not (np.isnan(xi) or np.isnan(yi))
-        if ok:
-            n_obs += 1
-            dx = xi - mx
-            mx += dx / n_obs
-            my += (yi - my) / n_obs
-            C += dx * (yi - my)
-        hist.append((xi, yi))
-        if len(hist) > width:
-            ox, oy = hist.pop(0)
-            if not (np.isnan(ox) or np.isnan(oy)):
-                if n_obs == 1:
-                    n_obs, mx, my, C = 0, 0.0, 0.0, 0.0
-                else:
-                    dx = ox - mx
-                    mx = (n_obs * mx - ox) / (n_obs - 1)
-                    my_new = (n_obs * my - oy) / (n_obs - 1)
-                    C -= dx * (oy - my_new)
-                    my = my_new
-                    n_obs -= 1
-        if (not na_restore or not (np.isnan(xi) or np.isnan(yi))) \
-                and n_obs >= max(min_obs, 2):
-            out[i] = C / (n_obs - 1)
-    return out, {"n_obs": n_obs, "mx": mx, "my": my, "C": C, "hist": hist[-width:]}
-
-
-def online_quantile(x, width, p, min_obs=None, na_restore=False,
-                    state: dict | None = None):
-    """EQUAL-WEIGHT online rolling quantile via the reference's dual
-    multiset (RollQuantileOnlineVec, roll_vec.h:1694-1953): a `lower`
-    set holding the smallest m order statistics and an `upper` set
-    holding the rest, rebalanced as the window slides, so each row costs
-    one O(log w) search + an O(w)-memmove splice (Python lists stand in
-    for std::multiset: the search is bisect, the splice is a C memmove —
-    in practice far below the offline kernel's O(w log w) sort per row).
-
-    Exponential/arbitrary weights intentionally revert to the offline
-    kernel, exactly like the reference (the commented-out block at
-    roll_vec.h:1735-1760 documents that its online quantile is
-    equal-weight only). Emission is HF2, identical to conv_quantile:
-    c = max(1, ceil(n(1-p))), hi = sorted[n-c], averaged with
-    sorted[n-c-1] on an exact mass tie.
-    """
-    from bisect import bisect_right, insort
-
-    x = np.asarray(x, dtype=np.float64)
-    min_obs = width if min_obs is None else min_obs
-    n = len(x)
-    out = np.full(n, np.nan)
-    if state is None:
-        lower: list = []   # smallest m observed values, sorted
-        upper: list = []   # the rest, sorted
-        hist = []
-    else:
-        lower, upper = list(state["lower"]), list(state["upper"])
-        hist = list(state["hist"])
-        _check_carry_width(hist, width, "online_quantile")
-    pp = 1.0 - p
-    for i in range(n):
-        xi = x[i]
-        is_na = np.isnan(xi)
-        if not is_na:
-            if lower and xi <= lower[-1]:
-                insort(lower, xi)
-            else:
-                insort(upper, xi)
-        hist.append(xi)
-        if len(hist) > width:
-            old = hist.pop(0)
-            if not np.isnan(old):
-                j = bisect_right(lower, old) - 1
-                if 0 <= j < len(lower) and lower[j] == old:
-                    del lower[j]
-                else:
-                    j = bisect_right(upper, old) - 1
-                    del upper[j]
-        n_obs = len(lower) + len(upper)
-        if n_obs:
-            # smallest c with fl64(c/n) >= pp — the same division
-            # predicate as the offline scan (see _equal_weight_c)
-            c = max(1, int(np.ceil(pp * n_obs)))
-            if c > 1 and (c - 1) / n_obs >= pp:
-                c -= 1
-            elif c < n_obs and c / n_obs < pp:
-                c += 1
-            c = min(c, n_obs)
-            m = n_obs - c + 1  # lower must hold the m smallest
-            while len(lower) < m:
-                v = upper.pop(0)
-                lower.append(v)
-            while len(lower) > m:
-                v = lower.pop()
-                insort(upper, v)
-        if (not na_restore or not is_na) and n_obs >= max(min_obs, 1):
-            hi = lower[-1]
-            exact = abs(c / n_obs - pp) <= SQRT_EPS
-            if exact and len(lower) >= 2:
-                out[i] = (hi + lower[-2]) / 2.0
-            else:
-                out[i] = hi
-    return out, {"lower": lower, "upper": upper, "hist": hist[-width:]}
-
-
 # ---------------------------------------------------------------------------
 # robust dispersion: rolling MAD
 # ---------------------------------------------------------------------------
@@ -1167,14 +833,7 @@ def conv_mad(x, width, weights=None, min_obs=None, na_restore=False):
         raise ValueError("conv_mad: weighted MAD is not defined; weights must be None")
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    width = min(width, n)  # windows past the series start are NaN pads
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, x])
-    block = _win_block(width)
+    out = np.full(len(x), np.nan)
 
     def _med_rows(sorted_rows, n_obs, rows):
         # interpolated median of the first n_obs sorted slots per row
@@ -1184,10 +843,8 @@ def conv_mad(x, width, weights=None, min_obs=None, na_restore=False):
         hi = pos // 2
         return (sorted_rows[rows, lo] + sorted_rows[rows, hi]) / 2.0
 
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
-        n_obs = width - np.isnan(wins).sum(axis=1)
+    for b0, b1, wins in _windows(x, width):
+        n_obs = wins.shape[1] - np.isnan(wins).sum(axis=1)
         rows = np.arange(b1 - b0)
         # two vectorized sorts + gathers — NOT np.nanmedian, whose
         # NaN-containing multi-dim path degenerates to a per-row python
@@ -1213,19 +870,13 @@ def conv_skew_kurt(x, width, min_obs=None, na_restore=False):
     cancellation (a drifting series puts the window mean far from any
     fixed centre, where raw power sums lose ~(offset/sd)^k digits).
     NaN (NULL) when n_obs < 3 (G1) / < 4 (G2, JB), when M2 <= eps
-    (constant window), or under the min_obs gate. Rows run in
-    _win_block blocks of strided windows, never wider than the series.
+    (constant window), or under the min_obs gate. Rows run in _windows
+    blocks.
     """
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    out = np.full((n, 3), np.nan)
-    w = max(1, min(width, n))  # windows past the series start are NaN pads
-    xp = np.concatenate([np.full(w - 1, np.nan), x])
-    block = _win_block(w)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + w - 1], w)
+    out = np.full((len(x), 3), np.nan)
+    for b0, b1, wins in _windows(x, width):
         ok = ~np.isnan(wins)
         k = ok.sum(axis=1)
         nf = k.astype(np.float64)
@@ -1416,19 +1067,10 @@ def conv_percentrank(x, width, weights=None, min_obs=None, na_restore=False):
     width-long array per row in JVM heap)."""
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    width = min(width, n)  # windows past the series start are NaN pads
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, x])
-    block = _win_block(width)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
+    out = np.full(len(x), np.nan)
+    for b0, b1, wins in _windows(x, width):
         cur = x[b0:b1]
-        n_obs = width - np.isnan(wins).sum(axis=1)
+        n_obs = wins.shape[1] - np.isnan(wins).sum(axis=1)
         # NaN <= cur is False, so NaN slots never count
         le = (wins <= cur[:, None]).sum(axis=1)
         ok = ~np.isnan(cur) & (n_obs >= max(min_obs, 1)) & (n_obs >= 2)
@@ -1446,19 +1088,10 @@ def conv_nunique(x, width, weights=None, min_obs=None, na_restore=False):
         raise ValueError("conv_nunique: weighted distinct count is not defined")
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    width = min(width, n)  # windows past the series start are NaN pads
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, x])
-    block = _win_block(width)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
+    out = np.full(len(x), np.nan)
+    for b0, b1, wins in _windows(x, width):
         sv = np.sort(wins, axis=1)
-        n_obs = width - np.isnan(sv).sum(axis=1)
+        n_obs = wins.shape[1] - np.isnan(sv).sum(axis=1)
         # adjacent-inequality among observed slots; NaN != NaN is True,
         # so mask the NaN tail explicitly
         neq = (sv[:, 1:] != sv[:, :-1]) & ~np.isnan(sv[:, 1:])
@@ -1481,20 +1114,11 @@ def conv_trimmed_mean(x, width, alpha=0.2, weights=None, min_obs=None,
         raise ValueError(f"alpha must be in [0, 0.5), got {alpha}")
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    n = len(x)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    width = min(width, n)  # windows past the series start are NaN pads
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, x])
-    block = _win_block(width)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
+    out = np.full(len(x), np.nan)
+    for b0, b1, wins in _windows(x, width):
         sv = np.sort(wins, axis=1)
         nan_mask = np.isnan(sv)
-        n_obs = width - nan_mask.sum(axis=1)
+        n_obs = wins.shape[1] - nan_mask.sum(axis=1)
         # same float64 product+floor as the Spark/DuckDB sides
         k = np.floor(alpha * n_obs).astype(np.int64)
         m = n_obs - 2 * k
@@ -1502,7 +1126,7 @@ def conv_trimmed_mean(x, width, alpha=0.2, weights=None, min_obs=None,
         # cumsum-difference here cancels catastrophically when the
         # trimmed-away extremes dwarf the kept values (the whole point
         # of trimming is that they often do)
-        pos = np.arange(width)
+        pos = np.arange(wins.shape[1])
         keep = (pos >= k[:, None]) & (pos < (n_obs - k)[:, None]) & ~nan_mask
         # accumulate in extended precision: when the kept values cancel
         # to ~eps * sum|x| the float64 sum has no relative accuracy left
@@ -1565,23 +1189,12 @@ def conv_spearman(x, y, width, weights=None, min_obs=None, na_restore=False):
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    n = len(x)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
+    out = np.full(len(x), np.nan)
     ok = ~np.isnan(x) & ~np.isnan(y)
-    xm = np.where(ok, x, np.nan)
-    ym = np.where(ok, y, np.nan)
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, xm])
-    yp = np.concatenate([pad, ym])
-    block = _win_block(width)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wx = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
-        wy = np.lib.stride_tricks.sliding_window_view(yp[b0 : b1 + width - 1], width)
-        rx, n_obs = _midranks_block(wx)
-        ry, _ = _midranks_block(wy)
+    pair = np.where(ok[:, None], np.column_stack([x, y]), np.nan)
+    for b0, b1, wins in _windows(pair, width):
+        rx, n_obs = _midranks_block(wins[:, 0])
+        ry, _ = _midranks_block(wins[:, 1])
         pos = np.maximum(n_obs, 1)
         rx0 = np.nan_to_num(rx)
         ry0 = np.nan_to_num(ry)
@@ -1616,17 +1229,8 @@ def conv_entropy(codes, width, weights=None, min_obs=None, na_restore=False):
         raise ValueError("conv_entropy: weighted entropy is not defined")
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(codes, dtype=np.float64)
-    n = len(x)
-    out = np.full(n, np.nan)
-    if n == 0:
-        return out
-    width = min(width, n)  # windows past the series start are NaN pads
-    pad = np.full(width - 1, np.nan)
-    xp = np.concatenate([pad, x])
-    block = _win_block(width)
-    for b0 in range(0, n, block):
-        b1 = min(n, b0 + block)
-        wins = np.lib.stride_tricks.sliding_window_view(xp[b0 : b1 + width - 1], width)
+    out = np.full(len(x), np.nan)
+    for b0, b1, wins in _windows(x, width):
         m, w = wins.shape
         sv = np.sort(wins, axis=1)
         nan_mask = np.isnan(sv)

@@ -51,25 +51,17 @@ def bucket_col(ts: Column, tier: str) -> Column:
     return F.date_trunc(TIERS[tier], ts)
 
 
-def rollup_raw(
-    df: DataFrame,
-    value: str,
-    ts: str,
-    by: Cols,
-    tier: str,
-) -> DataFrame:
-    """Tier-0 aggregation: raw rows -> per-(series, bucket) sufficient stats.
+def _raw_stats(v: Column, ts: Column) -> list[Column]:
+    """The STAT_COLS aggregates of raw values ``v`` stamped ``ts``.
 
     m2 is the centered second moment sum((x-mu)^2); Spark's var_samp is
     Welford-based (numerically stable central moments in the JVM), so
     m2 = var_samp * (n-1), with the n==1 -> 0 edge handled explicitly.
     """
-    v = F.col(value)
-    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     n = F.count(v)
-    first_struct = F.min(F.when(v.isNotNull(), F.struct(F.col(ts).alias("t"), v.alias("v"))))
-    last_struct = F.max(F.when(v.isNotNull(), F.struct(F.col(ts).alias("t"), v.alias("v"))))
-    return df.groupBy(*keys).agg(
+    first_struct = F.min(F.when(v.isNotNull(), F.struct(ts.alias("t"), v.alias("v"))))
+    last_struct = F.max(F.when(v.isNotNull(), F.struct(ts.alias("t"), v.alias("v"))))
+    return [
         n.alias("n"),
         n.cast("double").alias("sum_w"),
         F.sum(v).alias("sum_x"),
@@ -80,7 +72,20 @@ def rollup_raw(
         first_struct.getField("v").alias("first_x"),
         last_struct.getField("t").alias("last_ts"),
         last_struct.getField("v").alias("last_x"),
-    )
+    ]
+
+
+def rollup_raw(
+    df: DataFrame,
+    value: str,
+    ts: str,
+    by: Cols,
+    tier: str,
+) -> DataFrame:
+    """Tier-0 aggregation: raw rows -> per-(series, bucket) sufficient
+    stats (see _raw_stats)."""
+    keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
+    return df.groupBy(*keys).agg(*_raw_stats(F.col(value), F.col(ts)))
 
 
 def merge_tier(
@@ -316,6 +321,17 @@ def realtime_view(
     return old.select(fresh.columns).unionByName(fresh)
 
 
+def _histogram_bin(v: Column, lo: float, hi: float, n_bins: int) -> tuple[Column, float]:
+    """The ``bin`` column of value ``v`` — floor((v - lo) / step)
+    clamped to [0, n_bins-1] — and its bin width ``step``."""
+    if not (n_bins > 0 and hi > lo):
+        raise ValueError("need n_bins > 0 and hi > lo")
+    step = (float(hi) - float(lo)) / int(n_bins)
+    raw_bin = F.floor((v - F.lit(float(lo))) / F.lit(step))
+    bin_ = F.least(F.greatest(raw_bin, F.lit(0)), F.lit(int(n_bins) - 1))
+    return bin_.cast("int").alias("bin"), step
+
+
 def tier_histogram(
     df: DataFrame,
     value: str,
@@ -342,16 +358,12 @@ def tier_histogram(
     IEEE-double division + floor, identical on any engine — no
     binning-boundary drift vs the SQL oracle.
     """
-    if not (n_bins > 0 and hi > lo):
-        raise ValueError("need n_bins > 0 and hi > lo")
     v = F.col(value)
-    step = (float(hi) - float(lo)) / int(n_bins)
-    raw_bin = F.floor((v - F.lit(float(lo))) / F.lit(step))
-    bin_ = F.least(F.greatest(raw_bin, F.lit(0)), F.lit(int(n_bins) - 1))
+    bin_, step = _histogram_bin(v, lo, hi, n_bins)
     keys = [*_as_list(by), bucket_col(F.col(ts), tier).alias(BUCKET)]
     return (
         df.filter(v.isNotNull())
-        .groupBy(*keys, bin_.cast("int").alias("bin"))
+        .groupBy(*keys, bin_)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("bin_lo", F.lit(float(lo)) + F.col("bin") * F.lit(step))
         .withColumn("bin_hi", F.lit(float(lo)) + (F.col("bin") + 1) * F.lit(step))

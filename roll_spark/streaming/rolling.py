@@ -21,7 +21,9 @@ the order column first, so any intra-batch shuffling is fine;
 cross-batch disorder is the caller's watermarking problem, the same
 contract run_stream_to_tier enforces for tier buckets. The streamed
 output is proven row-identical to the batch kernels in
-tests/test_streaming_rolling.py.
+tests/test_streaming_rolling.py, up to float reassociation where a
+batch kernel sums a window shorter than the carried one (mean/sum's
+running head; var/scale/cov over a series shorter than the width).
 
 Scale shape: state per key is O(width) floats (the trailing window),
 partitioned by the series key across executors by the state store —

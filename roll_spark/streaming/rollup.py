@@ -96,32 +96,27 @@ def stream_rollup_raw(
     drain-safe 3650 days (state is bounded by the drain itself, so the
     huge watermark costs nothing).
     """
-    if watermark is None:
-        watermark = "3650 days"
+    return _stream_agg(sdf, ts, by, tier, watermark,
+                       T._raw_stats(F.col(value), F.col(ts)))
+
+
+def _stream_agg(sdf, ts, by, tier, watermark, aggs, keep=None, keys=()):
+    """``aggs`` per (series, ``tier`` event-time window, ``*keys``) over
+    the rows of ``sdf`` that pass ``keep``, under ``watermark`` (None:
+    the drain-safe 3650 days, see ``stream_rollup_raw``), with the
+    window start as the bucket column."""
     # watermarks require TIMESTAMP; TIMESTAMP_NTZ sources reinterpret as
     # session-TZ instants (the engine pins the session to UTC, so this
     # matches the batch path's date_trunc bucketing exactly)
     if dict(sdf.dtypes).get(ts) == "timestamp_ntz":
         sdf = sdf.withColumn(ts, F.col(ts).cast("timestamp"))
-    v = F.col(value)
-    n = F.count(v)
-    first_struct = F.min(F.when(v.isNotNull(), F.struct(F.col(ts).alias("t"), v.alias("v"))))
-    last_struct = F.max(F.when(v.isNotNull(), F.struct(F.col(ts).alias("t"), v.alias("v"))))
+    if keep is not None:
+        sdf = sdf.filter(keep)
     return (
-        sdf.withWatermark(ts, watermark)
-        .groupBy(*_as_list(by), F.window(F.col(ts), _WINDOW_DURATION[tier]).alias("_w"))
-        .agg(
-            n.alias("n"),
-            n.cast("double").alias("sum_w"),
-            F.sum(v).alias("sum_x"),
-            F.coalesce(F.var_samp(v) * (n - 1), F.lit(0.0)).alias("m2"),
-            F.min(v).alias("min_x"),
-            F.max(v).alias("max_x"),
-            first_struct.getField("t").alias("first_ts"),
-            first_struct.getField("v").alias("first_x"),
-            last_struct.getField("t").alias("last_ts"),
-            last_struct.getField("v").alias("last_x"),
-        )
+        sdf.withWatermark(ts, "3650 days" if watermark is None else watermark)
+        .groupBy(*_as_list(by), F.window(F.col(ts), _WINDOW_DURATION[tier]).alias("_w"),
+                 *keys)
+        .agg(*aggs)
         .withColumn(T.BUCKET, F.col("_w.start"))
         .drop("_w")
     )
@@ -150,31 +145,13 @@ def stream_histogram_raw(
     mergeable by addition for the coarser-tier cascade. ``first_ts`` /
     ``last_ts`` event-time extremes ride along for the drain loop's
     watermark-horizon guard (same contract as the moment tiers)."""
-    if not (n_bins > 0 and hi > lo):
-        raise ValueError("need n_bins > 0 and hi > lo")
-    if watermark is None:
-        watermark = "3650 days"
-    if dict(sdf.dtypes).get(ts) == "timestamp_ntz":
-        sdf = sdf.withColumn(ts, F.col(ts).cast("timestamp"))
     v = F.col(value)
-    step = (float(hi) - float(lo)) / int(n_bins)
-    raw_bin = F.floor((v - F.lit(float(lo))) / F.lit(step))
-    bin_ = F.least(F.greatest(raw_bin, F.lit(0)), F.lit(int(n_bins) - 1))
-    return (
-        sdf.filter(v.isNotNull())
-        .withWatermark(ts, watermark)
-        .groupBy(
-            *_as_list(by),
-            F.window(F.col(ts), _WINDOW_DURATION[tier]).alias("_w"),
-            bin_.cast("int").alias("bin"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(ts).alias("first_ts"),
-            F.max(ts).alias("last_ts"),
-        )
-        .withColumn(T.BUCKET, F.col("_w.start"))
-        .drop("_w")
+    bin_, _ = T._histogram_bin(v, lo, hi, n_bins)
+    return _stream_agg(
+        sdf, ts, by, tier, watermark,
+        [F.count(F.lit(1)).alias("cnt"), F.min(ts).alias("first_ts"),
+         F.max(ts).alias("last_ts")],
+        keep=v.isNotNull(), keys=(bin_,),
     )
 
 

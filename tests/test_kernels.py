@@ -185,28 +185,36 @@ def test_online_mean_state_carry():
 # ---------------------------------------------------------------------------
 
 
-def test_matrix_moments_match_pair_moments(grid_pairs):
-    """The fused all-pairs blocked sweep must reproduce the per-pair
-    two-pass moments it replaced (same mask, same mean pinning)."""
+def test_matrix_moments_match_brute_force(grid_pairs):
+    """The one centred co-moment engine == a per-window two-pass replay
+    under the pair's joint mask: counts, weight sums, means and every
+    co-moment sum, with an exact mirror."""
     for name, (x, y) in grid_pairs.items():
         M = np.column_stack([x, y])
         ok = ~np.isnan(M).any(axis=1)
-        Mm = np.where(ok[:, None], M, np.nan)
         for width in (2, 5, 10):
             for wts in (None, 0.9 ** np.arange(2 * width, 0, -1.0)):
+                slot = np.ones(width) if wts is None else wts[-width:]
                 n_obs, sum_w, sumsq_w, mu, SS = K._matrix_window_moments(
-                    Mm, width, wts
+                    M, width, wts
                 )
-                pn, psw, psq, ssx, ssy, ssxy, mux, muy = K._pair_window_moments(
-                    Mm[:, 0], Mm[:, 1], width, wts
-                )
-                assert (n_obs == pn).all(), (name, width)
-                assert np.allclose(SS[:, 0, 0], ssx, equal_nan=True, atol=1e-10)
-                assert np.allclose(SS[:, 1, 1], ssy, equal_nan=True, atol=1e-10)
-                assert np.allclose(SS[:, 0, 1], ssxy, equal_nan=True, atol=1e-10)
-                assert np.allclose(SS[:, 1, 0], SS[:, 0, 1], equal_nan=True,
-                                   atol=0, rtol=0), "mirror must be exact"
-                assert np.allclose(mu[:, 0], mux, equal_nan=True, atol=1e-12)
+                for i in range(len(M)):
+                    lo = max(0, i - width + 1)
+                    keep = ok[lo : i + 1]
+                    w = slot[width - (i + 1 - lo) :][keep]
+                    V = M[lo : i + 1][keep]
+                    assert n_obs[i] == len(V), (name, width, i)
+                    if not len(V):
+                        continue
+                    m = w @ V / w.sum()
+                    D = V - m
+                    assert np.isclose(sum_w[i], w.sum(), rtol=1e-12)
+                    assert np.isclose(sumsq_w[i], w @ w, rtol=1e-12)
+                    assert np.allclose(mu[i], m, rtol=1e-12, atol=1e-12)
+                    assert np.allclose(SS[i], (D * w[:, None]).T @ D,
+                                       rtol=1e-9, atol=1e-9), (name, width, i)
+                assert np.array_equal(SS[:, 1, 0], SS[:, 0, 1], equal_nan=True), \
+                    "mirror must be exact"
 
 
 def test_cov_xy_matrix_equals_stacked_symmetric_block(grid_pairs):
@@ -295,8 +303,7 @@ def test_quantile_selection_boundary_combos():
     PRODUCT n*(1-p) rounds to the other side of an attainable mass —
     e.g. p=0.41/n=100, p=0.18/n=50 — a ceil-of-product shortcut selects
     a different order statistic. The equal-weight wavelet-matrix
-    selection, the weighted scan, and the online dual multiset must all
-    agree on exactly these combos."""
+    selection and the weighted scan must agree on exactly these combos."""
     rng = np.random.default_rng(5)
     for p, w in ((0.41, 100), (0.18, 50), (0.18, 150), (0.408, 125),
                  (0.999, 37), (0.82, 50)):
@@ -304,10 +311,20 @@ def test_quantile_selection_boundary_combos():
         x[rng.random(1200) < 0.1] = np.nan
         fast = K.conv_quantile(x, w, p, min_obs=1)
         scan = K.conv_quantile(x, w, p, weights=np.ones(w), min_obs=1)
-        onl, _ = K.online_quantile(x, w, p, min_obs=1)
-        for name, a in (("fast", fast), ("online", onl)):
-            same = (a == scan) | (np.isnan(a) & np.isnan(scan))
-            assert same.all(), (name, p, w, np.where(~same)[0][:3])
+        same = (fast == scan) | (np.isnan(fast) & np.isnan(scan))
+        assert same.all(), (p, w, np.where(~same)[0][:3])
+
+
+def test_quantile_tie_heavy_long_series_matches_oracle():
+    """Heavy ties over a long series: the wavelet-matrix selection ==
+    the sorted-window oracle, tie averaging included."""
+    rng = np.random.default_rng(97)
+    x = np.round(rng.normal(100, 5, 3000), 1)  # heavy ties
+    x[rng.random(3000) < 0.15] = np.nan
+    for width, p in ((7, 0.5), (40, 0.25), (200, 0.9)):
+        got = K.conv_quantile(x, width, p, min_obs=1)
+        want = oracle.roll_quantile(x, width, p, min_obs=1)
+        assert np.array_equal(got, want, equal_nan=True), (width, p)
 
 
 def test_equal_weight_c_is_smallest_division_satisfier():
@@ -427,6 +444,61 @@ def test_sorted_window_kernels_width_beyond_series(fn):
         tracemalloc.stop()
     assert peak < 16 << 20, peak  # peaks at 0.3-8.5 MB
     assert np.array_equal(got, fn(x, 1000, min_obs=1), equal_nan=True)
+
+
+def _wide_width_cases():
+    rng = np.random.default_rng(17)
+    X = rng.normal(5.0, 3.0, (1000, 3))
+    X[rng.random((1000, 3)) < 0.05] = np.nan
+    x, y = X[:, 0], X[:, 1]
+    # a window never reaches more than the trailing n weights
+    wts = 0.995 ** np.arange(1000, 0, -1.0)
+    cases = {
+        "var": lambda w: K.conv_var(x, w, weights=wts, min_obs=1),
+        "sd": lambda w: K.conv_sd(x, w, min_obs=1),
+        "scale": lambda w: K.conv_scale(x, w, weights=wts, min_obs=1),
+        "cov": lambda w: K.conv_cov(x, y, w, weights=wts, min_obs=1),
+        "cor": lambda w: K.conv_cor(x, y, w, min_obs=1),
+        "crossprod": lambda w: K.conv_crossprod(x, y, w, weights=wts, min_obs=1),
+        "prod": lambda w: K.conv_prod(x / 5.0, w, weights=wts, min_obs=1),
+        "quantiles_weighted": lambda w: K.conv_quantiles(
+            x, w, [0.1, 0.5, 0.9], weights=wts, min_obs=1),
+        "spearman": lambda w: K.conv_spearman(x, y, w, min_obs=1),
+        "cov_xy_matrix": lambda w: K.conv_cov_xy_matrix(X[:, :2], X[:, 2:], w, min_obs=1),
+    }
+    for center in (True, False):
+        for complete in (True, False):
+            cases[f"cov_matrix_c{center:d}_co{complete:d}"] = (
+                lambda w, c=center, co=complete: K.conv_cov_matrix(
+                    X, w, weights=wts, min_obs=1, center=c, complete_obs=co))
+    for intercept in (True, False):
+        cases[f"lm_k_i{intercept:d}"] = lambda w, i=intercept: tuple(
+            K.conv_lm_k(X[:, :2], X[:, 2], w, min_obs=1, intercept=i).values())
+    return cases
+
+
+WIDE_WIDTH_CASES = _wide_width_cases()
+
+
+@pytest.mark.parametrize("case", sorted(WIDE_WIDTH_CASES))
+def test_conv_kernels_width_beyond_series(case):
+    """Every conv kernel with a width cuts its windows, taps and weights
+    at the series length: a width of 10^9 over 1,000 rows gives the
+    width-n result bit for bit inside a block-sized memory budget."""
+    fn = WIDE_WIDTH_CASES[case]
+    tracemalloc.start()
+    try:
+        got = fn(10**9)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 << 20, peak
+    want = fn(1000)
+    if not isinstance(got, tuple):
+        got, want = (got,), (want,)
+    for g, w in zip(got, want):
+        assert np.array_equal(g, w, equal_nan=True)
+    assert np.isfinite(want[0]).any()
 
 
 def test_skew_kurt_width_beyond_series():

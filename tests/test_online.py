@@ -1,14 +1,16 @@
 """Online == offline dual-path equivalence — the reference's own test
 strategy (tests/testthat/test-roll.R checks every op both ways), plus
-the recursions' chunk-boundary state-carry contract, and the stateless
-window kernels stream_roll runs against naive per-window replays.
+the chunk-boundary state-carry contract, the stateless window kernels
+stream_roll runs against naive per-window replays, and online_mean's
+width guard.
 
 Offline = the vectorized conv_* kernels (production Arrow path);
-online = the sequential O(1)-or-O(log w)-per-row recursions mirroring
-the reference's online family (roll_vec.h:383, :2114, :3801, :1694).
-Co-moment recursions accumulate ~kappa*eps differences vs the exact
-two-pass offline kernels, so var/cov compare at 5e-8; sum and the
-dual-multiset quantile are exact.
+online = the engine's one online evaluation, stream_roll's window step
+(streaming/rolling.py), which carries the trailing raw window and
+reruns the batch kernel over ``[carry | micro-batch]`` — folded here
+one row at a time, or over arbitrary chunks. Sum's convolution head
+reassociates (eps-level); var, cov and the quantile are exact (every
+series here is at least the width long).
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ import numpy as np
 import pytest
 
 from roll_spark.operators import kernels as K
+from roll_spark.streaming.rolling import _window_step
 
 WIDTHS = (1, 2, 3, 5, 10, 15)
 
@@ -28,11 +31,22 @@ def _same(a, b, atol=0.0):
     return np.allclose(a, b, equal_nan=True, atol=atol, rtol=0)
 
 
+def _online(op, v, width, min_obs, p=0.5, bounds=None):
+    """The window step folded over the (rows, k) inputs ``v``, split at
+    ``bounds`` (default: one row per micro-batch)."""
+    bounds = list(range(len(v) + 1)) if bounds is None else bounds
+    state, outs = None, []
+    for lo, hi in zip(bounds, bounds[1:]):
+        out, state = _window_step(op, width, min_obs, p, state, v[lo:hi])
+        outs.append(out)
+    return np.concatenate(outs)
+
+
 @pytest.mark.parametrize("width", WIDTHS)
 def test_online_sum_equals_offline(grid_series, width):
     for name, x in grid_series.items():
         for mo in (1, max(1, width // 2), width):
-            got, _ = K.online_sum(x, width, min_obs=mo)
+            got = _online("sum", x[:, None], width, mo)
             want = K.conv_sum(x, width, min_obs=mo)
             assert _same(got, want, atol=1e-9), (name, width, mo)
 
@@ -41,27 +55,25 @@ def test_online_sum_equals_offline(grid_series, width):
 def test_online_var_equals_offline(grid_series, width):
     for name, x in grid_series.items():
         for mo in (2, width):
-            got, _ = K.online_var(x, width, min_obs=mo)
-            want = K.conv_var(x, width, min_obs=max(mo, 2))
-            assert _same(got, want, atol=5e-8), (name, width, mo)
+            got = _online("var", x[:, None], width, mo)
+            want = K.conv_var(x, width, min_obs=mo)
+            assert _same(got, want), (name, width, mo)
 
 
 @pytest.mark.parametrize("width", WIDTHS)
 def test_online_cov_equals_offline(grid_pairs, width):
     for name, (x, y) in grid_pairs.items():
-        got, _ = K.online_cov(x, y, width, min_obs=2)
+        got = _online("cov", np.column_stack([x, y]), width, 2)
         want = K.conv_cov(x, y, width, min_obs=2)
-        assert _same(got, want, atol=5e-8), (name, width)
+        assert _same(got, want), (name, width)
 
 
 @pytest.mark.parametrize("width", WIDTHS)
 @pytest.mark.parametrize("p", (0.1, 0.25, 0.5, 0.75, 0.9))
 def test_online_quantile_equals_offline(grid_series, width, p):
-    """The dual-multiset online quantile is EXACT vs the offline sort —
-    same HF2 selection, same tie-averaging (roll_vec.h:1694-1953)."""
     for name, x in grid_series.items():
         for mo in (1, width):
-            got, _ = K.online_quantile(x, width, p, min_obs=mo)
+            got = _online("quantile", x[:, None], width, mo, p)
             want = K.conv_quantile(x, width, p, min_obs=mo)
             assert _same(got, want), (name, width, p, mo)
 
@@ -71,7 +83,7 @@ def test_online_quantile_tie_heavy_long_series():
     x = np.round(rng.normal(100, 5, 3000), 1)  # heavy ties
     x[rng.random(3000) < 0.15] = np.nan
     for width, p in ((7, 0.5), (40, 0.25), (200, 0.9)):
-        got, _ = K.online_quantile(x, width, p, min_obs=1)
+        got = _online("quantile", x[:, None], width, 1, p)
         want = K.conv_quantile(x, width, p, min_obs=1)
         assert _same(got, want), (width, p)
 
@@ -79,48 +91,34 @@ def test_online_quantile_tie_heavy_long_series():
 @pytest.mark.parametrize("splits", [(137,), (50, 260), (1, 2, 3)])
 def test_state_carry_across_chunks(splits):
     """Evaluating a series in arbitrary chunks with carried state must
-    equal the single-pass answer — the contract the skew/streaming
-    paths rely on."""
+    equal the single-pass answer, at widths past the stream property
+    test's range."""
     rng = np.random.default_rng(31)
     x = np.round(rng.normal(100, 20, 400), 2)
     x[rng.random(400) < 0.2] = np.nan
     y = np.round(rng.normal(50, 10, 400), 2)
     bounds = [0, *splits, 400]
-    for fn, args, atol in (
-        (K.online_sum, (), 1e-9),
-        (K.online_var, (), 1e-9),
-        (K.online_quantile, (0.5,), 0.0),
-    ):
-        for width in (3, 10, 64):
-            whole, _ = fn(x, width, *args, min_obs=1)
-            st, parts = None, []
-            for lo, hi in zip(bounds, bounds[1:]):
-                seg, st = fn(x[lo:hi], width, *args, min_obs=1, state=st)
-                parts.append(seg)
-            assert _same(whole, np.concatenate(parts), atol=atol), (fn.__name__, width)
     for width in (3, 10, 64):
-        whole, _ = K.online_cov(x, y, width, min_obs=2)
-        st, parts = None, []
-        for lo, hi in zip(bounds, bounds[1:]):
-            seg, st = K.online_cov(x[lo:hi], y[lo:hi], width, min_obs=2, state=st)
-            parts.append(seg)
-        assert _same(whole, np.concatenate(parts), atol=1e-9), width
+        for op, want, atol in (
+            ("sum", K.conv_sum(x, width, min_obs=1), 1e-9),
+            ("var", K.conv_var(x, width, min_obs=1), 0.0),
+            ("quantile", K.conv_quantile(x, width, 0.5, min_obs=1), 0.0),
+        ):
+            got = _online(op, x[:, None], width, 1, bounds=bounds)
+            assert _same(got, want, atol=atol), (op, width)
+        got = _online("cov", np.column_stack([x, y]), width, 2, bounds=bounds)
+        assert _same(got, K.conv_cov(x, y, width, min_obs=2)), width
 
 
 def test_online_width_shrink_raises():
-    """Resuming a sum/moment/multiset kernel with a SMALLER width than
-    its checkpointed state must raise loudly — the carried running sums
-    are tied to the old width, so silent continuation would be wrong
-    (stream_roll's raw-value carry truncates and recovers instead)."""
+    """Resuming online_mean with a SMALLER width than its checkpointed
+    state must raise loudly — the carried running sums are tied to the
+    old width, so silent continuation would be wrong (stream_roll's
+    raw-value carry truncates and recovers instead)."""
     x = np.arange(20.0)
-    for fn, args in ((K.online_mean, ()), (K.online_sum, ()),
-                     (K.online_var, ()), (K.online_quantile, (0.5,))):
-        _, st = fn(x, 5, *args, min_obs=1)
-        with pytest.raises(ValueError, match="state width mismatch"):
-            fn(x, 3, *args, min_obs=1, state=st)
-    _, st = K.online_cov(x, x * 2, 5, min_obs=2)
+    _, st = K.online_mean(x, 5, min_obs=1)
     with pytest.raises(ValueError, match="state width mismatch"):
-        K.online_cov(x, x * 2, 3, min_obs=2, state=st)
+        K.online_mean(x, 3, min_obs=1, state=st)
 
 
 def test_online_idxminmax_matches_batch_contract():

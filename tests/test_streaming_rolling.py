@@ -48,15 +48,21 @@ def _inputs(op, x, y):
     return np.column_stack([x, y]) if op == "cov" else x[:, None]
 
 
-def _assert_carry_equal(op, got, want, x):
-    """Exact, except mean/sum: a padded window's convolution dot differs
-    from the whole series' shorter head dot by float reassociation,
-    bounded by eps * sum|window| (absolute, since a cancelled sum has no
-    relative accuracy to preserve)."""
+def _assert_carry_equal(op, got, want, x, width):
+    """Exact, except where the batch kernel sums a shorter window than
+    the stream's width-long carried one: mean/sum's convolution dot over
+    the whole series' head, and var/scale/cov's windows, which are cut
+    at a series shorter than the width. Those differ by float
+    reassociation, bounded by eps * sum|window| (absolute, since a
+    cancelled sum has no relative accuracy to preserve); a z-score
+    divides its mean's error by the window's sd."""
     assert np.array_equal(np.isnan(got), np.isnan(want)), op
+    scale = float(np.nanmax(np.abs(x))) if np.isfinite(x).any() else 0.0
     if op in ("mean", "sum"):
-        scale = float(np.nanmax(np.abs(x))) if np.isfinite(x).any() else 0.0
         assert np.allclose(got, want, rtol=1e-12, atol=1e-12 * scale,
+                           equal_nan=True), op
+    elif op in ("var", "scale", "cov") and len(x) < width:
+        assert np.allclose(got, want, rtol=1e-9, atol=1e-12 * scale,
                            equal_nan=True), op
     else:
         assert np.array_equal(got, want, equal_nan=True), op
@@ -273,7 +279,7 @@ def test_window_step_any_split_equals_batch(x, width, min_obs, p, burst, cuts, s
         got, state = _run_splits(
             lambda s, part: _window_step(op, width, min_obs, p, s, part),
             None, [(v[lo:hi],) for lo, hi in spans])
-        _assert_carry_equal(op, got, _batch(op, x, y, width, min_obs, p), x)
+        _assert_carry_equal(op, got, _batch(op, x, y, width, min_obs, p), x, width)
         assert len(state[0]) == (width - 1) * v.shape[1]
         assert state[1] == [float(n)]
     t_us = np.cumsum(rng.integers(1, 10**10, n))
@@ -319,17 +325,31 @@ def _parent_pack(op, s):
 
 def _parent_state(op, x, y, width):
     """The previous kernels' carry after folding ``x`` (and ``y``). The
-    online_* recursions still exist as reference oracles; the raw-window
-    kernels' carry was the NaN-padded trailing width-1 values plus the
-    observed count (min/max/prod) or the row count (idxmin/idxmax)."""
-    if op == "quantile":
-        return K.online_quantile(x, width, 0.5, min_obs=1)[1]
+    running-sum, Welford and dual-multiset layouts are frozen here as
+    literal state dicts: each held the trailing ``width`` raw values in
+    hist beside its running state. The raw-window kernels' carry was the
+    NaN-padded trailing width-1 values plus the observed count
+    (min/max/prod) or the row count (idxmin/idxmax)."""
+    if op == "mean":
+        return K.online_mean(x, width, min_obs=1)[1]
+    hist = [float(v) for v in x[-width:]]
+    obs = sorted(v for v in hist if not np.isnan(v))
+    if op == "sum":
+        return {"sum_x": float(np.sum(obs)), "n_obs": len(obs), "hist": hist}
+    if op in ("var", "scale"):  # one Welford carry
+        m2 = float(np.var(obs) * len(obs)) if obs else 0.0
+        return {"n_obs": len(obs), "mean": float(np.mean(obs)) if obs else 0.0,
+                "M2": m2, "hist": hist}
     if op == "cov":
-        return K.online_cov(x, y, width, min_obs=1)[1]
-    if op in ("mean", "sum", "var", "scale"):
-        fn = {"mean": K.online_mean, "sum": K.online_sum,
-              "var": K.online_var, "scale": K.online_var}[op]  # same Welford carry
-        return fn(x, width, min_obs=1)[1]
+        pairs = [(float(a), float(b)) for a, b in zip(x[-width:], y[-width:])]
+        ok = np.array([p for p in pairs if not np.isnan(p).any()]).reshape(-1, 2)
+        mx, my = ok.mean(axis=0) if len(ok) else (0.0, 0.0)
+        return {"n_obs": len(ok), "mx": float(mx), "my": float(my),
+                "C": float(((ok[:, 0] - mx) * (ok[:, 1] - my)).sum()),
+                "hist": pairs}
+    if op == "quantile":  # lower: the smaller half of the dual multiset
+        half = (len(obs) + 1) // 2
+        return {"lower": obs[:half], "upper": obs[half:], "hist": hist}
     xp = np.concatenate([np.full(width - 1, np.nan), x])
     tail = list(xp[len(xp) - (width - 1):])
     if op in ("idxmin", "idxmax"):
@@ -364,7 +384,7 @@ def test_window_step_resumes_parent_checkpoint(op, width, split):
     got, state = _window_step(op, width, 1, 0.5, state, v[split:40])
     more, _ = _window_step(op, width, 1, 0.5, state, v[40:])  # new layout
     want = _batch(op, x, y, width, 1)[split:]
-    _assert_carry_equal(op, np.concatenate([got, more]), want, x)
+    _assert_carry_equal(op, np.concatenate([got, more]), want, x, width)
 
 
 @pytest.mark.parametrize("op", WINDOW_OPS)
@@ -379,7 +399,7 @@ def test_window_step_long_carry_truncates(op):
     v = _inputs(op, x, y)
     _, state = _window_step(op, 8, 1, 0.5, None, v[:20])
     got, state = _window_step(op, 3, 1, 0.5, state, v[20:])
-    _assert_carry_equal(op, got, _batch(op, x, y, 3, 1)[20:], x)
+    _assert_carry_equal(op, got, _batch(op, x, y, 3, 1)[20:], x, 3)
     assert len(state[0]) == 2 * v.shape[1]
 
 
