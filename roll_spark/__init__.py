@@ -7,7 +7,7 @@ Re-expresses the query surface of the R package ``roll`` (reference:
 - equal-weight rolling/expanding statistics -> native Catalyst Window
   expressions (``roll_spark.operators.window_ops``), whole-stage codegen'd;
 - weighted / exponential-decay / exact-quantile / k-regressor paths ->
-  vectorized Arrow kernels over ``applyInArrow``
+  vectorized Arrow kernels over ``mapInArrow``
   (``roll_spark.operators.arrow_ops`` + ``roll_spark.operators.kernels``);
 - retention tiers raw->1m->1h->1d with mergeable sufficient statistics
   (Chan et al. parallel moment combination), gap-fill, Gorilla compression,

@@ -1,15 +1,18 @@
-"""Arrow (applyInArrow) execution of the roll_* surface — the scale
+"""Arrow (mapInArrow) execution of the roll_* surface — the scale
 path for weighted / exponential-decay inputs, sums, means and exact
 quantiles at large widths, and k-regressor roll_lm.
 
-Physical shape: one hash exchange on the series key, then a grouped-map
-Arrow UDF per series running the vectorized numpy kernels of
-roll_spark.operators.kernels — exactly the reference's parallelization
-model (one task per independent series, sequential in time;
-src/roll.cpp:384) with Arrow batches instead of RcppParallel threads.
-Per-row Python never happens: each group crosses the JVM<->Python
-boundary once as a columnar batch, and only the kernel's input columns
-leave Arrow (as float64 numpy arrays); passthrough columns never do.
+Physical shape: one hash exchange on the series key, a sort within each
+partition on (series key, order key), then one mapInArrow pass per
+partition that cuts each record batch into series and runs the
+vectorized numpy kernels of roll_spark.operators.kernels on each — the
+reference's parallelization model (independent series, each sequential
+in time; src/roll.cpp:384) with Arrow batches instead of RcppParallel
+threads. Per-row Python never happens, and neither does a per-series
+Arrow stream: a partition crosses the JVM<->Python boundary as a few
+columnar batches, only the kernel's input columns leave Arrow (as
+float64 numpy arrays, converted once per batch), and passthrough
+columns never do.
 
 Skewed series (one conversation with 10^9 turns) do NOT fit this model;
 they go through roll_spark.operators.chunked which splits a series into
@@ -21,7 +24,7 @@ and NON-NULL per row. The wide-frame join-back rejoins kernel outputs
 on exactly these keys: a NULL order key never matches (its outputs
 silently become NULL) and duplicate keys fan out. Set
 ROLL_SPARK_DEBUG_KEYS=1 to fail loudly instead: the join-back then
-asserts key uniqueness/non-nullness per group before joining.
+asserts key uniqueness/non-nullness per series before joining.
 """
 
 from __future__ import annotations
@@ -44,7 +47,7 @@ _WIDE_TYPES = (TT.StringType, TT.BinaryType)
 
 
 def _kernel_inputs(table, cols: list[str]) -> dict[str, np.ndarray]:
-    """``{column: numpy array}`` of a group's kernel inputs. Numeric
+    """``{column: numpy array}`` of a table's kernel inputs. Numeric
     columns arrive as float64 with NaN for NULL; other types (the
     strings roll_entropy factorizes) as object/datetime arrays."""
     import pyarrow as pa
@@ -81,7 +84,7 @@ def _list_rows(mat, null_all_nan: bool = False):
 
 
 def _check_keys(table, order_cols: list[str]) -> None:
-    """ROLL_SPARK_DEBUG_KEYS contract check on one series group: no NULL
+    """ROLL_SPARK_DEBUG_KEYS contract check on one series: no NULL
     (or NaN) order key, no duplicate (by, order) key."""
     import pyarrow.compute as pc
 
@@ -102,6 +105,30 @@ def _check_keys(table, order_cols: list[str]) -> None:
         )
 
 
+def _key_changes(keys) -> np.ndarray:
+    """``(n-1,)`` bool over n rows of the series-key arrays ``keys``:
+    row i+1's key differs from row i's. Equality is the one Spark's sort
+    and ``groupBy`` use: NULL = NULL, NaN = NaN, -0.0 = 0.0."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(keys[0])
+    same = np.ones(max(n - 1, 0), dtype=bool)
+    for col in keys:
+        a, b = col.slice(1), col.slice(0, n - 1)
+        try:
+            eq = pc.fill_null(pc.equal(a, b), False)
+        except pa.ArrowNotImplementedError:  # struct/array keys: as Python values
+            eq = pa.array([x == y for x, y in zip(a.to_pylist(), b.to_pylist())],
+                          type=pa.bool_())
+        eq = pc.or_(eq, pc.and_(pc.is_null(a), pc.is_null(b)))
+        if pa.types.is_floating(col.type):
+            eq = pc.or_(eq, pc.fill_null(
+                pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+        same &= eq.to_numpy(zero_copy_only=False)
+    return ~same
+
+
 def _apply_kernel(
     df: DataFrame,
     in_cols: list[str],
@@ -110,17 +137,30 @@ def _apply_kernel(
     out_fields: list[tuple[str, str]],
     kernel,
 ) -> DataFrame:
-    """Run ``kernel(inputs) -> dict[out_col, array]`` per series group,
-    where ``inputs`` is ``_kernel_inputs`` of ``in_cols`` in order-key
-    order and each output is a numpy array (NaN -> NULL) or an Arrow
-    array (list columns, via ``_list_rows``).
+    """Run ``kernel(inputs) -> dict[out_col, array]`` per series, where
+    ``inputs`` is ``_kernel_inputs`` of ``in_cols`` in order-key order
+    and each output is a numpy array (NaN -> NULL) or an Arrow array
+    (list columns, via ``_list_rows``).
 
-    Two physical strategies:
+    One physical path: a hash exchange on ``by``, a sort within each
+    partition on ``(by, order)``, then one ``mapInArrow`` pass over each
+    sorted partition. The UDF cuts every record batch into series at the
+    rows where the key changes (the ``groupBy(by)`` grouping: NULL =
+    NULL, NaN = NaN, -0.0 = 0.0), converts the kernel inputs once per
+    batch, calls ``kernel`` on each series' slice and builds each output
+    column once per batch. A series longer than a batch is carried as a
+    list of batches and evaluated once when it ends. The order key sorts
+    ``ASC NULLS FIRST``, Spark's default and ``base.ordered_window``'s,
+    so an Arrow op after a native Window reuses that Window's sort. It
+    places NULL order keys, which already break the data contract, first
+    in their series.
+
+    Two frame shapes share that path:
 
     - PASSTHROUGH (narrow frames): every column rides through the Arrow
-      batch and the UDF appends the outputs — ONE shuffle (the groupBy),
-      no join. Chosen when no non-key column is a string/binary wider
-      than the keys (typical derived-series frames).
+      batch and the UDF appends the outputs — ONE shuffle, no join.
+      Chosen when no non-key column is a string/binary wider than the
+      keys (typical derived-series frames).
     - JOIN-BACK (wide frames, e.g. raw transcripts with full text):
       only (keys, order, inputs) cross the Python boundary; results join
       back on the (by, order) key columns so megabyte text/binary
@@ -153,23 +193,25 @@ def _apply_kernel(
     arrow_types = [to_arrow_type(f.dataType) for f in out_schema]
     debug_keys = bool(wide) and os.environ.get("ROLL_SPARK_DEBUG_KEYS") == "1"
 
-    # stable, NULLs last: the sort_values(kind="stable") order
-    sort_keys = [(c, "ascending") for c in order_l]
-
-    def fn(table):
+    def run(parts, starts):
+        """Evaluate the whole series that begin at row offsets ``starts``
+        of the concatenated record batches ``parts``."""
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        table = table.take(pc.sort_indices(
-            table, sort_keys=sort_keys, null_placement="at_end"))
-        if debug_keys:
-            _check_keys(table, order_l)
-        res = kernel(_kernel_inputs(table, in_cols))
+        table = pa.Table.from_batches(parts)
+        inputs = _kernel_inputs(table, in_cols)
+        ends = [*starts[1:], table.num_rows]
+        results = []
+        for s, e in zip(starts, ends):
+            if debug_keys:
+                _check_keys(table.slice(s, e - s), order_l)
+            results.append(kernel({c: v[s:e] for c, v in inputs.items()}))
         columns = [table.column(c) for c in keep]
         for (name, _), typ in zip(out_fields, arrow_types[len(keep):]):
-            v = res[name]
-            columns.append(v if isinstance(v, pa.Array)
-                           else pa.array(v, type=typ, from_pandas=True))
+            vals = [r[name] for r in results]
+            columns.append(
+                pa.concat_arrays(vals) if isinstance(vals[0], pa.Array)
+                else pa.array(np.concatenate(vals), type=typ, from_pandas=True))
         out = pa.table(columns, names=out_schema.names)
         # the JVM may send a passthrough type other than the one it
         # expects back (large_string under useLargeVarTypes)
@@ -177,9 +219,39 @@ def _apply_kernel(
             out = out.cast(pa.schema(
                 [pa.field(n, t) for n, t in zip(out_schema.names, arrow_types)]
             ))
-        return out
+        return out.to_batches()
 
-    res = src.groupBy(*by_l).applyInArrow(fn, schema=out_schema)
+    def fn(batches):
+        import pyarrow as pa
+
+        # the batches of the series still open at the end of the last one
+        carry, carry_rows = [], 0
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            starts = (np.flatnonzero(_key_changes(
+                [batch.column(c) for c in by_l])) + 1).tolist()
+            if not carry or _key_changes(
+                    [pa.concat_arrays([carry[-1].column(c)[-1:], batch.column(c)[:1]])
+                     for c in by_l])[0]:
+                starts.insert(0, 0)
+            if not starts:
+                carry.append(batch)
+                carry_rows += n
+                continue
+            cut = starts[-1]
+            done = carry + ([batch.slice(0, cut)] if cut else [])
+            if done:
+                yield from run(done, ([0] if carry else [])
+                               + [carry_rows + s for s in starts[:-1]])
+            carry, carry_rows = [batch.slice(cut)], n - cut
+        if carry:
+            yield from run(carry, [0])
+
+    res = (src.repartition(*by_l)
+           .sortWithinPartitions(*by_l, *order_l)
+           .mapInArrow(fn, out_schema))
     return df.join(res, on=keep, how="left") if wide else res
 
 
@@ -256,7 +328,7 @@ def roll_quantile(df, value, by, order, spec: RollSpec, *, out="roll_quantile"):
 
 
 def roll_quantiles(df, value, by, order, spec: RollSpec, ps, outs):
-    """Fused multi-p quantile: ONE grouped-map pass, one shared
+    """Fused multi-p quantile: ONE Arrow pass, one shared
     wavelet matrix per series or sort per weighted window block
     (K.conv_quantiles), one output column per probability."""
     weights = None if spec.weights is None else np.asarray(spec.weights)
@@ -373,7 +445,7 @@ def roll_lm_multi(
 
     Each fit applies its own complete-obs mask over (x_cols, that y) —
     exactly what the reference's per-column loop does — but all fits for
-    a series run inside ONE grouped-map UDF call, so the Arrow exchange
+    a series run inside ONE kernel call, so the Arrow exchange
     and the window materialization cost is paid once, not len(y_cols)
     times. Output columns: ``{prefix}{y}_coef array<double>,
     {prefix}{y}_r2, {prefix}{y}_se array<double>`` (+ ``_intercept``,

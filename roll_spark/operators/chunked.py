@@ -1,6 +1,6 @@
 """Salted/chunked evaluation for skewed series.
 
-Problem: the Window and applyInArrow paths put one whole series on one
+Problem: the Window and mapInArrow paths put one whole series on one
 task. A transcripts table at 10^12 turns has conversations 50-100x
 longer than the median (FIXTURES.md §1); one 10^9-turn conversation
 would pin a single executor core for the whole job.

@@ -1,4 +1,5 @@
-"""Vectorized numpy kernels for the Arrow (applyInArrow) path.
+"""Vectorized numpy kernels for the Arrow (mapInArrow) path; each call
+evaluates one whole series.
 
 The reference computes each statistic with an online and an offline
 kernel (src/roll.cpp:378-394). Streaming here (streaming/rolling.py)
@@ -597,9 +598,11 @@ def conv_lm_k(X, y, width, weights=None, min_obs=None, intercept=True):
     if not valid.any():
         return res
     Av, bv = A[valid], b[valid]
-    # singular rows -> NA (arma::solve no_approx behaviour)
-    dets = np.linalg.det(Av)
-    solvable = np.abs(dets) > 0
+    # arma::solve(no_approx): a system whose reciprocal 1-norm condition
+    # number 1/(|A|_1 |A^-1|_1) is below eps (or that is exactly
+    # singular, cond = inf) has no solution -> NA
+    with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
+        solvable = np.linalg.cond(Av, 1) * EPS <= 1
     coef = np.full_like(bv, np.nan)
     Ainv = np.full_like(Av, np.nan)
     if solvable.any():

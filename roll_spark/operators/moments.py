@@ -101,7 +101,7 @@ def roll_skew_kurt(
     out_kurt: str = "roll_kurt",
     out_jb: str | None = None,
 ) -> DataFrame:
-    """Fused skew + kurt: one grouped-map Arrow pass computes both
+    """Fused skew + kurt: one Arrow pass computes both
     stats from the same per-window central moments
     (kernels.conv_skew_kurt), vs 2x everything for two calls. A double
     NaN counts as missing, like NULL.

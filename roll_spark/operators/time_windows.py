@@ -110,7 +110,7 @@ def ewma_time(
 
     Arrow path (kernels.conv_ewma_time): sequential in time per series
     but fully vectorized (blocked rebased cumsums, no per-row Python),
-    one grouped-map pass per series. The op is EXPANDING, so the
+    one Arrow pass. The op is EXPANDING, so the
     overlap-padded chunking of operators.chunked does not apply (the
     overlap would be the whole prefix); instead the kernel is O(n) with
     O(1) state and a 10^9-turn conversation costs one linear pass.

@@ -424,7 +424,7 @@ def roll_quantiles(
     (tests/test_quantiles_multi.py asserts it).
 
     Non-equal weights or width > NATIVE_MAX_WIDTH route to the
-    fused Arrow kernel (kernels.conv_quantiles): ONE grouped-map pass
+    fused Arrow kernel (kernels.conv_quantiles): ONE Arrow pass
     sharing the per-series wavelet matrix (equal weights) or the
     per-block argsort (weighted) across every interior p, with p=0 /
     p=1 going through roll_min / roll_max exactly like single-p

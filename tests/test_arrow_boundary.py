@@ -1,12 +1,16 @@
 """The Python boundary of the Arrow operators: what crosses it unchanged
-(passthrough columns), how NULL and NaN map across it, the wide-frame
-key-contract checks, the worker daemon, and executor imports from a
-foreign working directory."""
+(passthrough columns), how NULL and NaN map across it, how a sorted
+partition is cut into series (series spanning record batches, NULL /
+NaN / signed-zero / two-column / struct keys, empty and one-series
+partitions), the plan shape, the wide-frame key-contract checks, the
+worker daemon, and executor imports from a foreign working directory."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -16,9 +20,12 @@ from pathlib import Path
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from roll_spark import _daemon
 from roll_spark.operators.arrow_ops import _apply_kernel
+from roll_spark.operators.base import ordered_window
+from roll_spark.operators.moments import roll_spearman
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -49,15 +56,26 @@ def _copy_x(cols):
     return {"y": cols["x"].copy()}
 
 
+@contextlib.contextmanager
+def _conf(spark, settings):
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k in settings:
+            spark.conf.unset(k)
+
+
 def test_narrow_passthrough_values_and_types(spark):
     """Every non-input column of a narrow frame — string key, timestamp,
     decimal, array, date, map, struct, NULLs included — comes back from
-    the grouped map with identical values and Spark types, and without
+    the Arrow pass with identical values and Spark types, and without
     a join."""
     df = _narrow(spark)
     res = _apply_kernel(df, ["x"], "series", "ts", [("y", "double")], _copy_x)
     plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInArrow" in plan and "Join" not in plan
+    assert "MapInArrow" in plan and "Join" not in plan
     assert res.schema.fields[:-1] == df.schema.fields
     key = ["series", "ts"]
     got = res.orderBy(*key).collect()
@@ -70,13 +88,9 @@ def test_passthrough_under_large_var_types(spark):
     """Under useLargeVarTypes the JVM sends strings as large_string but
     checks the result against string: passthrough columns are cast back."""
     df = _narrow(spark)
-    conf = "spark.sql.execution.arrow.useLargeVarTypes"
-    spark.conf.set(conf, "true")
-    try:
+    with _conf(spark, {"spark.sql.execution.arrow.useLargeVarTypes": "true"}):
         got = _apply_kernel(df, ["x"], "series", "ts", [("y", "double")],
                             _copy_x).orderBy("series", "ts").collect()
-    finally:
-        spark.conf.unset(conf)
     assert [r[:-1] for r in got] == \
         [tuple(r) for r in df.orderBy("series", "ts").collect()]
 
@@ -111,6 +125,112 @@ def test_nan_output_is_null_and_null_input_is_nan(spark):
     assert [r.d_in for r in got] == [1.001, None, 123.457, -0.125]
     assert all(r.f64 == 1.0 for r in got)
     assert all(r.all_nan is None for r in got)
+
+
+# three-row record batches, so series span batches; no partition coalescing,
+# so small frames keep empty partitions
+_SMALL_BATCHES = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
+}
+_STATS = [("pos", "double"), ("n", "double"), ("cs", "double")]
+
+
+def _series_stats(cols):
+    """Row position, series length and running sum: each depends on
+    the whole series and its order."""
+    n = len(cols["x"])
+    return {"pos": np.arange(n, dtype=np.float64),
+            "n": np.full(n, float(n)), "cs": np.cumsum(cols["x"])}
+
+
+def _assert_series_match_group_by(spark, df, by):
+    """_apply_kernel(by, order i) equals a per-series replay over the
+    groups of ``groupBy(by)``, under three-row record batches."""
+    with _conf(spark, _SMALL_BATCHES):
+        res = _apply_kernel(df, ["x"], by, "i", _STATS, _series_stats)
+        got = {r.i: (r.pos, r.n, r.cs) for r in res.collect()}
+        groups = df.groupBy(*by).agg(F.sort_array(
+            F.collect_list(F.struct("i", "x"))).alias("rows")).collect()
+    want = {}
+    for g in groups:
+        for pos, r in enumerate(g.rows):
+            want[r.i] = (float(pos), float(len(g.rows)),
+                         float(sum(q.x for q in g.rows[:pos + 1])))
+    assert len(groups) > 1
+    assert got == want
+
+
+def _keyed_frame(spark, keys, schema):
+    """Rows of ``keys`` (one entry per row) in shuffled order, with a
+    shuffled unique order key i and small integer values x."""
+    rng = np.random.default_rng(7)
+    order = rng.permutation(len(keys))
+    rows = [(*k, int(i), float(rng.integers(-9, 10)))
+            for k, i in zip(keys, order)]
+    rows = [rows[j] for j in rng.permutation(len(rows))]
+    return spark.createDataFrame(rows, f"{schema}, i int, x double")
+
+
+def test_double_key_series_match_group_by(spark):
+    """NULL = NULL, NaN = NaN and -0.0 = 0.0: a double series key groups
+    as groupBy does, and series of 1 to 12 rows span record batches."""
+    nan = float("nan")
+    keys = ([(0.0,), (-0.0,)] * 6 + [(nan,)] * 7 + [(None,)] * 5
+            + [(1.5,)] + [(2.5,)] * 4)
+    _assert_series_match_group_by(
+        spark, _keyed_frame(spark, keys, "k double"), ["k"])
+
+
+def test_two_column_key_series_match_group_by(spark):
+    """A (string, int) key with NULL in either column."""
+    keys = ([("a", 1)] * 6 + [("a", 2)] + [("b", 1)] * 4 + [(None, 1)] * 3
+            + [("a", None)] * 5 + [(None, None)] * 2)
+    _assert_series_match_group_by(
+        spark, _keyed_frame(spark, keys, "s string, g int"), ["s", "g"])
+
+
+def test_struct_key_series_match_group_by(spark):
+    """A struct key (no Arrow equality kernel): NULL struct, NULL field."""
+    keys = ([((1, "a"),)] * 5 + [((1, None),)] * 4 + [((2, "a"),)] * 2
+            + [(None,)] * 3)
+    _assert_series_match_group_by(
+        spark, _keyed_frame(spark, keys, "k struct<a:int, b:string>"), ["k"])
+
+
+def test_empty_and_one_series_partitions(spark):
+    """One series over four shuffle partitions: three partitions arrive
+    empty, one holds the whole series across four record batches."""
+    df = _keyed_frame(spark, [("only",)] * 10, "s string")
+    with _conf(spark, {**_SMALL_BATCHES, "spark.sql.shuffle.partitions": "4"}):
+        res = _apply_kernel(df, ["x"], "s", "i", _STATS, _series_stats)
+        assert sorted(res.rdd.glom().map(len).collect()) == [0, 0, 0, 10]
+        got = res.orderBy("i").collect()
+    xs = [r.x for r in df.orderBy("i").collect()]
+    assert [(r.pos, r.n, r.cs) for r in got] == [
+        (float(p), 10.0, float(sum(xs[:p + 1]))) for p in range(10)]
+
+
+def _plan_counts(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return (len(re.findall(r"Exchange (?:hash|range|SinglePartition)", plan)),
+            len(re.findall(r"\bSort \[", plan)), plan.count("MapInArrow"))
+
+
+def test_plan_one_exchange_one_sort(spark):
+    """A narrow-frame Arrow op plans one Exchange, one Sort and one
+    MapInArrow; after a native lag Window it reuses that Window's
+    exchange and sort (its order key sorts ASC NULLS FIRST too)."""
+    df = _narrow(spark)
+    res = _apply_kernel(df, ["x"], "series", "ts", [("y", "double")], _copy_x)
+    assert _plan_counts(res) == (1, 1, 1)
+
+    lagged = df.withColumn(
+        "x_lag", F.lag("x").over(ordered_window("series", "ts")))
+    res = roll_spearman(lagged, "x", "x_lag", "series", "ts", 3, min_obs=2,
+                        out="s")
+    assert _plan_counts(res) == (1, 1, 1)
+    assert "Window [" in res._jdf.queryExecution().executedPlan().toString()
 
 
 def _wide(spark, ts_vals):

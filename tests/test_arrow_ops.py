@@ -309,13 +309,13 @@ def test_quantile_width_dispatch(grid_df):
                           NATIVE_MAX_WIDTH, 0.5, min_obs=1, out="q")
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" in plan_small
-    assert "FlatMapGroupsInArrow" not in plan_small
+    assert "MapInArrow" not in plan_small
 
     big = roll_quantile(grid_df, "x", "series_id", "i",
                         NATIVE_MAX_WIDTH + 1, 0.5, min_obs=1, out="q")
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" not in plan_big
-    assert "FlatMapGroupsInArrow" in plan_big
+    assert "MapInArrow" in plan_big
 
 
 @pytest.mark.parametrize("op", [roll_mean, roll_sum])
@@ -329,8 +329,8 @@ def test_sum_mean_width_dispatch(grid_df, op):
         return out._jdf.queryExecution().executedPlan().toString()
 
     at, past = plan(NATIVE_MAX_WIDTH), plan(NATIVE_MAX_WIDTH + 1)
-    assert "Window [" in at and "FlatMapGroupsInArrow" not in at
-    assert "FlatMapGroupsInArrow" in past and "Window [" not in past
+    assert "Window [" in at and "MapInArrow" not in at
+    assert "MapInArrow" in past and "Window [" not in past
 
 
 @pytest.mark.parametrize("op,agg", [(roll_mean, "avg"), (roll_sum, "sum")])
@@ -352,7 +352,7 @@ def test_wide_sum_mean_keep_exact_types_native(spark, op, agg):
     for col in ("v", "d"):
         res = op(df, col, "g", "i", width, min_obs=1, out="m")
         plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "Window [" in plan and "FlatMapGroupsInArrow" not in plan, col
+        assert "Window [" in plan and "MapInArrow" not in plan, col
         want_type = df.select(getattr(F, agg)(col)).schema[0].dataType
         assert res.schema["m"].dataType == want_type, col
     if op is roll_sum:

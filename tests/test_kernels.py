@@ -157,6 +157,39 @@ def test_lm_k1_matches_oracle_lm():
         assert_close(res["se_intercept"], want["se_intercept"], f"k1 sei w={width}")
 
 
+@pytest.mark.parametrize("k", [2, 3])
+def test_lm_k_numerically_singular_window_is_na(k):
+    """arma::solve(no_approx): a window whose reciprocal 1-norm condition
+    number 1/(|A|_1 |A^-1|_1) is below eps emits NA in every output,
+    even when float64 rounding leaves det(A) != 0; every other window
+    is the plain np.linalg.solve of its normal equations, bit for bit."""
+    rng = np.random.default_rng(2)
+    X = np.round(rng.normal(size=(20, k)), 2)
+    y = np.round(rng.normal(size=20), 2)
+    # rows 0-9: the last regressor is a fixed combination of the others
+    X[:10, k - 1] = X[:10, : k - 1] @ (0.1 * np.arange(1, k))
+    res = K.conv_lm_k(X, y, 6, min_obs=6, intercept=True)
+
+    _, _, _, _, SS = K._comoments(np.column_stack([X, y]), 6, None, True)
+    A, b = SS[:, :k, :k], SS[:, :k, k]
+    full = np.arange(5, 20)  # the rows with a full window
+    rcond = np.array([1 / (np.linalg.norm(A[i], 1)
+                           * np.linalg.norm(np.linalg.inv(A[i]), 1))
+                      for i in full])
+    singular = full[rcond < K.EPS]
+    # the collinear windows are singular, yet det(A) != 0 on every one
+    assert set(range(5, 10)) <= set(singular)
+    assert (np.abs(np.linalg.det(A[5:10])) > 0).all()
+    for key in res:
+        assert np.isnan(res[key][singular]).all(), key
+    solved = np.setdiff1d(full, singular)
+    assert set(range(15, 20)) <= set(solved)
+    np.testing.assert_array_equal(res["coef"][solved],
+                                  np.linalg.solve(A[solved], b[solved]))
+    for key in res:
+        assert not np.isnan(res[key][solved]).any(), key
+
+
 def test_online_equals_offline_mean():
     """The reference's own equivalence axis (test-roll.R): online
     recursion == offline recompute, equal + exponential weights."""

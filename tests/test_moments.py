@@ -103,7 +103,7 @@ def test_skew_plan_one_exchange(spark):
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 1
     assert plan.count("Sort") <= 1
-    assert "FlatMapGroupsInArrow" in plan
+    assert "MapInArrow" in plan
 
 
 def test_mad_arrow(spark):

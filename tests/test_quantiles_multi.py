@@ -101,7 +101,7 @@ def test_fused_arrow_large_width_equals_per_p(spark):
 
 def test_fused_weighted_endpoints_and_plan(spark):
     """Weighted fused path: endpoints go through roll_min/roll_max, the
-    interior ps share ONE grouped-map pass (exactly one FlatMapGroups
+    interior ps share ONE mapInArrow pass (exactly one MapInArrow
     for 3 interior ps), and every column matches its per-p twin."""
     pdf = _fixture(200)
     sdf = spark.createDataFrame(pdf)
@@ -111,7 +111,7 @@ def test_fused_weighted_endpoints_and_plan(spark):
     res = roll_quantiles(sdf, "v", "k", "o", 5, ps, weights=w, outs=outs)
     assert res.columns[-5:] == outs
     plan = res._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInArrow") == 1
+    assert plan.count("MapInArrow") == 1
     got = res.toPandas().sort_values(["k", "o"]).reset_index(drop=True)
     for p, o in zip(ps, outs):
         single = (

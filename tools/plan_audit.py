@@ -31,13 +31,13 @@ EXPECT = {
     "roll_idxmax_w10": dict(max_exchange=1, max_sort=1),
     "roll_cov_w10": dict(max_exchange=1, max_sort=1),
     "roll_lm_w20": dict(max_exchange=1, max_sort=1, max_window=2),
-    # width > NATIVE_MAX_WIDTH -> Arrow path (O(n) conv_mean): one groupBy
+    # width > NATIVE_MAX_WIDTH -> Arrow path (O(n) conv_mean): one exchange
     "expanding_mean": dict(max_exchange=1, max_sort=1),
-    "roll_mean_exp_w10": dict(max_exchange=1),       # Arrow path: one groupBy
+    "roll_mean_exp_w10": dict(max_exchange=1),       # Arrow path: one exchange
     "roll_median_w400": dict(max_exchange=1),        # large width -> Arrow path
-    "roll_cov_matrix_w10": dict(max_exchange=3),     # window(lag) + groupBy + join-back
-    "roll_cov_xy_w10": dict(max_exchange=3),         # window(lag/lead) + groupBy + join-back
-    "roll_lm_multiy_w20": dict(max_exchange=3),      # one grouped-map pass for BOTH fits
+    "roll_cov_matrix_w10": dict(max_exchange=3),     # window(lag) + Arrow pass + join-back
+    "roll_cov_xy_w10": dict(max_exchange=3),         # window(lag/lead) + Arrow pass + join-back
+    "roll_lm_multiy_w20": dict(max_exchange=3),      # one Arrow pass for BOTH fits
     "tier_1m_stats": dict(max_exchange=1, max_sort=0),
     "tier_1h_cascade": dict(max_exchange=2, max_sort=0),  # raw->1m, 1m->1h
     "tier_1d_cascade": dict(max_exchange=3, max_sort=0),
@@ -82,9 +82,9 @@ EXPECT = {
     "sessionize_1h": dict(max_exchange=1, max_sort=1, max_window=2),
     # + one partial-agg exchange for the per-session groupBy
     "session_stats_1h": dict(max_exchange=2, max_sort=1, max_window=2),
-    # fused skew/kurt: Arrow path (two-pass conv_skew_kurt), one groupBy
+    # fused skew/kurt: Arrow path (two-pass conv_skew_kurt), one exchange
     "roll_skew_kurt_w20": dict(max_exchange=1, max_sort=1, max_window=2),
-    "roll_mad_w10": dict(max_exchange=1),            # Arrow path: one groupBy
+    "roll_mad_w10": dict(max_exchange=1),            # Arrow path: one exchange
     "roll_nunique_w10": dict(max_exchange=1, max_sort=1, max_window=1),
     # OHLC bars: ONE partial-agg groupBy, zero sorts, zero windows
     "tier_1h_ohlc": dict(max_exchange=1, max_sort=0, max_window=0),
@@ -99,7 +99,7 @@ EXPECT = {
     "roll_acf_w20": dict(max_exchange=1, max_sort=1, max_window=2),
     "roll_percentrank_w20": dict(max_exchange=1, max_sort=1, max_window=1),
     "roll_trimmean_w10": dict(max_exchange=1, max_sort=1, max_window=1),
-    # entropy: factorize + Arrow kernel behind one groupBy exchange;
+    # entropy: factorize + Arrow kernel behind one exchange;
     # the events scan legitimately reads event_type here
     "roll_entropy_w20": dict(max_exchange=1, max_sort=1, max_window=1),
     # Spearman: the lag's offset WindowExec and the Arrow kernel's
@@ -151,8 +151,8 @@ EXPECT = {
     "gapfill_linear_1h": dict(max_exchange=2, max_sort=1, max_window=1),
     # exact per-bucket median: one hash agg (percentile is declarative)
     "tier_1m_p50": dict(max_exchange=1, max_sort=0, max_window=0),
-    # expanding time-decay kernels: one grouped-map pass (the sort is
-    # the applyInArrow in-partition group ordering, not a shuffle)
+    # expanding time-decay kernels: one Arrow pass (the sort is the
+    # mapInArrow in-partition (series, order) ordering, not a shuffle)
     "ewma_halflife_7d": dict(max_exchange=1, max_sort=1, max_window=0),
     "decayed_count_1d": dict(max_exchange=1, max_sort=1, max_window=0),
     "dedup_exact": dict(max_exchange=1, max_sort=0, max_window=0),
