@@ -102,11 +102,11 @@ def q_roll_median_w5(spark, sf_dir):
 
 
 def q_roll_quantiles_multi_w5(spark, sf_dir):
-    """Five quantiles (incl. min/median/max) from ONE sorted window —
-    the fused multi-p path (roll_quantiles).  The p=0.5 column is
-    bit-identical to q_roll_median_w5's output, so this query
-    supersedes the old in-window median gate while also exercising the
-    p=0/p=1 array-min/max arms and the shared-sort fusion."""
+    """Five quantiles (incl. min/median/max) — the fused multi-p path
+    (roll_quantiles): all five ps share one Arrow pass and one wavelet
+    matrix per series, p=0/p=1 select its smallest/largest observed
+    value. The p=0.5 column is bit-identical to q_roll_median_w5's
+    output, so this query supersedes the old in-window median gate."""
     df = roll_quantiles(
         _events(spark, sf_dir), "value", "user_id", "ts", 5,
         [0.0, 0.25, 0.5, 0.75, 1.0], min_obs=1,
@@ -129,8 +129,8 @@ def q_roll_quantile_p25_w10(spark, sf_dir):
 
 def q_roll_iqr_w10(spark, sf_dir):
     """Rolling interquartile range — both exact-HF2 quartiles off the
-    fused roll_quantiles single sorted window (as expensive as one
-    rolling median)."""
+    fused roll_quantiles Arrow pass (as expensive as one rolling
+    median)."""
     from roll_spark.operators.moments import roll_iqr
 
     df = roll_iqr(_events(spark, sf_dir), "value", "user_id", "ts", 10,
@@ -968,10 +968,9 @@ def q_roll_quantile_exp_w10(spark, sf_dir):
 
 
 def q_roll_median_w400(spark, sf_dir):
-    """Large-width equal-weight median: width 400 exceeds
-    NATIVE_MAX_WIDTH, so this routes to the Arrow wavelet-matrix
-    kernel (never the per-row collect_list/array_sort WindowExec, which
-    is O(w) JVM heap per row — an OOM at tick-scale widths)."""
+    """Large-width equal-weight median: the Arrow wavelet-matrix kernel,
+    O(n log n) per series at any width, the same path as
+    q_roll_median_w5."""
     df = roll_median(_events(spark, sf_dir), "value", "user_id", "ts", 400,
                      min_obs=1, out="s")
     return _sel(df, "s", "med400")
@@ -1663,8 +1662,9 @@ def q_roll_mad_w10(spark, sf_dir):
 
 
 def q_roll_nunique_w10(spark, sf_dir):
-    """Rolling distinct-value count: collect_list + array_distinct,
-    JVM-side only (whole-stage codegen, zero Python)."""
+    """Rolling distinct-value count: one Arrow pass over the values'
+    integer codes, one wavelet-matrix rank count per row
+    (kernels.conv_nunique)."""
     from roll_spark.operators.moments import roll_nunique
 
     df = roll_nunique(_events(spark, sf_dir), "value", "user_id", "ts", 10,
@@ -1748,7 +1748,9 @@ def q_roll_acf_w20(spark, sf_dir):
 
 def q_roll_percentrank_w20(spark, sf_dir):
     """Windowed percent rank of the current value (the trailing-window
-    twin of SQL PERCENT_RANK): collect_list + JVM higher-order filter."""
+    twin of SQL PERCENT_RANK): one Arrow pass over the values'
+    order-keeping codes, one wavelet-matrix rank count per row
+    (kernels.conv_percentrank)."""
     from roll_spark.operators.moments import roll_percentrank
 
     df = roll_percentrank(_events(spark, sf_dir), "value", "user_id", "ts", 20,
@@ -1774,9 +1776,9 @@ def q_tier_1h_top_event(spark, sf_dir):
 
 def q_roll_trimmean_w10(spark, sf_dir):
     """Rolling 20%-trimmed mean (robust location for latency-spike
-    telemetry): sorted-window slice + JVM higher-order aggregate; the
-    trim count floor(0.2 * n_obs) is the same float64 product on the
-    Spark, kernel, and DuckDB sides."""
+    telemetry): the blocked Arrow kernel sorts each window and sums the
+    kept slice; the trim count floor(0.2 * n_obs) is the same float64
+    product in the kernel and on the DuckDB side."""
     from roll_spark.operators.moments import roll_trimmed_mean
 
     df = roll_trimmed_mean(_events(spark, sf_dir), "value", "user_id", "ts",

@@ -1,6 +1,8 @@
 """Arrow (mapInArrow) execution of the roll_* surface — the scale
-path for weighted / exponential-decay inputs, sums, means and exact
-quantiles at large widths, and k-regressor roll_lm.
+path for weighted / exponential-decay inputs, sums and means at large
+widths, every sorted-window statistic (exact quantiles, percent rank,
+distinct counts, trimmed mean, ...) at any width, and k-regressor
+roll_lm.
 
 Physical shape: one hash exchange on the series key, a sort within each
 partition on (series key, order key), then one mapInArrow pass per

@@ -17,8 +17,9 @@ carries the trailing raw window and reruns the batch kernels over
   the exact two-pass centred (co)moments of every column pair under
   one joint mask; and ``_windows``, the blocked trailing windows every
   strided kernel (weighted quantiles, MAD, ranks, skew/kurt, ...)
-  reduces. Equal-weight quantiles select from a wavelet matrix in
-  O(n log n) at any width.
+  reduces. Equal-weight quantiles select from a wavelet matrix, and
+  percent rank and distinct counts count ranks on one, in O(n log n)
+  at any width.
 - ``online_mean`` and ``online_ewma_time``, the two sequential carries
   left. ``online_ewma_time`` is ewma's stream carry (itself a
   vectorized scan). ``online_mean``, the reference's lambda recursion
@@ -418,7 +419,8 @@ def _quantile_block_multi(wins, pps, wts, min_obs):
         k = np.where(has_true, last_true, 0)
         val_hi = sv[rows, k]
         mass_k = mass[rows, k]
-        exact = np.abs(mass_k - pp) <= SQRT_EPS
+        # p = 1 (pp = 0) is the largest value, never averaged
+        exact = (np.abs(mass_k - pp) <= SQRT_EPS) & (pp > 0.0)
         k_lo = np.maximum(k - 1, 0)
         val_lo = sv[rows, k_lo]
         lo_valid = (k - 1 >= 0) & ~np.isnan(val_lo)
@@ -442,6 +444,14 @@ def _equal_weight_c(pos, pp):
         up = (c / pos < pp) & (c < pos)
         c = np.where(up, c + 1, c)
     return np.minimum(c, pos)
+
+
+def _window_bounds(x, width):
+    """Each row's trailing window ``[s, e)`` and its observed count."""
+    e = np.arange(1, len(x) + 1)
+    s = np.maximum(e - width, 0)
+    seen = np.concatenate([[0], np.cumsum(~np.isnan(x))])
+    return s, e, seen[e] - seen[s]
 
 
 def _wavelet_matrix(x):
@@ -483,6 +493,24 @@ def _wm_select(zeros, s, e, k):
     return r
 
 
+def _wm_count(zeros, s, e, t):
+    """How many positions in [s, e) hold a rank below ``t``, vectorized
+    over rows: one top-down descent of the wavelet matrix. At a 1 bit
+    of ``t`` the positions whose rank has a 0 there are all below it and
+    are counted; the descent then follows the bit. A threshold of
+    2**levels (n a power of two) lies above every rank: it counts the
+    whole range up front, and its low bits, all 0, add nothing."""
+    nbits = len(zeros)
+    cnt = np.where(t >> nbits > 0, e - s, 0)
+    for lvl, z in enumerate(zeros):
+        one = (t >> (nbits - 1 - lvl)) & 1 == 1
+        zs, ze = z[s], z[e]
+        cnt += np.where(one, ze - zs, 0)
+        s = np.where(one, z[-1] + s - zs, zs)
+        e = np.where(one, z[-1] + e - ze, ze)
+    return cnt
+
+
 def _quantiles_equal(x, width, pps, min_obs):
     """Equal-weight HF2 selection at every upper mass in ``pps``. The
     top-down mass scan reduces to the order statistic k = n_obs - c,
@@ -491,22 +519,18 @@ def _quantiles_equal(x, width, pps, min_obs):
     (p, n) combos). The k-th and (k-1)-th smallest of each window
     ``[max(0, i-w+1), i+1)`` come from one wavelet-matrix descent, so
     the cost is O(n log n) per series at any width."""
-    n = len(x)
     sv, zeros = _wavelet_matrix(x)
-    e = np.arange(1, n + 1)
-    s = np.maximum(e - width, 0)
-    seen = np.concatenate([[0], np.cumsum(~np.isnan(x))])
-    n_obs = seen[e] - seen[s]
+    s, e, n_obs = _window_bounds(x, width)
     pos = np.maximum(n_obs, 1)
     gate_ok = n_obs >= max(min_obs, 1)
-    out = np.empty((n, len(pps)))
+    out = np.empty((len(x), len(pps)))
     for j, pp in enumerate(pps):
         c = _equal_weight_c(pos, pp)
         k = pos - c
         val_hi = sv[_wm_select(zeros, s, e, k)]
         val_lo = sv[_wm_select(zeros, s, e, np.maximum(k - 1, 0))]
         with np.errstate(invalid="ignore", divide="ignore"):
-            exact = np.abs(c / pos - pp) <= SQRT_EPS
+            exact = (np.abs(c / pos - pp) <= SQRT_EPS) & (pp > 0.0)
         # k <= n_obs - 1, so the (k-1)-th smallest is always observed
         q = np.where(exact & (k >= 1), (val_hi + val_lo) / 2.0, val_hi)
         out[:, j] = np.where(gate_ok, q, np.nan)
@@ -1064,53 +1088,53 @@ def window_idxminmax(x, width, mode="min", min_obs=1, r0=0):
 
 
 def conv_percentrank(x, width, weights=None, min_obs=None, na_restore=False):
-    """Large-width twin of the native roll_percentrank: blocked strided
-    windows, one vectorized <=-comparison per block — fixed memory
-    budget regardless of width (the native collect_list form holds a
-    width-long array per row in JVM heap)."""
+    """Rolling max-rank percent rank of each row's value in its window,
+    (#{v <= x_i} - 1) / (n_obs - 1): the count is one rank query on the
+    series' wavelet matrix, with the threshold rank searchsorted(sorted,
+    x_i, "right") (NaN ranks last, so it never counts), O(n log n) per
+    series at any width."""
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    out = np.full(len(x), np.nan)
-    for b0, b1, wins in _windows(x, width):
-        cur = x[b0:b1]
-        n_obs = wins.shape[1] - np.isnan(wins).sum(axis=1)
-        # NaN <= cur is False, so NaN slots never count
-        le = (wins <= cur[:, None]).sum(axis=1)
-        ok = ~np.isnan(cur) & (n_obs >= max(min_obs, 1)) & (n_obs >= 2)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            pr = (le - 1.0) / (n_obs - 1.0)
-        out[b0:b1] = np.where(ok, pr, np.nan)
+    s, e, n_obs = _window_bounds(x, width)
+    sv, zeros = _wavelet_matrix(x)
+    le = _wm_count(zeros, s, e, np.searchsorted(sv, x, "right"))
+    ok = ~np.isnan(x) & (n_obs >= max(min_obs, 1)) & (n_obs >= 2)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        out = np.where(ok, (le - 1.0) / (n_obs - 1.0), np.nan)
     return _restore(out, x, na_restore)
 
 
 def conv_nunique(x, width, weights=None, min_obs=None, na_restore=False):
-    """Large-width twin of the native roll_nunique: sort each window
-    (NaNs last) and count value boundaries among the observed prefix.
-    Weights have no meaning for a cardinality and are rejected."""
+    """Rolling distinct count: the rows of a window whose previous equal
+    value (-0.0 equals 0.0) lies before the window. That is one rank
+    query on a wavelet matrix of previous-occurrence indices, with NaN
+    rows at index n so they never count: O(n log n) per series at any
+    width. Weights have no meaning for a cardinality and are rejected."""
     if weights is not None:
         raise ValueError("conv_nunique: weighted distinct count is not defined")
     min_obs = width if min_obs is None else min_obs
     x = np.asarray(x, dtype=np.float64)
-    out = np.full(len(x), np.nan)
-    for b0, b1, wins in _windows(x, width):
-        sv = np.sort(wins, axis=1)
-        n_obs = wins.shape[1] - np.isnan(sv).sum(axis=1)
-        # adjacent-inequality among observed slots; NaN != NaN is True,
-        # so mask the NaN tail explicitly
-        neq = (sv[:, 1:] != sv[:, :-1]) & ~np.isnan(sv[:, 1:])
-        nun = neq.sum(axis=1) + (n_obs > 0)
-        out[b0:b1] = np.where(n_obs >= max(min_obs, 1), nun.astype(np.float64), np.nan)
+    n = len(x)
+    s, e, n_obs = _window_bounds(x, width)
+    order = np.argsort(x, kind="stable")
+    sx = x[order]
+    prev = np.full(n, -1)
+    tie = sx[1:] == sx[:-1]  # NaN != NaN
+    prev[order[1:][tie]] = order[:-1][tie]
+    prev[np.isnan(x)] = n
+    sp, zeros = _wavelet_matrix(prev)
+    nun = _wm_count(zeros, s, e, np.searchsorted(sp, s, "left"))
+    out = np.where(n_obs >= max(min_obs, 1), nun.astype(np.float64), np.nan)
     return _restore(out, x, na_restore)
 
 
 def conv_trimmed_mean(x, width, alpha=0.2, weights=None, min_obs=None,
                       na_restore=False):
-    """Large-width twin of the native roll_trimmed_mean: sort each
-    window (NaNs last), drop floor(alpha * n_obs) observed values from
-    EACH end, average the rest via one cumsum per block. alpha in
-    [0, 0.5) guarantees at least one surviving value per non-empty
-    window. Weights are rejected (a weighted trimmed mean has no agreed
-    definition)."""
+    """Rolling trimmed mean: sort each window (NaNs last), drop
+    floor(alpha * n_obs) observed values from EACH end and average the
+    kept slice, summed directly. alpha in [0, 0.5) guarantees at least
+    one surviving value per non-empty window. Weights are rejected (a
+    weighted trimmed mean has no agreed definition)."""
     if weights is not None:
         raise ValueError("conv_trimmed_mean: weighted trim is not defined")
     if not 0.0 <= alpha < 0.5:
@@ -1122,7 +1146,7 @@ def conv_trimmed_mean(x, width, alpha=0.2, weights=None, min_obs=None,
         sv = np.sort(wins, axis=1)
         nan_mask = np.isnan(sv)
         n_obs = wins.shape[1] - nan_mask.sum(axis=1)
-        # same float64 product+floor as the Spark/DuckDB sides
+        # same float64 product+floor as the DuckDB oracle
         k = np.floor(alpha * n_obs).astype(np.int64)
         m = n_obs - 2 * k
         # sum the kept slice DIRECTLY via a position mask — a

@@ -5,11 +5,12 @@ its highest moments — roll_vec.h:2114) with the third/fourth standardized
 moments and rolling distinct counts that a transcript-analytics tier
 needs (burstiness / heavy-tail detection on latency + value series).
 
-Execution: acf runs on the native Catalyst path; nunique, percentrank
-and trimmed mean run native up to NATIVE_MAX_WIDTH and on their Arrow
-kernels above it; skew/kurt, spearman and entropy run only their Arrow
-kernels (spearman's and entropy's O(w^2) JVM higher-order-function forms
-were slower at every width measured).
+Execution: acf runs on the native Catalyst path; every sorted-window
+statistic (nunique, percentrank, trimmed mean, spearman, entropy) and
+skew/kurt runs only its Arrow kernel, at every width. Their JVM forms
+sort or scan a width-long array per row and were slower at every width
+measured, or tied only below ~20. On these paths a double NaN counts
+as missing, like NULL; nunique returns int and the others double.
 
 Numerical strategy for skew/kurt: power sums about a fixed centre lose
 ~(|window mean - centre| / sd)^k digits to cancellation, and in a
@@ -33,6 +34,9 @@ window), plus the engine-wide min_obs / na_restore gates.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as TT
@@ -44,7 +48,7 @@ from roll_spark.operators.base import (
     gate,
     rolling_window,
 )
-from roll_spark.operators.window_ops import NATIVE_MAX_WIDTH, _spec
+from roll_spark.operators.window_ops import _spec
 
 
 @complete_obs_maskable
@@ -136,30 +140,19 @@ def roll_nunique(
     na_restore: bool = False,
     out: str = "roll_nunique",
 ) -> DataFrame:
-    """Rolling distinct-value count over the trailing window.
-
-    collect_list drops NULLs (matching the engine-wide observed-values
-    convention), array_distinct dedups JVM-side — no Python, no extra
-    shuffle beyond the one hash exchange every window op pays.  The
-    collect_list form holds a width-long array per row in JVM heap, so
-    widths above NATIVE_MAX_WIDTH route to the blocked Arrow
-    kernel (kernels.conv_nunique), same dispatch rule as roll_quantile.
+    """Rolling distinct-value count over the trailing window, on any
+    scalar column type: the values' integer codes (see :func:`_coded`)
+    run kernels.conv_nunique, one wavelet-matrix rank count per row,
+    O(n log n) per series at any width. NULL and a double NaN are
+    missing; -0.0 equals 0.0.
     """
-    spec = _spec(width, min_obs, na_restore, None)
-    if width > NATIVE_MAX_WIDTH:
-        from roll_spark.operators import kernels as K
-        from roll_spark.operators.arrow_ops import _one
+    from roll_spark.operators import kernels as K
 
-        res = _one(df, value, by, order, spec, K.conv_nunique, out)
-        o = F.col(out)
-        return res.withColumn(
-            out, F.when(o.isNotNull() & ~F.isnan(o), o.cast("int"))
-        )
-    w = rolling_window(by, order, width)
-    v = F.col(value)
-    n_obs = F.count(v).over(w)
-    stat = F.size(F.array_distinct(F.collect_list(v).over(w))).cast("int")
-    return df.withColumn(out, gate(spec, v, stat, n_obs))
+    spec = _spec(width, min_obs, na_restore, None)
+    res = _coded(df, value, by, order, out, lambda x: K.conv_nunique(
+        x, width, min_obs=spec.effective_min_obs, na_restore=na_restore))
+    o = F.col(out)
+    return res.withColumn(out, F.when(o.isNotNull() & ~F.isnan(o), o.cast("int")))
 
 
 def roll_acf(
@@ -266,31 +259,21 @@ def roll_percentrank(
     window: (#{observed v <= x_t} - 1) / (n_obs - 1), in [0, 1] — a
     distribution-free "how extreme is this turn" score.  Tie convention
     is MAX-rank (counts v <= x), so tied values all score at the top of
-    their tie group; SQL PERCENT_RANK uses min-rank (#{v < x}).  All
-    three paths (native HOF, Arrow kernel, DuckDB oracle) share the
-    max-rank convention.
+    their tie group; SQL PERCENT_RANK uses min-rank (#{v < x}). The
+    kernel and the DuckDB oracle share the max-rank convention.
 
-    collect_list + a JVM higher-order filter; NULL when the current
-    value is missing or n_obs < max(min_obs, 2). Widths above
-    NATIVE_MAX_WIDTH route to the blocked Arrow kernel
-    (kernels.conv_percentrank) — fixed memory budget at any width.
+    Any orderable column type: the values' order-keeping integer codes
+    (see :func:`_coded`) run kernels.conv_percentrank, one wavelet-matrix
+    rank count per row, O(n log n) per series at any width. NULL when
+    the current value is missing or n_obs < max(min_obs, 2); a double
+    NaN is missing, like NULL.
     """
-    spec = _spec(width, min_obs, na_restore, None)
-    if width > NATIVE_MAX_WIDTH:
-        from roll_spark.operators import kernels as K
-        from roll_spark.operators.arrow_ops import _one
+    from roll_spark.operators import kernels as K
 
-        return _one(df, value, by, order, spec, K.conv_percentrank, out)
-    w = rolling_window(by, order, width)
-    v = F.col(value)
-    n_obs = F.count(v).over(w)
-    arr = F.collect_list(v).over(w)
-    le = F.size(F.filter(arr, lambda e: e <= v))
-    stat = F.when(
-        v.isNotNull() & (n_obs >= 2),
-        (le - F.lit(1)).cast("double") / (n_obs - F.lit(1)),
-    )
-    return df.withColumn(out, gate(spec, v, stat, n_obs, need_two=True))
+    spec = _spec(width, min_obs, na_restore, None)
+    return _coded(df, value, by, order, out, lambda x: K.conv_percentrank(
+        x, width, min_obs=spec.effective_min_obs, na_restore=na_restore),
+        ordered=True)
 
 
 @complete_obs_maskable
@@ -313,34 +296,20 @@ def roll_trimmed_mean(
 
     alpha in [0, 0.5): at least one value always survives, so the only
     NULL gates are min_obs / na_restore. The trim count uses the same
-    float64 ``floor(alpha * n)`` on every path (native, Arrow kernel,
-    DuckDB oracle), so boundary fills agree bit-for-bit.
+    float64 ``floor(alpha * n)`` in the kernel and the DuckDB oracle, so
+    boundary fills agree bit-for-bit.
 
-    Native path (collect_list + array_sort + slice + aggregate, all JVM
-    higher-order functions) holds a width-long array per row, so widths
-    above NATIVE_MAX_WIDTH dispatch to the blocked Arrow
-    kernel (kernels.conv_trimmed_mean) — the roll_quantile rule.
+    Runs the blocked Arrow kernel (kernels.conv_trimmed_mean) at every
+    width; a double NaN counts as missing, like NULL, and the output is
+    double for every input type.
     """
     if not 0.0 <= alpha < 0.5:
         raise ValueError(f"alpha must be in [0, 0.5), got {alpha}")
-    spec = _spec(width, min_obs, na_restore, None)
-    if width > NATIVE_MAX_WIDTH:
-        from roll_spark.operators import kernels as K
-        from roll_spark.operators.arrow_ops import _one
+    from roll_spark.operators import kernels as K
+    from roll_spark.operators.arrow_ops import _one
 
-        return _one(df, value, by, order, spec, K.conv_trimmed_mean, out,
-                    alpha=alpha)
-    w = rolling_window(by, order, width)
-    v = F.col(value)
-    arr = F.array_sort(F.collect_list(v).over(w))
-    n = F.size(arr)
-    k = F.floor(F.lit(float(alpha)) * n).cast("int")
-    m = n - 2 * k
-    total = F.aggregate(
-        F.slice(arr, k + 1, m), F.lit(0.0), lambda acc, e: acc + e
-    )
-    stat = total / m
-    return df.withColumn(out, gate(spec, v, stat, n))
+    spec = _spec(width, min_obs, na_restore, None)
+    return _one(df, value, by, order, spec, K.conv_trimmed_mean, out, alpha=alpha)
 
 
 def roll_spearman(
@@ -395,30 +364,48 @@ def roll_entropy(
     drives the entropy of its event/tool types toward 0 (+0.0), while
     varied behavior approaches ln(#distinct).
 
-    Works on any scalar column type (strings, integers, booleans,
-    dates, timestamps, decimals, doubles): each series batch is
-    factorized to integer codes that run the Arrow kernel
-    (kernels.conv_entropy, O(w log w) per row) at every width. Bigint
-    and decimal values cross as strings, so distinct values never merge
-    in a float64 cast. A double NaN is missing, like NULL.
+    Works on any scalar column type: the values' integer codes (see
+    :func:`_coded`) run the Arrow kernel (kernels.conv_entropy,
+    O(w log w) per row) at every width. A double NaN is missing, like
+    NULL.
     """
     from roll_spark.operators import kernels as K
-    from roll_spark.operators.arrow_ops import _apply_kernel
 
     spec = _spec(width, min_obs, na_restore, None)
-    src = value
-    if isinstance(df.schema[value].dataType, (TT.LongType, TT.DecimalType)):
-        src = f"__ent_{out}"
+    return _coded(df, value, by, order, out, lambda x: K.conv_entropy(
+        x, width, min_obs=spec.effective_min_obs, na_restore=na_restore))
+
+
+def _coded(df, value, by, order, out, fn, ordered=False):
+    """``df`` plus the double column ``out`` = ``fn(codes)`` per series,
+    where ``codes`` factorizes the series' values of ``value`` (any
+    scalar type) to float64 integer codes: equal values share a code, a
+    missing value (NULL, or a double NaN) is NaN, and -0.0 equals 0.0.
+    With ``ordered`` the codes also compare as the values do. Bigint and
+    decimal values cross as strings, so distinct values never merge in
+    a float64 cast; ordered, they are ranked as exact numbers."""
+    from roll_spark.operators.arrow_ops import _apply_kernel
+
+    src, exact = value, None
+    dtype = df.schema[value].dataType
+    if isinstance(dtype, (TT.LongType, TT.DecimalType)):
+        src = f"__codes_{out}"
         df = df.withColumn(src, F.col(value).cast("string"))
+        exact = int if isinstance(dtype, TT.LongType) else Decimal
 
     def kernel(cols):
         import pandas as pd
 
-        codes, _ = pd.factorize(cols[src], use_na_sentinel=True)
+        codes, uniques = pd.factorize(cols[src], sort=ordered and exact is None,
+                                      use_na_sentinel=True)
+        if ordered and exact is not None:
+            # rank the numbers, not their digit strings ("10" < "9");
+            # a missing value's -1 picks the appended -1
+            keys = np.array([exact(u) for u in uniques], dtype=object)
+            codes = np.append(np.argsort(np.argsort(keys)), -1)[codes]
         x = codes.astype("float64")
-        x[codes < 0] = float("nan")
-        return {out: K.conv_entropy(x, width, min_obs=spec.effective_min_obs,
-                                    na_restore=na_restore)}
+        x[codes < 0] = np.nan
+        return {out: fn(x)}
 
     res = _apply_kernel(df, [src], by, order, [(out, "double")], kernel)
     return res.drop(src) if src != value else res
@@ -436,10 +423,10 @@ def roll_iqr(
     out: str = "iqr",
 ) -> DataFrame:
     """Rolling interquartile range (exact HF2 q75 - q25) — the robust
-    scale twin of roll_sd (MAD's rank-based sibling), at the cost of
-    ONE sorted window per row: both quartiles come off the fused
-    roll_quantiles table lookup, so this is exactly as expensive as a
-    single rolling median (same single WindowExec / one Arrow pass).
+    scale twin of roll_sd (MAD's rank-based sibling): both quartiles
+    come off the fused roll_quantiles pass, so this is exactly as
+    expensive as a single rolling median (one Arrow pass). NaN and
+    output types as in roll_quantile.
     """
     from roll_spark.operators.window_ops import roll_quantiles
 

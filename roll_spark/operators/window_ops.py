@@ -6,17 +6,19 @@ built-in JVM aggregate over ``Window.partitionBy(series).orderBy(time)
 whole-stage codegen — one hash exchange on the series key + one sort,
 then all window aggregates share the same WindowExec.
 
-Semantics match the reference kernels (file:line cites inline per op;
-all into /root/reference). Weighted / exponential-decay inputs are
+Semantics match the reference kernels (file:line cites inline per op,
+into the reference ``roll`` package). Weighted / exponential-decay inputs are
 dispatched to the Arrow kernel path (roll_spark.operators.arrow_ops),
 mirroring the reference's own online/offline algorithm dispatch
-(``src/roll.cpp:378-394``). So are the sorted-window ops (quantile(s),
-nunique, percentrank, trimmed mean), and equal-weight sum and mean of
-a float/double column, wider than NATIVE_MAX_WIDTH: their native cost
-grows with the width (Spark's sliding frame re-aggregates its buffer
-for every row), and the Arrow kernels cut an expanding window to the
-series length. On the Arrow path a double NaN counts as missing, like
-NULL.
+(``src/roll.cpp:378-394``). So are the quantile ops at every width:
+they need each window's order statistics, which a Window frame only
+gets by sorting a width-long array per row, where the Arrow kernel
+selects from one wavelet matrix per series. Equal-weight sum and mean
+of a float/double column take their Arrow kernels wider than
+NATIVE_MAX_WIDTH: their native cost grows with the width (Spark's
+sliding frame re-aggregates its buffer for every row), and the Arrow
+kernels cut an expanding window to the series length. On the Arrow
+path a double NaN counts as missing, like NULL, and outputs are double.
 
 Scale notes (100 TB): the only shuffle is hashpartitioning(series key);
 all ops below reuse the same (partition, sort) so Catalyst collapses
@@ -33,14 +35,13 @@ ROLL_SPARK_DEBUG_KEYS=1 asserts the contract at runtime).
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
-from roll_spark.config import EPS, SQRT_EPS, RollSpec
+from roll_spark.config import EPS, RollSpec
 from roll_spark.operators.base import (
     Cols,
     _as_list,
@@ -64,8 +65,8 @@ def _spec(width, min_obs, na_restore, weights, **kw) -> RollSpec:
 
 
 def _dispatch_weighted(op: str):
-    """Arrow kernel path for non-equal weights and wide windows
-    (reference src/roll.cpp:378)."""
+    """Arrow kernel path for non-equal weights, wide sums/means and the
+    quantile ops (reference src/roll.cpp:378)."""
     from roll_spark.operators import arrow_ops
 
     return getattr(arrow_ops, op)
@@ -79,16 +80,18 @@ def _check_positive_weights(weights, op: str) -> None:
         )
 
 
-# The one native/Arrow crossover for every width dispatch. Above it the
-# per-row sorted arrays of the collect_list ops (quantile, nunique,
-# percentrank, trimmed mean) cost JVM heap and CPU that lose to the
-# Arrow kernels (an OOM risk outright at 10^4+). Sum and mean share the
-# value, tuned on the quantile ops: Spark's sliding ROWS frame
-# re-aggregates its whole buffer for every row, so a native sum/mean
-# grows with the width (O(n^2) expanding), the Arrow kernel's only with
-# n·min(w, n) in C. On the rolling_batch input (4 cores, median of 7)
-# native/Arrow mean walls were 0.26/0.23 s at w128, 0.24/0.21 at w256,
-# 0.29/0.21 at w400 and 0.46/0.20 at w1000: a tie up to ~256.
+# Width above which an equal-weight float/double sum or mean leaves the
+# native Window for its Arrow kernel, the one width dispatch left (the
+# sorted-window statistics run their Arrow kernels at every width).
+# Spark's sliding ROWS frame re-aggregates its whole buffer for every
+# row, so a native sum/mean grows with the width (O(n^2) expanding), the
+# Arrow kernel's only with n·min(w, n) in C. On the rolling_batch input
+# (seed 5, 22.6k rows, local[4], median of 11 alternating pairs)
+# native/Arrow walls were sum 0.164/0.157 s and mean 0.118/0.105 at w96,
+# 0.142/0.122 and 0.117/0.101 at w128, 0.122/0.110 and 0.122/0.094 at
+# w192: Arrow leads by 5-20 % from ~w96 (sum won only 7 and 8 of 11
+# pairs at w96 and w192). Too small a gain to also move which widths
+# count a double NaN as missing, so the value stays.
 NATIVE_MAX_WIDTH = 256
 
 
@@ -334,16 +337,11 @@ def roll_quantile(
     p=0 / p=1 short-circuit to roll_min / roll_max, mirroring the
     reference's endpoint specialization (src/roll.cpp:864-894).
 
-    Native path materializes the sorted window per row
-    (``F.array_sort(F.collect_list(...))`` inside WindowExec): O(w log w)
-    CPU and O(w) JVM heap PER OUTPUT ROW — fine for moderate widths,
-    an executor OOM at width 10^4-10^5 (an hour of ticks) regardless of
-    weights. Widths above ``NATIVE_MAX_WIDTH`` therefore route
-    to the Arrow kernel path even under equal weights, mirroring the
-    reference's own algorithm dispatch (src/roll.cpp:864-894). There
-    equal weights select from one wavelet matrix per series, O(n log n)
-    at any width; weighted windows are sorted in row blocks with a
-    fixed memory budget. A double NaN counts as missing on that path.
+    Runs the Arrow kernel (kernels.conv_quantile) at every width. Equal
+    weights select from one wavelet matrix per series, O(n log n) at
+    any width; weighted windows are sorted in row blocks with a fixed
+    memory budget. A double NaN counts as missing, like NULL, and the
+    output is double for every input type.
     """
     if p == 0.0:
         return roll_min(df, value, by, order, width, min_obs=min_obs,
@@ -352,51 +350,7 @@ def roll_quantile(
         return roll_max(df, value, by, order, width, min_obs=min_obs,
                         na_restore=na_restore, weights=weights, out=out)
     spec = _spec(width, min_obs, na_restore, weights, p=p)
-    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
-        return _dispatch_weighted("roll_quantile")(df, value, by, order, spec, out=out)
-    w = rolling_window(by, order, width)
-    v = F.col(value)
-    arr = F.array_sort(F.collect_list(v).over(w))
-    n = F.size(arr)
-    q = _hf2_from_sorted(arr, n, width, p)
-    return df.withColumn(out, gate(spec, v, q, n))
-
-
-def _hf2_tables(width: int, p: float) -> tuple[list[int], list[int], list[bool]]:
-    """Precomputed HF2 selection tables indexed by window fill n=0..width.
-
-    The selection index is the smallest integer c with
-    float64(c / n) >= 1-p: the NORMALIZED division predicate of the
-    reference scan (roll_vec.h:2048). ceil(n*(1-p)) is only a
-    1-ulp-accurate guess (product and quotient round differently at
-    boundary (p, n) combos), so it needs correction by evaluating
-    the predicate at c-1/c. n only takes values 0..width on the native
-    path, so the whole correction (and the exact-boundary averaging
-    test) is precomputed HERE in Python float64 — bit-identical
-    arithmetic — and looked up per row from array literals instead
-    of re-deriving it with per-row division chains (the r2 version
-    of that chain cost ~0.6 s on the sf0.1 bench for w=5)."""
-    pp = 1.0 - p
-    hi_tab, lo_tab, ex_tab = [1], [1], [False]  # n=0 slot (gated off)
-    for n_ in range(1, width + 1):
-        c_ = max(1, math.ceil(n_ * pp))
-        if c_ > 1 and (c_ - 1) / n_ >= pp:
-            c_ -= 1
-        if c_ / n_ < pp and c_ < n_:
-            c_ += 1
-        hi_tab.append(n_ - c_ + 1)
-        lo_tab.append(max(1, n_ - c_))
-        ex_tab.append(abs(c_ / n_ - pp) <= SQRT_EPS)
-    return hi_tab, lo_tab, ex_tab
-
-
-def _hf2_from_sorted(arr: Column, n: Column, width: int, p: float) -> Column:
-    """HF2 selection from a per-row sorted window array (table lookup)."""
-    hi_tab, lo_tab, ex_tab = _hf2_tables(width, p)
-    hi = F.element_at(arr, F.element_at(F.lit(hi_tab), n + 1))
-    lo = F.element_at(arr, F.element_at(F.lit(lo_tab), n + 1))
-    exact = F.element_at(F.lit(ex_tab), n + 1)
-    return F.when(exact, (hi + lo) / 2).otherwise(hi)
+    return _dispatch_weighted("roll_quantile")(df, value, by, order, spec, out=out)
 
 
 @complete_obs_maskable
@@ -413,22 +367,15 @@ def roll_quantiles(
     weights: Sequence[float] | None = None,
     outs: Sequence[str] | None = None,
 ) -> DataFrame:
-    """All quantiles of ``ps`` from ONE sorted window per row.
-
-    k calls to :func:`roll_quantile` sort (and on the Arrow path,
-    shuffle) the same window k times; here the sorted array is
-    materialized once inside a single WindowExec and every p is a
-    table-lookup projection off it — the per-row cost is
-    O(w log w + k) instead of O(k · w log w).  Results are
-    column-for-column identical to the one-p operator
-    (tests/test_quantiles_multi.py asserts it).
-
-    Non-equal weights or width > NATIVE_MAX_WIDTH route to the
-    fused Arrow kernel (kernels.conv_quantiles): ONE Arrow pass
-    sharing the per-series wavelet matrix (equal weights) or the
-    per-block argsort (weighted) across every interior p, with p=0 /
-    p=1 going through roll_min / roll_max exactly like single-p
-    roll_quantile.
+    """All quantiles of ``ps`` from ONE Arrow pass (kernels.conv_quantiles):
+    every probability shares the per-series wavelet matrix (equal
+    weights) or the per-block argsort (weighted), so k probabilities
+    cost one shuffle and one sort, not k. An interior p's column is
+    identical to roll_quantile's (tests/test_quantiles_multi.py asserts
+    it). p=0 / p=1 give the smallest / largest observed value in the
+    same pass, as roll_min / roll_max do for positive weights; unlike
+    those native ops, they follow roll_quantile's NaN rule and output
+    type.
     """
     ps = list(ps)
     outs = list(outs) if outs is not None else [
@@ -436,41 +383,10 @@ def roll_quantiles(
     ]
     if len(outs) != len(ps):
         raise ValueError("outs must match ps in length")
+    if any(p_ in (0.0, 1.0) for p_ in ps):
+        _check_positive_weights(weights, "roll_quantiles")
     spec = _spec(width, min_obs, na_restore, weights)
-    if not spec.is_equal_weight or width > NATIVE_MAX_WIDTH:
-        interior = [(p_, o_) for p_, o_ in zip(ps, outs) if 0.0 < p_ < 1.0]
-        out_df = df
-        if interior:
-            out_df = _dispatch_weighted("roll_quantiles")(
-                out_df, value, by, order, spec,
-                [p_ for p_, _ in interior], [o_ for _, o_ in interior],
-            )
-        for p_, o_ in zip(ps, outs):  # endpoints: min/max specialization
-            if p_ == 0.0:
-                out_df = roll_min(out_df, value, by, order, width, min_obs=min_obs,
-                                  na_restore=na_restore, weights=weights, out=o_)
-            elif p_ == 1.0:
-                out_df = roll_max(out_df, value, by, order, width, min_obs=min_obs,
-                                  na_restore=na_restore, weights=weights, out=o_)
-        if any(p_ in (0.0, 1.0) for p_ in ps):
-            out_df = out_df.select(*df.columns, *outs)
-        return out_df
-    w = rolling_window(by, order, width)
-    v = F.col(value)
-    arr_col = "__rollq_sorted"
-    tmp = df.withColumn(arr_col, F.array_sort(F.collect_list(v).over(w)))
-    arr = F.col(arr_col)
-    n = F.size(arr)
-    cols = {}
-    for p_, o_ in zip(ps, outs):
-        if p_ == 0.0:
-            q = F.array_min(arr)
-        elif p_ == 1.0:
-            q = F.array_max(arr)
-        else:
-            q = _hf2_from_sorted(arr, n, width, p_)
-        cols[o_] = gate(spec, v, q, n)
-    return tmp.withColumns(cols).drop(arr_col)
+    return _dispatch_weighted("roll_quantiles")(df, value, by, order, spec, ps, outs)
 
 
 @complete_obs_maskable

@@ -297,25 +297,20 @@ def test_roll_lm_multi_equals_per_y_fits(grid_df):
 
 
 def test_quantile_width_dispatch(grid_df):
-    """Equal weights + width above NATIVE_MAX_WIDTH must route
-    to the Arrow kernel (no per-row collect_list/array_sort in the
-    plan); at-or-below stays on the native WindowExec path."""
+    """Equal-weight quantiles take the Arrow kernel at every width, on
+    either side of NATIVE_MAX_WIDTH: one MapInArrow, and no per-row
+    collect_list/array_sort Window in the plan."""
     from roll_spark.operators.window_ops import (
         NATIVE_MAX_WIDTH,
         roll_quantile,
     )
 
-    small = roll_quantile(grid_df, "x", "series_id", "i",
-                          NATIVE_MAX_WIDTH, 0.5, min_obs=1, out="q")
-    plan_small = small._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" in plan_small
-    assert "MapInArrow" not in plan_small
-
-    big = roll_quantile(grid_df, "x", "series_id", "i",
-                        NATIVE_MAX_WIDTH + 1, 0.5, min_obs=1, out="q")
-    plan_big = big._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan_big
-    assert "MapInArrow" in plan_big
+    for width in (5, NATIVE_MAX_WIDTH, NATIVE_MAX_WIDTH + 1):
+        res = roll_quantile(grid_df, "x", "series_id", "i", width, 0.5,
+                            min_obs=1, out="q")
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "collect_list" not in plan and "Window [" not in plan, width
+        assert plan.count("MapInArrow") == 1, width
 
 
 @pytest.mark.parametrize("op", [roll_mean, roll_sum])

@@ -439,6 +439,38 @@ def test_equal_weight_quantiles_match_sorted_window(width):
                     n, min_obs, p)
 
 
+def _rank_count_replay(x, width, min_obs):
+    """Brute-force window replay of percent rank and distinct count."""
+    pr, nun = np.full(len(x), np.nan), np.full(len(x), np.nan)
+    for i in range(len(x)):
+        win = x[max(0, i - width + 1): i + 1]
+        obs = win[~np.isnan(win)]
+        if len(obs) >= max(min_obs, 1):
+            nun[i] = len(set(obs.tolist()))  # -0.0 == 0.0 in a set
+            if len(obs) >= 2 and not np.isnan(x[i]):
+                pr[i] = ((obs <= x[i]).sum() - 1.0) / (len(obs) - 1.0)
+    return pr, nun
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 7, 8, 64, 100, 128, 257])
+def test_rank_count_kernels_match_replay(n):
+    """conv_percentrank and conv_nunique count ranks on a wavelet matrix;
+    against a window-by-window replay they give the same bits, with
+    ties, NaN and -0.0 beside 0.0. Power-of-two lengths put the
+    percent-rank threshold of the largest value at 2**levels."""
+    rng = np.random.default_rng(n + 1)
+    x = rng.choice([0.0, -0.0, 1.5, -2.0, 3.0, np.nan], n)
+    fresh = rng.random(n) < 0.5
+    x[fresh] = rng.normal(size=n).round(1)[fresh]
+    for width in sorted({1, 2, 5, max(n // 2, 1), n, n + 5}):
+        for min_obs in sorted({1, width}):
+            pr, nun = _rank_count_replay(x, width, min_obs)
+            got_pr = K.conv_percentrank(x, width, min_obs=min_obs)
+            got_nun = K.conv_nunique(x, width, min_obs=min_obs)
+            assert np.array_equal(got_pr, pr, equal_nan=True), (width, min_obs)
+            assert np.array_equal(got_nun, nun, equal_nan=True), (width, min_obs)
+
+
 @pytest.mark.parametrize("fn,ref", [(K.conv_sum, oracle.roll_sum),
                                     (K.conv_mean, oracle.roll_mean)])
 def test_conv_sum_mean_width_beyond_series(fn, ref):

@@ -353,38 +353,115 @@ def test_cc_raises_on_max_iter_exhaustion(spark):
 
 @pytest.mark.parametrize("op", ["nunique", "percentrank"])
 def test_nunique_percentrank_width_dispatch(spark, op):
-    """width > 256 must route to the Arrow kernel and agree with the
-    native collect_list form evaluated at the same width via a manual
-    spec (the contract roll_quantile already has)."""
+    """One Arrow pass at a narrow and a wide width (no collect_list
+    Window on either side of NATIVE_MAX_WIDTH), and both agree with a
+    brute-force window replay."""
     from roll_spark.operators.moments import roll_nunique, roll_percentrank
 
     pdf = _fixture(n=900, n_keys=2)
     pdf["v"] = np.floor(pdf["v"])  # duplicates for nunique
     sdf = spark.createDataFrame(pdf)
     fn = roll_nunique if op == "nunique" else roll_percentrank
-    wide = fn(sdf, "v", "k", "ts", 300, min_obs=2, out="s") \
-        .select("k", "ts", "s").toPandas().sort_values(["k", "ts"])
     base = pdf.sort_values(["k", "ts"])
-    want = np.full(len(base), np.nan)
-    pos = 0
-    for key, g in base.groupby("k"):
-        vals = g["v"].to_numpy()
-        for i in range(len(vals)):
-            win = vals[max(0, i - 299): i + 1]
-            obs = win[~np.isnan(win)]
-            if op == "nunique":
-                if len(obs) >= 2:
-                    want[pos + i] = len(np.unique(obs))
-            else:
-                cur = vals[i]
-                if not np.isnan(cur) and len(obs) >= 2:
-                    want[pos + i] = ((obs <= cur).sum() - 1) / (len(obs) - 1)
-        pos += len(vals)
-    got = wide["s"].to_numpy(dtype=np.float64)
-    assert np.allclose(got, want, equal_nan=True, atol=1e-12)
+    for width in (5, 300):
+        res = fn(sdf, "v", "k", "ts", width, min_obs=2, out="s")
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1 and "collect_list" not in plan
+        got = res.select("k", "ts", "s").toPandas().sort_values(["k", "ts"])
+        want = np.full(len(base), np.nan)
+        pos = 0
+        for key, g in base.groupby("k"):
+            vals = g["v"].to_numpy()
+            for i in range(len(vals)):
+                win = vals[max(0, i - width + 1): i + 1]
+                obs = win[~np.isnan(win)]
+                if op == "nunique":
+                    if len(obs) >= 2:
+                        want[pos + i] = len(np.unique(obs))
+                else:
+                    cur = vals[i]
+                    if not np.isnan(cur) and len(obs) >= 2:
+                        want[pos + i] = ((obs <= cur).sum() - 1) / (len(obs) - 1)
+            pos += len(vals)
+        got = got["s"].to_numpy(dtype=np.float64)
+        assert np.allclose(got, want, equal_nan=True, atol=1e-12), width
 
 
-@pytest.mark.parametrize("width", [8, 300])  # native path and Arrow dispatch
+@pytest.mark.parametrize("width", [5, 300])
+def test_nunique_percentrank_exact_types(spark, width):
+    """Strings, decimals, and bigints that one float64 cannot tell apart
+    (2**53 and 2**53 + 1), are counted and ranked as exact values;
+    numbers rank as numbers, not as their digit strings (10 > 9). A
+    series with no observed value gives NULL."""
+    from decimal import Decimal
+
+    from roll_spark.operators.moments import roll_nunique, roll_percentrank
+
+    big = [2**53, 2**53 + 1, 9, 10, -3, None]
+    words = ["b", "a", "é", "b", None, "a"]
+    decs = [Decimal(d) if d else None
+            for d in ("10.00", "9.99", "-3.10", "0.00", "9.99", None)]
+    rng = np.random.default_rng(SEED + 20)
+    pick = rng.integers(0, 6, (600, 3))
+    rows = [(i % 2, i, big[a], words[b], decs[c])
+            for i, (a, b, c) in enumerate(pick)]
+    rows += [(2, i, None, None, None) for i in range(5)]
+    sdf = spark.createDataFrame(
+        rows, "k int, ts int, n bigint, s string, d decimal(10,2)")
+    for c in ("n", "s", "d"):
+        sdf = roll_nunique(sdf, c, "k", "ts", width, min_obs=1, out=f"u_{c}")
+        sdf = roll_percentrank(sdf, c, "k", "ts", width, min_obs=1, out=f"p_{c}")
+    got = sorted(sdf.collect(), key=lambda r: (r.k, r.ts))
+    for c in ("n", "s", "d"):
+        for key in (0, 1, 2):
+            g = [r for r in got if r.k == key]
+            vals = [r[c] for r in g]
+            for i, cur in enumerate(vals):
+                obs = [v for v in vals[max(0, i - width + 1): i + 1] if v is not None]
+                assert g[i][f"u_{c}"] == (len(set(obs)) if obs else None), (c, key, i)
+                if cur is None or len(obs) < 2:
+                    assert g[i][f"p_{c}"] is None, (c, key, i)
+                else:
+                    want = (sum(v <= cur for v in obs) - 1) / (len(obs) - 1)
+                    assert g[i][f"p_{c}"] == want, (c, key, i)
+
+
+def test_sorted_window_ops_nan_is_missing(spark):
+    """At width 5 a double NaN counts as missing, like NULL, in
+    quantile, nunique, percentrank and trimmed mean: each equals the
+    same op over the column with every NaN made NULL."""
+    from pyspark.sql import functions as SF
+
+    from roll_spark import roll_quantile
+    from roll_spark.operators.moments import (
+        roll_nunique,
+        roll_percentrank,
+        roll_trimmed_mean,
+    )
+
+    pdf = _fixture(n=300, n_keys=3)
+    pdf["nan"] = np.random.default_rng(SEED + 21).random(len(pdf)) < 0.2
+    base = spark.createDataFrame(pdf)
+    nan = base.withColumn(
+        "v", SF.when(SF.col("nan"), SF.lit(float("nan"))).otherwise(SF.col("v")))
+    null = base.withColumn("v", SF.when(~SF.col("nan"), SF.col("v")))
+    assert nan.filter(SF.isnan("v")).count() > 0
+    ops = {
+        "q": lambda d: roll_quantile(d, "v", "k", "ts", 5, 0.5, min_obs=2, out="q"),
+        "u": lambda d: roll_nunique(d, "v", "k", "ts", 5, min_obs=2, out="u"),
+        "p": lambda d: roll_percentrank(d, "v", "k", "ts", 5, min_obs=2, out="p"),
+        "t": lambda d: roll_trimmed_mean(d, "v", "k", "ts", 5, 0.2, min_obs=2,
+                                         out="t"),
+    }
+    for col, op in ops.items():
+        got, want = (op(d).select("k", "ts", col).toPandas()
+                     .sort_values(["k", "ts"])[col].to_numpy(dtype=np.float64)
+                     for d in (nan, null))
+        assert np.array_equal(got, want, equal_nan=True), col
+        assert (~np.isnan(want)).sum() > 100, col
+
+
+@pytest.mark.parametrize("width", [8, 300])  # narrow and wide windows
 def test_trimmed_mean(spark, width):
     from roll_spark.operators.moments import roll_trimmed_mean
 

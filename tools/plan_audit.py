@@ -26,7 +26,8 @@ EXPECT = {
     "roll_mean_w10": dict(max_exchange=1, max_sort=1),
     "roll_var_w10": dict(max_exchange=1, max_sort=1),
     "roll_median_w5": dict(max_exchange=1, max_sort=1),
-    # fused multi-p quantiles: 5 outputs, still ONE window/sort/exchange
+    # fused multi-p quantiles: 5 outputs (p=0/p=1 included) off ONE
+    # Arrow pass, behind ONE sort/exchange
     "roll_quantiles_multi_w5": dict(max_exchange=1, max_sort=1, max_window=1),
     "roll_idxmax_w10": dict(max_exchange=1, max_sort=1),
     "roll_cov_w10": dict(max_exchange=1, max_sort=1),
@@ -34,7 +35,7 @@ EXPECT = {
     # width > NATIVE_MAX_WIDTH -> Arrow path (O(n) conv_mean): one exchange
     "expanding_mean": dict(max_exchange=1, max_sort=1),
     "roll_mean_exp_w10": dict(max_exchange=1),       # Arrow path: one exchange
-    "roll_median_w400": dict(max_exchange=1),        # large width -> Arrow path
+    "roll_median_w400": dict(max_exchange=1),        # Arrow path at any width
     "roll_cov_matrix_w10": dict(max_exchange=3),     # window(lag) + Arrow pass + join-back
     "roll_cov_xy_w10": dict(max_exchange=3),         # window(lag/lead) + Arrow pass + join-back
     "roll_lm_multiy_w20": dict(max_exchange=3),      # one Arrow pass for BOTH fits
@@ -85,6 +86,7 @@ EXPECT = {
     # fused skew/kurt: Arrow path (two-pass conv_skew_kurt), one exchange
     "roll_skew_kurt_w20": dict(max_exchange=1, max_sort=1, max_window=2),
     "roll_mad_w10": dict(max_exchange=1),            # Arrow path: one exchange
+    # sorted-window stats: Arrow path (rank counts / sorted blocks)
     "roll_nunique_w10": dict(max_exchange=1, max_sort=1, max_window=1),
     # OHLC bars: ONE partial-agg groupBy, zero sorts, zero windows
     "tier_1h_ohlc": dict(max_exchange=1, max_sort=0, max_window=0),
@@ -128,7 +130,7 @@ EXPECT = {
     # vocab join broadcasts, the rank window gets a partial
     # WindowGroupLimit (its own map-side sort) below the exchange
     "doc_tfidf_top5": dict(max_exchange=4, max_sort=2, max_window=1),
-    # IQR: both quartiles off ONE fused sorted window
+    # IQR: both quartiles off ONE fused Arrow pass
     "roll_iqr_w10": dict(max_exchange=1, max_sort=1, max_window=1),
     # histograms: one partial-agg groupBy, sort-free
     "tier_1h_histogram": dict(max_exchange=1, max_sort=0, max_window=0),
