@@ -1,41 +1,42 @@
-"""Arrow (mapInArrow) execution of the roll_* surface — the scale
+"""Arrow execution of the roll_* surface — the scale
 path for weighted / exponential-decay inputs, sums and means at large
 widths, every sorted-window statistic (exact quantiles, percent rank,
 distinct counts, trimmed mean, ...) at any width, and k-regressor
 roll_lm.
 
 Physical shape: one hash exchange on the series key, a sort within each
-partition on (series key, order key), then one mapInArrow pass per
+partition on (series key, order key), then one Python pass per
 partition that cuts each record batch into series and runs the
 vectorized numpy kernels of roll_spark.operators.kernels on each — the
 reference's parallelization model (independent series, each sequential
 in time; src/roll.cpp:384) with Arrow batches instead of RcppParallel
 threads. Per-row Python never happens, and neither does a per-series
 Arrow stream: a partition crosses the JVM<->Python boundary as a few
-columnar batches, only the kernel's input columns leave Arrow (as
-float64 numpy arrays, converted once per batch), and passthrough
-columns never do.
+columnar batches, and only the kernel's input columns leave Arrow (as
+float64 numpy arrays, converted once per batch). Narrow frames pass
+every column through mapInArrow; wide frames (string/binary payloads)
+send only the series key and the inputs through an ordered Arrow UDF.
 
 Skewed series (one conversation with 10^9 turns) do NOT fit this model;
 they go through roll_spark.operators.chunked which splits a series into
 overlap-padded chunks that this module's kernels evaluate independently.
 
-DATA CONTRACT (all roll_* entry points, both paths): the (by, order)
-key tuple — e.g. (conv_id, turn_idx) / (user_id, ts) — must be UNIQUE
-and NON-NULL per row. The wide-frame join-back rejoins kernel outputs
-on exactly these keys: a NULL order key never matches (its outputs
-silently become NULL) and duplicate keys fan out. Set
-ROLL_SPARK_DEBUG_KEYS=1 to fail loudly instead: the join-back then
-asserts key uniqueness/non-nullness per series before joining.
+DATA CONTRACT (all roll_* entry points, both frame shapes): no Arrow op
+joins, so every input row yields exactly one output row and the result
+is ``df.columns`` followed by the op's outputs. The (by, order) key
+tuple — e.g. (conv_id, turn_idx) / (user_id, ts) — should be UNIQUE and
+NON-NULL per row: rows that tie on the order key keep an arbitrary
+order within their series, and a NULL order key sorts first in its
+series.
 """
 
 from __future__ import annotations
 
-import os
-
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as TT
@@ -52,9 +53,6 @@ def _kernel_inputs(table, cols: list[str]) -> dict[str, np.ndarray]:
     """``{column: numpy array}`` of a table's kernel inputs. Numeric
     columns arrive as float64 with NaN for NULL; other types (the
     strings roll_entropy factorizes) as object/datetime arrays."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     out = {}
     for c in cols:
         col = table.column(c)
@@ -75,8 +73,6 @@ def _kernel_inputs(table, cols: list[str]) -> dict[str, np.ndarray]:
 def _list_rows(mat, null_all_nan: bool = False):
     """(n, k) float matrix -> Arrow ``list<double>`` column (NaN element
     -> NULL element; with ``null_all_nan`` an all-NaN row -> NULL)."""
-    import pyarrow as pa
-
     mat = np.asarray(mat, dtype=np.float64)
     n, k = mat.shape
     offsets = pa.array(np.arange(0, n * k + 1, k, dtype=np.int32))
@@ -85,35 +81,10 @@ def _list_rows(mat, null_all_nan: bool = False):
     return pa.ListArray.from_arrays(offsets, values, mask=mask)
 
 
-def _check_keys(table, order_cols: list[str]) -> None:
-    """ROLL_SPARK_DEBUG_KEYS contract check on one series: no NULL
-    (or NaN) order key, no duplicate (by, order) key."""
-    import pyarrow.compute as pc
-
-    if any(pc.any(pc.is_null(table.column(c), nan_is_null=True)).as_py()
-           for c in order_cols):
-        raise ValueError(
-            "roll_spark data contract violated: NULL order key in "
-            f"series group (order cols {order_cols}); NULL keys "
-            "never match the join-back and would silently NULL "
-            "their kernel outputs"
-        )
-    distinct = table.select(order_cols).group_by(order_cols).aggregate([])
-    if distinct.num_rows < table.num_rows:
-        raise ValueError(
-            "roll_spark data contract violated: duplicate "
-            f"(by, order) key in series group (order cols "
-            f"{order_cols}); duplicates fan out in the join-back"
-        )
-
-
 def _key_changes(keys) -> np.ndarray:
     """``(n-1,)`` bool over n rows of the series-key arrays ``keys``:
     row i+1's key differs from row i's. Equality is the one Spark's sort
     and ``groupBy`` use: NULL = NULL, NaN = NaN, -0.0 = 0.0."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     n = len(keys[0])
     same = np.ones(max(n - 1, 0), dtype=bool)
     for col in keys:
@@ -131,6 +102,36 @@ def _key_changes(keys) -> np.ndarray:
     return ~same
 
 
+def _series_runs(batches, by_l: list[str]):
+    """Cut sorted record batches into whole series: yield ``(parts,
+    starts)``, a list of batches and the row offsets into their
+    concatenation at which each series begins. A series longer than a
+    batch is carried as a list of batches until it ends."""
+    # the batches of the series still open at the end of the last one
+    carry, carry_rows = [], 0
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        starts = (np.flatnonzero(_key_changes(
+            [batch.column(c) for c in by_l])) + 1).tolist()
+        if not carry or _key_changes(
+                [pa.concat_arrays([carry[-1].column(c)[-1:], batch.column(c)[:1]])
+                 for c in by_l])[0]:
+            starts.insert(0, 0)
+        if not starts:
+            carry.append(batch)
+            carry_rows += n
+            continue
+        cut = starts[-1]
+        done = carry + ([batch.slice(0, cut)] if cut else [])
+        if done:
+            yield done, ([0] if carry else []) + [carry_rows + s for s in starts[:-1]]
+        carry, carry_rows = [batch.slice(cut)], n - cut
+    if carry:
+        yield carry, [0]
+
+
 def _apply_kernel(
     df: DataFrame,
     in_cols: list[str],
@@ -142,119 +143,90 @@ def _apply_kernel(
     """Run ``kernel(inputs) -> dict[out_col, array]`` per series, where
     ``inputs`` is ``_kernel_inputs`` of ``in_cols`` in order-key order
     and each output is a numpy array (NaN -> NULL) or an Arrow array
-    (list columns, via ``_list_rows``).
+    (list columns, via ``_list_rows``). The result is ``df.columns``
+    followed by the output columns, one row per input row.
 
     One physical path: a hash exchange on ``by``, a sort within each
-    partition on ``(by, order)``, then one ``mapInArrow`` pass over each
-    sorted partition. The UDF cuts every record batch into series at the
-    rows where the key changes (the ``groupBy(by)`` grouping: NULL =
-    NULL, NaN = NaN, -0.0 = 0.0), converts the kernel inputs once per
-    batch, calls ``kernel`` on each series' slice and builds each output
-    column once per batch. A series longer than a batch is carried as a
-    list of batches and evaluated once when it ends. The order key sorts
-    ``ASC NULLS FIRST``, Spark's default and ``base.ordered_window``'s,
-    so an Arrow op after a native Window reuses that Window's sort. It
-    places NULL order keys, which already break the data contract, first
-    in their series.
+    partition on ``(by, order)``, then one Python pass over each sorted
+    partition. ``_series_runs`` cuts its record batches into series at
+    the rows where the key changes (the ``groupBy(by)`` grouping: NULL =
+    NULL, NaN = NaN, -0.0 = 0.0); the kernel inputs are converted once
+    per batch, ``kernel`` runs on each series' slice and each output
+    column is built once per batch. The order key sorts ``ASC NULLS
+    FIRST``, Spark's default and ``base.ordered_window``'s, so an Arrow
+    op after a native Window reuses that Window's sort, and a NULL order
+    key sorts first in its series.
 
     Two frame shapes share that path:
 
-    - PASSTHROUGH (narrow frames): every column rides through the Arrow
-      batch and the UDF appends the outputs — ONE shuffle, no join.
-      Chosen when no non-key column is a string/binary wider than the
-      keys (typical derived-series frames).
-    - JOIN-BACK (wide frames, e.g. raw transcripts with full text):
-      only (keys, order, inputs) cross the Python boundary; results join
-      back on the (by, order) key columns so megabyte text/binary
-      payloads never serialize through Arrow twice. This relies on the
-      engine's data contract — (series key, order key) uniquely
-      identifies a row, e.g. (conv_id, turn_idx) — and is deterministic
-      under recomputation, unlike a synthetic monotonically_increasing_id
-      (whose values are partition-layout-dependent: the two sides of the
-      self-join may recompute the upstream plan with different physical
-      layouts and disagree on every id).
+    - NARROW frames run ``mapInArrow``: every column rides through the
+      Arrow batch and the UDF appends the outputs.
+    - WIDE frames (a non-key string/binary column, e.g. raw transcripts
+      with full text) run an ordered ``SCALAR_ITER`` Arrow UDF over the
+      series key and input columns only, so megabyte payloads never
+      cross the boundary. ``ArrowEvalPython`` keeps the other columns in
+      the JVM and zips the outputs (one struct, unpacked by field) back
+      by position; the outputs may lag the input while a series spans
+      batches. The UDF is nondeterministic so the optimizer pushes no
+      downstream filter below it and drops no sort it relies on.
     """
     by_l, order_l = _as_list(by), _as_list(order)
     key_cols = set(by_l) | set(order_l) | set(in_cols)
-    wide = [
-        f.name
-        for f in df.schema
-        if f.name not in key_cols and isinstance(f.dataType, _WIDE_TYPES)
-    ]
-    out_struct = [
-        TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields
-    ]
-    if wide:
-        field_by_name = {f.name: f for f in df.schema}
-        src = df.select(*by_l, *order_l, *in_cols)
-        keep = by_l + order_l
-        out_schema = TT.StructType([field_by_name[c] for c in keep] + out_struct)
-    else:
-        src, keep = df, df.columns
-        out_schema = TT.StructType(list(df.schema) + out_struct)
-    arrow_types = [to_arrow_type(f.dataType) for f in out_schema]
-    debug_keys = bool(wide) and os.environ.get("ROLL_SPARK_DEBUG_KEYS") == "1"
+    wide = any(f.name not in key_cols and isinstance(f.dataType, _WIDE_TYPES)
+               for f in df.schema)
+    out_struct = TT.StructType([
+        TT.StructField(n, TT._parse_datatype_string(t)) for n, t in out_fields])
+    out_types = [to_arrow_type(f.dataType) for f in out_struct]
+    sorted_df = df.repartition(*by_l).sortWithinPartitions(*by_l, *order_l)
 
     def run(parts, starts):
-        """Evaluate the whole series that begin at row offsets ``starts``
-        of the concatenated record batches ``parts``."""
-        import pyarrow as pa
-
+        """The concatenated batches ``parts`` and the output columns of
+        the whole series that begin at their row offsets ``starts``."""
         table = pa.Table.from_batches(parts)
         inputs = _kernel_inputs(table, in_cols)
         ends = [*starts[1:], table.num_rows]
-        results = []
-        for s, e in zip(starts, ends):
-            if debug_keys:
-                _check_keys(table.slice(s, e - s), order_l)
-            results.append(kernel({c: v[s:e] for c, v in inputs.items()}))
-        columns = [table.column(c) for c in keep]
-        for (name, _), typ in zip(out_fields, arrow_types[len(keep):]):
+        results = [kernel({c: v[s:e] for c, v in inputs.items()})
+                   for s, e in zip(starts, ends)]
+        outs = []
+        for (name, _), typ in zip(out_fields, out_types):
             vals = [r[name] for r in results]
-            columns.append(
+            outs.append(
                 pa.concat_arrays(vals) if isinstance(vals[0], pa.Array)
                 else pa.array(np.concatenate(vals), type=typ, from_pandas=True))
-        out = pa.table(columns, names=out_schema.names)
-        # the JVM may send a passthrough type other than the one it
-        # expects back (large_string under useLargeVarTypes)
-        if out.schema.types != arrow_types:
-            out = out.cast(pa.schema(
-                [pa.field(n, t) for n, t in zip(out_schema.names, arrow_types)]
-            ))
-        return out.to_batches()
+        return table, outs
+
+    if wide:
+        args = list(dict.fromkeys(by_l + in_cols))
+
+        def fn_wide(arrays: Iterator[tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+            batches = (pa.RecordBatch.from_arrays(
+                list(a) if isinstance(a, tuple) else [a], names=args)
+                for a in arrays)
+            for parts, starts in _series_runs(batches, by_l):
+                yield pa.StructArray.from_arrays(run(parts, starts)[1],
+                                                 names=out_struct.names)
+
+        udf = F.arrow_udf(fn_wide, out_struct).asNondeterministic()
+        tmp = "__rs_kernel_out"
+        return (sorted_df.withColumn(tmp, udf(*args))
+                .withColumns({n: F.col(tmp)[n] for n in out_struct.names})
+                .drop(tmp))
+
+    out_schema = TT.StructType(list(df.schema) + list(out_struct))
+    arrow_types = [to_arrow_type(f.dataType) for f in out_schema]
 
     def fn(batches):
-        import pyarrow as pa
+        for parts, starts in _series_runs(batches, by_l):
+            table, outs = run(parts, starts)
+            out = pa.table([*table.columns, *outs], names=out_schema.names)
+            # the JVM may send a passthrough type other than the one it
+            # expects back (large_string under useLargeVarTypes)
+            if out.schema.types != arrow_types:
+                out = out.cast(pa.schema(
+                    [pa.field(n, t) for n, t in zip(out_schema.names, arrow_types)]))
+            yield from out.to_batches()
 
-        # the batches of the series still open at the end of the last one
-        carry, carry_rows = [], 0
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            starts = (np.flatnonzero(_key_changes(
-                [batch.column(c) for c in by_l])) + 1).tolist()
-            if not carry or _key_changes(
-                    [pa.concat_arrays([carry[-1].column(c)[-1:], batch.column(c)[:1]])
-                     for c in by_l])[0]:
-                starts.insert(0, 0)
-            if not starts:
-                carry.append(batch)
-                carry_rows += n
-                continue
-            cut = starts[-1]
-            done = carry + ([batch.slice(0, cut)] if cut else [])
-            if done:
-                yield from run(done, ([0] if carry else [])
-                               + [carry_rows + s for s in starts[:-1]])
-            carry, carry_rows = [batch.slice(cut)], n - cut
-        if carry:
-            yield from run(carry, [0])
-
-    res = (src.repartition(*by_l)
-           .sortWithinPartitions(*by_l, *order_l)
-           .mapInArrow(fn, out_schema))
-    return df.join(res, on=keep, how="left") if wide else res
+    return sorted_df.mapInArrow(fn, out_schema)
 
 
 def _series_kernel_1(value: str, spec: RollSpec, fn, out: str, **kw):

@@ -85,11 +85,11 @@ def gate(
     *,
     need_two: bool = False,
 ) -> Column:
-    """Apply min_obs (+ optional n_obs>1) and na_restore gates to a stat."""
-    cond = n_obs >= F.lit(spec.effective_min_obs)
-    if need_two:
-        cond = cond & (n_obs > F.lit(1))
-    gated = F.when(cond, stat)
+    """Apply min_obs (+ optional n_obs>1) and na_restore gates to a stat.
+    Each gate reads ``n_obs`` once: Spark evaluates every use of a window
+    aggregate as its own window function."""
+    min_obs = max(spec.effective_min_obs, 2) if need_two else spec.effective_min_obs
+    gated = F.when(n_obs >= F.lit(min_obs), stat)
     if spec.na_restore:
         return F.when(value.isNull(), F.lit(None)).otherwise(gated)
     return gated

@@ -730,8 +730,14 @@ def _conv_cov_matrix_pairwise(X, width, weights, min_obs, center, scale):
 def _pairwise_cell(xj, xl, width, weights, min_obs, center, scale):
     """One pairwise-complete (co)variance series; xl=None -> variance."""
     M = xj[:, None] if xl is None else np.column_stack([xj, xl])
-    n_o, s_w, sq_w, _, SS = _comoments(M, width, weights, center)
-    ssx, ssy, ssxy = SS[:, 0, 0], SS[:, -1, -1], SS[:, -1, 0]
+    if not (center or scale):
+        # the unscaled raw cell reads one cross sum, not the whole SS
+        s = WindowSums(M, width, weights)
+        n_o, s_w, sq_w = s.n_obs(), s.sum_w(), s.sumsq_w()
+        ssxy = s.cross(M.shape[1] - 1, 0)
+    else:
+        n_o, s_w, sq_w, _, SS = _comoments(M, width, weights, center)
+        ssx, ssy, ssxy = SS[:, 0, 0], SS[:, -1, -1], SS[:, -1, 0]
     with np.errstate(invalid="ignore", divide="ignore"):
         if scale:
             c = ssxy / np.sqrt(ssx * ssy)

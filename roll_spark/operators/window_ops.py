@@ -28,9 +28,10 @@ overlap path in roll_spark.operators.chunked.
 DATA CONTRACT: every roll_* op requires the (by, order) key tuple —
 e.g. (conv_id, turn_idx) / (user_id, ts) — to be UNIQUE and NON-NULL
 per row. Window ordering over duplicate or NULL order keys is
-ill-defined, and the Arrow path's wide-frame join-back relies on the
-keys to re-align kernel outputs (see roll_spark.operators.arrow_ops;
-ROLL_SPARK_DEBUG_KEYS=1 asserts the contract at runtime).
+ill-defined: rows that tie keep an arbitrary order within their series,
+and a NULL order key sorts first in its series, on this path and on the
+Arrow path alike. No op joins, so each input row yields one output row
+either way (see roll_spark.operators.arrow_ops).
 """
 
 from __future__ import annotations
@@ -427,12 +428,15 @@ def roll_var(
         return _dispatch_weighted("roll_var")(df, value, by, order, spec, out=out)
     w = rolling_window(by, order, width)
     v = F.col(value)
-    n_obs = F.count(v).over(w)
-    if center:
-        raw = F.var_samp(v).over(w)
-    else:
-        raw = F.sum(v * v).over(w) / (n_obs - 1)
-    return df.withColumn(out, gate(spec, v, clamp_var(raw), n_obs, need_two=True))
+    # one column per window aggregate: clamp_var reads its input three times
+    n, s = f"__n_{out}", f"__s_{out}"
+    df = df.withColumns({
+        n: F.count(v).over(w),
+        s: F.var_samp(v).over(w) if center else F.sum(v * v).over(w),
+    })
+    raw = F.col(s) if center else F.col(s) / (F.col(n) - 1)
+    return df.withColumn(
+        out, gate(spec, v, clamp_var(raw), F.col(n), need_two=True)).drop(n, s)
 
 
 @complete_obs_maskable

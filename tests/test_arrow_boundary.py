@@ -2,8 +2,10 @@
 (passthrough columns), how NULL and NaN map across it, how a sorted
 partition is cut into series (series spanning record batches, NULL /
 NaN / signed-zero / two-column / struct keys, empty and one-series
-partitions), the plan shape, the wide-frame key-contract checks, the
-worker daemon, and executor imports from a foreign working directory."""
+partitions), the plan shape, wide frames (payload columns stay in the
+JVM; NULL and duplicate order keys, downstream filters, joins and
+groupBys), the worker daemon, and executor imports from a foreign
+working directory."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import subprocess
 import sys
 import textwrap
 import zipimport
+from collections import Counter
 from decimal import Decimal
 from pathlib import Path
 
@@ -58,13 +61,20 @@ def _copy_x(cols):
 
 @contextlib.contextmanager
 def _conf(spark, settings):
+    """Set session confs for a block, then restore their values:
+    ``unset`` would fall back to Spark's defaults, not the session's
+    (200 shuffle partitions instead of ``get_spark``'s core count)."""
+    old = {k: spark.conf.get(k, None) for k in settings}
     for k, v in settings.items():
         spark.conf.set(k, v)
     try:
         yield
     finally:
-        for k in settings:
-            spark.conf.unset(k)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_narrow_passthrough_values_and_types(spark):
@@ -146,10 +156,14 @@ def _series_stats(cols):
 
 def _assert_series_match_group_by(spark, df, by):
     """_apply_kernel(by, order i) equals a per-series replay over the
-    groups of ``groupBy(by)``, under three-row record batches."""
+    groups of ``groupBy(by)``, under three-row record batches, on the
+    narrow frame and on its wide twin (a string payload column)."""
+    wide = df.withColumn("text", F.concat(F.lit("p"), F.col("i").cast("string")))
     with _conf(spark, _SMALL_BATCHES):
-        res = _apply_kernel(df, ["x"], by, "i", _STATS, _series_stats)
-        got = {r.i: (r.pos, r.n, r.cs) for r in res.collect()}
+        got, got_wide = (
+            {r.i: (r.pos, r.n, r.cs) for r in _apply_kernel(
+                frame, ["x"], by, "i", _STATS, _series_stats).collect()}
+            for frame in (df, wide))
         groups = df.groupBy(*by).agg(F.sort_array(
             F.collect_list(F.struct("i", "x"))).alias("rows")).collect()
     want = {}
@@ -158,7 +172,7 @@ def _assert_series_match_group_by(spark, df, by):
             want[r.i] = (float(pos), float(len(g.rows)),
                          float(sum(q.x for q in g.rows[:pos + 1])))
     assert len(groups) > 1
-    assert got == want
+    assert got == got_wide == want
 
 
 def _keyed_frame(spark, keys, schema):
@@ -240,36 +254,103 @@ def _wide(spark, ts_vals):
     )
 
 
-@pytest.mark.parametrize("ts_vals, match", [
-    ([0, 1, None, 3], "NULL order key"),
-    ([0, 1, 1, 3], "duplicate"),
-])
-def test_debug_keys_rejects_bad_wide_frame_keys(spark, monkeypatch, ts_vals,
-                                                match):
-    """ROLL_SPARK_DEBUG_KEYS=1 turns the wide-frame join-back's silent
-    NULL outputs / fan-out into an error; without it the op runs."""
-    df = _wide(spark, ts_vals)
-    res = _apply_kernel(df, ["x"], "series", "t", [("y", "double")], _copy_x)
-    assert "Join" in res._jdf.queryExecution().executedPlan().toString()
-    assert res.count() >= len(ts_vals)
-
-    monkeypatch.setenv("ROLL_SPARK_DEBUG_KEYS", "1")
-    checked = _apply_kernel(df, ["x"], "series", "t", [("y", "double")],
-                            _copy_x)
-    with pytest.raises(Exception, match=f"data contract violated: {match}"):
-        checked.collect()
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_debug_keys_passes_clean_wide_frame(spark, monkeypatch):
-    """Unique, non-NULL keys pass the check; outputs join back in order."""
-    monkeypatch.setenv("ROLL_SPARK_DEBUG_KEYS", "1")
+def test_wide_frame_outputs_follow_columns(spark):
+    """A wide frame's outputs follow ``df.columns`` and land on their own
+    rows, in order-key order."""
     df = _wide(spark, [3, 0, 2, 1])
-    got = _apply_kernel(df, ["x"], "series", "t", [("y", "double")], _copy_x) \
-        .orderBy("t").collect()
-    assert [(r.t, r.text, r.y) for r in got] == [
-        (t, f"text {i}", float(i)) for i, t in sorted(
-            enumerate([3, 0, 2, 1]), key=lambda p: p[1])
-    ]
+    res = _apply_kernel(df, ["x"], "series", "t", _STATS, _series_stats)
+    assert res.columns == df.columns + ["pos", "n", "cs"]
+    got = res.orderBy("t").collect()
+    assert [(r.t, r.text, r.x, r.pos) for r in got] == [
+        (0, "text 1", 1.0, 0.0), (1, "text 3", 3.0, 1.0),
+        (2, "text 2", 2.0, 2.0), (3, "text 0", 0.0, 3.0)]
+    assert [r.cs for r in got] == [1.0, 4.0, 6.0, 6.0]
+
+
+@pytest.mark.parametrize("ts_vals", [[0, 1, None, 3], [0, 1, 1, 3]],
+                         ids=["null_order_key", "duplicate_order_key"])
+def test_wide_frame_bad_keys_one_row_per_input(spark, ts_vals):
+    """A NULL order key keeps its outputs and sorts first in its series,
+    and a duplicate key does not fan out: a wide frame yields one row
+    per input row, as the narrow path does."""
+    df = _wide(spark, ts_vals)
+    wide = _apply_kernel(df, ["x"], "series", "t", _STATS, _series_stats)
+    narrow = _apply_kernel(df.drop("text"), ["x"], "series", "t", _STATS,
+                           _series_stats)
+    assert "ArrowEvalPython" in _plan(wide) and "Join" not in _plan(wide)
+    got = wide.collect()
+    assert len(got) == len(ts_vals)
+    assert all(r.text == f"text {int(r.x)}" for r in got)
+    # rows that tie on the order key may take either position
+    assert Counter((r.t, r.pos, r.n) for r in got) == \
+        Counter((r.t, r.pos, r.n) for r in narrow.collect())
+    assert Counter(r.x for r in got) == Counter(map(float, range(len(ts_vals))))
+    if None in ts_vals:
+        assert [r.pos for r in got if r.t is None] == [0.0]
+
+
+def test_wide_frame_downstream_filter_on_order_key(spark):
+    """A filter on the order key after a wide-frame op drops rows from
+    the result, never from the series the kernel sees: the optimizer
+    must not push it below the sort."""
+    keys = [("a",)] * 8 + [("b",)] * 5
+    df = _keyed_frame(spark, keys, "s string").withColumn(
+        "text", F.concat(F.lit("p"), F.col("i").cast("string")))
+    res = _apply_kernel(df, ["x"], "s", "i", _STATS, _series_stats)
+    want = {r.i: (r.pos, r.n, r.cs) for r in res.collect() if r.i > 6}
+    got = {r.i: (r.pos, r.n, r.cs)
+           for r in res.filter(F.col("i") > 6).collect()}
+    assert got == want and len(got) == 6
+
+
+def test_wide_frame_downstream_join_and_group_by_under_skew_split(spark):
+    """A join or groupBy on the series key after a wide-frame op gives
+    the same rows when AQE may split skewed join partitions."""
+    keys = [("big",)] * 40 + [(f"s{j}",) for j in range(6) for _ in range(3)]
+    df = _keyed_frame(spark, keys, "s string").withColumn(
+        "text", F.concat(F.lit("p"), F.col("i").cast("string")))
+    sizes = df.groupBy("s").count()
+
+    def rows():
+        res = _apply_kernel(df, ["x"], "s", "i", _STATS, _series_stats)
+        joined = res.join(sizes, "s").select("i", "pos", "n", "cs", "count")
+        grouped = res.groupBy("s").agg(F.count("*"), F.max("n"), F.max("pos"))
+        return (sorted(tuple(r) for r in joined.collect()),
+                sorted(tuple(r) for r in grouped.collect()))
+
+    want = rows()
+    assert all(r[2] == r[4] for r in want[0])
+    assert all(r[1] == r[2] == r[3] + 1 for r in want[1])
+    with _conf(spark, {**_SMALL_BATCHES,
+                       "spark.sql.autoBroadcastJoinThreshold": "-1",
+                       "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+                       "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+                       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1",
+                       "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1",
+                       "spark.sql.shuffle.partitions": "3"}):
+        assert rows() == want
+
+
+@pytest.mark.parametrize("settings", [
+    {}, {"spark.sql.autoBroadcastJoinThreshold": "-1"}],
+    ids=["default", "no_broadcast"])
+def test_wide_plan_sends_keys_and_inputs_only(spark, settings):
+    """A wide-frame op plans one Exchange, one Sort, one ArrowEvalPython
+    and no join at either broadcast setting, and its string and binary
+    payload columns are not among the ArrowEvalPython node's inputs."""
+    df = _wide(spark, [0, 1, 2, 3]).withColumn("blob", F.col("text").cast("binary"))
+    with _conf(spark, settings):
+        res = _apply_kernel(df, ["x"], "series", "t", [("y", "double")], _copy_x)
+        plan, counts = _plan(res), _plan_counts(res)
+    assert counts[:2] == (1, 1)
+    assert plan.count("ArrowEvalPython") == 1 and "Join" not in plan
+    node = next(ln for ln in plan.splitlines() if "ArrowEvalPython" in ln)
+    args = re.search(r"ArrowEvalPython \[[^(]*\(([^)]*)\)", node).group(1)
+    assert [a.split("#")[0] for a in args.split(", ")] == ["series", "x"]
 
 
 def test_daemon_version_guard():

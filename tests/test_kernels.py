@@ -5,6 +5,7 @@ weights 0.9^(2w:1) of length 2*width, the reference's own weighted grid
 from __future__ import annotations
 
 import tracemalloc
+from functools import partial
 
 import numpy as np
 import pytest
@@ -79,6 +80,8 @@ def test_conv_pair_kernels(width):
     rng = np.random.default_rng(SEED + 2)
     pair_ops = {
         "cov": (K.conv_cov, oracle.roll_cov),
+        "cov_raw": (partial(K.conv_cov, center=False),
+                    partial(oracle.roll_cov, center=False)),
         "cor": (K.conv_cor, oracle.roll_cor),
         "crossprod": (K.conv_crossprod, oracle.roll_crossprod),
     }

@@ -176,6 +176,21 @@ def test_chained_ops_collapse_to_one_window_exec(spark, grid_df):
     assert len(re.findall(r"\bWindow ", plan)) == 1, plan
 
 
+@pytest.mark.parametrize("center, agg", [(True, "var_samp"), (False, "sum")])
+def test_var_window_computes_each_aggregate_once(spark, grid_df, center, agg):
+    """Spark evaluates every use of a window aggregate as its own window
+    function: roll_var's Window node holds one count and one variance
+    (or sum of squares), however often its gates read them."""
+    import re
+
+    df = roll_var(grid_df, "x", "series_id", "i", 10, min_obs=5,
+                  center=center, out="v")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (window,) = [ln for ln in plan.splitlines() if re.search(r"\bWindow ", ln)]
+    assert len(re.findall(r"\bcount\(", window)) == 1, window
+    assert len(re.findall(rf"\b{agg}\(", window)) == 1, window
+
+
 def test_constant_series_cor_is_null_not_error(spark, grid_df):
     """Zero-variance windows must gate roll_cor to NULL, not raise a
     DIVIDE_BY_ZERO under ANSI mode (F.corr divides inside the window

@@ -4,7 +4,9 @@ plan shape we designed for 100 TB, not just one that happens to pass.
 For each query: count Exchanges / Sorts / Window nodes, check broadcast
 joins where a small side exists, and confirm column pruning reached the
 parquet scan (ReadSchema carries only needed columns). Exits non-zero
-if any assertion fails — run it after touching any operator.
+if any assertion fails — run it after touching any operator. Every
+query is audited twice: at the default broadcast threshold and with
+broadcast joins disabled.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
@@ -36,8 +38,8 @@ EXPECT = {
     "expanding_mean": dict(max_exchange=1, max_sort=1),
     "roll_mean_exp_w10": dict(max_exchange=1),       # Arrow path: one exchange
     "roll_median_w400": dict(max_exchange=1),        # Arrow path at any width
-    "roll_cov_matrix_w10": dict(max_exchange=3),     # window(lag) + Arrow pass + join-back
-    "roll_cov_xy_w10": dict(max_exchange=3),         # window(lag/lead) + Arrow pass + join-back
+    "roll_cov_matrix_w10": dict(max_exchange=3),     # window(lag) + Arrow pass
+    "roll_cov_xy_w10": dict(max_exchange=3),         # window(lag/lead) + Arrow pass
     "roll_lm_multiy_w20": dict(max_exchange=3),      # one Arrow pass for BOTH fits
     "tier_1m_stats": dict(max_exchange=1, max_sort=0),
     "tier_1h_cascade": dict(max_exchange=2, max_sort=0),  # raw->1m, 1m->1h
@@ -55,8 +57,8 @@ EXPECT = {
     "emb_neardup_lsh": dict(max_exchange=8, forbid_cartesian=True),
     # round-3 additions
     "roll_mean_completeobs_w10": dict(max_exchange=1, max_sort=1),
-    # per-pair masked cubes: window(lag) + groupBy + join-back, same
-    # budget as the complete-obs cube (pairwise masks are kernel-side)
+    # per-pair masked cubes: window(lag) + Arrow pass, same budget as
+    # the complete-obs cube (pairwise masks are kernel-side)
     "roll_cov_matrix_pairwise_w10": dict(max_exchange=3),
     "roll_cov_xy_pairwise_w10": dict(max_exchange=3),
     # trigram lang-ID must stay a map-only scan: zero shuffles, zero
@@ -209,6 +211,11 @@ def audit(name: str, df, rules: dict) -> list[str]:
     return errs
 
 
+# Each query is audited at the default broadcast threshold, then with
+# broadcast joins off, as at a scale where no side fits in a broadcast.
+MODES = {"default": None, "no-broadcast": "-1"}
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entry
@@ -218,17 +225,23 @@ def main() -> int:
     print(f"cpus={cpus}", flush=True)
     spark = get_spark(cpus=cpus, app_name="plan_audit")
     qs = entry.queries()
-    failures = 0
-    for name, rules in EXPECT.items():
-        df = qs[name](spark, sf_dir)
-        errs = audit(name, df, rules)
-        if errs:
-            failures += 1
-            print(f"FAIL  {name}: " + "; ".join(errs))
-        else:
-            print(f"OK    {name}")
-    print(f"\n{failures} plan violations")
-    return 1 if failures else 0
+    failures = {}
+    for mode, threshold in MODES.items():
+        if threshold is not None:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        failures[mode] = 0
+        for name, rules in EXPECT.items():
+            df = qs[name](spark, sf_dir)
+            errs = audit(name, df, rules)
+            if errs:
+                failures[mode] += 1
+                print(f"FAIL  [{mode}] {name}: " + "; ".join(errs))
+            else:
+                print(f"OK    [{mode}] {name}")
+    print()
+    for mode, n in failures.items():
+        print(f"{n} plan violations [{mode}]")
+    return 1 if any(failures.values()) else 0
 
 
 if __name__ == "__main__":
